@@ -23,6 +23,8 @@ from __future__ import annotations
 
 import os
 from collections.abc import Callable
+from functools import partial
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -44,17 +46,17 @@ def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, table + ".parquet"))
 
 
-def _pages(spark: SparkSession) -> DataFrame:
+def _pages(spark: SparkSession, n: int) -> DataFrame:
     from ferenda_spark.pages import build_pages
-    return build_pages(spark, KG_N, KG_PARTS)
+    return build_pages(spark, n, KG_PARTS)
 
 
-def _extracted(spark: SparkSession) -> DataFrame:
+def _extracted(spark: SparkSession, n: int) -> DataFrame:
     from ferenda_spark.operators.extract import extract_stage
     from ferenda_spark.pages import COMMONDATA
     from ferenda_spark.uris import RepoConfig
     cfg = RepoConfig(alias="doc", url="http://example.org/")
-    return extract_stage(_pages(spark), cfg, COMMONDATA)
+    return extract_stage(_pages(spark, n), cfg, COMMONDATA)
 
 
 def _kg_cfg():
@@ -119,7 +121,7 @@ KG_RDFS_DELTA = [
 ]
 
 
-def _q_kg_rdfs_delta(spark, sf_dir):
+def _q_kg_rdfs_delta(spark, sf_dir, n):
     """Incremental RDFS maintenance: entail(T ∪ Δ) − entail(T) via the
     Δ-sized semi-naive plan (rules over Δ with the new schema closure,
     rules over the entailed table with the schema DELTA only, one
@@ -127,7 +129,7 @@ def _q_kg_rdfs_delta(spark, sf_dir):
     oracle entail(T∪Δ) EXCEPT entail(T)."""
     from ferenda_spark.operators.inference import (
         CORPUS_ONTOLOGY, rdfs_materialize, rdfs_materialize_delta)
-    triples = _kg_read(spark, "triples")
+    triples = _kg_read(spark, "triples", n)
     entailed = rdfs_materialize(triples, CORPUS_ONTOLOGY)
     delta = spark.createDataFrame(
         KG_RDFS_DELTA,
@@ -162,17 +164,23 @@ def _kg_void_sql(kg_paths: dict) -> str:
     return sql_void_stats("read_parquet('%s')" % kg_paths["triples"])
 
 
-def _kg_paths() -> dict[str, str]:
+def _kg_sparql_sql(kg_paths: dict, query: str) -> str:
+    from ferenda_spark import sparql
+    return sparql.compile_sql("read_parquet('%s')" % kg_paths["triples"],
+                              query)
+
+
+def _kg_paths(n: int) -> dict[str, str]:
     from ferenda_spark.kgcache import ensure_kg_tables
-    return ensure_kg_tables(KG_N)
+    return ensure_kg_tables(n)
 
 
-def _kg_read(spark: SparkSession, table: str) -> DataFrame:
+def _kg_read(spark: SparkSession, table: str, n: int) -> DataFrame:
     """Downstream kg queries read the materialized extraction parquet
     (the Iceberg-table hand-off between pipeline stages in production)
     instead of re-running the extract UDF per query; the extraction
     itself is oracle-checked by kg_documents/kg_triples/kg_resources."""
-    return spark.read.parquet(_kg_paths()[table])
+    return spark.read.parquet(_kg_paths(n)[table])
 
 
 # --------------------------------------------------------------- entry
@@ -186,28 +194,29 @@ def entry(spark: SparkSession) -> DataFrame:
     # persist: the extraction UDF output fans out into the sameAs CC
     # derivation and the two canonicalization joins (≙ materializing
     # the triples table to Iceberg between stages in production)
-    triples = triples_table(_extracted(spark), context="kg").persist()
+    triples = triples_table(_extracted(spark, KG_N),
+                            context="kg").persist()
     return canonicalize_triples(triples)
 
 
 # -------------------------------------------------------------- queries
 
-def _q_kg_documents(spark, sf_dir):
+def _q_kg_documents(spark, sf_dir, n):
     from ferenda_spark.operators.extract import documents_table
-    return documents_table(_extracted(spark)).orderBy("url")
+    return documents_table(_extracted(spark, n)).orderBy("url")
 
 
-def _q_kg_triples(spark, sf_dir):
+def _q_kg_triples(spark, sf_dir, n):
     from ferenda_spark.operators.extract import triples_table
-    return triples_table(_extracted(spark), context="kg")
+    return triples_table(_extracted(spark, n), context="kg")
 
 
-def _q_kg_resources(spark, sf_dir):
+def _q_kg_resources(spark, sf_dir, n):
     from ferenda_spark.operators.extract import resources_table
-    return resources_table(_extracted(spark))
+    return resources_table(_extracted(spark, n))
 
 
-def _q_kg_xhtml_roundtrip(spark, sf_dir):
+def _q_kg_xhtml_roundtrip(spark, sf_dir, n):
     """render_xhtml sink + the reference's own completeness self-check
     (ref decorators.py:209-235): serialize every document to XHTML 1.1
     + RDFa, re-parse with the engine's HTML parser + RDFa extractor,
@@ -215,22 +224,22 @@ def _q_kg_xhtml_roundtrip(spark, sf_dir):
     hash-green iff serialization loses or invents nothing."""
     from ferenda_spark.operators.render import (render_xhtml_stage,
                                                 roundtrip_triples)
-    return roundtrip_triples(render_xhtml_stage(_extracted(spark)),
+    return roundtrip_triples(render_xhtml_stage(_extracted(spark, n)),
                              context="kg")
 
 
-def _q_kg_deps(spark, sf_dir):
+def _q_kg_deps(spark, sf_dir, n):
     from ferenda_spark.operators.relate import deps_table
-    return deps_table(_kg_read(spark, "triples"),
-                      _kg_read(spark, "documents"), _kg_cfg())
+    return deps_table(_kg_read(spark, "triples", n),
+                      _kg_read(spark, "documents", n), _kg_cfg())
 
 
-def _q_kg_entities(spark, sf_dir):
+def _q_kg_entities(spark, sf_dir, n):
     from ferenda_spark.operators.relate import entities_table
-    return entities_table(_kg_read(spark, "triples"))
+    return entities_table(_kg_read(spark, "triples", n))
 
 
-def _q_kg_entities_delta(spark, sf_dir):
+def _q_kg_entities_delta(spark, sf_dir, n):
     """Incremental entity resolution: bootstrap CC over the sameAs
     edges of every crawl doc EXCEPT the …2.html batch, then fold the
     batch in with graph.components.incremental_components (contracted
@@ -242,7 +251,7 @@ def _q_kg_entities_delta(spark, sf_dir):
     from ferenda_spark.graph.components import (canonical_mapping,
                                                 incremental_components)
     from ferenda_spark.operators.relate import OWL_SAMEAS
-    sa = (_kg_read(spark, "triples")
+    sa = (_kg_read(spark, "triples", n)
           .where(F.col("predicate") == OWL_SAMEAS)
           .select("source_url", "subject", "object"))
     base = (canonical_mapping(sa.where(~F.col("source_url")
@@ -257,12 +266,12 @@ def _q_kg_entities_delta(spark, sf_dir):
                       F.col("node").alias("uri"))
 
 
-def _q_kg_canonical_triples(spark, sf_dir):
+def _q_kg_canonical_triples(spark, sf_dir, n):
     from ferenda_spark.operators.relate import canonicalize_triples
-    return canonicalize_triples(_kg_read(spark, "triples"))
+    return canonicalize_triples(_kg_read(spark, "triples", n))
 
 
-def _q_kg_linked_publishers(spark, sf_dir):
+def _q_kg_linked_publishers(spark, sf_dir, n):
     """Two-stage distributed linking path over the raw (commondata-free)
     triples: publishers stay literal at extraction, then resolve with
     the broadcast-dict + trigram-index + difflib-scorer operator."""
@@ -270,16 +279,16 @@ def _q_kg_linked_publishers(spark, sf_dir):
     dictionary = spark.createDataFrame(_kg_dictionary(),
                                        "label string, uri string")
     return link_triples(
-        _kg_read(spark, "triples_raw"), dictionary,
+        _kg_read(spark, "triples_raw", n), dictionary,
         predicates=["http://purl.org/dc/terms/publisher"])
 
 
-def _q_kg_faceted(spark, sf_dir):
+def _q_kg_faceted(spark, sf_dir, n):
     from ferenda_spark.operators.facets import faceted_data
-    return faceted_data(_kg_read(spark, "triples"))
+    return faceted_data(_kg_read(spark, "triples", n))
 
 
-def _kg_labels(spark):
+def _kg_labels(spark, n):
     from ferenda_spark.namespaces import expand_curie
     from ferenda_spark.pages import COMMONDATA
     return spark.createDataFrame(
@@ -288,53 +297,53 @@ def _kg_labels(spark):
         "uri string, predicate string, label string")
 
 
-def _q_kg_faceted_typed(spark, sf_dir):
+def _q_kg_faceted_typed(spark, sf_dir, n):
     """Type-gated faceted data; the oracle is the engine's OWN
     generated facet_query SQL (facet_query ≙ the reference's generated
     SPARQL SELECT), so the generator is correctness-gated."""
     from ferenda_spark.operators.facets import faceted_data
-    return faceted_data(_kg_read(spark, "triples"),
+    return faceted_data(_kg_read(spark, "triples", n),
                         rdf_type="http://purl.org/ontology/bibo/Standard")
 
 
-def _q_kg_toc(spark, sf_dir):
+def _q_kg_toc(spark, sf_dir, n):
     """Full TOC read path: default facet set (title firstletter /
     titlesortkey, publisher resourcelabel, issued year) over the
     faceted table — ≙ toc_select_for_pages."""
     from ferenda_spark.operators.facetlib import default_facets, toc_documents
     from ferenda_spark.operators.facets import faceted_data
-    return toc_documents(faceted_data(_kg_read(spark, "triples")),
-                         default_facets(), _kg_labels(spark))
+    return toc_documents(faceted_data(_kg_read(spark, "triples", n)),
+                         default_facets(), _kg_labels(spark, n))
 
 
-def _q_kg_toc_pagesets(spark, sf_dir):
+def _q_kg_toc_pagesets(spark, sf_dir, n):
     from ferenda_spark.operators.facetlib import default_facets, toc_pagesets
     from ferenda_spark.operators.facets import faceted_data
-    return toc_pagesets(faceted_data(_kg_read(spark, "triples")),
-                        default_facets(), _kg_labels(spark))
+    return toc_pagesets(faceted_data(_kg_read(spark, "triples", n)),
+                        default_facets(), _kg_labels(spark, n))
 
 
-def _q_kg_facet_stats(spark, sf_dir):
+def _q_kg_facet_stats(spark, sf_dir, n):
     from ferenda_spark.operators.facets import facet_stats
-    return facet_stats(_kg_read(spark, "triples"))
+    return facet_stats(_kg_read(spark, "triples", n))
 
 
-def _q_kg_ispartof_closure(spark, sf_dir):
+def _q_kg_ispartof_closure(spark, sf_dir, n):
     from ferenda_spark.graph.closure import ispartof_closure
-    return ispartof_closure(_kg_read(spark, "triples"))
+    return ispartof_closure(_kg_read(spark, "triples", n))
 
 
-def _q_kg_inbound_refs(spark, sf_dir):
+def _q_kg_inbound_refs(spark, sf_dir, n):
     from ferenda_spark.operators.relate import inbound_references
-    return inbound_references(_kg_read(spark, "triples"))
+    return inbound_references(_kg_read(spark, "triples", n))
 
 
-def _q_kg_pagerank(spark, sf_dir):
+def _q_kg_pagerank(spark, sf_dir, n):
     from ferenda_spark.operators.graphops import citation_edges, pagerank
-    return pagerank(citation_edges(_kg_read(spark, "triples")))
+    return pagerank(citation_edges(_kg_read(spark, "triples", n)))
 
 
-def _q_kg_ppr(spark, sf_dir):
+def _q_kg_ppr(spark, sf_dir, n):
     """Personalized PageRank (graphops.personalized_pagerank):
     citation-graph importance relative to a seed neighborhood —
     teleport n/|S| on the bare document resources (no #fragment —
@@ -343,7 +352,7 @@ def _q_kg_ppr(spark, sf_dir):
     seed-weighted CTE."""
     from ferenda_spark.operators.graphops import (citation_edges,
                                                   personalized_pagerank)
-    edges = citation_edges(_kg_read(spark, "triples"))
+    edges = citation_edges(_kg_read(spark, "triples", n))
     nodes = (edges.select(F.col("src").alias("node"))
              .unionByName(edges.select(F.col("dst").alias("node")))
              .distinct())
@@ -351,18 +360,18 @@ def _q_kg_ppr(spark, sf_dir):
     return personalized_pagerank(edges, seeds)
 
 
-def _q_kg_walks(spark, sf_dir):
+def _q_kg_walks(spark, sf_dir, n):
     """Deterministic random walks over the citation graph
     (graphops.random_walks): the DeepWalk corpus-prep step — 2 walks
     of length 6 from every node, step choice via the shared md5-hex
     device so the recursive-CTE twin reproduces every walk."""
     from ferenda_spark.operators.graphops import (citation_edges,
                                                   random_walks)
-    return random_walks(citation_edges(_kg_read(spark, "triples")),
+    return random_walks(citation_edges(_kg_read(spark, "triples", n)),
                         length=6, walks_per_node=2)
 
 
-def _q_kg_walk_pairs(spark, sf_dir):
+def _q_kg_walk_pairs(spark, sf_dir, n):
     """Skip-gram pairs over the deterministic walks
     (graphops.walk_pairs): window-2 co-occurrence counts — the
     embedding trainer's input; oracle = the walks CTE self-joined
@@ -370,12 +379,12 @@ def _q_kg_walk_pairs(spark, sf_dir):
     from ferenda_spark.operators.graphops import (citation_edges,
                                                   random_walks,
                                                   walk_pairs)
-    walks = random_walks(citation_edges(_kg_read(spark, "triples")),
+    walks = random_walks(citation_edges(_kg_read(spark, "triples", n)),
                          length=6, walks_per_node=2)
     return walk_pairs(walks, window=2)
 
 
-def _q_kg_pmi(spark, sf_dir):
+def _q_kg_pmi(spark, sf_dir, n):
     """PMI/PPMI association scores over the skip-gram pairs
     (graphops.pmi_scores): ln(n_pairs·N / (cnt_c·cnt_x)) — the matrix
     an SGNS embedding factorizes (Levy & Goldberg 2014), completing
@@ -385,22 +394,22 @@ def _q_kg_pmi(spark, sf_dir):
                                                   pmi_scores,
                                                   random_walks,
                                                   walk_pairs)
-    walks = random_walks(citation_edges(_kg_read(spark, "triples")),
+    walks = random_walks(citation_edges(_kg_read(spark, "triples", n)),
                          length=6, walks_per_node=2)
     return pmi_scores(walk_pairs(walks, window=2))
 
 
-def _q_kg_linkpred(spark, sf_dir):
+def _q_kg_linkpred(spark, sf_dir, n):
     """Adamic–Adar link prediction over the citation graph
     (graphops.adamic_adar): for every non-adjacent undirected pair
     sharing a neighbor, Σ 1/ln(deg z) over the common neighbors —
     the "entities that should probably be linked" signal; oracle =
     the same wedge join + NOT EXISTS exclusion in DuckDB."""
     from ferenda_spark.operators.graphops import adamic_adar, citation_edges
-    return adamic_adar(citation_edges(_kg_read(spark, "triples")))
+    return adamic_adar(citation_edges(_kg_read(spark, "triples", n)))
 
 
-def _q_kg_kcore(spark, sf_dir):
+def _q_kg_kcore(spark, sf_dir, n):
     """2-core of the walk co-occurrence graph (graphops.kcore):
     degree peeling to fixpoint under the shared KCORE_ROUNDS cap —
     the density filter before community/embedding stages. The edge
@@ -413,13 +422,13 @@ def _q_kg_kcore(spark, sf_dir):
                                                   random_walks,
                                                   walk_pairs)
     pairs = walk_pairs(
-        random_walks(citation_edges(_kg_read(spark, "triples")),
+        random_walks(citation_edges(_kg_read(spark, "triples", n)),
                      length=6, walks_per_node=2), window=2)
     return kcore(pairs.select(F.col("center").alias("src"),
                               F.col("context").alias("dst")), k=2)
 
 
-def _q_kg_negatives(spark, sf_dir):
+def _q_kg_negatives(spark, sf_dir, n):
     """Filtered negative sampling over the citation edges
     (graphops.negative_samples): each positive's tail corrupted twice
     via the shared md5 device against dense (bucket, node)-ordered
@@ -428,11 +437,11 @@ def _q_kg_negatives(spark, sf_dir):
     the same corruption formula."""
     from ferenda_spark.operators.graphops import (citation_edges,
                                                   negative_samples)
-    return negative_samples(citation_edges(_kg_read(spark, "triples")),
+    return negative_samples(citation_edges(_kg_read(spark, "triples", n)),
                             per_positive=2)
 
 
-def _q_kg_cocitation(spark, sf_dir):
+def _q_kg_cocitation(spark, sf_dir, n):
     """Co-citation + bibliographic coupling (Small 1973 / Kessler
     1963) over the citation graph (graphops.cocitation_coupling):
     the two classic pairwise-similarity signals, each one wedge
@@ -442,7 +451,7 @@ def _q_kg_cocitation(spark, sf_dir):
     # reference edges are 1:1 by construction, so the containment
     # edges supply the shared endpoints — siblings sharing a parent
     # couple, a child's parent and its referenced doc co-cite
-    t = _kg_read(spark, "triples")
+    t = _kg_read(spark, "triples", n)
     edges = (t.where(F.col("predicate").isin(
                 "http://purl.org/dc/terms/references",
                 "http://purl.org/dc/terms/isPartOf") &
@@ -453,24 +462,24 @@ def _q_kg_cocitation(spark, sf_dir):
     return cocitation_coupling(edges)
 
 
-def _q_kg_charsets(spark, sf_dir):
+def _q_kg_charsets(spark, sf_dir, n):
     """Characteristic-set census (Neumann & Moerkotte ICDE 2011) over
     the triple table (graphops.characteristic_sets): each subject's
     sorted predicate set + census — the cardinality-estimation
     artifact star-join SPARQL optimizers read instead of sampling;
     string_agg twin."""
     from ferenda_spark.operators.graphops import characteristic_sets
-    return characteristic_sets(_kg_read(spark, "triples"))
+    return characteristic_sets(_kg_read(spark, "triples", n))
 
 
-def _q_kg_distances(spark, sf_dir):
+def _q_kg_distances(spark, sf_dir, n):
     """Multi-source BFS distances (graphops.bfs_distances): hop count
     from the nearest document root over the containment+reference
     graph (hasPart direction ∪ references) — one frontier join per
     round under the shared BFS_ROUNDS cap, min-dist on first visit;
     oracle = the bounded recursive expansion with min(dist)."""
     from ferenda_spark.operators.graphops import bfs_distances
-    t = _kg_read(spark, "triples")
+    t = _kg_read(spark, "triples", n)
     refs = (t.where((F.col("predicate") ==
                      "http://purl.org/dc/terms/references") &
                     (F.col("objtype") == "uri"))
@@ -481,12 +490,12 @@ def _q_kg_distances(spark, sf_dir):
                      (F.col("objtype") == "uri"))
              .select(F.col("object").alias("src"),
                      F.col("subject").alias("dst")))
-    seeds = _kg_read(spark, "documents").select(
+    seeds = _kg_read(spark, "documents", n).select(
         F.col("uri").alias("node"))
     return bfs_distances(refs.unionByName(parts), seeds)
 
 
-def _q_kg_modularity(spark, sf_dir):
+def _q_kg_modularity(spark, sf_dir, n):
     """Newman-Girvan modularity of the label-propagation communities
     over the citation graph (graphops.modularity): per-community
     Q_c = e_c/m − (d_c/2m)² + the '__Q__' total — the quality score
@@ -495,17 +504,17 @@ def _q_kg_modularity(spark, sf_dir):
     from ferenda_spark.operators.graphops import (citation_edges,
                                                   label_propagation,
                                                   modularity)
-    edges = citation_edges(_kg_read(spark, "triples"))
+    edges = citation_edges(_kg_read(spark, "triples", n))
     return modularity(edges, label_propagation(edges))
 
 
-def _q_kg_completeness(spark, sf_dir):
+def _q_kg_completeness(spark, sf_dir, n):
     """KG completeness profile (validate.completeness_report): per
     (class × non-type predicate) the fraction of the class's subjects
     carrying the predicate, zero-filled over the schema-sized grid —
     the curation-priority table; same-join twin."""
     from ferenda_spark.operators.validate import completeness_report
-    return completeness_report(_kg_read(spark, "triples"))
+    return completeness_report(_kg_read(spark, "triples", n))
 
 
 _KG_LINK_EDGES_CTE = (
@@ -515,8 +524,8 @@ _KG_LINK_EDGES_CTE = (
     "'http://purl.org/dc/terms/isPartOf') AND objtype = 'uri')")
 
 
-def _kg_link_edges(spark):
-    t = _kg_read(spark, "triples")
+def _kg_link_edges(spark, n):
+    t = _kg_read(spark, "triples", n)
     return (t.where(F.col("predicate").isin(
                 "http://purl.org/dc/terms/references",
                 "http://purl.org/dc/terms/isPartOf") &
@@ -526,54 +535,54 @@ def _kg_link_edges(spark):
             .where(F.col("src") != F.col("dst")))
 
 
-def _q_kg_degree_dist(spark, sf_dir):
+def _q_kg_degree_dist(spark, sf_dir, n):
     """Undirected degree distribution of the link graph
     (graphops.degree_histogram): the first census anyone plots over
     a web graph; node-sized degree count + max_deg-bounded
     histogram."""
     from ferenda_spark.operators.graphops import degree_histogram
-    return degree_histogram(_kg_link_edges(spark))
+    return degree_histogram(_kg_link_edges(spark, n))
 
 
-def _q_kg_graph_stats(spark, sf_dir):
+def _q_kg_graph_stats(spark, sf_dir, n):
     """One-look graph census (graphops.graph_stats): n/m/max/mean
     degree, the CSN-2009 power-law MLE exponent (histogram-folded ln
     sum, rounded to 4) and Newman-2002 degree assortativity computed
     ENTIRELY from integer moment sums — no corpus-sized float fold."""
     from ferenda_spark.operators.graphops import graph_stats
-    return graph_stats(_kg_link_edges(spark))
+    return graph_stats(_kg_link_edges(spark, n))
 
 
-def _q_kg_summaries(spark, sf_dir):
+def _q_kg_summaries(spark, sf_dir, n):
     """Entity summarization (graphops.entity_summaries): top-3 most
     informative facts per entity under the predicate-IDF relevance
     model (LinkSUM-style), total tie-break, WindowGroupLimit plan;
     same-ranking twin."""
     from ferenda_spark.operators.graphops import entity_summaries
-    return entity_summaries(_kg_read(spark, "triples"))
+    return entity_summaries(_kg_read(spark, "triples", n))
 
 
-def _q_kg_title_pairs(spark, sf_dir):
+def _q_kg_title_pairs(spark, sf_dir, n):
     """Blocked ER candidate pairs (operators/linking.blocked_pairs):
     documents whose ASCII-projected titles share a (16-char prefix,
     exact length) block and sit within Levenshtein 2 — the classic
     cheap pass before an expensive scorer; the projection makes
     Spark's codepoint distance ≡ DuckDB's byte distance."""
     from ferenda_spark.operators.linking import blocked_pairs
-    return blocked_pairs(_kg_read(spark, "documents"))
+    return blocked_pairs(_kg_read(spark, "documents", n))
 
 
-def _q_kg_hits(spark, sf_dir):
+def _q_kg_hits(spark, sf_dir, n):
     from ferenda_spark.operators.graphops import citation_edges, hits
-    return hits(citation_edges(_kg_read(spark, "triples")))
+    return hits(citation_edges(_kg_read(spark, "triples", n)))
 
 
-def _q_kg_citation_degrees(spark, sf_dir):
+def _q_kg_citation_degrees(spark, sf_dir, n):
     from ferenda_spark.operators.graphops import citation_edges, degrees
-    return degrees(citation_edges(_kg_read(spark, "triples")))
+    return degrees(citation_edges(_kg_read(spark, "triples", n)))
 
 
-def _q_kg_citation_map(spark, sf_dir):
+def _q_kg_citation_map(spark, sf_dir, n):
     """Gold-standard ranking evaluation (ref graphanalyze.py:760-806):
     information needs = the corpus keywords (sanitized dcterms:subject
     tags), gold set = the docs carrying each tag, ranking = citation
@@ -581,13 +590,13 @@ def _q_kg_citation_map(spark, sf_dir):
     from pyspark.sql import Window
     from ferenda_spark.operators.graphops import (
         citation_edges, pagerank, ranked_average_precision)
-    pr = pagerank(citation_edges(_kg_read(spark, "triples")))
+    pr = pagerank(citation_edges(_kg_read(spark, "triples", n)))
     ranked = pr.select(
         F.col("node").alias("uri"),
         F.row_number().over(
             Window.orderBy(F.desc("rank"), F.asc("node"))).alias("pos"))
     sanitized = F.trim(F.regexp_replace("object", r"[\[\]{}|#<>&]", ""))
-    gold = (_kg_read(spark, "triples_raw")
+    gold = (_kg_read(spark, "triples_raw", n)
             .where(F.col("predicate") ==
                    "http://purl.org/dc/terms/subject")
             .select(sanitized.alias("need"),
@@ -596,23 +605,23 @@ def _q_kg_citation_map(spark, sf_dir):
     return ranked_average_precision(ranked, gold)
 
 
-def _q_kg_triangles(spark, sf_dir):
+def _q_kg_triangles(spark, sf_dir, n):
     """Per-node triangle counts over the undirected citation graph —
     degree-ordered orientation so the wedge join never explodes on
     hubs (graphops.triangle_counts)."""
     from ferenda_spark.operators.graphops import (
         citation_edges, triangle_counts)
-    return triangle_counts(citation_edges(_kg_read(spark, "triples")))
+    return triangle_counts(citation_edges(_kg_read(spark, "triples", n)))
 
 
-def _q_kg_communities(spark, sf_dir):
+def _q_kg_communities(spark, sf_dir, n):
     """Deterministic synchronous label propagation (4 fixed rounds,
     most-frequent neighbor label, smallest-label tie-break) — the
     community assignment over the citation graph
     (graphops.label_propagation)."""
     from ferenda_spark.operators.graphops import (
         citation_edges, label_propagation)
-    return label_propagation(citation_edges(_kg_read(spark, "triples")))
+    return label_propagation(citation_edges(_kg_read(spark, "triples", n)))
 
 
 def _webgraph_injected_edges(spark, sf_dir) -> DataFrame:
@@ -695,7 +704,7 @@ HOST_EDGES_CTE = f"""e AS (
       WHERE src_host <> '' AND dst_host <> '' AND src_host <> dst_host)"""
 
 
-def _q_kg_host_graph(spark, sf_dir):
+def _q_kg_host_graph(spark, sf_dir, n):
     """Host-level web-graph rollup: page link edges → (src_host,
     dst_host, weight), the Common-Crawl domain-graph aggregation —
     one map-side-combined hash agg (graphops.host_graph)."""
@@ -703,7 +712,7 @@ def _q_kg_host_graph(spark, sf_dir):
     return host_graph(_webgraph_injected_edges(spark, sf_dir))
 
 
-def _q_kg_domain_pagerank(spark, sf_dir):
+def _q_kg_domain_pagerank(spark, sf_dir, n):
     """PageRank over the host-level graph (domain ranking, the
     CC-webgraph use of the rollup) — same hybrid power iteration as
     kg_pagerank, fed by host_graph (graphops.pagerank)."""
@@ -713,7 +722,7 @@ def _q_kg_domain_pagerank(spark, sf_dir):
                               F.col("dst_host").alias("dst")))
 
 
-def _q_kg_domain_pagerank_weighted(spark, sf_dir):
+def _q_kg_domain_pagerank_weighted(spark, sf_dir, n):
     """Weighted PageRank over the host graph
     (graphops.weighted_pagerank): rank splits over out-edges in
     proportion to collapsed-link weight — the correct CC-style domain
@@ -897,7 +906,7 @@ ORDER BY ?name
 """
 
 
-def _q_kg_sparql_structdata(spark, sf_dir):
+def _q_kg_sparql_structdata(spark, sf_dir, n):
     """SPARQL over freshly-extracted structured-data triples — the
     integration seam: JSON-LD bnode labels are page-scoped, so the
     author traversal (?a s:author ?b . ?b s:name ?name) is only sound
@@ -931,7 +940,7 @@ STRUCT_ENTITIES_SQL = """
     FROM sd GROUP BY sku"""
 
 
-def _q_structdata_entities(spark, sf_dir):
+def _q_structdata_entities(spark, sf_dir, n):
     """Entity consolidation over extracted structured data (the Web
     Data Commons product-merge step): products sharing a literal sku
     collapse to one canonical URI (min) with page + alias censuses —
@@ -951,7 +960,7 @@ def _q_structdata_entities(spark, sf_dir):
                  F.countDistinct("uri").alias("n_aliases")))
 
 
-def _q_warc_ingest(spark, sf_dir):
+def _q_warc_ingest(spark, sf_dir, n):
     """WARC segment ingestion (the Common-Crawl input format): blob →
     typed record rows in one shuffle-free Arrow stage, HTTP responses
     unwrapped (operators/warc.py; kernels ferenda_spark/warcrec.py).
@@ -1028,7 +1037,7 @@ ROBOTS_SQL = """
     ORDER BY url"""
 
 
-def _q_robots_filter(spark, sf_dir):
+def _q_robots_filter(spark, sf_dir, n):
     """RFC 9309 crawl admission: per-URL allow/deny verdicts against
     per-host robots.txt — zero corpus shuffles (broadcast rule arrays
     + one map-side higher-order fold; operators/crawl.robots_filter,
@@ -1104,7 +1113,7 @@ LATEST_CAPTURES_SQL = """
     FROM d"""
 
 
-def _q_latest_captures(spark, sf_dir):
+def _q_latest_captures(spark, sf_dir, n):
     """Latest-capture selection over a two-crawl CDX (the CC-index
     'newest capture' view / WARC-lake retention pass): one per-surt
     WindowGroupLimit, newest WARC-Date wins
@@ -1164,7 +1173,7 @@ RECRAWL_SQL = """
     FROM d ORDER BY priority DESC, url"""
 
 
-def _q_recrawl_priority(spark, sf_dir):
+def _q_recrawl_priority(spark, sf_dir, n):
     """Freshness-driven recrawl schedule over the two-crawl lake
     (crawl.recrawl_priority): change rate × staleness per URL —
     changed re-crawls carry rate 1, unchanged re-crawls rate 1/2,
@@ -1181,7 +1190,7 @@ def _q_recrawl_priority(spark, sf_dir):
     return recrawl_priority(caps, "2026-06-01")
 
 
-def _q_revisit_stats(spark, sf_dir):
+def _q_revisit_stats(spark, sf_dir, n):
     """Per-URL capture-history stats over the two-crawl lake: revisit
     detection (digest unchanged vs previous capture — the WARC
     'revisit' record rationale) + version count; the change-rate
@@ -1221,7 +1230,7 @@ POLITENESS_SQL = """
     FROM h"""
 
 
-def _q_politeness_schedule(spark, sf_dir):
+def _q_politeness_schedule(spark, sf_dir, n):
     """Crawl-frontier politeness sharding: per-host fetch slots of 10
     URLs (one host-keyed window; skewed hosts get more waves, never a
     hotter partition — operators/crawl.politeness_schedule). Oracle:
@@ -1257,7 +1266,7 @@ WARC_PAGES_SQL = """
     FROM d"""
 
 
-def _q_warc_to_pages(spark, sf_dir):
+def _q_warc_to_pages(spark, sf_dir, n):
     """WARC lake → the engine's canonical pages-table shape (url,
     warc_ts, html, text, lang) — the BASELINE input_hint contract,
     composed from already-oracled operators: warc_records ingestion,
@@ -1316,7 +1325,7 @@ CDX_SQL = """
     FROM d WHERE doc_id % 13 = 0"""
 
 
-def _q_cdx_index(spark, sf_dir):
+def _q_cdx_index(spark, sf_dir, n):
     """CDX lookup-index build over ingested WARC records: SURT keys +
     one global range sort — the artifact that makes a WARC lake
     random-accessible (operators/warc.cdx_index). Generative oracle
@@ -1399,7 +1408,7 @@ SITEMAP_SQL = """
     FROM i"""
 
 
-def _q_sitemap_entries(spark, sf_dir):
+def _q_sitemap_entries(spark, sf_dir, n):
     """Sitemap protocol parsing (urlset + sitemapindex → frontier
     seed rows): pure codegen, two regexp_extract_all/explode passes,
     entity decode + lenient priority (operators/crawl.sitemap_entries).
@@ -1408,7 +1417,7 @@ def _q_sitemap_entries(spark, sf_dir):
     return sitemap_entries(_sitemap_injected(spark, sf_dir))
 
 
-def _q_kg_structured_data(spark, sf_dir):
+def _q_kg_structured_data(spark, sf_dir, n):
     """Embedded structured-data extraction (the Web Data Commons pass):
     JSON-LD script blocks + itemscope/itemprop microdata → triples in
     one shuffle-free Arrow stage (operators/structdata.py; kernels
@@ -1418,16 +1427,16 @@ def _q_kg_structured_data(spark, sf_dir):
     return structured_triples(_structdata_injected_pages(spark, sf_dir))
 
 
-def _q_kg_rdfs_entailed(spark, sf_dir):
+def _q_kg_rdfs_entailed(spark, sf_dir, n):
     """RDFS forward-chaining materialization (the batch analog of the
     reference triplestore's reasoner) under the corpus's published
     DCMI/BIBO axioms: one broadcast join per rule, distinct output."""
     from ferenda_spark.operators.inference import (
         CORPUS_ONTOLOGY, rdfs_materialize)
-    return rdfs_materialize(_kg_read(spark, "triples"), CORPUS_ONTOLOGY)
+    return rdfs_materialize(_kg_read(spark, "triples", n), CORPUS_ONTOLOGY)
 
 
-def _q_kg_owl_entailed(spark, sf_dir):
+def _q_kg_owl_entailed(spark, sf_dir, n):
     """OWL-RL property-rule materialization (inference.owl_materialize)
     — prp-inv / prp-symp / prp-trp over the corpus axioms (transitive
     isPartOf with hasPart inverse, isReferencedBy inverse, sameAs
@@ -1436,7 +1445,7 @@ def _q_kg_owl_entailed(spark, sf_dir):
     oracle = the same rules with a grouped recursive CTE."""
     from ferenda_spark.operators.inference import (
         CORPUS_OWL_ONTOLOGY, owl_materialize)
-    return owl_materialize(_kg_read(spark, "triples"),
+    return owl_materialize(_kg_read(spark, "triples", n),
                            CORPUS_OWL_ONTOLOGY)
 
 
@@ -1450,14 +1459,14 @@ DELETE WHERE { ?s dcterms:issn ?n }
 """
 
 
-def _q_kg_sparql_update(spark, sf_dir):
+def _q_kg_sparql_update(spark, sf_dir, n):
     """TripleStore.update() analog (ref triplestore.py:164-173):
     functional SPARQL Update over the triple table — a DELETE/INSERT
     WHERE rewrite plus a DELETE WHERE, applied in sequence; returns the
     updated table (anti-join + union plans, bindings via the shared
     read compiler)."""
     from ferenda_spark.update import apply_update
-    return apply_update(_kg_read(spark, "triples"), _KG_UPDATE)
+    return apply_update(_kg_read(spark, "triples", n), _KG_UPDATE)
 
 
 def _kg_shapes():
@@ -1486,31 +1495,31 @@ def _kg_shapes():
     ]
 
 
-def _q_kg_shacl_report(spark, sf_dir):
+def _q_kg_shacl_report(spark, sf_dir, n):
     """Batch SHACL-lite validation report over the whole KG (broadcast
     shapes, one subject-keyed target join, map-side-combined counts)."""
     from ferenda_spark.operators.validate import validate_shapes
-    return validate_shapes(_kg_read(spark, "triples"), _kg_shapes())
+    return validate_shapes(_kg_read(spark, "triples", n), _kg_shapes())
 
 
-def _q_kg_void_stats(spark, sf_dir):
+def _q_kg_void_stats(spark, sf_dir, n):
     """VoID dataset description numbers (dataset / property / class
     partitions) — one rollup scan + the type join."""
     from ferenda_spark.operators.graphops import void_stats
-    return void_stats(_kg_read(spark, "triples"))
+    return void_stats(_kg_read(spark, "triples", n))
 
 
-def _q_kg_doc_stats(spark, sf_dir):
+def _q_kg_doc_stats(spark, sf_dir, n):
     """Per-document triple/typed-resource counts (W3Standards.stats +
     triple_count analog)."""
     from ferenda_spark.operators.graphops import doc_stats
-    return doc_stats(_kg_read(spark, "triples"))
+    return doc_stats(_kg_read(spark, "triples", n))
 
 
-def _q_kg_keyword_hubs(spark, sf_dir):
+def _q_kg_keyword_hubs(spark, sf_dir, n):
     from ferenda_spark.operators.graphops import keyword_hubs
     # raw triples: dcterms:subject stays literal (the hub input)
-    return keyword_hubs(_kg_read(spark, "triples_raw")).drop("docs")
+    return keyword_hubs(_kg_read(spark, "triples_raw", n)).drop("docs")
 
 
 def _kg_changed_urls() -> list[str]:
@@ -1520,57 +1529,74 @@ def _kg_changed_urls() -> list[str]:
     return [doc_url(i, 200) for i in (4, 14, 24)]
 
 
-def _q_kg_annotations(spark, sf_dir):
+def _q_kg_annotations(spark, sf_dir, n):
     """Assembled per-document annotation graph (annotations.rq analog)
     for ALL documents in one set-at-a-time derivation."""
     from ferenda_spark.operators.relate import annotation_graphs
-    return annotation_graphs(_kg_read(spark, "triples"),
-                             _kg_read(spark, "documents"))
+    return annotation_graphs(_kg_read(spark, "triples", n),
+                             _kg_read(spark, "documents", n))
 
 
-def _q_kg_stale(spark, sf_dir):
+def _q_kg_stale(spark, sf_dir, n):
     from ferenda_spark.operators.relate import deps_table, stale_after
-    deps = deps_table(_kg_read(spark, "triples"),
-                      _kg_read(spark, "documents"), _kg_cfg())
+    deps = deps_table(_kg_read(spark, "triples", n),
+                      _kg_read(spark, "documents", n), _kg_cfg())
     return stale_after(deps, _kg_changed_urls())
 
 
-def _q_kg_minted_uris(spark, sf_dir):
+def _q_kg_minted_uris(spark, sf_dir, n):
     """Distributed coin-URI minting (groupBy source_url →
     applyInPandas) vs the single-threaded minting the oracle parquet
     was materialized with — a cross-execution check of the engine AND
     the Spark plumbing."""
     from ferenda_spark.operators.minting import default_space_ttl, mint_uris
-    return mint_uris(_kg_read(spark, "triples"), default_space_ttl())
+    return mint_uris(_kg_read(spark, "triples", n), default_space_ttl())
 
 
 KG_SEARCH_TERMS = ["stream", "batch"]
 
 
-def _q_kg_search(spark, sf_dir):
+def _q_kg_search(spark, sf_dir, n):
     """BM25-ranked fulltext term query over the resources table with
     the reference's boost=4 title field (fulltext-index read path;
     scan-search shape)."""
     from ferenda_spark.operators.fulltext import fulltext_search
-    return fulltext_search(_kg_read(spark, "resources"), KG_SEARCH_TERMS,
-                           docs=_kg_read(spark, "documents"))
+    return fulltext_search(_kg_read(spark, "resources", n), KG_SEARCH_TERMS,
+                           docs=_kg_read(spark, "documents", n))
 
 
-def _q_kg_search_indexed(spark, sf_dir):
+def _q_kg_search_indexed(spark, sf_dir, n):
     """Same query through the inverted posting table (term-pruned
     semi-join instead of a full corpus scan — the 100× read path);
     scores equal the scan shape by construction, so it shares its
     oracle."""
     from ferenda_spark.operators.fulltext import (build_posting_index,
                                                   fulltext_search_indexed)
-    res = _kg_read(spark, "resources")
+    res = _kg_read(spark, "resources", n)
     postings, doclens = build_posting_index(
-        res, docs=_kg_read(spark, "documents"))
+        res, docs=_kg_read(spark, "documents", n))
     return fulltext_search_indexed(postings, doclens, KG_SEARCH_TERMS,
                                    resources=res)
 
 
-def _q_kg_search_fused(spark, sf_dir):
+KG_SEARCH_FUSED_SQL = """
+    WITH s AS (%s), p AS (%s),
+    pl AS (SELECT node, rank FROM p
+           ORDER BY rank DESC, node LIMIT 100),
+    sr AS (SELECT resource_uri AS id,
+                  row_number() OVER (ORDER BY score DESC, resource_uri)
+                    AS rnk FROM s),
+    pr AS (SELECT node AS id,
+                  row_number() OVER (ORDER BY rank DESC, node) AS rnk
+           FROM pl),
+    u AS (SELECT id, rnk FROM sr UNION ALL SELECT id, rnk FROM pr)
+    SELECT id, round(sum(1.0 / (60 + rnk)), 6) AS rrf,
+           count(*)::BIGINT AS n_lists
+    FROM u GROUP BY id ORDER BY id
+"""
+
+
+def _q_kg_search_fused(spark, sf_dir, n):
     """Reciprocal-rank fusion (fulltext.rrf_fuse): the BM25 top-20
     merged with the top-100 citation-pagerank authority list via
     Σ 1/(60+rank) — score-calibration-free hybrid retrieval (Cormack
@@ -1580,18 +1606,18 @@ def _q_kg_search_fused(spark, sf_dir):
                                                   fulltext_search_indexed,
                                                   rrf_fuse)
     from ferenda_spark.operators.graphops import citation_edges, pagerank
-    res = _kg_read(spark, "resources")
+    res = _kg_read(spark, "resources", n)
     postings, doclens = build_posting_index(
-        res, docs=_kg_read(spark, "documents"))
+        res, docs=_kg_read(spark, "documents", n))
     search = fulltext_search_indexed(postings, doclens,
                                      KG_SEARCH_TERMS, resources=res)
-    pr = (pagerank(citation_edges(_kg_read(spark, "triples")))
+    pr = (pagerank(citation_edges(_kg_read(spark, "triples", n)))
           .orderBy(F.desc("rank"), "node").limit(100))
     return rrf_fuse([(search, "resource_uri", "score"),
                      (pr, "node", "rank")])
 
 
-def _q_kg_search_delta(spark, sf_dir):
+def _q_kg_search_delta(spark, sf_dir, n):
     """Incremental index maintenance (fulltext.merge_posting_index):
     the index is bootstrapped WITHOUT the …2.html docs, their
     resources then merge in as a crawl batch (replace-by-uri +
@@ -1601,8 +1627,8 @@ def _q_kg_search_delta(spark, sf_dir):
     from ferenda_spark.operators.fulltext import (build_posting_index,
                                                   fulltext_search_indexed,
                                                   merge_posting_index)
-    res = _kg_read(spark, "resources")
-    docs = _kg_read(spark, "documents")
+    res = _kg_read(spark, "resources", n)
+    docs = _kg_read(spark, "documents", n)
     batch = F.col("url").like("%2.html")
     postings, doclens = build_posting_index(res.where(~batch),
                                             docs=docs.where(~batch))
@@ -1650,14 +1676,14 @@ WHERE
 _DESCRIBE_URI = "http://example.org/res/doc/1"
 
 
-def _q_kg_describe(spark, sf_dir):
+def _q_kg_describe(spark, sf_dir, n):
     """The reference's annotations.rq run through the SPARQL compiler
     (CONSTRUCT + UNION + isPartOf* property path) for one document —
     the per-basefile describe query a reference user runs today.
     tests/test_sparql.py proves the constructed graph equals the
     set-at-a-time annotation_graphs operator's output."""
     from ferenda_spark import sparql
-    return sparql.compile_spark(_kg_read(spark, "triples"),
+    return sparql.compile_spark(_kg_read(spark, "triples", n),
                                 _ANNOTATIONS_RQ % {"uri": _DESCRIBE_URI})
 
 
@@ -1668,9 +1694,9 @@ _KG_DESCRIBE_SPARQL = ("PREFIX dct: <http://purl.org/dc/terms/>\n"
                        % _DESCRIBE_URI)
 
 
-def _q_kg_describe_sparql(spark, sf_dir):
+def _q_kg_describe_sparql(spark, sf_dir, n):
     from ferenda_spark import sparql
-    return sparql.compile_spark(_kg_read(spark, "triples"),
+    return sparql.compile_spark(_kg_read(spark, "triples", n),
                                 _KG_DESCRIBE_SPARQL)
 
 
@@ -1708,14 +1734,14 @@ WHERE
 # verbatim; this driver copy avoids depending on /root/reference)
 
 
-def _q_kg_describe_rfc(spark, sf_dir):
+def _q_kg_describe_rfc(spark, sf_dir, n):
     """The reference's RFC-repo annotation query (;-lists, BIND inside
     UNION, isUri→objtype scan constraint, strstarts, references+ path)
     over the kg triples — what `ferenda-build.py rfc generate` asks the
     triplestore per document."""
     from ferenda_spark import sparql
     return sparql.compile_spark(
-        _kg_read(spark, "triples"),
+        _kg_read(spark, "triples", n),
         _RFC_ANNOTATIONS_RQ % {"uri": _DESCRIBE_URI})
 
 
@@ -1747,12 +1773,12 @@ WHERE
 # tests/test_sparql.py::test_every_reference_rq_compiles)
 
 
-def _q_kg_describe_base(spark, sf_dir):
+def _q_kg_describe_base(spark, sf_dir, n):
     """The legal-SE per-document describe query (describe-base.rq
     shape): own triples + one-hop neighborhood + labeled referers."""
     from ferenda_spark import sparql
     return sparql.compile_spark(
-        _kg_read(spark, "triples"),
+        _kg_read(spark, "triples", n),
         _DESCRIBE_BASE_RQ % {"uri": _DESCRIBE_URI})
 
 
@@ -1768,12 +1794,12 @@ SELECT ?s ?title WHERE {
 """
 
 
-def _q_kg_sparql_orphans(spark, sf_dir):
+def _q_kg_sparql_orphans(spark, sf_dir, n):
     """Published-but-never-cited documents: FILTER NOT EXISTS/EXISTS
     compiled to left-anti/left-semi joins (the citation-gap audit a
     reference user runs against the store)."""
     from ferenda_spark import sparql
-    return sparql.compile_spark(_kg_read(spark, "triples"),
+    return sparql.compile_spark(_kg_read(spark, "triples", n),
                                 _KG_SPARQL_ORPHANS)
 
 
@@ -1783,12 +1809,12 @@ WHERE { ?s ?p ?o } GROUP BY ?p ORDER BY ?p
 """
 
 
-def _q_kg_sparql_stats(spark, sf_dir):
+def _q_kg_sparql_stats(spark, sf_dir, n):
     """Per-predicate store statistics through the SPARQL aggregate
     surface (the triple_count / statusreport shape, ref
     triplestore.py:175-177, as a user-writable query)."""
     from ferenda_spark import sparql
-    return sparql.compile_spark(_kg_read(spark, "triples"),
+    return sparql.compile_spark(_kg_read(spark, "triples", n),
                                 _KG_SPARQL_STATS)
 
 
@@ -1805,13 +1831,13 @@ SELECT ?s ?type ?label WHERE {
 """
 
 
-def _q_kg_sparql_bind(spark, sf_dir):
+def _q_kg_sparql_bind(spark, sf_dir, n):
     """VALUES + BIND through the SPARQL compiler: restrict by an inline
     type list, project a computed label — the parameterized-query shape
     a reference user gets from triplestore.select with initBindings.
     Twinned SQL oracle from the same parse (ferenda_spark/sparql.py)."""
     from ferenda_spark import sparql
-    return sparql.compile_spark(_kg_read(spark, "triples"),
+    return sparql.compile_spark(_kg_read(spark, "triples", n),
                                 _KG_SPARQL_BIND)
 
 
@@ -1871,9 +1897,9 @@ SELECT ?s ?title ?n_parts WHERE {
 # outer BGP — docs with >= 3 direct parts and their titles
 
 
-def _q_kg_sparql_subquery(spark, sf_dir):
+def _q_kg_sparql_subquery(spark, sf_dir, n):
     from ferenda_spark import sparql
-    return sparql.compile_spark(_kg_read(spark, "triples"),
+    return sparql.compile_spark(_kg_read(spark, "triples", n),
                                 _KG_SPARQL_SUBQUERY)
 
 
@@ -1888,9 +1914,9 @@ SELECT DISTINCT ?x ?anc_title ?cited_title WHERE {
 # plain 2-element sequence inside OPTIONAL
 
 
-def _q_kg_sparql_seqpath(spark, sf_dir):
+def _q_kg_sparql_seqpath(spark, sf_dir, n):
     from ferenda_spark import sparql
-    return sparql.compile_spark(_kg_read(spark, "triples"),
+    return sparql.compile_spark(_kg_read(spark, "triples", n),
                                 _KG_SPARQL_SEQPATH)
 
 
@@ -1914,9 +1940,9 @@ SELECT DISTINCT ?s ?title ?class WHERE {
 # COALESCE/STRBEFORE expression additions
 
 
-def _q_kg_sparql_nested(spark, sf_dir):
+def _q_kg_sparql_nested(spark, sf_dir, n):
     from ferenda_spark import sparql
-    return sparql.compile_spark(_kg_read(spark, "triples"),
+    return sparql.compile_spark(_kg_read(spark, "triples", n),
                                 _KG_SPARQL_NESTED)
 
 
@@ -1933,7 +1959,7 @@ SELECT ?s ?title ?kind WHERE {
 # probes, the SQL twin carries correlated EXISTS subqueries
 
 
-def _q_kg_sparql_exists_expr(spark, sf_dir):
+def _q_kg_sparql_exists_expr(spark, sf_dir, n):
     """EXISTS/NOT EXISTS inside expressions (sparql.EExistsMarker):
     classify documents by whether they cite anything (IF(EXISTS…))
     while filtering on EXISTS || string-test — the reference surface
@@ -1941,7 +1967,7 @@ def _q_kg_sparql_exists_expr(spark, sf_dir):
     (ferenda/triplestore.py:179-200), where expression-position EXISTS
     is legal everywhere."""
     from ferenda_spark import sparql
-    return sparql.compile_spark(_kg_read(spark, "triples"),
+    return sparql.compile_spark(_kg_read(spark, "triples", n),
                                 _KG_SPARQL_EXISTS_EXPR)
 
 
@@ -1958,13 +1984,13 @@ SELECT ?s ?d WHERE {
 # malformed month-form dates ("2010-01") are type errors -> unbound
 
 
-def _q_kg_sparql_datetime(spark, sf_dir):
+def _q_kg_sparql_datetime(spark, sf_dir, n):
     """xsd:dateTime/xsd:date timeline comparison over dct:issued: a
     dateTime lower bound against date-typed corpus values plus a date
     upper bound — ordering by instant, not lexically; non-date-shaped
     values drop as type errors (the month-form issued dates)."""
     from ferenda_spark import sparql
-    return sparql.compile_spark(_kg_read(spark, "triples"),
+    return sparql.compile_spark(_kg_read(spark, "triples", n),
                                 _KG_SPARQL_DATETIME)
 
 
@@ -1981,14 +2007,14 @@ CONSTRUCT {
 # skolem id so both engines emit identical node strings
 
 
-def _q_kg_sparql_construct_bnode(spark, sf_dir):
+def _q_kg_sparql_construct_bnode(spark, sf_dir, n):
     """CONSTRUCT with blank-node templates: reify every dct:references
     edge as a fresh per-solution _:ref node carrying type/source/
     target triples (the spec's bnode-template semantics; ids are
     deterministic md5-of-solution skolems, a valid choice the DuckDB
     twin reproduces exactly)."""
     from ferenda_spark import sparql
-    return sparql.compile_spark(_kg_read(spark, "triples"),
+    return sparql.compile_spark(_kg_read(spark, "triples", n),
                                 _KG_SPARQL_CONSTRUCT_BNODE)
 
 
@@ -2008,14 +2034,14 @@ WHERE {
 # over a full expression — the four additions in one user-shaped query
 
 
-def _q_kg_sparql_casts(spark, sf_dir):
+def _q_kg_sparql_casts(spark, sf_dir, n):
     """Cast/bind/aggregate-expression surface in one query: chapter
     numbers cast via xsd:integer, defaulted through a post-OPTIONAL
     COALESCE BIND used as the GROUP BY key, with SUM over a cast
     arithmetic expression (all-NULL groups sum to unbound in both
     engines)."""
     from ferenda_spark import sparql
-    return sparql.compile_spark(_kg_read(spark, "triples"),
+    return sparql.compile_spark(_kg_read(spark, "triples", n),
                                 _KG_SPARQL_CASTS)
 
 
@@ -2030,13 +2056,13 @@ ORDER BY DESC(COUNT(?s)) ?o LIMIT 10
 # output after the sort)
 
 
-def _q_kg_sparql_top_cited(spark, sf_dir):
+def _q_kg_sparql_top_cited(spark, sf_dir, n):
     """Busiest container documents (most direct parts) via inline
     aggregates in HAVING and ORDER BY (no aliases): one
     predicate-pruned scan, one map-side-combined count, top-10 under
     a (count DESC, uri) total order."""
     from ferenda_spark import sparql
-    return sparql.compile_spark(_kg_read(spark, "triples"),
+    return sparql.compile_spark(_kg_read(spark, "triples", n),
                                 _KG_SPARQL_TOP_CITED)
 
 
@@ -2052,13 +2078,13 @@ ORDER BY DESC(COUNT(*)) ?series
 # aggregate ORDER BY — the derived-key census shape
 
 
-def _q_kg_sparql_groupkey(spark, sf_dir):
+def _q_kg_sparql_groupkey(spark, sf_dir, n):
     """Identifier-series census via a GROUP BY expression key: groups
     on STRBEFORE(?id, ",") (projected through its AS alias), counts
     members and concatenates their suffixes, ordered by an inline
     aggregate sort key."""
     from ferenda_spark import sparql
-    return sparql.compile_spark(_kg_read(spark, "triples"),
+    return sparql.compile_spark(_kg_read(spark, "triples", n),
                                 _KG_SPARQL_GROUPKEY)
 
 
@@ -2075,31 +2101,31 @@ SELECT ?s ?title ?n_parts WHERE {
 # documents with no parts keep their row with ?n_parts unbound
 
 
-def _q_kg_sparql_optagg(spark, sf_dir):
+def _q_kg_sparql_optagg(spark, sf_dir, n):
     """Aggregate subquery inside OPTIONAL: per-document contained-part
     counts left-joined onto the document list — part-less documents
     survive with an unbound count (the facet-with-counts query shape a
     reference user writes against faceted_data)."""
     from ferenda_spark import sparql
-    return sparql.compile_spark(_kg_read(spark, "triples"),
+    return sparql.compile_spark(_kg_read(spark, "triples", n),
                                 _KG_SPARQL_OPTAGG)
 
 
-def _q_kg_sparql_minus(spark, sf_dir):
+def _q_kg_sparql_minus(spark, sf_dir, n):
     from ferenda_spark import sparql
-    return sparql.compile_spark(_kg_read(spark, "triples"),
+    return sparql.compile_spark(_kg_read(spark, "triples", n),
                                 _KG_SPARQL_MINUS)
 
 
-def _q_kg_sparql_agg(spark, sf_dir):
+def _q_kg_sparql_agg(spark, sf_dir, n):
     from ferenda_spark import sparql
-    return sparql.compile_spark(_kg_read(spark, "triples"),
+    return sparql.compile_spark(_kg_read(spark, "triples", n),
                                 _KG_SPARQL_AGG)
 
 
-def _q_kg_sparql_langdt(spark, sf_dir):
+def _q_kg_sparql_langdt(spark, sf_dir, n):
     from ferenda_spark import sparql
-    return sparql.compile_spark(_kg_read(spark, "triples"),
+    return sparql.compile_spark(_kg_read(spark, "triples", n),
                                 _KG_SPARQL_LANGDT)
 
 
@@ -2119,38 +2145,38 @@ SELECT ?g ?part ?top ?t WHERE {
 """
 
 
-def _q_kg_sparql_pathvar(spark, sf_dir):
+def _q_kg_sparql_pathvar(spark, sf_dir, n):
     """Property paths under GRAPH ?var: the isPartOf+ closure runs
     per named graph (grouped on the context — one shared iteration,
     not one job per graph) and ?g joins the plain title scan under the
     same GRAPH ?g, so ancestors resolve within their own document
     graph only."""
     from ferenda_spark import sparql
-    quads = _kg_read(spark, "triples").withColumn(
+    quads = _kg_read(spark, "triples", n).withColumn(
         "context", F.col("source_url"))
     return sparql.compile_spark(quads, _KG_SPARQL_PATHVAR)
 
 
-def _q_kg_sparql_graphvar(spark, sf_dir):
+def _q_kg_sparql_graphvar(spark, sf_dir, n):
     """GRAPH ?var over per-document named graphs (the reference's
     quad-store model: one graph per document, context = the doc URL).
     ?g binds the context column; the two patterns under one GRAPH ?g
     must co-locate in the SAME graph; typed+titled subjects are
     counted per (graph, class)."""
     from ferenda_spark import sparql
-    quads = _kg_read(spark, "triples").withColumn(
+    quads = _kg_read(spark, "triples", n).withColumn(
         "context", F.col("source_url"))
     return sparql.compile_spark(quads, _KG_SPARQL_GRAPHVAR)
 
 
-def _q_kg_sparql(spark, sf_dir):
+def _q_kg_sparql(spark, sf_dir, n):
     """Ad-hoc SPARQL surface (triplestore.select analog): the generic
     BGP/OPTIONAL/FILTER compiler over the triples table. The oracle is
     the compiler's own SQL emission run by DuckDB — two backends, one
     shared join plan (ferenda_spark/sparql.py; semantics pinned by
     tests/test_sparql.py's hand-built goldens)."""
     from ferenda_spark import sparql
-    return sparql.compile_spark(_kg_read(spark, "triples"),
+    return sparql.compile_spark(_kg_read(spark, "triples", n),
                                 _KG_SPARQL_QUERY)
 
 
@@ -2177,12 +2203,12 @@ def _kg_routing_cfgs():
     return [_kg_cfg(), RepoConfig(alias="alt", url="http://alt.example.org/")]
 
 
-def _q_kg_routing(spark, sf_dir):
+def _q_kg_routing(spark, sf_dir, n):
     """Multi-repo URL routing: every distinct subject URI in the triple
     table plus the synthetic request corpus, routed to (repo, kind,
     basefile) — one native CASE-chain projection, no Python."""
     from ferenda_spark.operators.routing import route_uris
-    uris = (_kg_read(spark, "triples")
+    uris = (_kg_read(spark, "triples", n)
             .select(F.col("subject").alias("uri"))
             .unionByName(spark.createDataFrame(
                 [(u,) for u in KG_ROUTING_EXTRA], "uri string"))
@@ -2204,13 +2230,13 @@ def _kg_routing_sql(kg_paths: dict) -> str:
     """
 
 
-def _q_kg_citations(spark, sf_dir):
+def _q_kg_citations(spark, sf_dir, n):
     """Citation mining over the per-resource text (CitationParser +
     URIFormatter analog), emitted as a joinable table."""
     from ferenda_spark.operators.citations import (CORPUS_PATTERNS,
                                                    corpus_formatter,
                                                    extract_citations)
-    return extract_citations(_kg_read(spark, "resources"),
+    return extract_citations(_kg_read(spark, "resources", n),
                              CORPUS_PATTERNS, corpus_formatter())
 
 
@@ -2222,14 +2248,14 @@ KG_WEBURL_PAT = (r"(?P<scheme>https?)://(?P<netloc>[^/\s]+)"
 KG_RFC_PAT = r"\[?RFC ?(?P<rfc>\d+)\]?"
 
 
-def _q_kg_citations_stock(spark, sf_dir):
+def _q_kg_citations_stock(spark, sf_dir, n):
     """Stock uriformats.generic/url through the URIFormatter registry
     (ref ferenda/uriformats.py:14-44) — closes SURVEY §2.3's
     'ready-made formatters' row with a hard oracle."""
     from ferenda_spark import uriformats
     from ferenda_spark.operators.citations import (URIFormatter,
                                                    extract_citations)
-    res = _kg_read(spark, "resources")
+    res = _kg_read(spark, "resources", n)
     by_url = extract_citations(
         res, [("weburl", KG_WEBURL_PAT)],
         URIFormatter(("weburl", uriformats.url)), text_col="url")
@@ -2258,45 +2284,45 @@ def _kg_citations_stock_sql(kg_paths: dict) -> str:
     """
 
 
-def _kg_news_inputs(spark):
+def _kg_news_inputs(spark, n):
     from ferenda_spark.operators.facets import faceted_data
     from ferenda_spark.operators.news import news_facet_entries
-    docs = _kg_read(spark, "documents")
+    docs = _kg_read(spark, "documents", n)
     entries = (docs.select("url", "title")
-               .join(_kg_read(spark, "pages_meta"), "url")
+               .join(_kg_read(spark, "pages_meta", n), "url")
                .withColumnRenamed("warc_ts", "updated"))
-    faceted = faceted_data(_kg_read(spark, "triples"))
+    faceted = faceted_data(_kg_read(spark, "triples", n))
     # decorated entries feed 2+ branches (facet feeds + main feed);
     # materialize once (≙ the reference's faceted_entries.json cache)
     return news_facet_entries(faceted, docs.select("url", "uri"),
                               entries).localCheckpoint(eager=True)
 
 
-def _q_kg_news_feedsets(spark, sf_dir):
+def _q_kg_news_feedsets(spark, sf_dir, n):
     from ferenda_spark.operators.facetlib import default_facets
     from ferenda_spark.operators.news import news_feedsets
-    return news_feedsets(_kg_news_inputs(spark), default_facets(),
-                         _kg_labels(spark))
+    return news_feedsets(_kg_news_inputs(spark, n), default_facets(),
+                         _kg_labels(spark, n))
 
 
-def _q_kg_news_feed_entries(spark, sf_dir):
+def _q_kg_news_feed_entries(spark, sf_dir, n):
     from ferenda_spark.operators.facetlib import default_facets
     from ferenda_spark.operators.news import news_select_for_feeds
-    return news_select_for_feeds(_kg_news_inputs(spark), default_facets(),
-                                 _kg_labels(spark))
+    return news_select_for_feeds(_kg_news_inputs(spark, n), default_facets(),
+                                 _kg_labels(spark, n))
 
 
 KG_NEW_URL = "http://example.org/doc/new.html"
 
 
-def _q_kg_versions(spark, sf_dir):
+def _q_kg_versions(spark, sf_dir, n):
     """DocumentStore archive analog: merge a deterministic second
     snapshot (…0.html docs changed, …1.html docs absent, one new url)
     into the version-1 current table; return the flattened version
     history."""
     from ferenda_spark.operators.versioning import (archive_versions,
                                                     version_history)
-    docs = _kg_read(spark, "documents").select("url", "text")
+    docs = _kg_read(spark, "documents", n).select("url", "text")
     cur = docs.select("url", F.md5("text").alias("content_hash"),
                       F.lit(1).alias("version"))
     inc = (docs.where(~F.col("url").like("%1.html"))
@@ -2311,14 +2337,14 @@ def _q_kg_versions(spark, sf_dir):
     return version_history(new_current, archived)
 
 
-def _q_kg_crawl_delta(spark, sf_dir):
+def _q_kg_crawl_delta(spark, sf_dir, n):
     """Snapshot-to-snapshot triple delta (versioning.triple_diff):
     crawl B drops every …1.html doc, revises every …0.html title and
     adds one new doc; the diff is the added/removed (source_url, s, p,
     o) set — the exact input an incremental maintainer consumes."""
     from ferenda_spark.operators.versioning import triple_diff
     DCT_TITLE = "http://purl.org/dc/terms/title"
-    a = _kg_read(spark, "triples").select(
+    a = _kg_read(spark, "triples", n).select(
         "source_url", "subject", "predicate", "object")
     b = (a.where(~F.col("source_url").like("%1.html"))
          .withColumn("object",
@@ -2353,7 +2379,7 @@ def _kg_new_doc_rows(spark) -> DataFrame:
         "object string")
 
 
-def _kg_three_crawls(spark) -> DataFrame:
+def _kg_three_crawls(spark, n) -> DataFrame:
     """(source_url, s, p, o, crawl_ts) rows of three crawl snapshots
     (twin: kgoracle._three_crawls states the same by formula): crawl 1
     = the corpus; crawl 2 = the kg_crawl_delta mutation (…1.html docs
@@ -2361,7 +2387,7 @@ def _kg_three_crawls(spark) -> DataFrame:
     triples minus …1./…3.html docs plus the new doc — so the …0.html
     revision is REVERTED and the original titles get two disjoint
     presence intervals."""
-    a = (_kg_read(spark, "triples")
+    a = (_kg_read(spark, "triples", n)
          .select("source_url", "subject", "predicate", "object")
          .distinct())
     new = _kg_new_doc_rows(spark)
@@ -2381,28 +2407,28 @@ def _kg_three_crawls(spark) -> DataFrame:
             .unionByName(c.withColumn("crawl_ts", F.lit(ts[2]))))
 
 
-def _q_kg_triple_intervals(spark, sf_dir):
+def _q_kg_triple_intervals(spark, sf_dir, n):
     """Temporal triple table (versioning.temporal_intervals): the
     three-crawl corpus collapses into maximal (valid_from, valid_to)
     presence intervals — reverted …0.html titles carry TWO intervals,
     …1.html docs close at crawl 2, the new doc opens at crawl 2 with
     the FAR_FUTURE sentinel."""
     from ferenda_spark.operators.versioning import temporal_intervals
-    return temporal_intervals(_kg_three_crawls(spark))
+    return temporal_intervals(_kg_three_crawls(spark, n))
 
 
-def _q_kg_asof(spark, sf_dir):
+def _q_kg_asof(spark, sf_dir, n):
     """Time travel (versioning.triples_asof): the corpus state at an
     instant inside crawl 2's currency window must equal crawl 2's
     snapshot exactly — the oracle states that identity (the crawl-2
     formula), not the interval implementation."""
     from ferenda_spark.operators.versioning import (temporal_intervals,
                                                     triples_asof)
-    return triples_asof(temporal_intervals(_kg_three_crawls(spark)),
+    return triples_asof(temporal_intervals(_kg_three_crawls(spark, n)),
                         "2026-02-15")
 
 
-def _kg_fusion_corpus(spark) -> DataFrame:
+def _kg_fusion_corpus(spark, n) -> DataFrame:
     """Three assertion sources over the canonical KG (twin:
     kgoracle._fusion_union states the same corpus by formula): crawl A
     (the corpus triples), crawl B (…1.html docs not re-crawled, every
@@ -2411,7 +2437,7 @@ def _kg_fusion_corpus(spark) -> DataFrame:
     with the ORIGINAL value — so revised titles lose the source vote
     2-1 and fusion must restore the original."""
     from ferenda_spark.operators.relate import canonicalize_triples
-    t = _kg_read(spark, "triples").select(
+    t = _kg_read(spark, "triples", n).select(
         "source_url", "subject", "predicate", "object", "objtype")
     b = (t.where(~F.col("source_url").like("%1.html"))
          .withColumn("object",
@@ -2427,31 +2453,31 @@ def _kg_fusion_corpus(spark) -> DataFrame:
         t.unionByName(b).unionByName(mirror))
 
 
-def _q_kg_conflicts(spark, sf_dir):
+def _q_kg_conflicts(spark, sf_dir, n):
     """Functional-property conflict report over the canonicalized
     three-source union: every …0.html doc title carries two values
     asserted by three sources (operators/fusion.functional_conflicts)."""
     from ferenda_spark.operators.fusion import functional_conflicts
-    return functional_conflicts(_kg_fusion_corpus(spark),
+    return functional_conflicts(_kg_fusion_corpus(spark, n),
                                 [DCT_TITLE_URI])
 
 
-def _q_kg_fused(spark, sf_dir):
+def _q_kg_fused(spark, sf_dir, n):
     """Source-voting value resolution (operators/fusion.fuse_triples):
     the original title wins 2-1 over the crawl-B revision because the
     mirror re-asserts it — majority fusion, min-value tie-break."""
     from ferenda_spark.operators.fusion import fuse_triples
-    return fuse_triples(_kg_fusion_corpus(spark), [DCT_TITLE_URI])
+    return fuse_triples(_kg_fusion_corpus(spark, n), [DCT_TITLE_URI])
 
 
-def _q_kg_nquads(spark, sf_dir):
+def _q_kg_nquads(spark, sf_dir, n):
     """Graph-publishing dump (render.nquads_lines): the whole KG as
     canonical N-Quads lines — per-document named graphs (context =
     source_url), literal escaping per N-Triples rules — one codegen
     projection, ready for write.text. Twin: the same string-building
     CASE chain in DuckDB."""
     from ferenda_spark.operators.render import nquads_lines
-    quads = _kg_read(spark, "triples").withColumn(
+    quads = _kg_read(spark, "triples", n).withColumn(
         "context", F.col("source_url"))
     return nquads_lines(quads)
 
@@ -2471,7 +2497,7 @@ KG_NQUADS_SQL_TMPL = (
     " FROM %s")
 
 
-def _q_kg_provenance(spark, sf_dir):
+def _q_kg_provenance(spark, sf_dir, n):
     """Lineage as RDF (lineage.prov_triples): the parse stage's entries
     table becomes W3C PROV-O triples — Entity/Activity typing,
     wasDerivedFrom, wasGeneratedBy for ok rows (+ generatedAtTime from
@@ -2479,28 +2505,28 @@ def _q_kg_provenance(spark, sf_dir):
     with the same SPARQL surface as the data it describes."""
     from ferenda_spark.operators.lineage import (entries_from_extracted,
                                                  prov_triples)
-    entries = entries_from_extracted(_extracted(spark), _pages(spark),
+    entries = entries_from_extracted(_extracted(spark, n), _pages(spark, n),
                                      "parse", "r1")
-    return prov_triples(entries, _kg_read(spark, "pages_meta"))
+    return prov_triples(entries, _kg_read(spark, "pages_meta", n))
 
 
-def _q_kg_stage_counters(spark, sf_dir):
+def _q_kg_stage_counters(spark, sf_dir, n):
     from ferenda_spark.operators.lineage import (entries_from_extracted,
                                                  stage_counters)
-    pages = _pages(spark)
-    entries = entries_from_extracted(_extracted(spark), pages,
+    pages = _pages(spark, n)
+    entries = entries_from_extracted(_extracted(spark, n), pages,
                                      "parse", "r1")
     return stage_counters(entries)
 
 
 # ---- training-data ops over driver parquet tables (oracle-checked)
 
-def _q_token_stats(spark, sf_dir):
+def _q_token_stats(spark, sf_dir, n):
     from ferenda_spark.operators.textops import token_stats
     return token_stats(_read(spark, sf_dir, "documents"))
 
 
-def _q_hll_distinct(spark, sf_dir):
+def _q_hll_distinct(spark, sf_dir, n):
     """Deterministic HyperLogLog distinct census
     (sketches.hll_distinct): per-lang approximate distinct texts on
     the shared md5 device — the sketch itself cross-checks register
@@ -2513,7 +2539,7 @@ def _q_hll_distinct(spark, sf_dir):
                         keys=["lang"], value="text", p=6)
 
 
-def _q_length_quantiles(spark, sf_dir):
+def _q_length_quantiles(spark, sf_dir, n):
     """Exact per-language word-length quantiles
     (textops.length_quantiles): Spark percentile ≡ DuckDB
     quantile_cont on the same (n−1)·q interpolation (spiked), the
@@ -2523,7 +2549,7 @@ def _q_length_quantiles(spark, sf_dir):
                             keys=["lang"])
 
 
-def _q_chunk_documents(spark, sf_dir):
+def _q_chunk_documents(spark, sf_dir, n):
     """Sliding context-window chunking (packing.chunk_documents):
     documents split into size-64/stride-48 word windows — the step
     between raw docs and trainer sequences; pure codegen, no shuffle
@@ -2536,7 +2562,7 @@ def _q_chunk_documents(spark, sf_dir):
 CMS_CANDIDATES = ["the", "batch", "stream", "zzz-absent"]
 
 
-def _q_cms_counts(spark, sf_dir):
+def _q_cms_counts(spark, sf_dir, n):
     """Count-Min frequency estimates (sketches.cms_counters +
     cms_estimate): word occurrences sketched into a 4×2048 counter
     table (one map-side-combined aggregate; the corpus never
@@ -2552,7 +2578,7 @@ def _q_cms_counts(spark, sf_dir):
     return cms_estimate(cms_counters(words, "w"), cand)
 
 
-def _q_kg_pagerank_delta(spark, sf_dir):
+def _q_kg_pagerank_delta(spark, sf_dir, n):
     """Incremental PageRank maintenance (graphops.pagerank
     init_ranks): yesterday's graph = citation edges minus every
     md5(src␟dst)-hash ≡ 0 (mod 10) edge, ranked with the full
@@ -2562,7 +2588,7 @@ def _q_kg_pagerank_delta(spark, sf_dir):
     start. Twin unrolls both phases with the seam (rounded ranks,
     1.0 for new nodes) swapped in mid-chain."""
     from ferenda_spark.operators.graphops import citation_edges, pagerank
-    e = citation_edges(_kg_read(spark, "triples"))
+    e = citation_edges(_kg_read(spark, "triples", n))
     keep = (F.conv(F.substring(
         F.md5(F.concat_ws("\x1f", F.col("src"), F.col("dst"))), 1, 8),
         16, 10).cast("long") % 10 != 0)
@@ -2570,7 +2596,7 @@ def _q_kg_pagerank_delta(spark, sf_dir):
     return pagerank(e, max_iter=4, init_ranks=old_ranks)
 
 
-def _q_kg_type_inference(spark, sf_dir):
+def _q_kg_type_inference(spark, sf_dir, n):
     """KG completion by neighborhood vote (graphops.type_inference):
     hold out the rdf:type of every node with md5-hash ≡ 0 (mod 5),
     infer each untyped node's class as the majority type among its
@@ -2581,7 +2607,7 @@ def _q_kg_type_inference(spark, sf_dir):
     from ferenda_spark.namespaces import RDF_TYPE
     from ferenda_spark.operators.graphops import (citation_edges,
                                                   type_inference)
-    t = _kg_read(spark, "triples")
+    t = _kg_read(spark, "triples", n)
     types = (t.where((F.col("predicate") == RDF_TYPE) &
                      (F.col("objtype") == "uri"))
              .select(F.col("subject").alias("node"),
@@ -2598,7 +2624,7 @@ def _q_kg_type_inference(spark, sf_dir):
             .orderBy("node"))
 
 
-def _q_kg_scc(spark, sf_dir):
+def _q_kg_scc(spark, sf_dir, n):
     """Strongly connected components (graphops.scc): redirect loops /
     citation cycles / link-farm knots are exactly the nontrivial SCCs
     of the crawl's directed graphs — undirected CC would glue every
@@ -2647,7 +2673,7 @@ KG_SCC_EDGES_SQL = (
     " ) v(src, dst)")
 
 
-def _q_kg_anf(spark, sf_dir):
+def _q_kg_anf(spark, sf_dir, n):
     """Approximate neighborhood function (graphops.anf_neighborhood,
     HyperANF — Boldi/Rosa/Vigna WWW 2011): N(t) for t = 0..6 over the
     same mixed cycle/chain corpus as kg_scc — per-node HLL register
@@ -2685,7 +2711,7 @@ KG_ANF_EDGES_SQL = (
     " FROM documents WHERE (doc_id % 500) % 10 < 3")
 
 
-def _q_kg_centrality(spark, sf_dir):
+def _q_kg_centrality(spark, sf_dir, n):
     """Harmonic centrality for every node from its HyperANF ball
     curve (graphops.anf_centrality, Boldi & Vigna 2014): H(v) ≈
     Σ_t (|ball_t| − |ball_{t−1}|)/t over the same mixed cycle/chain
@@ -2710,7 +2736,7 @@ def _q_kg_centrality(spark, sf_dir):
     return anf_centrality(perm.unionByName(chain), rounds=6)
 
 
-def _q_kg_sssp(spark, sf_dir):
+def _q_kg_sssp(spark, sf_dir, n):
     """Weighted single-source shortest paths
     (graphops.weighted_sssp): min path COST from the seed set over
     the kg_scc mixed corpus with deterministic integer weights
@@ -2739,7 +2765,7 @@ def _q_kg_sssp(spark, sf_dir):
     return weighted_sssp(perm.unionByName(chain), seeds)
 
 
-def _q_kg_condensation(spark, sf_dir):
+def _q_kg_condensation(spark, sf_dir, n):
     """Condensation DAG + longest-path levels
     (graphops.condensation): every SCC of the kg_scc corpus
     contracted to its min member, each component's depth from the
@@ -2781,7 +2807,7 @@ KG_SSSP_EDGES_SQL = (
     " FROM documents WHERE (doc_id % 500) % 10 < 3")
 
 
-def _q_crawl_overlap(spark, sf_dir):
+def _q_crawl_overlap(spark, sf_dir, n):
     """Cross-crawl overlap census (sketches.hll_union +
     inclusion–exclusion): two overlapping crawl slices (doc_id % 3
     ≠ 0 vs ≠ 1), each's distinct-text estimate, the union estimate
@@ -2842,7 +2868,7 @@ def _crawl_overlap_oracle_sql():
 BLOOM_CANDIDATES = ["the", "batch", "stream", "zzz-absent", "qq-never"]
 
 
-def _q_bloom_words(spark, sf_dir):
+def _q_bloom_words(spark, sf_dir, n):
     """Bloom membership filter (sketches.bloom_words +
     bloom_contains): word occurrences folded into a 2^16-bit filter
     stored as 32-bit lanes of a word table (one map-side-combined
@@ -2861,22 +2887,22 @@ def _q_bloom_words(spark, sf_dir):
     return bloom_contains(bloom_words(words, "w"), cand)
 
 
-def _q_quality(spark, sf_dir):
+def _q_quality(spark, sf_dir, n):
     from ferenda_spark.operators.textops import quality_score
     return quality_score(_read(spark, sf_dir, "documents"))
 
 
-def _q_langid(spark, sf_dir):
+def _q_langid(spark, sf_dir, n):
     from ferenda_spark.operators.textops import language_id
     return language_id(_read(spark, sf_dir, "documents"))
 
 
-def _q_fingerprint(spark, sf_dir):
+def _q_fingerprint(spark, sf_dir, n):
     from ferenda_spark.operators.textops import fingerprint
     return fingerprint(_read(spark, sf_dir, "documents"))
 
 
-def _q_corpus_curate(spark, sf_dir):
+def _q_corpus_curate(spark, sf_dir, n):
     """End-to-end training-corpus curation: quality filter
     (quality ≥ 0.65) → exact dedup (keep the min doc_id per normalized
     fingerprint) → greedy sequence packing — the composed pipeline a
@@ -2912,7 +2938,7 @@ def _corpus_curate_sql() -> str:
     return packing.oracle_sql_pack(survivors, budget=256, n_shards=8)
 
 
-def _q_stratified_sample(spark, sf_dir):
+def _q_stratified_sample(spark, sf_dir, n):
     """Deterministic per-language quota sampling (30% of each lang
     stratum, hash-ranked) — corpus re-balancing before training."""
     from ferenda_spark.operators.sampling import stratified_sample
@@ -2925,7 +2951,7 @@ _MIXTURE_WEIGHTS = {"en": 0.3, "zh": 0.2, "es": 0.2,
 _MIXTURE_TOTAL = 300
 
 
-def _q_resample_mixture(spark, sf_dir):
+def _q_resample_mixture(spark, sf_dir, n):
     """Deterministic mixture resampling: per-language quotas from
     target domain weights (floor(w·300), capped at stratum size),
     hash-rank selection — the static domain re-weighting step of a
@@ -2935,7 +2961,7 @@ def _q_resample_mixture(spark, sf_dir):
                             _MIXTURE_WEIGHTS, _MIXTURE_TOTAL)
 
 
-def _q_dsir_resample(spark, sf_dir):
+def _q_dsir_resample(spark, sf_dir, n):
     """DSIR importance resampling: select 60 documents distributed
     like the German-language slice via hashed-ngram importance weights
     + deterministic Gumbel top-k."""
@@ -2945,7 +2971,7 @@ def _q_dsir_resample(spark, sf_dir):
                          n_buckets=2048, seed=7)
 
 
-def _q_top_ngrams(spark, sf_dir):
+def _q_top_ngrams(spark, sf_dir, n):
     """Corpus bigram census: top-50 word bigrams with occurrence and
     document counts (map-side partial agg + TakeOrdered top-k)."""
     from ferenda_spark.operators.textops import top_ngrams
@@ -2956,7 +2982,7 @@ _PROFILE_COLS = ["o_orderkey", "o_custkey", "o_orderstatus",
                  "o_orderdate", "o_orderpriority"]
 
 
-def _q_profile_orders(spark, sf_dir):
+def _q_profile_orders(spark, sf_dir, n):
     """Single-pass data-quality census over the orders table (row/
     null/distinct counts + min/max per column) — the profile-before-
     training sanity step; all columns aggregate in ONE hash-aggregate
@@ -2965,7 +2991,7 @@ def _q_profile_orders(spark, sf_dir):
     return profile_columns(_read(spark, sf_dir, "orders"), _PROFILE_COLS)
 
 
-def _q_top_terms(spark, sf_dir):
+def _q_top_terms(spark, sf_dir, n):
     """Per-document keyword extraction: top-5 terms by tf·idf (raw
     inverse idf — log-free so ranks are bit-identical across engines).
     One explode-count shuffle + a df agg over the tf table + a window
@@ -2974,7 +3000,7 @@ def _q_top_terms(spark, sf_dir):
     return top_terms_per_doc(_read(spark, sf_dir, "documents"), k=5)
 
 
-def _q_bpe_pairs(spark, sf_dir):
+def _q_bpe_pairs(spark, sf_dir, n):
     """Tokenizer-training statistics: corpus-weighted adjacent
     character-pair counts (the first BPE merge decision). Pairs are
     generated per DISTINCT word — the vocabulary, not the corpus,
@@ -2983,7 +3009,7 @@ def _q_bpe_pairs(spark, sf_dir):
     return bpe_pair_counts(_read(spark, sf_dir, "documents"), k=100)
 
 
-def _q_related_docs(spark, sf_dir):
+def _q_related_docs(spark, sf_dir, n):
     """More-like-this over the corpus: per document, its 5 most
     similar documents by shared tf·idf-selected keywords (integer
     co-occurrence score — bit-exact across engines in any aggregation
@@ -2992,7 +3018,7 @@ def _q_related_docs(spark, sf_dir):
     return related_docs(_read(spark, sf_dir, "documents"))
 
 
-def _q_bpe_train(spark, sf_dir):
+def _q_bpe_train(spark, sf_dir, n):
     """Full BPE tokenizer training (Sennrich et al.): 60 merge rules
     learned from the corpus word census. One corpus shuffle; the
     merge loop runs on the driver over the capped vocabulary (the
@@ -3002,7 +3028,7 @@ def _q_bpe_train(spark, sf_dir):
     return bpe_train(_read(spark, sf_dir, "documents"))
 
 
-def _q_bpe_encode(spark, sf_dir):
+def _q_bpe_encode(spark, sf_dir, n):
     """Train + encode: the top-200 BPE token census over the corpus
     (token_count = Σ word-freq × occurrences). The encode stage maps
     over the DISTINCT word census inside Arrow — corpus text never
@@ -3011,7 +3037,7 @@ def _q_bpe_encode(spark, sf_dir):
     return bpe_token_census(_read(spark, sf_dir, "documents"))
 
 
-def _q_pack_sequences(spark, sf_dir):
+def _q_pack_sequences(spark, sf_dir, n):
     """Greedy sequence packing into 256-token bins, 8 shards — the
     training-batch construction step (shard-parallel applyInPandas;
     oracle replays the fold with a recursive CTE)."""
@@ -3020,7 +3046,7 @@ def _q_pack_sequences(spark, sf_dir):
                           budget=256, n_shards=8)
 
 
-def _q_decontaminate(spark, sf_dir):
+def _q_decontaminate(spark, sf_dir, n):
     """Benchmark decontamination: docs with doc_id % 37 == 0 act as the
     held-out eval set; every other document is scored by how many of
     its word 3-grams appear in that set (broadcast benchmark shingles →
@@ -3032,7 +3058,7 @@ def _q_decontaminate(spark, sf_dir):
                          n=3, threshold=0.2)
 
 
-def _q_lm_perplexity(spark, sf_dir):
+def _q_lm_perplexity(spark, sf_dir, n):
     """CCNet-style LM quality signal: Laplace bigram model trained on
     the even-doc_id half of the corpus, every document scored by
     per-bigram -log2 likelihood (pure codegen — linear zip_with bigram
@@ -3042,7 +3068,7 @@ def _q_lm_perplexity(spark, sf_dir):
     return ngram_lm_perplexity(docs, docs.where(F.col("doc_id") % 2 == 0))
 
 
-def _q_quality_classifier(spark, sf_dir):
+def _q_quality_classifier(spark, sf_dir, n):
     """Trained quality filter (GPT-3/LLaMA classifier step):
     multinomial NB over words, trained set-at-a-time on a
     deterministically labeled split, scored with one vocab join."""
@@ -3054,14 +3080,14 @@ def _q_quality_classifier(spark, sf_dir):
     return nb_quality_classifier(docs, labeled)
 
 
-def _q_repetition_stats(spark, sf_dir):
+def _q_repetition_stats(spark, sf_dir, n):
     """Gopher-style within-document repetition signals (boilerplate /
     degenerate-text filter features)."""
     from ferenda_spark.operators.curation import repetition_stats
     return repetition_stats(_read(spark, sf_dir, "documents"), n=3)
 
 
-def _q_pii_scrub(spark, sf_dir):
+def _q_pii_scrub(spark, sf_dir, n):
     """PII redaction over web text: the synthetic corpus carries no
     PII, so the query plants deterministic emails / phones / IPv4s
     derived from doc_id (same expression in PII_DOCS_SQL) and the
@@ -3163,7 +3189,7 @@ DELTA_BATCH_SQL = (
     " FROM documents WHERE doc_id % 7 = 3)")
 
 
-def _q_dedup_delta(spark, sf_dir):
+def _q_dedup_delta(spark, sf_dir, n):
     """Incremental crawl-batch near-dup dedup: verdict the batch
     against the corpus + earlier batch docs via the banded MinHash
     candidate join — the corpus is scanned, never re-hashed
@@ -3226,7 +3252,7 @@ HEAD_DOCS_SQL = (
     " FROM documents)")
 
 
-def _q_page_metadata(spark, sf_dir):
+def _q_page_metadata(spark, sf_dir, n):
     """Head-metadata extraction (title / rel=canonical / description /
     og:*) — pure codegen, attribute-order free
     (textops.page_metadata)."""
@@ -3272,7 +3298,7 @@ JUSTEXT_DOCS_SQL = (
     " FROM documents)")
 
 
-def _q_boilerplate(spark, sf_dir):
+def _q_boilerplate(spark, sf_dir, n):
     """jusText-style main-content extraction: paragraph classification
     (min-words / stopword-fraction / link-density) + in-order
     reassembly, one shuffle-free codegen projection
@@ -3329,14 +3355,14 @@ ANCHOR_DOCS_SQL = (
     " FROM documents)")
 
 
-def _q_anchor_stats(spark, sf_dir):
+def _q_anchor_stats(spark, sf_dir, n):
     """Anchor-text aggregation: per link target, anchor census + most
     common anchor text (textops.anchor_text_stats)."""
     from ferenda_spark.operators.textops import anchor_text_stats
     return anchor_text_stats(_anchor_injected_docs(spark, sf_dir))
 
 
-def _q_frontier_expand(spark, sf_dir):
+def _q_frontier_expand(spark, sf_dir, n):
     """Crawl-frontier expansion (operators/crawl.frontier_expand):
     distinct absolute outlink targets of the anchor-injected corpus
     plus a deep-host link family (5 distinct after fragment strip, one
@@ -3394,7 +3420,7 @@ FRONTIER_SQL = (
     " SELECT url, host, rank FROM ranked WHERE rank <= 3")
 
 
-def _q_redirect_resolve(spark, sf_dir):
+def _q_redirect_resolve(spark, sf_dir, n):
     """Redirect-chain resolution (crawl.resolve_redirects): per-group
     chains p/5k → … → p/5k+4 (terminals, 1-4 hops), a 3-cycle that
     must come back unresolved, and a duplicate-source row that must
@@ -3447,7 +3473,7 @@ REDIRECTS_SQL = (
     " FROM m LEFT JOIN res ON res.start = m.src")
 
 
-def _q_url_stats(spark, sf_dir):
+def _q_url_stats(spark, sf_dir, n):
     """Outbound-link census over web text (deterministic URL
     injection, same expression in URL_DOCS_SQL)."""
     from ferenda_spark.operators.textops import url_stats
@@ -3497,7 +3523,7 @@ URLDEDUP_DOCS_SQL = (
     " FROM documents)")
 
 
-def _q_url_dedup(spark, sf_dir):
+def _q_url_dedup(spark, sf_dir, n):
     """Refetch dedup by canonical URL (RFC 3986 syntax normalization +
     tracking-param strip): per fetched row, its canonical form, the
     keep/drop verdict (min doc_id representative) and cluster size.
@@ -3511,7 +3537,7 @@ def _q_url_dedup(spark, sf_dir):
 _BLOCKLIST_DOMAINS = ("example0.com", "example3.com", "blog.example2.org")
 
 
-def _q_blocklist_filter(spark, sf_dir):
+def _q_blocklist_filter(spark, sf_dir, n):
     """Domain-blocklist verdicts over the same injected-URL corpus:
     per document, how many outbound links hit the blocklist and
     whether the document would be dropped (C4's badwords/blocklist
@@ -3585,7 +3611,7 @@ MESS_DOCS_SQL = (
     + " AS text FROM documents)")
 
 
-def _q_normalize_text(spark, sf_dir):
+def _q_normalize_text(spark, sf_dir, n):
     """ftfy-lite normalization over web text: the synthetic corpus is
     already clean, so the query plants deterministic mojibake (CRLF,
     curly quotes, zero-widths, NBSP, control chars, runaway blank
@@ -3620,7 +3646,7 @@ SPAN_DOCS_SQL = (
     " FROM documents)" % _BOILER25)
 
 
-def _q_dedup_windows(spark, sf_dir):
+def _q_dedup_windows(spark, sf_dir, n):
     """Exact-substring (hashed k-token window) duplication stats, the
     Lee-et-al. suffix-array method's measurable core: the synthetic
     corpus shares no 20-token spans, so the query plants a 25-token
@@ -3661,7 +3687,7 @@ BOILER_DOCS_SQL = (
     + " AS text FROM documents)")
 
 
-def _q_line_dedup(spark, sf_dir):
+def _q_line_dedup(spark, sf_dir, n):
     """C4-style corpus-level line dedup: the synthetic corpus has no
     cross-document boilerplate, so the query plants deterministic
     boilerplate lines (same expression in BOILER_DOCS_SQL) — the
@@ -3708,13 +3734,13 @@ def _lsh_pairs(spark, sf_dir):
                                   shingles=_doc_shingles(spark, sf_dir)))
 
 
-def _q_dedup_exact(spark, sf_dir):
+def _q_dedup_exact(spark, sf_dir, n):
     from ferenda_spark.operators.dedup import exact_duplicates
     return exact_duplicates(_with_injected_dups(
         _read(spark, sf_dir, "documents")))
 
 
-def _q_curriculum_order(spark, sf_dir):
+def _q_curriculum_order(spark, sf_dir, n):
     """Length-curriculum ordering (sampling.curriculum_order): four
     difficulty bands by exact n_chars quantiles (the percentile ≡
     quantile_cont device), easy-first seq within band + interleaved
@@ -3725,7 +3751,7 @@ def _q_curriculum_order(spark, sf_dir):
     return curriculum_order(_read(spark, sf_dir, "documents"))
 
 
-def _q_dedup_containment(spark, sf_dir):
+def _q_dedup_containment(spark, sf_dir, n):
     """Directed shingle-containment pairs (dedup.containment_pairs):
     the asymmetric dedup Jaccard misses — snippet docs built as the
     first 12 words of every doc_id % 4 == 0 document (ids +200000)
@@ -3754,18 +3780,18 @@ def _contain_docs_sql():
             "FROM documents WHERE doc_id %% 4 = 0)" % WS_SPLIT)
 
 
-def _q_dedup_ngram_jaccard(spark, sf_dir):
+def _q_dedup_ngram_jaccard(spark, sf_dir, n):
     from ferenda_spark.operators.dedup import ngram_jaccard_pairs
     return ngram_jaccard_pairs(_read(spark, sf_dir, "documents"),
                                threshold=0.5,
                                shingles=_doc_shingles(spark, sf_dir))
 
 
-def _q_dedup_minhash_lsh(spark, sf_dir):
+def _q_dedup_minhash_lsh(spark, sf_dir, n):
     return _lsh_pairs(spark, sf_dir)
 
 
-def _q_dedup_simhash(spark, sf_dir):
+def _q_dedup_simhash(spark, sf_dir, n):
     from ferenda_spark.operators.dedup import simhash_pairs
     return simhash_pairs(_read(spark, sf_dir, "documents"),
                          max_hamming=16, verify_threshold=0.5,
@@ -3773,20 +3799,20 @@ def _q_dedup_simhash(spark, sf_dir):
         .select("a_id", "b_id", "jaccard_sim")
 
 
-def _q_dedup_clusters(spark, sf_dir):
+def _q_dedup_clusters(spark, sf_dir, n):
     """Pairs → transitive dedup groups (CC over the pair graph);
     reads the session's materialized LSH pair table."""
     from ferenda_spark.operators.dedup import dup_clusters
     return dup_clusters(_lsh_pairs(spark, sf_dir))
 
 
-def _q_dedup_embedding(spark, sf_dir):
+def _q_dedup_embedding(spark, sf_dir, n):
     from ferenda_spark.operators.dedup import embedding_dup_pairs
     return embedding_dup_pairs(_read(spark, sf_dir, "embeddings"),
                                threshold=0.45)
 
 
-def _q_dedup_embedding_blocked(spark, sf_dir):
+def _q_dedup_embedding_blocked(spark, sf_dir, n):
     """Scale path: blocked exact GEMM candidates + fold re-verify —
     output equals the brute twin bit-for-bit (same oracle)."""
     from ferenda_spark.operators.dedup import embedding_dup_pairs_blocked
@@ -3794,19 +3820,19 @@ def _q_dedup_embedding_blocked(spark, sf_dir):
                                        threshold=0.45)
 
 
-def _q_ann_topk(spark, sf_dir):
+def _q_ann_topk(spark, sf_dir, n):
     from ferenda_spark.operators.similarity import brute_force_topk
     emb = _read(spark, sf_dir, "embeddings")
     return brute_force_topk(emb, emb.where(F.col("vec_id") < 50), k=5)
 
 
-def _q_ann_lsh_topk(spark, sf_dir):
+def _q_ann_lsh_topk(spark, sf_dir, n):
     from ferenda_spark.operators.similarity import ann_lsh_topk
     emb = _read(spark, sf_dir, "embeddings")
     return ann_lsh_topk(emb, emb.where(F.col("vec_id") < 50), k=5)
 
 
-def _q_ann_pq_topk(spark, sf_dir):
+def _q_ann_pq_topk(spark, sf_dir, n):
     """Product-quantization ANN (similarity.ann_pq_topk, Jégou et al.
     TPAMI 2011): the memory-bound end of the ANN family — corpus
     vectors compressed to 32 sub-codes (2-dim subspaces, 16 centroids
@@ -3819,7 +3845,7 @@ def _q_ann_pq_topk(spark, sf_dir):
     return ann_pq_topk(emb, emb.where(F.col("vec_id") < 50), k=5)
 
 
-def _q_ann_ivf_topk(spark, sf_dir):
+def _q_ann_ivf_topk(spark, sf_dir, n):
     """IVF-bucketed ANN (k-means cells + nprobe); recall vs brute
     force is probabilistic (asserted in pytest), but the operator is
     seeded/deterministic so it carries a hard cross-execution oracle
@@ -3829,7 +3855,7 @@ def _q_ann_ivf_topk(spark, sf_dir):
     return ann_ivf_topk(emb, emb.where(F.col("vec_id") < 50), k=5)
 
 
-def _q_embedding_clusters(spark, sf_dir):
+def _q_embedding_clusters(spark, sf_dir, n):
     """Corpus k-means clustering (domain balancing / data mixing):
     every vector assigned to its nearest seeded centroid in one
     shuffle-free Arrow pass; hard cross-execution oracle
@@ -3838,7 +3864,7 @@ def _q_embedding_clusters(spark, sf_dir):
     return kmeans_clusters(_read(spark, sf_dir, "embeddings"))
 
 
-def _q_media_decode(spark, sf_dir):
+def _q_media_decode(spark, sf_dir, n):
     """Real header decode (PNG IHDR, WAV RIFF) over a synthetic media
     table with genuine container bytes; video stays an explicit
     'unsupported' row (no codec in this environment). The oracle
@@ -3855,7 +3881,18 @@ def _q_media_decode(spark, sf_dir):
 
 # ---- relational / faceting analogs (SURVEY.md §2.5) over parquet
 
-def _q_facet_pivot(spark, sf_dir):
+FACET_PIVOT_SQL = """
+    SELECT user_id,
+           count(*) FILTER (event_type = 'click')    AS n_click,
+           count(*) FILTER (event_type = 'error')    AS n_error,
+           count(*) FILTER (event_type = 'purchase') AS n_purchase,
+           count(*) FILTER (event_type = 'signup')   AS n_signup,
+           count(*) FILTER (event_type = 'view')     AS n_view
+    FROM events GROUP BY user_id ORDER BY user_id
+"""
+
+
+def _q_facet_pivot(spark, sf_dir, n):
     """faceted_data analog: pivot events per user over event_type."""
     events = _read(spark, sf_dir, "events")
     types = ["click", "error", "purchase", "signup", "view"]
@@ -3867,7 +3904,15 @@ def _q_facet_pivot(spark, sf_dir):
             .orderBy("user_id"))
 
 
-def _q_stats_groupby(spark, sf_dir):
+STATS_GROUPBY_SQL = """
+    SELECT lang, count(DISTINCT doc_id) AS n_docs,
+           sum(n_chars)::BIGINT AS total_chars,
+           round(avg(n_chars), 4) AS avg_chars
+    FROM documents GROUP BY lang ORDER BY lang
+"""
+
+
+def _q_stats_groupby(spark, sf_dir, n):
     """API-statistics analog (ref ferenda/wsgiapp.py:352-506)."""
     docs = _read(spark, sf_dir, "documents")
     return (docs.groupBy("lang")
@@ -3877,7 +3922,18 @@ def _q_stats_groupby(spark, sf_dir):
             .orderBy("lang"))
 
 
-def _q_window_topk(spark, sf_dir):
+WINDOW_TOPK_SQL = """
+    SELECT lang, rank, doc_id, n_chars FROM (
+      SELECT lang, doc_id, n_chars,
+             row_number() OVER (PARTITION BY lang
+                                ORDER BY n_chars DESC, doc_id ASC)
+               AS rank
+      FROM documents)
+    WHERE rank <= 3 ORDER BY lang, rank
+"""
+
+
+def _q_window_topk(spark, sf_dir, n):
     """TOC/news top-k-per-group analog."""
     docs = _read(spark, sf_dir, "documents")
     w = Window.partitionBy("lang").orderBy(F.desc("n_chars"), F.asc("doc_id"))
@@ -3887,14 +3943,23 @@ def _q_window_topk(spark, sf_dir):
             .orderBy("lang", "rank"))
 
 
-def _q_events_windowed(spark, sf_dir):
+EVENTS_WINDOWED_SQL = """
+    SELECT strftime(time_bucket(INTERVAL 1 DAY, ts),
+                    '%Y-%m-%d %H:%M:%S') AS window_start,
+           event_type, count(*) AS n_events,
+           round(sum(value), 4) AS sum_value
+    FROM events GROUP BY 1, 2 ORDER BY window_start, event_type
+"""
+
+
+def _q_events_windowed(spark, sf_dir, n):
     """Tumbling event-time window rollup (streaming/windows.py —
     batch form; the streaming form shares the expression)."""
     from ferenda_spark.streaming.windows import windowed_event_counts
     return windowed_event_counts(_read(spark, sf_dir, "events"))
 
 
-def _q_events_asof(spark, sf_dir):
+def _q_events_asof(spark, sf_dir, n):
     """Backward as-of join (versioning.asof_join): every event picks
     the per-user config version current at event time (versions land
     hourly+6h per user starting 01:00, so first-hour events match
@@ -3916,7 +3981,7 @@ def _q_events_asof(spark, sf_dir):
                       "user_id", "version")
 
 
-def _q_events_range_join(spark, sf_dir):
+def _q_events_range_join(spark, sf_dir, n):
     """Grid-bucketed range join (versioning.range_join): formulaic
     points land in formulaic per-key validity intervals (start ≤ ts <
     end); boundary points sit exactly on starts/ends of every 8th
@@ -3954,7 +4019,7 @@ EVENTS_RANGE_SQL = """
 """
 
 
-def _q_events_interval_overlap(spark, sf_dir):
+def _q_events_interval_overlap(spark, sf_dir, n):
     """Grid-bucketed interval×interval overlap join
     (versioning.interval_overlap): formulaic validity windows ↔
     formulaic campaign windows on the same key, half-open semantics
@@ -4007,13 +4072,49 @@ EVENTS_ASOF_SQL = """
 """
 
 
-def _q_events_sessionize(spark, sf_dir):
+EVENTS_SESSIONIZE_SQL = """
+    WITH flagged AS (
+      SELECT user_id, ts, event_id,
+             CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER w
+                       >= 1800000000
+                  THEN 1 ELSE 0 END AS new_session
+      FROM events
+      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+    ), with_id AS (
+      SELECT user_id, ts,
+             sum(new_session) OVER (PARTITION BY user_id
+                                    ORDER BY ts, event_id
+                                    ROWS UNBOUNDED PRECEDING)
+               AS session_seq
+      FROM flagged
+    )
+    SELECT user_id, session_seq::BIGINT AS session_seq,
+           strftime(min(ts), '%Y-%m-%d %H:%M:%S')
+             AS session_start,
+           count(*) AS n_events,
+           (epoch_us(max(ts)) - epoch_us(min(ts)))::BIGINT
+             AS duration_us
+    FROM with_id GROUP BY user_id, session_seq
+    ORDER BY user_id, session_seq
+"""
+
+
+def _q_events_sessionize(spark, sf_dir, n):
     """Gap-based session reconstruction per user (30-minute gap)."""
     from ferenda_spark.streaming.windows import sessionize
     return sessionize(_read(spark, sf_dir, "events"))
 
 
-def _q_reverse_refs(spark, sf_dir):
+REVERSE_REFS_SQL = """
+    SELECT o.o_custkey AS custkey, c.c_name,
+           count(*) AS n_orders,
+           round(sum(o.o_totalprice), 2) AS total_price
+    FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
+    GROUP BY o.o_custkey, c.c_name ORDER BY custkey
+"""
+
+
+def _q_reverse_refs(spark, sf_dir, n):
     """relate_dependencies-shaped reverse-reference join on TPC-H:
     per-customer inbound order count (broadcast dim join)."""
     orders = _read(spark, sf_dir, "orders")
@@ -4028,7 +4129,20 @@ def _q_reverse_refs(spark, sf_dir):
             .orderBy("custkey"))
 
 
-def _q_lineitem_pricing(spark, sf_dir):
+LINEITEM_PRICING_SQL = """
+    SELECT l_returnflag, l_linestatus,
+           round(sum(l_quantity), 2) AS sum_qty,
+           round(sum(l_extendedprice), 2) AS sum_base_price,
+           round(sum(l_extendedprice * (1 - l_discount)), 2)
+             AS sum_disc_price,
+           count(*) AS count_order
+    FROM lineitem WHERE l_shipdate <= DATE '1998-09-02'
+    GROUP BY l_returnflag, l_linestatus
+    ORDER BY l_returnflag, l_linestatus
+"""
+
+
+def _q_lineitem_pricing(spark, sf_dir, n):
     """TPC-H Q1-shaped scan+agg (bench headline; pushdown showcase)."""
     li = _read(spark, sf_dir, "lineitem")
     return (li.where(F.col("l_shipdate") <= "1998-09-02")
@@ -4042,196 +4156,44 @@ def _q_lineitem_pricing(spark, sf_dir):
             .orderBy("l_returnflag", "l_linestatus"))
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        # KG pipeline (synthetic pages; rows-only driver check, value
-        # parity enforced by the pytest fixture suite)
-        "kg_documents": _q_kg_documents,
-        "kg_triples": _q_kg_triples,
-        "kg_resources": _q_kg_resources,
-        "kg_xhtml_roundtrip": _q_kg_xhtml_roundtrip,
-        "kg_deps": _q_kg_deps,
-        "kg_entities": _q_kg_entities,
-        "kg_entities_delta": _q_kg_entities_delta,
-        "kg_canonical_triples": _q_kg_canonical_triples,
-        "kg_linked_publishers": _q_kg_linked_publishers,
-        "kg_faceted": _q_kg_faceted,
-        "kg_faceted_typed": _q_kg_faceted_typed,
-        "kg_toc": _q_kg_toc,
-        "kg_toc_pagesets": _q_kg_toc_pagesets,
-        "kg_facet_stats": _q_kg_facet_stats,
-        "kg_ispartof_closure": _q_kg_ispartof_closure,
-        "kg_inbound_refs": _q_kg_inbound_refs,
-        "kg_pagerank": _q_kg_pagerank,
-        "kg_ppr": _q_kg_ppr,
-        "kg_hits": _q_kg_hits,
-        "kg_walks": _q_kg_walks,
-        "kg_walk_pairs": _q_kg_walk_pairs,
-        "kg_pmi": _q_kg_pmi,
-        "kg_linkpred": _q_kg_linkpred,
-        "kg_kcore": _q_kg_kcore,
-        "kg_negatives": _q_kg_negatives,
-        "kg_cocitation": _q_kg_cocitation,
-        "kg_charsets": _q_kg_charsets,
-        "kg_distances": _q_kg_distances,
-        "kg_modularity": _q_kg_modularity,
-        "kg_completeness": _q_kg_completeness,
-        "kg_degree_dist": _q_kg_degree_dist,
-        "kg_graph_stats": _q_kg_graph_stats,
-        "kg_summaries": _q_kg_summaries,
-        "kg_title_pairs": _q_kg_title_pairs,
-        "kg_citation_degrees": _q_kg_citation_degrees,
-        "kg_citation_map": _q_kg_citation_map,
-        "kg_triangles": _q_kg_triangles,
-        "kg_communities": _q_kg_communities,
-        "kg_scc": _q_kg_scc,
-        "kg_anf": _q_kg_anf,
-        "kg_type_inference": _q_kg_type_inference,
-        "kg_centrality": _q_kg_centrality,
-        "kg_pagerank_delta": _q_kg_pagerank_delta,
-        "kg_sssp": _q_kg_sssp,
-        "kg_condensation": _q_kg_condensation,
-        "kg_host_graph": _q_kg_host_graph,
-        "kg_domain_pagerank": _q_kg_domain_pagerank,
-        "kg_domain_pagerank_weighted": _q_kg_domain_pagerank_weighted,
-        "kg_structured_data": _q_kg_structured_data,
-        "warc_ingest": _q_warc_ingest,
-        "robots_filter": _q_robots_filter,
-        "kg_sparql_structdata": _q_kg_sparql_structdata,
-        "cdx_index": _q_cdx_index,
-        "sitemap_entries": _q_sitemap_entries,
-        "warc_to_pages": _q_warc_to_pages,
-        "latest_captures": _q_latest_captures,
-        "politeness_schedule": _q_politeness_schedule,
-        "revisit_stats": _q_revisit_stats,
-        "recrawl_priority": _q_recrawl_priority,
-        "structdata_entities": _q_structdata_entities,
-        "kg_rdfs_entailed": _q_kg_rdfs_entailed,
-        "kg_owl_entailed": _q_kg_owl_entailed,
-        "kg_rdfs_delta": _q_kg_rdfs_delta,
-        "kg_shacl_report": _q_kg_shacl_report,
-        "kg_sparql_update": _q_kg_sparql_update,
-        "kg_void_stats": _q_kg_void_stats,
-        "kg_doc_stats": _q_kg_doc_stats,
-        "kg_keyword_hubs": _q_kg_keyword_hubs,
-        "kg_minted_uris": _q_kg_minted_uris,
-        "kg_annotations": _q_kg_annotations,
-        "kg_stale": _q_kg_stale,
-        "kg_news_feedsets": _q_kg_news_feedsets,
-        "kg_news_feed_entries": _q_kg_news_feed_entries,
-        "kg_citations": _q_kg_citations,
-        "kg_citations_stock": _q_kg_citations_stock,
-        "kg_routing": _q_kg_routing,
-        "kg_search": _q_kg_search,
-        "kg_search_indexed": _q_kg_search_indexed,
-        "kg_search_fused": _q_kg_search_fused,
-        "kg_search_delta": _q_kg_search_delta,
-        "kg_sparql": _q_kg_sparql,
-        "kg_sparql_graphvar": _q_kg_sparql_graphvar,
-        "kg_sparql_pathvar": _q_kg_sparql_pathvar,
-        "kg_crawl_delta": _q_kg_crawl_delta,
-        "kg_conflicts": _q_kg_conflicts,
-        "kg_fused": _q_kg_fused,
-        "kg_triple_intervals": _q_kg_triple_intervals,
-        "kg_asof": _q_kg_asof,
-        "kg_provenance": _q_kg_provenance,
-        "kg_nquads": _q_kg_nquads,
-        "kg_describe": _q_kg_describe,
-        "kg_describe_sparql": _q_kg_describe_sparql,
-        "kg_sparql_stats": _q_kg_sparql_stats,
-        "kg_sparql_bind": _q_kg_sparql_bind,
-        "kg_sparql_orphans": _q_kg_sparql_orphans,
-        "kg_sparql_langdt": _q_kg_sparql_langdt,
-        "kg_sparql_minus": _q_kg_sparql_minus,
-        "kg_sparql_agg": _q_kg_sparql_agg,
-        "kg_sparql_subquery": _q_kg_sparql_subquery,
-        "kg_sparql_seqpath": _q_kg_sparql_seqpath,
-        "kg_sparql_nested": _q_kg_sparql_nested,
-        "kg_sparql_exists_expr": _q_kg_sparql_exists_expr,
-        "kg_sparql_datetime": _q_kg_sparql_datetime,
-        "kg_sparql_construct_bnode": _q_kg_sparql_construct_bnode,
-        "kg_sparql_optagg": _q_kg_sparql_optagg,
-        "kg_sparql_casts": _q_kg_sparql_casts,
-        "kg_sparql_top_cited": _q_kg_sparql_top_cited,
-        "kg_sparql_groupkey": _q_kg_sparql_groupkey,
-        "kg_describe_rfc": _q_kg_describe_rfc,
-        "kg_describe_base": _q_kg_describe_base,
-        "kg_versions": _q_kg_versions,
-        "kg_stage_counters": _q_kg_stage_counters,
-        # training-data pipeline ops (DuckDB-oracled)
-        "token_stats": _q_token_stats,
-        "hll_distinct": _q_hll_distinct,
-        "chunk_documents": _q_chunk_documents,
-        "length_quantiles": _q_length_quantiles,
-        "cms_counts": _q_cms_counts,
-        "bloom_urls": _q_bloom_words,
-        "crawl_overlap": _q_crawl_overlap,
-        "pack_sequences": _q_pack_sequences,
-        "stratified_sample": _q_stratified_sample,
-        "curriculum_order": _q_curriculum_order,
-        "resample_mixture": _q_resample_mixture,
-        "dsir_resample": _q_dsir_resample,
-        "top_ngrams": _q_top_ngrams,
-        "bpe_pairs": _q_bpe_pairs,
-        "bpe_train": _q_bpe_train,
-        "bpe_encode": _q_bpe_encode,
-        "related_docs": _q_related_docs,
-        "profile_orders": _q_profile_orders,
-        "top_terms": _q_top_terms,
-        "corpus_curate": _q_corpus_curate,
-        "quality_score": _q_quality,
-        "language_id": _q_langid,
-        "fingerprint": _q_fingerprint,
-        "decontaminate": _q_decontaminate,
-        "lm_perplexity": _q_lm_perplexity,
-        "quality_classifier": _q_quality_classifier,
-        "repetition_stats": _q_repetition_stats,
-        "pii_scrub": _q_pii_scrub,
-        "normalize_text": _q_normalize_text,
-        "url_stats": _q_url_stats,
-        "anchor_stats": _q_anchor_stats,
-        "frontier_expand": _q_frontier_expand,
-        "redirect_resolve": _q_redirect_resolve,
-        "boilerplate_filter": _q_boilerplate,
-        "page_metadata": _q_page_metadata,
-        "dedup_delta": _q_dedup_delta,
-        "blocklist_filter": _q_blocklist_filter,
-        "url_dedup": _q_url_dedup,
-        # relational / faceting analogs (DuckDB-oracled)
-        "facet_pivot": _q_facet_pivot,
-        "events_windowed": _q_events_windowed,
-        "events_sessionize": _q_events_sessionize,
-        "events_asof": _q_events_asof,
-        "events_range_join": _q_events_range_join,
-        "events_interval_overlap": _q_events_interval_overlap,
-        "stats_groupby": _q_stats_groupby,
-        "window_topk": _q_window_topk,
-        "reverse_refs": _q_reverse_refs,
-        "lineitem_pricing": _q_lineitem_pricing,
-        "media_decode": _q_media_decode,
-        # dedup / ANN family LAST — the wall-time tail of the gate
-        # (VERDICT r3 #1: budget truncation hits the cheapest coverage
-        # first when these run in the middle); ordered so the shared
-        # shingle stage and LSH pair table warm for their reusers
-        "dedup_exact": _q_dedup_exact,
-        "dedup_lines": _q_line_dedup,
-        "dedup_windows": _q_dedup_windows,
-        "ann_topk": _q_ann_topk,
-        "ann_lsh_topk": _q_ann_lsh_topk,
-        "ann_pq_topk": _q_ann_pq_topk,
-        "ann_ivf_topk": _q_ann_ivf_topk,
-        "embedding_clusters": _q_embedding_clusters,
-        "dedup_embedding": _q_dedup_embedding,
-        "dedup_embedding_blocked": _q_dedup_embedding_blocked,
-        "dedup_simhash": _q_dedup_simhash,
-        "dedup_minhash_lsh": _q_dedup_minhash_lsh,
-        "dedup_ngram_jaccard": _q_dedup_ngram_jaccard,
-        "dedup_containment": _q_dedup_containment,
-        "dedup_clusters": _q_dedup_clusters,
-    }
+# ------------------------------------------------------------ registry
+
+class Query(NamedTuple):
+    """One driver query, declared once. ``build(spark, sf_dir, n)``
+    plans it (``n`` = synthetic pages corpus size; queries that only
+    read the ``sf_dir`` tables ignore it), ``oracle(inputs)`` returns
+    its DuckDB twin, and ``bench`` puts it in bench.py's timed set."""
+    name: str
+    build: Callable[[SparkSession, str, int], DataFrame]
+    oracle: Callable[["OracleInputs"], str]
+    bench: bool = False
 
 
-def oracle_sql() -> dict[str, str]:
+class OracleInputs(NamedTuple):
+    kg: dict[str, str]   # materialized KG extraction parquet at n
+    ann: dict            # cross-execution ANN/BPE twin tables
+    jaccard: str         # brute-force jaccard ground truth (3 oracles)
+
+
+def oracle_inputs(n: int) -> OracleInputs:
+    """Materialize what the oracles read (pure pandas/pyarrow; no-op
+    when cached), so the driver can run the SQL right away."""
+    from ferenda_spark import annoracle
+    from ferenda_spark.operators import dedup
+    # the quadratic jaccard ground truth is materialized once (same
+    # DuckDB engine + SQL, cached by input/kernel fingerprint) and
+    # shared by three oracles — see dedup.ensure_jaccard_pairs_oracle
+    jaccard = ("SELECT * FROM read_parquet('%s') ORDER BY a_id, b_id"
+               % dedup.ensure_jaccard_pairs_oracle(CORRECTNESS_SF_DIR,
+                                                   threshold=0.5))
+    return OracleInputs(_kg_paths(n),
+                        annoracle.ensure_ann_tables(CORRECTNESS_SF_DIR),
+                        jaccard)
+
+
+def registry() -> tuple[Query, ...]:
+    """Every driver query in driver order; queries(), oracle_sql() and
+    bench.py are views over this one list."""
     from ferenda_spark import annoracle, kgoracle, sparql
     from ferenda_spark.operators import (curation, dedup, graphops,
                                          multimodal, packing, sampling,
@@ -4239,410 +4201,497 @@ def oracle_sql() -> dict[str, str]:
     from ferenda_spark.operators import linking as _linking_ops
     from ferenda_spark.operators import sketches as _sketches
     from ferenda_spark.operators import validate as _validate
-    # the quadratic jaccard ground truth is materialized once (same
-    # DuckDB engine + SQL, cached by input/kernel fingerprint) and
-    # shared by three oracles — see dedup.ensure_jaccard_pairs_oracle
-    jaccard_oracle = ("SELECT * FROM read_parquet('%s') "
-                      "ORDER BY a_id, b_id"
-                      % dedup.ensure_jaccard_pairs_oracle(
-                          CORRECTNESS_SF_DIR, threshold=0.5))
-    dup_docs = DUP_DOCS_SQL
-    # materialize the KG extraction + ANN-twin parquet before the
-    # driver runs the SQL below (pure pandas/pyarrow; no-op when cached)
-    kg = _kg_paths()
-    ann = annoracle.ensure_ann_tables(CORRECTNESS_SF_DIR)
-    return {
-        # KG pipeline oracles over the materialized extraction
+    return (
+        # KG pipeline; oracles over the materialized extraction
         # (ferenda_spark.kgcache docstring explains the scheme)
-        "kg_documents": kgoracle.sql_documents(kg),
-        "kg_triples": kgoracle.sql_triples(kg),
-        "kg_resources": kgoracle.sql_resources(kg),
+        Query("kg_documents", _q_kg_documents,
+              lambda o: kgoracle.sql_documents(o.kg)),
+        Query("kg_triples", _q_kg_triples,
+              lambda o: kgoracle.sql_triples(o.kg)),
+        Query("kg_resources", _q_kg_resources,
+              lambda o: kgoracle.sql_resources(o.kg)),
         # the rendered-XHTML round trip must reproduce the triples
         # table exactly, so it shares kg_triples' oracle
-        "kg_xhtml_roundtrip": kgoracle.sql_triples(kg),
-        "kg_deps": kgoracle.sql_deps(kg),
-        "kg_entities": kgoracle.sql_entities(kg),
+        Query("kg_xhtml_roundtrip", _q_kg_xhtml_roundtrip,
+              lambda o: kgoracle.sql_triples(o.kg)),
+        Query("kg_deps", _q_kg_deps, lambda o: kgoracle.sql_deps(o.kg)),
+        Query("kg_entities", _q_kg_entities,
+              lambda o: kgoracle.sql_entities(o.kg)),
         # the incremental query's oracle IS the full recompute:
         # incremental ≡ from-scratch is the semantic spec
-        "kg_entities_delta": kgoracle.sql_entities(kg),
-        "kg_canonical_triples": kgoracle.sql_canonical_triples(kg),
-        "kg_linked_publishers": kgoracle.sql_linked_publishers(
-            kg, _kg_dictionary()),
-        "kg_faceted": kgoracle.sql_faceted(kg),
-        "kg_faceted_typed": _kg_facet_query_sql(kg),
-        "kg_toc": kgoracle.sql_toc(kg, _kg_commondata()),
-        "kg_toc_pagesets": kgoracle.sql_toc_pagesets(kg, _kg_commondata()),
-        "kg_facet_stats": kgoracle.sql_facet_stats(kg),
-        "kg_ispartof_closure": kgoracle.sql_ispartof_closure(kg),
-        "kg_inbound_refs": kgoracle.sql_inbound_refs(kg),
-        "kg_pagerank": kgoracle.sql_pagerank(kg),
-        "kg_ppr": kgoracle.sql_personalized_pagerank(
-            kg, "node NOT LIKE '%#%'"),
-        "kg_hits": kgoracle.sql_hits(kg),
-        "kg_walks": kgoracle.sql_random_walks(kg),
-        "kg_walk_pairs": kgoracle.sql_walk_pairs(kg),
-        "kg_pmi": kgoracle.sql_pmi_scores(kg),
-        "kg_linkpred": kgoracle.sql_adamic_adar(kg),
-        "kg_distances": kgoracle.sql_bfs_distances(
-            kg,
-            seeds_cte=("seeds AS (SELECT DISTINCT uri AS node FROM "
-                       "read_parquet('%s'))" % kg["documents"]),
-            edges_cte=(
-                "e AS (SELECT subject AS src, object AS dst FROM "
-                "read_parquet('{t}') WHERE predicate = "
-                "'http://purl.org/dc/terms/references' AND objtype = "
-                "'uri' UNION ALL SELECT object, subject FROM "
-                "read_parquet('{t}') WHERE predicate = "
-                "'http://purl.org/dc/terms/isPartOf' AND objtype = "
-                "'uri')".format(t=kg["triples"]))),
-        "kg_modularity": kgoracle.sql_modularity(kg),
-        "kg_summaries": kgoracle.sql_entity_summaries(kg),
-        "kg_title_pairs": _linking_ops.sql_blocked_pairs(
-            "read_parquet('%s')" % kg["documents"]),
-        "kg_degree_dist": kgoracle.sql_degree_histogram(
-            kg, edges_cte=_KG_LINK_EDGES_CTE % kg["triples"]),
-        "kg_graph_stats": kgoracle.sql_graph_stats(
-            kg, edges_cte=_KG_LINK_EDGES_CTE % kg["triples"]),
-        "kg_completeness": _validate.sql_completeness_report(
-            "read_parquet('%s')" % kg["triples"]),
-        "kg_cocitation": kgoracle.sql_cocitation_coupling(
-            kg, edges_cte=(
-                "e AS (SELECT subject AS src, object AS dst FROM "
-                "read_parquet('%s') WHERE predicate IN "
-                "('http://purl.org/dc/terms/references', "
-                "'http://purl.org/dc/terms/isPartOf') AND objtype = "
-                "'uri')" % kg["triples"])),
-        "kg_charsets": kgoracle.sql_characteristic_sets(kg),
-        "kg_kcore": kgoracle.sql_kcore(
-            kg, k=2, edges_cte=("e AS (SELECT center AS src, "
-                                "context AS dst FROM (%s))"
-                                % kgoracle.sql_walk_pairs(kg))),
-        "kg_negatives": kgoracle.sql_negative_samples(kg,
+        Query("kg_entities_delta", _q_kg_entities_delta,
+              lambda o: kgoracle.sql_entities(o.kg), bench=True),
+        Query("kg_canonical_triples", _q_kg_canonical_triples,
+              lambda o: kgoracle.sql_canonical_triples(o.kg)),
+        Query("kg_linked_publishers", _q_kg_linked_publishers,
+              lambda o: kgoracle.sql_linked_publishers(
+                  o.kg, _kg_dictionary())),
+        Query("kg_faceted", _q_kg_faceted,
+              lambda o: kgoracle.sql_faceted(o.kg)),
+        Query("kg_faceted_typed", _q_kg_faceted_typed,
+              lambda o: _kg_facet_query_sql(o.kg)),
+        Query("kg_toc", _q_kg_toc,
+              lambda o: kgoracle.sql_toc(o.kg, _kg_commondata()), bench=True),
+        Query("kg_toc_pagesets", _q_kg_toc_pagesets,
+              lambda o: kgoracle.sql_toc_pagesets(o.kg, _kg_commondata())),
+        Query("kg_facet_stats", _q_kg_facet_stats,
+              lambda o: kgoracle.sql_facet_stats(o.kg)),
+        Query("kg_ispartof_closure", _q_kg_ispartof_closure,
+              lambda o: kgoracle.sql_ispartof_closure(o.kg)),
+        Query("kg_inbound_refs", _q_kg_inbound_refs,
+              lambda o: kgoracle.sql_inbound_refs(o.kg)),
+        Query("kg_pagerank", _q_kg_pagerank,
+              lambda o: kgoracle.sql_pagerank(o.kg)),
+        Query("kg_ppr", _q_kg_ppr,
+              lambda o: kgoracle.sql_personalized_pagerank(
+                  o.kg, "node NOT LIKE '%#%'"), bench=True),
+        Query("kg_hits", _q_kg_hits, lambda o: kgoracle.sql_hits(o.kg)),
+        Query("kg_walks", _q_kg_walks,
+              lambda o: kgoracle.sql_random_walks(o.kg), bench=True),
+        Query("kg_walk_pairs", _q_kg_walk_pairs,
+              lambda o: kgoracle.sql_walk_pairs(o.kg)),
+        Query("kg_pmi", _q_kg_pmi,
+              lambda o: kgoracle.sql_pmi_scores(o.kg), bench=True),
+        Query("kg_linkpred", _q_kg_linkpred,
+              lambda o: kgoracle.sql_adamic_adar(o.kg), bench=True),
+        Query("kg_kcore", _q_kg_kcore,
+              lambda o: kgoracle.sql_kcore(
+                  o.kg, k=2, edges_cte=("e AS (SELECT center AS src, "
+                                      "context AS dst FROM (%s))"
+                                      % kgoracle.sql_walk_pairs(o.kg))),
+              bench=True),
+        Query("kg_negatives", _q_kg_negatives,
+              lambda o: kgoracle.sql_negative_samples(o.kg,
                                                       per_positive=2),
-        "kg_citation_degrees": kgoracle.sql_citation_degrees(kg),
-        "kg_citation_map": kgoracle.sql_citation_map(kg),
-        "kg_triangles": kgoracle.sql_triangles(kg),
-        "kg_communities": kgoracle.sql_communities(kg),
-        "kg_scc": graphops.sql_scc(KG_SCC_EDGES_SQL),
-        "kg_anf": graphops.sql_anf(KG_ANF_EDGES_SQL, rounds=6),
-        "kg_type_inference": kgoracle.sql_type_inference(kg),
-        "kg_centrality": graphops.sql_anf_centrality(
-            KG_ANF_EDGES_SQL, rounds=6),
-        "kg_pagerank_delta": kgoracle.sql_pagerank_delta(kg),
-        "kg_condensation": graphops.sql_condensation(KG_SCC_EDGES_SQL),
-        "kg_sssp": graphops.sql_weighted_sssp(
-            KG_SSSP_EDGES_SQL,
-            "SELECT 'n000' AS node UNION ALL SELECT 'n007'"),
-        "kg_host_graph": HOST_GRAPH_SQL,
-        "kg_domain_pagerank": kgoracle.sql_pagerank(
-            kg, edges_cte=HOST_EDGES_CTE),
-        "kg_domain_pagerank_weighted": kgoracle.sql_weighted_pagerank(
-            kg, edges_cte=HOST_WEDGES_CTE),
-        "kg_structured_data": STRUCTDATA_SQL,
-        "warc_ingest": WARC_SQL,
-        "robots_filter": ROBOTS_SQL,
-        "kg_sparql_structdata": sparql.compile_sql(
-            "(SELECT subject, predicate, object, objtype, "
-            "NULL::VARCHAR AS lang, NULL::VARCHAR AS datatype, "
-            "source_url, source_url AS context FROM (%s) sd)"
-            % STRUCTDATA_SQL, _STRUCTDATA_SPARQL),
-        "cdx_index": CDX_SQL,
-        "sitemap_entries": SITEMAP_SQL,
-        "warc_to_pages": WARC_PAGES_SQL,
-        "latest_captures": LATEST_CAPTURES_SQL,
-        "politeness_schedule": POLITENESS_SQL,
-        "revisit_stats": REVISIT_SQL,
-        "recrawl_priority": RECRAWL_SQL,
-        "structdata_entities": STRUCT_ENTITIES_SQL,
-        "kg_rdfs_entailed": _kg_rdfs_sql(kg),
-        "kg_owl_entailed": _kg_owl_sql(kg),
-        "kg_rdfs_delta": _kg_rdfs_delta_sql(kg),
-        "kg_shacl_report": _kg_shacl_sql(kg),
-        "kg_sparql_update": _kg_update_sql(kg),
-        "kg_void_stats": _kg_void_sql(kg),
-        "kg_doc_stats": kgoracle.sql_doc_stats(kg),
-        "kg_keyword_hubs": kgoracle.sql_keyword_hubs(kg),
-        "kg_minted_uris": kgoracle.sql_minted_uris(kg),
-        "kg_annotations": kgoracle.sql_annotations(kg),
-        "kg_stale": kgoracle.sql_stale(kg, _kg_changed_urls()),
-        "kg_news_feedsets": kgoracle.sql_news_feedsets(kg, _kg_commondata()),
-        "kg_news_feed_entries":
-            kgoracle.sql_news_feed_entries(kg, _kg_commondata()),
-        "kg_citations": kgoracle.sql_citations(kg),
-        "kg_citations_stock": _kg_citations_stock_sql(kg),
-        "kg_routing": _kg_routing_sql(kg),
-        "kg_search": _kg_search_sql(kg),
-        "kg_search_indexed": _kg_search_sql(kg),
-        "kg_search_fused": """
-    WITH s AS (%s), p AS (%s),
-    pl AS (SELECT node, rank FROM p
-           ORDER BY rank DESC, node LIMIT 100),
-    sr AS (SELECT resource_uri AS id,
-                  row_number() OVER (ORDER BY score DESC, resource_uri)
-                    AS rnk FROM s),
-    pr AS (SELECT node AS id,
-                  row_number() OVER (ORDER BY rank DESC, node) AS rnk
-           FROM pl),
-    u AS (SELECT id, rnk FROM sr UNION ALL SELECT id, rnk FROM pr)
-    SELECT id, round(sum(1.0 / (60 + rnk)), 6) AS rrf,
-           count(*)::BIGINT AS n_lists
-    FROM u GROUP BY id ORDER BY id
-    """ % (_kg_search_sql(kg), kgoracle.sql_pagerank(kg)),
+              bench=True),
+        Query("kg_cocitation", _q_kg_cocitation,
+              lambda o: kgoracle.sql_cocitation_coupling(
+                  o.kg, edges_cte=(
+                      "e AS (SELECT subject AS src, object AS dst FROM "
+                      "read_parquet('%s') WHERE predicate IN "
+                      "('http://purl.org/dc/terms/references', "
+                      "'http://purl.org/dc/terms/isPartOf') AND objtype = "
+                      "'uri')" % o.kg["triples"])), bench=True),
+        Query("kg_charsets", _q_kg_charsets,
+              lambda o: kgoracle.sql_characteristic_sets(o.kg), bench=True),
+        Query("kg_distances", _q_kg_distances,
+              lambda o: kgoracle.sql_bfs_distances(
+                  o.kg,
+                  seeds_cte=("seeds AS (SELECT DISTINCT uri AS node FROM "
+                             "read_parquet('%s'))" % o.kg["documents"]),
+                  edges_cte=(
+                      "e AS (SELECT subject AS src, object AS dst FROM "
+                      "read_parquet('{t}') WHERE predicate = "
+                      "'http://purl.org/dc/terms/references' AND objtype = "
+                      "'uri' UNION ALL SELECT object, subject FROM "
+                      "read_parquet('{t}') WHERE predicate = "
+                      "'http://purl.org/dc/terms/isPartOf' AND objtype = "
+                      "'uri')".format(t=o.kg["triples"]))), bench=True),
+        Query("kg_modularity", _q_kg_modularity,
+              lambda o: kgoracle.sql_modularity(o.kg), bench=True),
+        Query("kg_completeness", _q_kg_completeness,
+              lambda o: _validate.sql_completeness_report(
+                  "read_parquet('%s')" % o.kg["triples"]), bench=True),
+        Query("kg_degree_dist", _q_kg_degree_dist,
+              lambda o: kgoracle.sql_degree_histogram(
+                  o.kg, edges_cte=_KG_LINK_EDGES_CTE % o.kg["triples"]),
+              bench=True),
+        Query("kg_graph_stats", _q_kg_graph_stats,
+              lambda o: kgoracle.sql_graph_stats(
+                  o.kg, edges_cte=_KG_LINK_EDGES_CTE % o.kg["triples"]),
+              bench=True),
+        Query("kg_summaries", _q_kg_summaries,
+              lambda o: kgoracle.sql_entity_summaries(o.kg), bench=True),
+        Query("kg_title_pairs", _q_kg_title_pairs,
+              lambda o: _linking_ops.sql_blocked_pairs(
+                  "read_parquet('%s')" % o.kg["documents"]), bench=True),
+        Query("kg_citation_degrees", _q_kg_citation_degrees,
+              lambda o: kgoracle.sql_citation_degrees(o.kg)),
+        Query("kg_citation_map", _q_kg_citation_map,
+              lambda o: kgoracle.sql_citation_map(o.kg)),
+        Query("kg_triangles", _q_kg_triangles,
+              lambda o: kgoracle.sql_triangles(o.kg), bench=True),
+        Query("kg_communities", _q_kg_communities,
+              lambda o: kgoracle.sql_communities(o.kg), bench=True),
+        Query("kg_scc", _q_kg_scc,
+              lambda o: graphops.sql_scc(KG_SCC_EDGES_SQL), bench=True),
+        Query("kg_anf", _q_kg_anf,
+              lambda o: graphops.sql_anf(KG_ANF_EDGES_SQL, rounds=6),
+              bench=True),
+        Query("kg_type_inference", _q_kg_type_inference,
+              lambda o: kgoracle.sql_type_inference(o.kg), bench=True),
+        Query("kg_centrality", _q_kg_centrality,
+              lambda o: graphops.sql_anf_centrality(
+                  KG_ANF_EDGES_SQL, rounds=6), bench=True),
+        Query("kg_pagerank_delta", _q_kg_pagerank_delta,
+              lambda o: kgoracle.sql_pagerank_delta(o.kg), bench=True),
+        Query("kg_sssp", _q_kg_sssp,
+              lambda o: graphops.sql_weighted_sssp(
+                  KG_SSSP_EDGES_SQL,
+                  "SELECT 'n000' AS node UNION ALL SELECT 'n007'"),
+              bench=True),
+        Query("kg_condensation", _q_kg_condensation,
+              lambda o: graphops.sql_condensation(KG_SCC_EDGES_SQL),
+              bench=True),
+        Query("kg_host_graph", _q_kg_host_graph, lambda o: HOST_GRAPH_SQL),
+        Query("kg_domain_pagerank", _q_kg_domain_pagerank,
+              lambda o: kgoracle.sql_pagerank(
+                  o.kg, edges_cte=HOST_EDGES_CTE), bench=True),
+        Query("kg_domain_pagerank_weighted", _q_kg_domain_pagerank_weighted,
+              lambda o: kgoracle.sql_weighted_pagerank(
+                  o.kg, edges_cte=HOST_WEDGES_CTE), bench=True),
+        Query("kg_structured_data", _q_kg_structured_data,
+              lambda o: STRUCTDATA_SQL, bench=True),
+        Query("warc_ingest", _q_warc_ingest, lambda o: WARC_SQL, bench=True),
+        Query("robots_filter", _q_robots_filter,
+              lambda o: ROBOTS_SQL, bench=True),
+        Query("kg_sparql_structdata", _q_kg_sparql_structdata,
+              lambda o: sparql.compile_sql(
+                  "(SELECT subject, predicate, object, objtype, "
+                  "NULL::VARCHAR AS lang, NULL::VARCHAR AS datatype, "
+                  "source_url, source_url AS context FROM (%s) sd)"
+                  % STRUCTDATA_SQL, _STRUCTDATA_SPARQL), bench=True),
+        Query("cdx_index", _q_cdx_index, lambda o: CDX_SQL, bench=True),
+        Query("sitemap_entries", _q_sitemap_entries,
+              lambda o: SITEMAP_SQL, bench=True),
+        Query("warc_to_pages", _q_warc_to_pages,
+              lambda o: WARC_PAGES_SQL, bench=True),
+        Query("latest_captures", _q_latest_captures,
+              lambda o: LATEST_CAPTURES_SQL, bench=True),
+        Query("politeness_schedule", _q_politeness_schedule,
+              lambda o: POLITENESS_SQL, bench=True),
+        Query("revisit_stats", _q_revisit_stats,
+              lambda o: REVISIT_SQL, bench=True),
+        Query("recrawl_priority", _q_recrawl_priority,
+              lambda o: RECRAWL_SQL, bench=True),
+        Query("structdata_entities", _q_structdata_entities,
+              lambda o: STRUCT_ENTITIES_SQL, bench=True),
+        Query("kg_rdfs_entailed", _q_kg_rdfs_entailed,
+              lambda o: _kg_rdfs_sql(o.kg), bench=True),
+        Query("kg_owl_entailed", _q_kg_owl_entailed,
+              lambda o: _kg_owl_sql(o.kg), bench=True),
+        Query("kg_rdfs_delta", _q_kg_rdfs_delta,
+              lambda o: _kg_rdfs_delta_sql(o.kg)),
+        Query("kg_shacl_report", _q_kg_shacl_report,
+              lambda o: _kg_shacl_sql(o.kg), bench=True),
+        Query("kg_sparql_update", _q_kg_sparql_update,
+              lambda o: _kg_update_sql(o.kg), bench=True),
+        Query("kg_void_stats", _q_kg_void_stats,
+              lambda o: _kg_void_sql(o.kg), bench=True),
+        Query("kg_doc_stats", _q_kg_doc_stats,
+              lambda o: kgoracle.sql_doc_stats(o.kg)),
+        Query("kg_keyword_hubs", _q_kg_keyword_hubs,
+              lambda o: kgoracle.sql_keyword_hubs(o.kg)),
+        Query("kg_minted_uris", _q_kg_minted_uris,
+              lambda o: kgoracle.sql_minted_uris(o.kg), bench=True),
+        Query("kg_annotations", _q_kg_annotations,
+              lambda o: kgoracle.sql_annotations(o.kg), bench=True),
+        Query("kg_stale", _q_kg_stale,
+              lambda o: kgoracle.sql_stale(o.kg, _kg_changed_urls())),
+        Query("kg_news_feedsets", _q_kg_news_feedsets,
+              lambda o: kgoracle.sql_news_feedsets(o.kg, _kg_commondata())),
+        Query("kg_news_feed_entries", _q_kg_news_feed_entries,
+              lambda o: kgoracle.sql_news_feed_entries(o.kg,
+                                                       _kg_commondata())),
+        Query("kg_citations", _q_kg_citations,
+              lambda o: kgoracle.sql_citations(o.kg)),
+        Query("kg_citations_stock", _q_kg_citations_stock,
+              lambda o: _kg_citations_stock_sql(o.kg)),
+        Query("kg_routing", _q_kg_routing, lambda o: _kg_routing_sql(o.kg)),
+        Query("kg_search", _q_kg_search,
+              lambda o: _kg_search_sql(o.kg), bench=True),
+        Query("kg_search_indexed", _q_kg_search_indexed,
+              lambda o: _kg_search_sql(o.kg), bench=True),
+        Query("kg_search_fused", _q_kg_search_fused,
+              lambda o: KG_SEARCH_FUSED_SQL % (_kg_search_sql(o.kg),
+                                               kgoracle.sql_pagerank(o.kg)),
+              bench=True),
         # incremental index ≡ full rebuild, by definition — same twin
-        "kg_search_delta": _kg_search_sql(kg),
-        "kg_sparql": sparql.compile_sql(
-            "read_parquet('%s')" % kg["triples"], _KG_SPARQL_QUERY),
-        "kg_sparql_graphvar": sparql.compile_sql(
-            "(SELECT subject, predicate, object, objtype, lang, "
-            "datatype, source_url, source_url AS context "
-            "FROM read_parquet('%s'))" % kg["triples"],
-            _KG_SPARQL_GRAPHVAR),
-        "kg_sparql_pathvar": sparql.compile_sql(
-            "(SELECT subject, predicate, object, objtype, lang, "
-            "datatype, source_url, source_url AS context "
-            "FROM read_parquet('%s'))" % kg["triples"],
-            _KG_SPARQL_PATHVAR),
-        "kg_describe": sparql.compile_sql(
-            "read_parquet('%s')" % kg["triples"],
-            _ANNOTATIONS_RQ % {"uri": _DESCRIBE_URI}),
-        "kg_describe_sparql": sparql.compile_sql(
-            "read_parquet('%s')" % kg["triples"], _KG_DESCRIBE_SPARQL),
-        "kg_sparql_stats": sparql.compile_sql(
-            "read_parquet('%s')" % kg["triples"], _KG_SPARQL_STATS),
-        "kg_sparql_bind": sparql.compile_sql(
-            "read_parquet('%s')" % kg["triples"], _KG_SPARQL_BIND),
-        "kg_sparql_orphans": sparql.compile_sql(
-            "read_parquet('%s')" % kg["triples"], _KG_SPARQL_ORPHANS),
-        "kg_sparql_minus": sparql.compile_sql(
-            "read_parquet('%s')" % kg["triples"], _KG_SPARQL_MINUS),
-        "kg_sparql_langdt": sparql.compile_sql(
-            "read_parquet('%s')" % kg["triples"], _KG_SPARQL_LANGDT),
-        "kg_sparql_agg": sparql.compile_sql(
-            "read_parquet('%s')" % kg["triples"], _KG_SPARQL_AGG),
-        "kg_sparql_subquery": sparql.compile_sql(
-            "read_parquet('%s')" % kg["triples"], _KG_SPARQL_SUBQUERY),
-        "kg_sparql_seqpath": sparql.compile_sql(
-            "read_parquet('%s')" % kg["triples"], _KG_SPARQL_SEQPATH),
-        "kg_sparql_nested": sparql.compile_sql(
-            "read_parquet('%s')" % kg["triples"], _KG_SPARQL_NESTED),
-        "kg_sparql_exists_expr": sparql.compile_sql(
-            "read_parquet('%s')" % kg["triples"],
-            _KG_SPARQL_EXISTS_EXPR),
-        "kg_sparql_datetime": sparql.compile_sql(
-            "read_parquet('%s')" % kg["triples"], _KG_SPARQL_DATETIME),
-        "kg_sparql_construct_bnode": sparql.compile_sql(
-            "read_parquet('%s')" % kg["triples"],
-            _KG_SPARQL_CONSTRUCT_BNODE),
-        "kg_sparql_optagg": sparql.compile_sql(
-            "read_parquet('%s')" % kg["triples"], _KG_SPARQL_OPTAGG),
-        "kg_sparql_casts": sparql.compile_sql(
-            "read_parquet('%s')" % kg["triples"], _KG_SPARQL_CASTS),
-        "kg_sparql_top_cited": sparql.compile_sql(
-            "read_parquet('%s')" % kg["triples"],
-            _KG_SPARQL_TOP_CITED),
-        "kg_sparql_groupkey": sparql.compile_sql(
-            "read_parquet('%s')" % kg["triples"], _KG_SPARQL_GROUPKEY),
-        "kg_describe_rfc": sparql.compile_sql(
-            "read_parquet('%s')" % kg["triples"],
-            _RFC_ANNOTATIONS_RQ % {"uri": _DESCRIBE_URI}),
-        "kg_describe_base": sparql.compile_sql(
-            "read_parquet('%s')" % kg["triples"],
-            _DESCRIBE_BASE_RQ % {"uri": _DESCRIBE_URI}),
-        "kg_versions": kgoracle.sql_versions(kg, KG_NEW_URL),
-        "kg_crawl_delta": kgoracle.sql_crawl_delta(kg, KG_NEW_URL),
-        "kg_conflicts": kgoracle.sql_conflicts(kg),
-        "kg_fused": kgoracle.sql_fused(kg),
-        "kg_triple_intervals": kgoracle.sql_triple_intervals(
-            kg, KG_NEW_URL, KG_CRAWL_TS),
+        Query("kg_search_delta", _q_kg_search_delta,
+              lambda o: _kg_search_sql(o.kg), bench=True),
+        Query("kg_sparql", _q_kg_sparql,
+              lambda o: _kg_sparql_sql(o.kg, _KG_SPARQL_QUERY), bench=True),
+        Query("kg_sparql_graphvar", _q_kg_sparql_graphvar,
+              lambda o: sparql.compile_sql(
+                  "(SELECT subject, predicate, object, objtype, lang, "
+                  "datatype, source_url, source_url AS context "
+                  "FROM read_parquet('%s'))" % o.kg["triples"],
+                  _KG_SPARQL_GRAPHVAR)),
+        Query("kg_sparql_pathvar", _q_kg_sparql_pathvar,
+              lambda o: sparql.compile_sql(
+                  "(SELECT subject, predicate, object, objtype, lang, "
+                  "datatype, source_url, source_url AS context "
+                  "FROM read_parquet('%s'))" % o.kg["triples"],
+                  _KG_SPARQL_PATHVAR), bench=True),
+        Query("kg_crawl_delta", _q_kg_crawl_delta,
+              lambda o: kgoracle.sql_crawl_delta(o.kg, KG_NEW_URL),
+              bench=True),
+        Query("kg_conflicts", _q_kg_conflicts,
+              lambda o: kgoracle.sql_conflicts(o.kg)),
+        Query("kg_fused", _q_kg_fused,
+              lambda o: kgoracle.sql_fused(o.kg), bench=True),
+        Query("kg_triple_intervals", _q_kg_triple_intervals,
+              lambda o: kgoracle.sql_triple_intervals(
+                  o.kg, KG_NEW_URL, KG_CRAWL_TS), bench=True),
         # as-of inside crawl 2's window ≡ crawl 2's snapshot, by
         # definition — the oracle states the identity, not the
         # interval machinery
-        "kg_asof": kgoracle.sql_asof_crawl2(kg, KG_NEW_URL),
-        "kg_provenance": kgoracle.sql_provenance(kg),
-        "kg_nquads": KG_NQUADS_SQL_TMPL % (
-            "read_parquet('%s')" % kg["triples"]),
-        "kg_stage_counters": kgoracle.sql_stage_counters(kg),
-        # training-data / relational oracles over driver parquet views
-        "token_stats": textops.oracle_sql_token_stats(),
-        "hll_distinct": _sketches.sql_hll_distinct(
-            "documents", keys=["lang"], value="text", p=6),
-        "chunk_documents": packing.oracle_sql_chunk_documents(
-            size=64, stride=48),
-        "length_quantiles": textops.oracle_sql_length_quantiles(
-            keys=["lang"]),
-        "cms_counts": _sketches.sql_cms_estimate(
-            ("(SELECT unnest(CASE WHEN trim(coalesce(text, '')) = ''"
-             " THEN []::VARCHAR[] ELSE regexp_split_to_array("
-             "trim(coalesce(text, '')), '%s') END) AS w"
-             " FROM documents)" % textops.WS_SPLIT),
-            "w",
-            "SELECT * FROM (VALUES %s) v(value)" % ", ".join(
-                "('%s')" % c for c in CMS_CANDIDATES)),
-        "crawl_overlap": _crawl_overlap_oracle_sql(),
-        "bloom_urls": _sketches.sql_bloom_contains(
-            ("(SELECT unnest(CASE WHEN trim(coalesce(text, '')) = ''"
-             " THEN []::VARCHAR[] ELSE regexp_split_to_array("
-             "trim(coalesce(text, '')), '%s') END) AS w"
-             " FROM documents)" % textops.WS_SPLIT),
-            "w",
-            "SELECT * FROM (VALUES %s) v(value)" % ", ".join(
-                "('%s')" % c for c in BLOOM_CANDIDATES)),
-        "pack_sequences": packing.oracle_sql_pack(budget=256, n_shards=8),
-        "stratified_sample": sampling.oracle_sql_stratified(
-            "documents", "lang", 0.3,
-            ["doc_id", "text", "lang", "source", "n_chars"]),
-        "curriculum_order": sampling.oracle_sql_curriculum(),
-        "resample_mixture": sampling.oracle_sql_mixture(
-            "documents", "lang", _MIXTURE_WEIGHTS, _MIXTURE_TOTAL,
-            ["doc_id", "text", "lang", "source", "n_chars"]),
-        "dsir_resample": sampling.oracle_sql_dsir(
-            "documents",
-            "(SELECT * FROM documents WHERE lang = 'de')",
-            60, 2048, seed=7),
-        "top_ngrams": textops.oracle_sql_top_ngrams(n=2, k=50),
-        "bpe_pairs": textops.oracle_sql_bpe_pairs(k=100),
-        "profile_orders": textops.oracle_sql_profile(
-            "orders", _PROFILE_COLS),
-        "top_terms": textops.oracle_sql_top_terms(k=5),
-        "related_docs": textops.oracle_sql_related_docs(),
-        "corpus_curate": _corpus_curate_sql(),
-        "quality_score": textops.oracle_sql_quality(),
-        "language_id": textops.oracle_sql_language_id(),
-        "fingerprint": textops.oracle_sql_fingerprint(),
-        "decontaminate": curation.oracle_sql_decontaminate(
-            n=3, threshold=0.2),
-        "lm_perplexity": curation.oracle_sql_lm_perplexity(
-            "documents", "(SELECT * FROM documents WHERE doc_id % 2 = 0)"),
-        "quality_classifier": curation.oracle_sql_nb_classifier(
-            "documents",
-            "(SELECT *, CASE WHEN doc_id % 2 = 0 THEN 'pos' "
-            "ELSE 'neg' END AS label FROM documents)"),
-        "repetition_stats": curation.oracle_sql_repetition(n=3),
-        "pii_scrub": curation.oracle_sql_pii(table=PII_DOCS_SQL),
-        "normalize_text": curation.oracle_sql_normalize(
-            table=MESS_DOCS_SQL),
-        "url_stats": textops.oracle_sql_url_stats(table=URL_DOCS_SQL),
-        "anchor_stats": textops.oracle_sql_anchor_stats(
-            table=ANCHOR_DOCS_SQL),
-        "redirect_resolve": REDIRECTS_SQL,
-        "frontier_expand": FRONTIER_SQL % {"anchor_docs":
-                                           ANCHOR_DOCS_SQL},
-        "boilerplate_filter": curation.oracle_sql_boilerplate(
-            table=JUSTEXT_DOCS_SQL),
-        "page_metadata": textops.oracle_sql_page_metadata(
-            table=HEAD_DOCS_SQL),
-        "dedup_delta": dedup.oracle_sql_dedup_delta(
-            "(SELECT doc_id, text FROM documents)", DELTA_BATCH_SQL),
-        "blocklist_filter": textops.oracle_sql_blocklist(
-            _BLOCKLIST_DOMAINS, table=URL_DOCS_SQL),
-        "url_dedup": curation.oracle_sql_url_dedup(
-            table=URLDEDUP_DOCS_SQL + " urls"),
-        "dedup_exact": dedup.oracle_sql_exact_duplicates(dup_docs),
-        "dedup_lines": dedup.oracle_sql_line_dedup(table=BOILER_DOCS_SQL),
-        "dedup_windows": dedup.oracle_sql_duplicate_windows(
-            table=SPAN_DOCS_SQL, k=20),
-        "dedup_ngram_jaccard": jaccard_oracle,
-        "dedup_containment": dedup.oracle_sql_containment(
-            _contain_docs_sql(), threshold=0.8),
+        Query("kg_asof", _q_kg_asof,
+              lambda o: kgoracle.sql_asof_crawl2(o.kg, KG_NEW_URL)),
+        Query("kg_provenance", _q_kg_provenance,
+              lambda o: kgoracle.sql_provenance(o.kg), bench=True),
+        Query("kg_nquads", _q_kg_nquads,
+              lambda o: KG_NQUADS_SQL_TMPL % (
+                  "read_parquet('%s')" % o.kg["triples"]), bench=True),
+        Query("kg_describe", _q_kg_describe,
+              lambda o: _kg_sparql_sql(
+                  o.kg, _ANNOTATIONS_RQ % {"uri": _DESCRIBE_URI})),
+        Query("kg_describe_sparql", _q_kg_describe_sparql,
+              lambda o: _kg_sparql_sql(o.kg, _KG_DESCRIBE_SPARQL)),
+        Query("kg_sparql_stats", _q_kg_sparql_stats,
+              lambda o: _kg_sparql_sql(o.kg, _KG_SPARQL_STATS)),
+        Query("kg_sparql_bind", _q_kg_sparql_bind,
+              lambda o: _kg_sparql_sql(o.kg, _KG_SPARQL_BIND)),
+        Query("kg_sparql_orphans", _q_kg_sparql_orphans,
+              lambda o: _kg_sparql_sql(o.kg, _KG_SPARQL_ORPHANS)),
+        Query("kg_sparql_langdt", _q_kg_sparql_langdt,
+              lambda o: _kg_sparql_sql(o.kg, _KG_SPARQL_LANGDT)),
+        Query("kg_sparql_minus", _q_kg_sparql_minus,
+              lambda o: _kg_sparql_sql(o.kg, _KG_SPARQL_MINUS)),
+        Query("kg_sparql_agg", _q_kg_sparql_agg,
+              lambda o: _kg_sparql_sql(o.kg, _KG_SPARQL_AGG)),
+        Query("kg_sparql_subquery", _q_kg_sparql_subquery,
+              lambda o: _kg_sparql_sql(o.kg, _KG_SPARQL_SUBQUERY)),
+        Query("kg_sparql_seqpath", _q_kg_sparql_seqpath,
+              lambda o: _kg_sparql_sql(o.kg, _KG_SPARQL_SEQPATH)),
+        Query("kg_sparql_nested", _q_kg_sparql_nested,
+              lambda o: _kg_sparql_sql(o.kg, _KG_SPARQL_NESTED), bench=True),
+        Query("kg_sparql_exists_expr", _q_kg_sparql_exists_expr,
+              lambda o: _kg_sparql_sql(o.kg, _KG_SPARQL_EXISTS_EXPR),
+              bench=True),
+        Query("kg_sparql_datetime", _q_kg_sparql_datetime,
+              lambda o: _kg_sparql_sql(o.kg, _KG_SPARQL_DATETIME), bench=True),
+        Query("kg_sparql_construct_bnode", _q_kg_sparql_construct_bnode,
+              lambda o: _kg_sparql_sql(o.kg, _KG_SPARQL_CONSTRUCT_BNODE),
+              bench=True),
+        Query("kg_sparql_optagg", _q_kg_sparql_optagg,
+              lambda o: _kg_sparql_sql(o.kg, _KG_SPARQL_OPTAGG), bench=True),
+        Query("kg_sparql_casts", _q_kg_sparql_casts,
+              lambda o: _kg_sparql_sql(o.kg, _KG_SPARQL_CASTS), bench=True),
+        Query("kg_sparql_top_cited", _q_kg_sparql_top_cited,
+              lambda o: _kg_sparql_sql(o.kg, _KG_SPARQL_TOP_CITED),
+              bench=True),
+        Query("kg_sparql_groupkey", _q_kg_sparql_groupkey,
+              lambda o: _kg_sparql_sql(o.kg, _KG_SPARQL_GROUPKEY), bench=True),
+        Query("kg_describe_rfc", _q_kg_describe_rfc,
+              lambda o: _kg_sparql_sql(
+                  o.kg, _RFC_ANNOTATIONS_RQ % {"uri": _DESCRIBE_URI}),
+              bench=True),
+        Query("kg_describe_base", _q_kg_describe_base,
+              lambda o: _kg_sparql_sql(
+                  o.kg, _DESCRIBE_BASE_RQ % {"uri": _DESCRIBE_URI})),
+        Query("kg_versions", _q_kg_versions,
+              lambda o: kgoracle.sql_versions(o.kg, KG_NEW_URL)),
+        Query("kg_stage_counters", _q_kg_stage_counters,
+              lambda o: kgoracle.sql_stage_counters(o.kg)),
+        # training-data pipeline ops over the driver's parquet views
+        Query("token_stats", _q_token_stats,
+              lambda o: textops.oracle_sql_token_stats(), bench=True),
+        Query("hll_distinct", _q_hll_distinct,
+              lambda o: _sketches.sql_hll_distinct(
+                  "documents", keys=["lang"], value="text", p=6), bench=True),
+        Query("chunk_documents", _q_chunk_documents,
+              lambda o: packing.oracle_sql_chunk_documents(
+                  size=64, stride=48), bench=True),
+        Query("length_quantiles", _q_length_quantiles,
+              lambda o: textops.oracle_sql_length_quantiles(
+                  keys=["lang"]), bench=True),
+        Query("cms_counts", _q_cms_counts,
+              lambda o: _sketches.sql_cms_estimate(
+                  ("(SELECT unnest(CASE WHEN trim(coalesce(text, '')) = ''"
+                   " THEN []::VARCHAR[] ELSE regexp_split_to_array("
+                   "trim(coalesce(text, '')), '%s') END) AS w"
+                   " FROM documents)" % textops.WS_SPLIT),
+                  "w",
+                  "SELECT * FROM (VALUES %s) v(value)" % ", ".join(
+                      "('%s')" % c for c in CMS_CANDIDATES)), bench=True),
+        Query("bloom_urls", _q_bloom_words,
+              lambda o: _sketches.sql_bloom_contains(
+                  ("(SELECT unnest(CASE WHEN trim(coalesce(text, '')) = ''"
+                   " THEN []::VARCHAR[] ELSE regexp_split_to_array("
+                   "trim(coalesce(text, '')), '%s') END) AS w"
+                   " FROM documents)" % textops.WS_SPLIT),
+                  "w",
+                  "SELECT * FROM (VALUES %s) v(value)" % ", ".join(
+                      "('%s')" % c for c in BLOOM_CANDIDATES)), bench=True),
+        Query("crawl_overlap", _q_crawl_overlap,
+              lambda o: _crawl_overlap_oracle_sql(), bench=True),
+        Query("pack_sequences", _q_pack_sequences,
+              lambda o: packing.oracle_sql_pack(budget=256, n_shards=8),
+              bench=True),
+        Query("stratified_sample", _q_stratified_sample,
+              lambda o: sampling.oracle_sql_stratified(
+                  "documents", "lang", 0.3,
+                  ["doc_id", "text", "lang", "source", "n_chars"])),
+        Query("curriculum_order", _q_curriculum_order,
+              lambda o: sampling.oracle_sql_curriculum(), bench=True),
+        Query("resample_mixture", _q_resample_mixture,
+              lambda o: sampling.oracle_sql_mixture(
+                  "documents", "lang", _MIXTURE_WEIGHTS, _MIXTURE_TOTAL,
+                  ["doc_id", "text", "lang", "source", "n_chars"])),
+        Query("dsir_resample", _q_dsir_resample,
+              lambda o: sampling.oracle_sql_dsir(
+                  "documents",
+                  "(SELECT * FROM documents WHERE lang = 'de')",
+                  60, 2048, seed=7), bench=True),
+        Query("top_ngrams", _q_top_ngrams,
+              lambda o: textops.oracle_sql_top_ngrams(n=2, k=50), bench=True),
+        Query("bpe_pairs", _q_bpe_pairs,
+              lambda o: textops.oracle_sql_bpe_pairs(k=100), bench=True),
+        # o.ann oracles: seeded probabilistic kernels (bpe_*,
+        # dedup_simhash, ann_lsh/pq/ivf_topk, embedding_clusters) cannot
+        # promise equality with brute force (recall is asserted in
+        # pytest), but a single-threaded rerun of the same kernels is a
+        # hard oracle for the distributed execution
+        # (ferenda_spark.annoracle explains why it is bit-exact)
+        Query("bpe_train", _q_bpe_train,
+              lambda o: annoracle.sql_bpe_train(o.ann)),
+        Query("bpe_encode", _q_bpe_encode,
+              lambda o: annoracle.sql_bpe_census(o.ann), bench=True),
+        Query("related_docs", _q_related_docs,
+              lambda o: textops.oracle_sql_related_docs(), bench=True),
+        Query("profile_orders", _q_profile_orders,
+              lambda o: textops.oracle_sql_profile(
+                  "orders", _PROFILE_COLS)),
+        Query("top_terms", _q_top_terms,
+              lambda o: textops.oracle_sql_top_terms(k=5)),
+        Query("corpus_curate", _q_corpus_curate,
+              lambda o: _corpus_curate_sql()),
+        Query("quality_score", _q_quality,
+              lambda o: textops.oracle_sql_quality(), bench=True),
+        Query("language_id", _q_langid,
+              lambda o: textops.oracle_sql_language_id(), bench=True),
+        Query("fingerprint", _q_fingerprint,
+              lambda o: textops.oracle_sql_fingerprint()),
+        Query("decontaminate", _q_decontaminate,
+              lambda o: curation.oracle_sql_decontaminate(
+                  n=3, threshold=0.2)),
+        Query("lm_perplexity", _q_lm_perplexity,
+              lambda o: curation.oracle_sql_lm_perplexity(
+                  "documents",
+                  "(SELECT * FROM documents WHERE doc_id % 2 = 0)"),
+              bench=True),
+        Query("quality_classifier", _q_quality_classifier,
+              lambda o: curation.oracle_sql_nb_classifier(
+                  "documents",
+                  "(SELECT *, CASE WHEN doc_id % 2 = 0 THEN 'pos' "
+                  "ELSE 'neg' END AS label FROM documents)"), bench=True),
+        Query("repetition_stats", _q_repetition_stats,
+              lambda o: curation.oracle_sql_repetition(n=3)),
+        Query("pii_scrub", _q_pii_scrub,
+              lambda o: curation.oracle_sql_pii(table=PII_DOCS_SQL),
+              bench=True),
+        Query("normalize_text", _q_normalize_text,
+              lambda o: curation.oracle_sql_normalize(
+                  table=MESS_DOCS_SQL), bench=True),
+        Query("url_stats", _q_url_stats,
+              lambda o: textops.oracle_sql_url_stats(table=URL_DOCS_SQL),
+              bench=True),
+        Query("anchor_stats", _q_anchor_stats,
+              lambda o: textops.oracle_sql_anchor_stats(
+                  table=ANCHOR_DOCS_SQL), bench=True),
+        Query("frontier_expand", _q_frontier_expand,
+              lambda o: FRONTIER_SQL % {"anchor_docs":
+                                        ANCHOR_DOCS_SQL}, bench=True),
+        Query("redirect_resolve", _q_redirect_resolve,
+              lambda o: REDIRECTS_SQL, bench=True),
+        Query("boilerplate_filter", _q_boilerplate,
+              lambda o: curation.oracle_sql_boilerplate(
+                  table=JUSTEXT_DOCS_SQL), bench=True),
+        Query("page_metadata", _q_page_metadata,
+              lambda o: textops.oracle_sql_page_metadata(
+                  table=HEAD_DOCS_SQL), bench=True),
+        Query("dedup_delta", _q_dedup_delta,
+              lambda o: dedup.oracle_sql_dedup_delta(
+                  "(SELECT doc_id, text FROM documents)", DELTA_BATCH_SQL),
+              bench=True),
+        Query("blocklist_filter", _q_blocklist_filter,
+              lambda o: textops.oracle_sql_blocklist(
+                  _BLOCKLIST_DOMAINS, table=URL_DOCS_SQL), bench=True),
+        Query("url_dedup", _q_url_dedup,
+              lambda o: curation.oracle_sql_url_dedup(
+                  table=URLDEDUP_DOCS_SQL + " urls"), bench=True),
+        # relational / faceting analogs
+        Query("facet_pivot", _q_facet_pivot,
+              lambda o: FACET_PIVOT_SQL, bench=True),
+        Query("events_windowed", _q_events_windowed,
+              lambda o: EVENTS_WINDOWED_SQL, bench=True),
+        Query("events_sessionize", _q_events_sessionize,
+              lambda o: EVENTS_SESSIONIZE_SQL, bench=True),
+        Query("events_asof", _q_events_asof,
+              lambda o: EVENTS_ASOF_SQL, bench=True),
+        Query("events_range_join", _q_events_range_join,
+              lambda o: EVENTS_RANGE_SQL, bench=True),
+        Query("events_interval_overlap", _q_events_interval_overlap,
+              lambda o: EVENTS_OVERLAP_SQL, bench=True),
+        Query("stats_groupby", _q_stats_groupby, lambda o: STATS_GROUPBY_SQL),
+        Query("window_topk", _q_window_topk, lambda o: WINDOW_TOPK_SQL),
+        Query("reverse_refs", _q_reverse_refs,
+              lambda o: REVERSE_REFS_SQL, bench=True),
+        Query("lineitem_pricing", _q_lineitem_pricing,
+              lambda o: LINEITEM_PRICING_SQL, bench=True),
+        Query("media_decode", _q_media_decode,
+              lambda o: multimodal.oracle_sql_media_decode(200)),
+        # dedup / ANN family LAST — the wall-time tail of the gate
+        # (VERDICT r3 #1: budget truncation hits the cheapest coverage
+        # first when these run in the middle); ordered so the shared
+        # shingle stage and LSH pair table warm for their reusers
+        Query("dedup_exact", _q_dedup_exact,
+              lambda o: dedup.oracle_sql_exact_duplicates(DUP_DOCS_SQL)),
+        Query("dedup_lines", _q_line_dedup,
+              lambda o: dedup.oracle_sql_line_dedup(table=BOILER_DOCS_SQL),
+              bench=True),
+        Query("dedup_windows", _q_dedup_windows,
+              lambda o: dedup.oracle_sql_duplicate_windows(
+                  table=SPAN_DOCS_SQL, k=20), bench=True),
+        Query("ann_topk", _q_ann_topk,
+              lambda o: similarity.oracle_sql_brute_force_topk(k=5,
+                                                               n_queries=50),
+              bench=True),
+        Query("ann_lsh_topk", _q_ann_lsh_topk,
+              lambda o: annoracle.sql_ann_topk(o.ann, "ann_lsh_topk")),
+        Query("ann_pq_topk", _q_ann_pq_topk,
+              lambda o: annoracle.sql_ann_topk(o.ann, "ann_pq_topk"),
+              bench=True),
+        Query("ann_ivf_topk", _q_ann_ivf_topk,
+              lambda o: annoracle.sql_ann_topk(o.ann, "ann_ivf_topk")),
+        Query("embedding_clusters", _q_embedding_clusters,
+              lambda o: annoracle.sql_embedding_clusters(o.ann)),
+        Query("dedup_embedding", _q_dedup_embedding,
+              lambda o: dedup.oracle_sql_embedding_dup(threshold=0.45)),
+        Query("dedup_embedding_blocked", _q_dedup_embedding_blocked,
+              lambda o: dedup.oracle_sql_embedding_dup(threshold=0.45),
+              bench=True),
+        Query("dedup_simhash", _q_dedup_simhash,
+              lambda o: annoracle.sql_simhash(o.ann), bench=True),
         # LSH verifies candidates with exact jaccard → same ground
         # truth as brute force (recall checked by the oracle).
-        "dedup_minhash_lsh": jaccard_oracle,
-        # dedup_simhash / ann_lsh_topk / ann_ivf_topk cannot promise
-        # equality with BRUTE-FORCE oracles (probabilistic recall by
-        # design; recall asserted in pytest) — but they are seeded and
-        # deterministic, so a single-threaded rerun of the same kernels
-        # is a hard oracle for the distributed execution
-        # (ferenda_spark.annoracle docstring explains the scheme and
-        # why it is bit-exact).
-        "bpe_train": annoracle.sql_bpe_train(ann),
-        "bpe_encode": annoracle.sql_bpe_census(ann),
-        "dedup_simhash": annoracle.sql_simhash(ann),
-        "ann_lsh_topk": annoracle.sql_ann_topk(ann, "ann_lsh_topk"),
-        "ann_pq_topk": annoracle.sql_ann_topk(ann, "ann_pq_topk"),
-        "ann_ivf_topk": annoracle.sql_ann_topk(ann, "ann_ivf_topk"),
-        "embedding_clusters": annoracle.sql_embedding_clusters(ann),
-        "dedup_clusters": dedup.oracle_sql_dup_clusters(jaccard_oracle),
-        "dedup_embedding": dedup.oracle_sql_embedding_dup(threshold=0.45),
-        "dedup_embedding_blocked":
-            dedup.oracle_sql_embedding_dup(threshold=0.45),
-        "ann_topk": similarity.oracle_sql_brute_force_topk(k=5,
-                                                           n_queries=50),
-        "media_decode": multimodal.oracle_sql_media_decode(200),
-        "facet_pivot": """
-            SELECT user_id,
-                   count(*) FILTER (event_type = 'click')    AS n_click,
-                   count(*) FILTER (event_type = 'error')    AS n_error,
-                   count(*) FILTER (event_type = 'purchase') AS n_purchase,
-                   count(*) FILTER (event_type = 'signup')   AS n_signup,
-                   count(*) FILTER (event_type = 'view')     AS n_view
-            FROM events GROUP BY user_id ORDER BY user_id
-        """,
-        "stats_groupby": """
-            SELECT lang, count(DISTINCT doc_id) AS n_docs,
-                   sum(n_chars)::BIGINT AS total_chars,
-                   round(avg(n_chars), 4) AS avg_chars
-            FROM documents GROUP BY lang ORDER BY lang
-        """,
-        "events_windowed": """
-            SELECT strftime(time_bucket(INTERVAL 1 DAY, ts),
-                            '%Y-%m-%d %H:%M:%S') AS window_start,
-                   event_type, count(*) AS n_events,
-                   round(sum(value), 4) AS sum_value
-            FROM events GROUP BY 1, 2 ORDER BY window_start, event_type
-        """,
-        "events_asof": EVENTS_ASOF_SQL,
-        "events_range_join": EVENTS_RANGE_SQL,
-        "events_interval_overlap": EVENTS_OVERLAP_SQL,
-        "events_sessionize": """
-            WITH flagged AS (
-              SELECT user_id, ts, event_id,
-                     CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER w
-                               >= 1800000000
-                          THEN 1 ELSE 0 END AS new_session
-              FROM events
-              WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-            ), with_id AS (
-              SELECT user_id, ts,
-                     sum(new_session) OVER (PARTITION BY user_id
-                                            ORDER BY ts, event_id
-                                            ROWS UNBOUNDED PRECEDING)
-                       AS session_seq
-              FROM flagged
-            )
-            SELECT user_id, session_seq::BIGINT AS session_seq,
-                   strftime(min(ts), '%Y-%m-%d %H:%M:%S')
-                     AS session_start,
-                   count(*) AS n_events,
-                   (epoch_us(max(ts)) - epoch_us(min(ts)))::BIGINT
-                     AS duration_us
-            FROM with_id GROUP BY user_id, session_seq
-            ORDER BY user_id, session_seq
-        """,
-        "window_topk": """
-            SELECT lang, rank, doc_id, n_chars FROM (
-              SELECT lang, doc_id, n_chars,
-                     row_number() OVER (PARTITION BY lang
-                                        ORDER BY n_chars DESC, doc_id ASC)
-                       AS rank
-              FROM documents)
-            WHERE rank <= 3 ORDER BY lang, rank
-        """,
-        "reverse_refs": """
-            SELECT o.o_custkey AS custkey, c.c_name,
-                   count(*) AS n_orders,
-                   round(sum(o.o_totalprice), 2) AS total_price
-            FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-            GROUP BY o.o_custkey, c.c_name ORDER BY custkey
-        """,
-        "lineitem_pricing": """
-            SELECT l_returnflag, l_linestatus,
-                   round(sum(l_quantity), 2) AS sum_qty,
-                   round(sum(l_extendedprice), 2) AS sum_base_price,
-                   round(sum(l_extendedprice * (1 - l_discount)), 2)
-                     AS sum_disc_price,
-                   count(*) AS count_order
-            FROM lineitem WHERE l_shipdate <= DATE '1998-09-02'
-            GROUP BY l_returnflag, l_linestatus
-            ORDER BY l_returnflag, l_linestatus
-        """,
-    }
+        Query("dedup_minhash_lsh", _q_dedup_minhash_lsh,
+              lambda o: o.jaccard, bench=True),
+        Query("dedup_ngram_jaccard", _q_dedup_ngram_jaccard,
+              lambda o: o.jaccard),
+        Query("dedup_containment", _q_dedup_containment,
+              lambda o: dedup.oracle_sql_containment(
+                  _contain_docs_sql(), threshold=0.8), bench=True),
+        Query("dedup_clusters", _q_dedup_clusters,
+              lambda o: dedup.oracle_sql_dup_clusters(o.jaccard)),
+    )
+
+
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    return {q.name: partial(q.build, n=KG_N) for q in registry()}
+
+
+def oracle_sql() -> dict[str, str]:
+    inputs = oracle_inputs(KG_N)
+    return {q.name: q.oracle(inputs) for q in registry()}

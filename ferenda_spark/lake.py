@@ -183,14 +183,17 @@ class IcebergFormat(TableFormat):
     TRIPLE_COLS = ("source_url", "subject", "predicate", "object",
                    "objtype", "lang", "datatype")
 
-    def write_sql(self, table: str, source_view: str) -> str:
+    def write_sql(self, table: str, source_view: str) -> tuple[str, str]:
         return (
             "CREATE OR REPLACE TABLE %s "
             "USING iceberg "
             "PARTITIONED BY (bucket(%d, source_url), predicate) "
-            "TBLPROPERTIES ('write.distribution-mode' = 'hash', "
-            "'sort-order' = 'subject ASC') "
-            "AS SELECT * FROM %s" % (table, N_BUCKETS, source_view))
+            "TBLPROPERTIES ('write.distribution-mode' = 'hash') "
+            "AS SELECT * FROM %s" % (table, N_BUCKETS, source_view),
+            # a sort order is table metadata, not a table property; it
+            # orders every later write (merges, and compaction's sort
+            # rewrite), not the files the CTAS above already wrote
+            "ALTER TABLE %s WRITE ORDERED BY subject ASC" % table)
 
     def merge_sql(self, table: str, batch_view: str) -> tuple[str, str]:
         cols = ", ".join(self.TRIPLE_COLS)
@@ -201,8 +204,9 @@ class IcebergFormat(TableFormat):
             "WHEN MATCHED THEN DELETE" % (table, batch_view),
             # two statements: MERGE can't both delete matches and
             # insert a multi-row replacement per key, so the per-url
-            # replace is delete-matched + append, inside one
-            # transaction boundary per Iceberg commit semantics
+            # replace is delete-matched + append — two snapshot
+            # commits, not one transaction: a reader or a crash
+            # between them sees the batch's urls missing
             "INSERT INTO %s SELECT %s FROM %s"
             % (table, cols, batch_view))
 
@@ -229,7 +233,8 @@ class IcebergFormat(TableFormat):
     def write(self, triples: DataFrame, target: str) -> None:
         view = "_lake_write_src"
         triples.createOrReplaceTempView(view)
-        triples.sparkSession.sql(self.write_sql(target, view))
+        for stmt in self.write_sql(target, view):
+            triples.sparkSession.sql(stmt)
 
     def merge(self, spark: SparkSession, new_triples: DataFrame,
               target: str) -> None:

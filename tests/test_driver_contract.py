@@ -5,7 +5,8 @@ on array-typed columns. These tests enforce the contract statically:
 every ``queries()`` entry must produce a FLAT schema (no array/struct/
 map reaches the driver), every oracle must be syntactically valid
 DuckDB SQL (EXPLAIN — no execution), and oracle keys must be a subset
-of query keys."""
+of query keys. bench.py must time the registry's own build fns, not
+private copies of them."""
 
 import os
 import sys
@@ -70,3 +71,25 @@ def test_entry_schema_stable(spark, entrymod):
     assert sorted(f.name for f in df.schema.fields) == \
         ["context", "datatype", "lang", "object", "objtype",
          "predicate", "source_url", "subject"]
+
+
+BENCH_ONLY = {"kg_extract", "kg_extract_materialized", "kg_full_pipeline",
+              "kg_materialize", "kg_xhtml"}
+
+
+def test_registry_names_unique(entrymod):
+    names = [q.name for q in entrymod.registry()]
+    assert len(names) == len(set(names))
+    assert list(entrymod.queries()) == names
+
+
+def test_bench_times_registry_build_fns(entrymod):
+    import bench
+    entries = bench.bench_entries("/nonexistent", [])  # nothing runs
+    reg = {q.name: q for q in entrymod.registry()}
+    flagged = {name for name, q in reg.items() if q.bench}
+    assert set(entries) == flagged | BENCH_ONLY
+    assert not BENCH_ONLY & set(reg)
+    copies = sorted(name for name in flagged
+                    if entries[name] is not reg[name].build)
+    assert not copies, copies

@@ -3,17 +3,12 @@ everything at KG_N=200, so a bug that only appears at another corpus
 shape (a TOC page crossing the 1000-row cap, a pagerank graph with a
 different dangling set, annotation closures of different depth) would
 ship green. This sweep re-runs representative kg queries against their
-DuckDB oracles at a different n through the exact driver surface
-(monkeypatched KG_N — both sides re-derive from it at call time).
+DuckDB oracles at a different n, through the registry's build fn and
+oracle with the corpus size passed as ``n``.
 """
-
-import importlib.util
-import os
 
 import duckdb
 import pytest
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 SWEEP_N = 1500
 QUERIES = ["kg_toc", "kg_toc_pagesets", "kg_pagerank", "kg_annotations",
@@ -25,15 +20,12 @@ QUERIES = ["kg_toc", "kg_toc_pagesets", "kg_pagerank", "kg_annotations",
 
 
 @pytest.fixture(scope="module")
-def entrymod():
-    spec = importlib.util.spec_from_file_location(
-        "spark_entry_sweep", os.path.join(REPO, "__spark_entry__.py"))
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    mod.KG_N = SWEEP_N
-    # derive both dicts ONCE (oracle_sql re-parses every SPARQL twin
-    # and re-checks the kg cache; 9 parametrized cases share them)
-    return mod.queries(), mod.oracle_sql()
+def sweep():
+    import __spark_entry__ as E
+    # materialize the oracle inputs ONCE (the kg cache check and the
+    # twin tables are shared by the parametrized cases)
+    return ({q.name: q for q in E.registry()},
+            E.oracle_inputs(SWEEP_N), E.CORRECTNESS_SF_DIR)
 
 
 def canon(pdf):
@@ -43,11 +35,12 @@ def canon(pdf):
 
 
 @pytest.mark.parametrize("name", QUERIES)
-def test_kg_query_parity_at_sweep_n(spark, entrymod, name):
-    queries, oracles = entrymod
-    spdf = queries[name](spark, "/root/testdata/sf0.01").toPandas()
+def test_kg_query_parity_at_sweep_n(spark, sweep, name):
+    registry, inputs, sf_dir = sweep
+    q = registry[name]
+    spdf = q.build(spark, sf_dir, SWEEP_N).toPandas()
     con = duckdb.connect()
-    odf = con.sql(oracles[name]).df()
+    odf = con.sql(q.oracle(inputs)).df()
     assert len(spdf) == len(odf), (name, len(spdf), len(odf))
     assert len(spdf) > 0, "%s returned nothing at n=%d" % (name, SWEEP_N)
     a, b = canon(spdf), canon(odf)

@@ -58,12 +58,16 @@ def test_lineage_functions_route_through_seam(monkeypatch):
 
 def test_iceberg_write_sql():
     f = lake.IcebergFormat()
-    sql = f.write_sql("cat.db.triples", "src_view")
+    sql, order = f.write_sql("cat.db.triples", "src_view")
     assert "CREATE OR REPLACE TABLE cat.db.triples" in sql
     assert "USING iceberg" in sql
     assert "bucket(%d, source_url)" % lake.N_BUCKETS in sql
     assert "predicate" in sql
     assert sql.endswith("AS SELECT * FROM src_view")
+    # Iceberg has no 'sort-order' table property: the sort order is
+    # set by its own DDL statement
+    assert "sort-order" not in sql
+    assert order == "ALTER TABLE cat.db.triples WRITE ORDERED BY subject ASC"
 
 
 def test_iceberg_merge_sql_is_per_url_replace():
