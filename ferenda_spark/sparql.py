@@ -57,8 +57,7 @@ Supported subset (what ferenda's own queries use):
   ``xsd:string``, tagged → ``rdf:langString`` per spec) — all four as
   top-level conjuncts compiled to objtype / lang / datatype scan
   constraints, ``! && ||``
-- ``BIND(expr AS ?v)`` (top-level group and UNION branches; after the
-  branch BGP, before its FILTERs), ``VALUES ?v { … }`` /
+- ``BIND(expr AS ?v)`` in any group, ``VALUES ?v { … }`` /
   ``VALUES (?a ?b) { (…)… }`` with ``UNDEF``
 - ``FILTER [NOT] EXISTS { … }`` in any group (compiled to a
   left-semi / left-anti join — Spark's native form — and a
@@ -118,7 +117,8 @@ Supported subset (what ferenda's own queries use):
   via engine-identical lexical arithmetic (days-from-civil + time −
   zone offset; zoneless = UTC in both engines); non-dateTime-shaped
   values are type errors → unbound. In object pattern position a
-  typed literal constrains the value AND datatype columns.
+  typed literal constrains the value AND the datatype, with the
+  spec's mapping (``"x"^^xsd:string`` matches the simple literal)
 - blank nodes: ``_:label`` in WHERE patterns = fresh non-projectable
   variable (spec 4.1.4); in CONSTRUCT templates = one minted node per
   (label, solution), as deterministic md5-of-solution skolem ids so
@@ -127,10 +127,19 @@ Supported subset (what ferenda's own queries use):
   boolean/dateTime/date(e)`` (SPARQL 17.5) — see ECast; a temporal
   cast in a comparison switches it to timeline order, which is how
   two date VARIABLES compare by instant
-- ``BIND`` placement: before FILTER/OPTIONAL as documented — except a
-  BIND referencing an OPTIONAL-bound variable, which defers past the
-  OPTIONAL left joins (the COALESCE-defaulting idiom); FILTERs still
-  evaluate before OPTIONALs and cannot see deferred binds
+- group evaluation order (every group, the WHERE group included —
+  SPARQL §18.2.2): BGP, UNION blocks, VALUES, subqueries and
+  EXISTS-in-expression probes; then BINDs; then OPTIONAL left joins;
+  then BINDs that read an OPTIONAL-bound variable (deferred past the
+  left joins — the COALESCE-defaulting idiom); then FILTER [NOT]
+  EXISTS, MINUS and FILTERs over the whole group. A group with no
+  pattern is the single empty solution. Subset restrictions: BINDs
+  are not interleaved textually with OPTIONALs (a BIND reading a
+  variable bound by neither a preceding pattern nor an OPTIONAL of
+  its group is an error, not an unbound value), and an
+  EXISTS-in-expression body may not share a variable its group binds
+  only by BIND or OPTIONAL (the probe joins before those — an error,
+  not an uncorrelated probe)
 - ``ORDER BY [ASC|DESC](?v)…``, ``LIMIT n``, ``OFFSET n`` (OFFSET
   requires ORDER BY; deterministic across engines only when the order
   key is a total order — the same caveat the reference's own WSGI
@@ -143,8 +152,11 @@ them additionally against hand-built semantic goldens).
 
 Compilation is twinned: :func:`compile_spark` builds the DataFrame
 plan, :func:`compile_sql` emits structurally identical ANSI SQL (the
-DuckDB correctness oracle). Both derive from one shared join plan, so
-a semantic bug cannot hide in only one backend.
+DuckDB correctness oracle). Both render one shared join plan — the
+scoping pass :func:`_scope` fixes each group's step order, in-scope
+variables, join keys, BIND deferral and UNION alignment, and raises
+every scoping error — so a scoping bug cannot hide in only one
+backend.
 
 Scale shape (100 TB triples table):
 
@@ -266,11 +278,14 @@ class Group:
     # DISTINCT boolean probe before evaluating binds/filters and the
     # EExistsMarker node reads COALESCE(marker, FALSE)
     exists_markers: list = field(default_factory=list)
-    # an OPTIONAL body that is a UNION: the alternatives (already
-    # DNF-distributed); when set, every other field is empty and the
-    # compilers LEFT JOIN against the aligned union of the compiled
-    # alternatives (one left join, not one per branch)
+    # an OPTIONAL / EXISTS body that is a UNION: the alternatives
+    # (already DNF-distributed); when set, every other field is empty
+    # and the compilers join ONCE against the aligned union of the
+    # compiled alternatives (left joins don't distribute over union)
     union_alts: list = field(default_factory=list)
+    # UNION blocks [[Group]] kept as blocks — only the top-level WHERE
+    # has them: every nested group is DNF-distributed by _dnf
+    unions: list = field(default_factory=list)
 
 
 def _merge_into(dst: Group, src: Group) -> None:
@@ -296,15 +311,39 @@ def _merge_groups(a: Group, b: Group) -> Group:
     return g
 
 
+def _dnf(g: Group) -> list:
+    """The disjunctive normal form of a group's UNION blocks: a list
+    of alternative Groups (one when there is no UNION). Distribution
+    ``T · (A ∪ B) = T·A ∪ T·B`` preserves multiset semantics; several
+    UNION blocks in one group cross-multiply."""
+    alts, blocks, g.unions = [g], g.unions, []
+    for block in blocks:
+        alts = [_merge_groups(a, b) for a in alts for b in block]
+    return alts
+
+
+def _union_body(alts: list) -> Group:
+    """An OPTIONAL / EXISTS body from its DNF alternatives: the group
+    itself, or a ``union_alts`` wrapper the compilers join once."""
+    return alts[0] if len(alts) == 1 else Group(union_alts=alts)
+
+
+def _walk(g: Group):
+    """g and every group nested in it that the compilers recurse into
+    (subqueries and EXISTS-in-expression bodies excluded)."""
+    yield g
+    for sub in (g.optionals + g.minus + [eg for _, eg in g.exists]
+                + g.union_alts + [a for block in g.unions for a in block]):
+        yield from _walk(sub)
+
+
 @dataclass
 class Query:
     distinct: bool
     proj: list          # var names in order, or ["*"]
     where: Group
-    optionals: list     # list[Group]
     order: list         # [(var, descending)]
     limit: int | None
-    unions: list = field(default_factory=list)   # list[list[Group]]
     construct: list | None = None                # template triples
     group_by: list = field(default_factory=list)
     ask: bool = False                            # ASK query → 1 bool row
@@ -1357,17 +1396,9 @@ class _Parser:
                 "only SELECT/CONSTRUCT/ASK queries are supported")
         if not self.kw("WHERE") and not ask:    # ASK may omit WHERE
             raise SparqlError("missing WHERE")
-        where, optionals, unions = self.group(allow_optional=True)
+        where = self.where_group("CONSTRUCT" if construct_where
+                                 else None)
         if construct_where:
-            if (unions or optionals or where.filters or where.binds
-                    or where.values or where.exists or where.minus
-                    or where.optionals or where.subqueries):
-                raise SparqlError("CONSTRUCT WHERE allows only a basic "
-                                  "graph pattern")
-            if any(t.p[0] != "uri" and t.p[0] != "var"
-                   for t in where.triples):
-                raise SparqlError("CONSTRUCT WHERE patterns cannot "
-                                  "contain property paths")
             if not where.triples:
                 raise SparqlError("empty CONSTRUCT template")
             construct = list(where.triples)
@@ -1528,42 +1559,37 @@ class _Parser:
         if offset and not order:
             raise SparqlError("OFFSET without ORDER BY is not "
                               "deterministic; add an ORDER BY")
-        # a plain nested group inlined at the top level may carry
-        # OPTIONALs (g.optionals); at the top level those are the
-        # query's own optionals — the inline compile path reads
-        # query.optionals, not query.where.optionals
-        optionals = where.optionals + optionals
-        where.optionals = []
-        q = Query(distinct, proj, where, optionals, order, limit,
-                  unions, construct, group_by, ask, offset, having)
+        q = Query(distinct, proj, where, order, limit, construct,
+                  group_by, ask, offset, having)
         q.having_aggs = list(self._having_aggs)
         self._having_aggs.clear()
         q.group_exprs = group_exprs
-
-        def walk(g):
-            yield g
-            for ng in g.optionals:
-                yield from walk(ng)
-            for mg in g.minus:
-                yield from walk(mg)
-            for _, eg in g.exists:
-                yield from walk(eg)
-            for ag in g.union_alts:
-                yield from walk(ag)
-        for top in ([q.where] + q.optionals
-                    + [a for alts in q.unions for a in alts]):
-            for g in walk(top):
-                _rewrite_istype(g)
         return q
 
-    def group(self, allow_optional: bool, in_optional: bool = False):
+    def where_group(self, bgp_only: str | None = None) -> Group:
+        """A WHERE ``{ … }`` group, with the isUri/lang/datatype FILTER
+        conjuncts of every nested group pushed into its scans. With
+        ``bgp_only`` (the query form's name) anything but a basic
+        graph pattern is rejected — CONSTRUCT WHERE / DELETE WHERE."""
+        g = self.group()
+        if bgp_only and (
+                g.unions or g.optionals or g.filters or g.binds
+                or g.values or g.exists or g.minus or g.subqueries
+                or any(t.p[0] not in ("uri", "var") for t in g.triples)):
+            raise SparqlError("%s WHERE allows only a basic graph "
+                              "pattern without property paths" % bgp_only)
+        for sub in _walk(g):
+            _rewrite_istype(sub)
+        return g
+
+    def group(self) -> Group:
         self.expect_op("{")
-        g, optionals, unions = Group(), [], []
+        g = Group()
         while True:
             k, v = self.peek()
             if v == "}":
                 self.i += 1
-                return g, optionals, unions
+                return g
             if v == "{":
                 # { SELECT … } — a subquery (evaluated independently,
                 # joined on its projected variables)
@@ -1584,16 +1610,13 @@ class _Parser:
                     # a plain nested group is just inlined (any depth)
                     _merge_into(g, alts[0])
                 else:
-                    unions.append(alts)
+                    g.unions.append(alts)
                 continue
             if k == "kw" and v.upper() == "OPTIONAL":
-                # top level → the query's optionals list; inside any
-                # sub-group (OPTIONAL / UNION branch / EXISTS / MINUS)
-                # → g.optionals, which both group compilers LEFT-JOIN
-                # recursively
+                # both group compilers LEFT-JOIN g.optionals, at the
+                # top level and recursively inside every sub-group
                 self.i += 1
-                sub = self.optional_group()
-                (optionals if allow_optional else g.optionals).append(sub)
+                g.optionals.append(_union_body(self.group_alts()))
                 continue
             if k == "kw" and v.upper() == "MINUS":
                 # a UNION inside the MINUS body splits into multiple
@@ -1626,10 +1649,8 @@ class _Parser:
                     # against the aligned union of the alternatives
                     # (a union_alts wrapper, like OPTIONAL bodies)
                     ealts = self.group_alts()
-                    if positive and len(ealts) > 1:
-                        w = Group()
-                        w.union_alts = ealts
-                        g.exists.append((True, w))
+                    if positive:
+                        g.exists.append((True, _union_body(ealts)))
                     else:
                         for ea in ealts:
                             g.exists.append((positive, ea))
@@ -1725,18 +1746,10 @@ class _Parser:
 
     def group_alts(self) -> list:
         """Parse a braced group where UNION may appear at any depth;
-        returns the disjunctive normal form — a list of alternative
-        Groups (one when no UNION occurs). Distribution
-        ``T · (A ∪ B) = T·A ∪ T·B`` preserves multiset semantics, so
-        nested UNIONs flatten into the same union machinery both
-        backends already compile; multiple UNION blocks in one group
-        cross-multiply."""
-        g, optionals, unions = self.group(allow_optional=False)
-        assert not optionals
-        alts = [g]
-        for block in unions:
-            alts = [_merge_groups(a, b) for a in alts for b in block]
-        return alts
+        returns its disjunctive normal form (see _dnf), so nested
+        UNIONs flatten into the same union machinery both backends
+        already compile."""
+        return _dnf(self.group())
 
     def simple_group(self) -> Group:
         alts = self.group_alts()
@@ -1744,26 +1757,6 @@ class _Parser:
             raise SparqlError("UNION is not supported in this group "
                               "position")
         return alts[0]
-
-    def optional_group(self) -> Group:
-        """An OPTIONAL body: triples, FILTERs, BINDs, VALUES, nested
-        OPTIONALs and MINUS/EXISTS (attached to the Group, compiled
-        recursively). A UNION inside the body is NOT DNF-distributable
-        into multiple OPTIONALs (left joins don't distribute over
-        union), so the body becomes a ``union_alts`` group: the
-        compilers left-join ONCE against the aligned union of the
-        compiled alternatives."""
-        g, optionals, unions = self.group(allow_optional=False,
-                                          in_optional=True)
-        assert not optionals
-        if unions:
-            alts = [g]
-            for block in unions:
-                alts = [_merge_groups(a, b) for a in alts for b in block]
-            out = Group()
-            out.union_alts = alts
-            return out
-        return g
 
     def path_mod(self):
         """``*`` | ``+`` | ``{m,n}`` / ``{,n}`` (bounded quantifier, the
@@ -2059,15 +2052,10 @@ class _Parser:
         body wraps in union_alts — EXISTS(A∪B) = EXISTS A OR EXISTS B,
         and NOT applies to the combined marker (De Morgan via boolean
         negation)."""
-        alts = self.group_alts()
-        if len(alts) > 1:
-            w = Group()
-            w.union_alts = alts
-        else:
-            w = alts[0]
         name = "__exm%d" % self._exm_n
         self._exm_n += 1
-        self._pending_markers.append((name, w))
+        self._pending_markers.append((name,
+                                      _union_body(self.group_alts())))
         return EExistsMarker(name, positive)
 
     def _drain_markers(self, g: Group) -> None:
@@ -2465,13 +2453,14 @@ def _scan_spec(t: Triple, alias: str):
             term = ("var", "__bn_" + term[1])
         if term[0] == "dtlit":
             # typed literal in object position: value + datatype
-            # column constraints (subject/predicate can't be literals)
+            # constraints (subject/predicate can't be literals), the
+            # datatype through the spec's xsd:string mapping
             if col != "object":
                 raise SparqlError("typed literals are only legal in "
                                   "object position")
             consts.append((col, term[1]))
             consts.append(("objtype", "literal"))
-            consts.append(("datatype", term[2]))
+            extras.append(("dtype", term[2]))
             continue
         if term[0] == "var":
             if term[1] in varcols:
@@ -2543,7 +2532,8 @@ def _extra_spark(kind: str, val):
     # rdf:langString; anything else matches its stored datatype URI
     if val == XSD_STRING:
         return ((F.col("datatype").isNull() | (F.col("datatype") == ""))
-                & (F.col("lang").isNull() | (F.col("lang") == "")))
+                & (F.col("lang").isNull() | (F.col("lang") == ""))
+                | (F.col("datatype") == val))
     if val == RDF_LANGSTRING:
         return F.col("lang").isNotNull() & (F.col("lang") != "")
     return F.col("datatype") == val
@@ -2563,7 +2553,8 @@ def _extra_sql(kind: str, val) -> str:
                 % (low, low))
     if val == XSD_STRING:
         return ("((datatype IS NULL OR datatype = '') "
-                "AND (lang IS NULL OR lang = ''))")
+                "AND (lang IS NULL OR lang = '') "
+                "OR datatype = '%s')" % val)
     if val == RDF_LANGSTRING:
         return "(lang IS NOT NULL AND lang <> '')"
     return "datatype = '%s'" % val.replace("'", "''")
@@ -2580,6 +2571,144 @@ def _pc_sql(uri, prefix: str = "") -> str:
             prefix, "NOT " if neg else "",
             ", ".join("'%s'" % u.replace("'", "''") for u in vals))
     return "%spredicate = '%s'" % (prefix, uri.replace("'", "''"))
+
+
+def _path_terms(t: Triple) -> tuple:
+    """(column, term) pairs of a property-path scan's (g, a, b)
+    relation — shared by both backends' path scans and _scan_vars."""
+    ends = (("a", t.s), ("b", t.o))
+    if t.graph_var:
+        return (("g", ("var", t.graph_var)),) + ends
+    return ends
+
+
+def _scan_vars(t: Triple) -> list:
+    """The variables one pattern scan binds, in its column order."""
+    if t.p[0] == "path":
+        return list(dict.fromkeys(term[1] for _, term in _path_terms(t)
+                                  if term[0] == "var"))
+    return list(_scan_spec(t, "")[1])
+
+
+# ---------------------------------------------------------- scoping pass
+
+@dataclass
+class _Scope:
+    """One group after the scoping pass — what both emitters render.
+
+    ``steps`` are ``(op, arg, keys)`` in SPARQL §18.2.2 order, ``keys``
+    being the in-scope variables the step joins on:
+
+    - ``one`` (the single empty solution of a group with no pattern),
+      ``scan`` (a Triple), ``union`` (a _Scope with ``alts``),
+      ``values`` ((names, rows)), ``subquery`` ((Query, names)),
+      ``marker`` ((name, body _Scope) — an EXISTS-in-expression probe);
+    - ``bind`` ((Expr, var));
+    - ``optional`` (body _Scope), then the deferred ``bind`` steps;
+    - ``exists`` ((positive, body _Scope)), ``minus`` (body _Scope;
+      dropped when the domains are disjoint), ``filter`` (Expr).
+
+    ``vars`` are the variables in scope after the group, in column
+    order. A UNION — a WHERE block or a UNION-bodied OPTIONAL / EXISTS
+    — is a _Scope whose ``alts`` are the branch scopes and whose
+    ``vars`` are their aligned (NULL-padded) union."""
+    steps: list = field(default_factory=list)
+    vars: list = field(default_factory=list)
+    alts: list = field(default_factory=list)
+
+
+def _scope(g: Group) -> _Scope:
+    """The scoping pass: fix one group's step order and decide every
+    scoping rule — in-scope sets, BIND deferral, UNION alignment, join
+    keys, the empty-group solution — recursively for nested groups."""
+    if g.union_alts:
+        alts = [_scope(a) for a in g.union_alts]
+        return _Scope(vars=list(dict.fromkeys(
+            v for a in alts for v in a.vars)), alts=alts)
+    sc = _Scope()
+    bound: dict = {}        # ordered set: the in-scope variables
+
+    def step(op, arg, joins=(), adds=(), body=None):
+        if body is not None and body.alts and len(
+                {frozenset(bound.keys() & set(a.vars))
+                 for a in body.alts}) > 1:
+            raise SparqlError(
+                "UNION branches must bind the same outer variables")
+        sc.steps.append((op, arg, [v for v in joins if v in bound]))
+        bound.update(dict.fromkeys(adds))
+
+    def bind(e, var):
+        if var in bound:
+            raise SparqlError("BIND target ?%s is already bound" % var)
+        step("bind", (e, var), adds=[var])
+
+    # 1. BGP, UNION blocks, VALUES, subqueries, EXISTS-in-expression
+    for t in _order_patterns(g.triples):
+        vs = _scan_vars(t)
+        step("scan", t, vs, vs)
+    for block in g.unions:
+        u = _scope(Group(union_alts=block))
+        step("union", u, u.vars, u.vars, u)
+    for names, rows in g.values:
+        step("values", (names, rows), names, names)
+    for sq in g.subqueries:
+        names = [_proj_alias(p) for p in sq.proj]
+        step("subquery", (sq, names), names, names)
+    if not sc.steps:
+        step("one", None)
+    optionals = [_scope(ng) for ng in g.optionals]
+    opt_vars = {v for o in optionals for v in o.vars}
+    late = (opt_vars | {var for _, var in g.binds}) - bound.keys()
+    for name, mg in g.exists_markers:
+        body = _scope(mg)
+        if late & set(body.vars):
+            raise SparqlError(
+                "EXISTS in an expression cannot correlate on ?%s, which "
+                "its group binds only by BIND or OPTIONAL"
+                % min(late & set(body.vars)))
+        step("marker", (name, body), body.vars, [name], body)
+    # 2. BINDs — one reading a variable that only the group's OPTIONALs
+    # (or an already deferred BIND) bind waits until after 3.
+    deferred, later = [], set(opt_vars)
+    for e, var in g.binds:
+        missing = _expr_vars(e) - bound.keys()
+        if missing and missing <= later:
+            deferred.append((e, var))
+            later.add(var)
+            continue
+        if missing:
+            _Env()[min(missing)]    # raises the unbound-variable error
+        bind(e, var)
+    # 3. OPTIONAL left joins; 4. deferred BINDs
+    for o in optionals:
+        step("optional", o, o.vars, o.vars, o)
+    for e, var in deferred:
+        bind(e, var)
+    # 5. FILTER [NOT] EXISTS, MINUS and FILTERs see the whole group
+    for positive, eg in g.exists:
+        body = _scope(eg)
+        step("exists", (positive, body), body.vars, body=body)
+    for mg in g.minus:
+        body = _scope(mg)
+        if bound.keys() & set(body.vars):   # disjoint: removes nothing
+            step("minus", body, body.vars)
+    for f in g.filters:
+        step("filter", f)
+    sc.vars = list(bound)
+    return sc
+
+
+def _scope_query(q: Query) -> _Scope:
+    """The WHERE group's scope, extended by the GROUP BY expression
+    keys (computed like BINDs, before the grouping)."""
+    sc = _scope(q.where)
+    for ge, name in q.group_exprs:
+        if name in sc.vars:
+            raise SparqlError("GROUP BY alias ?%s is already bound"
+                              % name)
+        sc.steps.append(("bind", (ge, name), []))
+        sc.vars.append(name)
+    return sc
 
 
 # --------------------------------------------------------- spark backend
@@ -2773,25 +2902,24 @@ def compile_spark(triples: DataFrame, query: Query | str) -> DataFrame:
             path_cache[key] = rel
         return path_cache[key]
 
-    def scan(t: Triple, prefix: str):
-        alias = "%s%d" % (prefix, counter[0])
+    def fresh(kind: str) -> str:
         counter[0] += 1
+        return "%s%d" % (kind, counter[0])
+
+    def scan(t: Triple):
+        alias = fresh("t")
         if t.p[0] == "path":
             s_bound, o_bound = t.s[0] != "var", t.o[0] != "var"
             if t.graph_var:
                 df = grouped_path_relation(t.p[1], t.p[2])
-                terms = (("g", ("var", t.graph_var)),
-                         ("a", t.s), ("b", t.o))
             elif s_bound != o_bound and t.p[2] in ("*", "+"):
                 df = seeded_path(t.p[1], t.p[2],
                                  (t.s if s_bound else t.o)[1], s_bound,
                                  t.graph)
-                terms = (("a", t.s), ("b", t.o))
             else:   # both/neither bound, or a bounded quantifier
                 df = path_relation(t.p[1], t.p[2], t.graph)
-                terms = (("a", t.s), ("b", t.o))
-            varcols, sel = {}, []
-            for col, term in terms:
+            varcols = {}
+            for col, term in _path_terms(t):
                 if term[0] == "var":
                     if term[1] in varcols:      # ?x p* ?x
                         df = df.filter(F.col(varcols[term[1]]) ==
@@ -2820,393 +2948,120 @@ def compile_spark(triples: DataFrame, query: Query | str) -> DataFrame:
         return df.select(*sel), {var: "%s__%s" % (alias, var)
                                  for var in varcols}
 
-    def chain(triple_list, prefix):
-        """Inner-join the patterns of one group on shared variables."""
-        plan, env_cols = None, {}
-        for t in _order_patterns(triple_list):
-            df, cols = scan(t, prefix)
-            if plan is None:
-                plan, env_cols = df, dict(cols)
-                continue
-            shared = [v for v in cols if v in env_cols]
-            if shared:
-                cond = None
-                for v in shared:
-                    c = F.col(env_cols[v]) == F.col(cols[v])
-                    cond = c if cond is None else (cond & c)
-                plan = plan.join(df, cond, "inner")
-            else:
+    def join(plan, cols, df, dcols, keys, how="inner", undef=False):
+        """Join ``df`` onto a group's plan on the scoping pass's keys
+        (an UNDEF-tolerant condition for VALUES); the left side keeps
+        its column for a shared variable."""
+        if plan is None:
+            plan = df
+        else:
+            cond = None
+            for v in keys:
+                c = F.col(cols[v]) == F.col(dcols[v])
+                if undef:
+                    c = F.col(dcols[v]).isNull() | c
+                cond = c if cond is None else (cond & c)
+            if cond is None and how == "inner":
                 plan = plan.crossJoin(df)
-            for v, c in cols.items():
-                env_cols.setdefault(v, c)
-        return plan, env_cols
+            else:
+                plan = plan.join(df, F.lit(True) if cond is None
+                                 else cond, how)
+        if how in ("inner", "left"):
+            for v, c in dcols.items():
+                cols.setdefault(v, c)
+        return plan
 
     def colenv(cols):
         return _Env((v, (F.col(c), c)) for v, c in cols.items())
 
-    def compile_group(g: Group, prefix: str):
-        """One sub-group (UNION branch / OPTIONAL / EXISTS / MINUS
-        body) → (DataFrame, cols): chain its BGP, join VALUES blocks,
-        project BINDs, LEFT-JOIN nested OPTIONALs (recursively),
-        semi/anti-join nested EXISTS/MINUS, then apply FILTERs —
-        SPARQL group scoping (filters see the whole group incl. its
-        optionals)."""
-        sub, cols = chain(g.triples, prefix)
-        for names, rows in g.values:
-            vname = "%sv%d" % (prefix, counter[0])
-            counter[0] += 1
-            vcols = {v: "%s__%s" % (vname, v) for v in names}
-            data = [tuple(None if t is None else t[1] for t in row)
-                    for row in rows]
-            vdf = triples.sparkSession.createDataFrame(
-                data, schema=", ".join("%s string" % vcols[v]
-                                       for v in names))
-            if sub is None:
-                sub = vdf
-            else:
-                shared = [v for v in names if v in cols]
-                if shared:
-                    cond = None
-                    for v in shared:
-                        c = (F.col(vcols[v]).isNull() |
-                             (F.col(cols[v]) == F.col(vcols[v])))
-                        cond = c if cond is None else (cond & c)
-                    sub = sub.join(F.broadcast(vdf), cond, "inner")
-                else:
-                    sub = sub.crossJoin(F.broadcast(vdf))
-            for v, c in vcols.items():
-                cols.setdefault(v, c)
-        for sq in g.subqueries:
-            names = [_proj_alias(p) for p in sq.proj]
-            ssub = compile_spark(triples, sq)
-            scols = {}
-            for v in names:
-                c = "%ssq%d__%s" % (prefix, counter[0], v)
-                counter[0] += 1
-                ssub = ssub.withColumnRenamed(v, c)
-                scols[v] = c
-            if sub is None:
-                sub = ssub
-            else:
-                shared = [v for v in names if v in cols]
-                cond = None
-                for v in shared:
-                    c = F.col(cols[v]) == F.col(scols[v])
-                    cond = c if cond is None else (cond & c)
-                sub = (sub.join(ssub, cond, "inner") if cond is not None
-                       else sub.crossJoin(ssub))
-            for v, c in scols.items():
-                cols.setdefault(v, c)
-        for mname, mg in g.exists_markers:
-            if sub is None:
-                raise SparqlError("EXISTS requires a preceding "
-                                  "pattern")
-            sub, cols = join_exists_marker(sub, cols, mname, mg, prefix)
-        gpost_binds = []
-        for e, var in g.binds:
-            if var in cols:
-                raise SparqlError("BIND target ?%s is already bound"
-                                  % var)
-            if sub is None:
-                raise SparqlError("BIND requires a preceding pattern")
-            if _expr_vars(e) - set(cols):
-                # references an OPTIONAL-bound var — defer until the
-                # group's OPTIONALs have joined (same rule as the
-                # top-level flow)
-                gpost_binds.append((e, var))
-                continue
-            bname = "%sb%d__%s" % (prefix, counter[0], var)
-            counter[0] += 1
-            sub = sub.withColumn(bname, e.spark(colenv(cols)))
-            cols[var] = bname
-        for ng in g.optionals:
-            nsub, ncols = compile_optional(ng, prefix, cols)
-            shared = [v for v in ncols if v in cols]
-            cond = None
-            for v in shared:
-                c = F.col(cols[v]) == F.col(ncols[v])
-                cond = c if cond is None else (cond & c)
-            sub = sub.join(nsub,
-                           cond if cond is not None else F.lit(True),
-                           "left")
-            for v, c in ncols.items():
-                cols.setdefault(v, c)
-        for e, var in gpost_binds:
-            bname = "%sb%d__%s" % (prefix, counter[0], var)
-            counter[0] += 1
-            sub = sub.withColumn(bname, e.spark(colenv(cols)))
-            cols[var] = bname
-        for positive, eg in g.exists:
-            if sub is None:
-                raise SparqlError("FILTER EXISTS requires a preceding "
-                                  "pattern")
-            esub, ecols = (compile_optional(eg, prefix, cols)
-                           if eg.union_alts
-                           else compile_group(eg, prefix))
-            shared = [v for v in ecols if v in cols]
-            cond = None
-            for v in shared:
-                c = F.col(cols[v]) == F.col(ecols[v])
-                cond = c if cond is None else (cond & c)
-            sub = sub.join(esub,
-                           cond if cond is not None else F.lit(True),
-                           "left_semi" if positive else "left_anti")
-        for mg in g.minus:
-            msub, mcols = compile_group(mg, prefix)
-            shared = [v for v in mcols if v in cols]
-            if not shared:   # disjoint domains: MINUS removes nothing
-                continue
-            cond = None
-            for v in shared:
-                c = F.col(cols[v]) == F.col(mcols[v])
-                cond = c if cond is None else (cond & c)
-            sub = sub.join(msub, cond, "left_anti")
-        for f in g.filters:
-            sub = sub.filter(f.spark(colenv(cols)))
-        return sub, cols
+    def compile_group(sc: _Scope):
+        """One scoped group → (DataFrame, {var: column}): each step of
+        the scoping pass becomes a join, a projection or a filter. A
+        UNION compiles every branch, aligns them on the union of their
+        variables (NULL-padded) and unions the aligned relations."""
+        cols: dict = {}
+        if sc.alts:
+            cols = {v: fresh("u") + "__" + v for v in sc.vars}
+            aligned = None
+            for sub, scols in map(compile_group, sc.alts):
+                part = sub.select(*[
+                    (F.col(scols[v]) if v in scols
+                     else F.lit(None).cast("string")).alias(cols[v])
+                    for v in sc.vars])
+                aligned = part if aligned is None \
+                    else aligned.unionByName(part)
+            return aligned, cols
+        plan = None
+        for op, arg, keys in sc.steps:
+            if op == "one":
+                plan = triples.sparkSession.range(1).select(
+                    F.lit(1).alias(fresh("one")))
+            elif op == "scan":
+                plan = join(plan, cols, *scan(arg), keys)
+            elif op == "union":
+                plan = join(plan, cols, *compile_group(arg), keys)
+            elif op == "values":
+                # a tiny inline relation (broadcast); an UNDEF row
+                # leaves that variable unconstrained
+                names, rows = arg
+                vname = fresh("v")
+                vcols = {v: "%s__%s" % (vname, v) for v in names}
+                data = [tuple(None if t is None else t[1] for t in row)
+                        for row in rows]
+                vdf = triples.sparkSession.createDataFrame(
+                    data, schema=", ".join("%s string" % vcols[v]
+                                           for v in names))
+                plan = join(plan, cols, F.broadcast(vdf), vcols, keys,
+                            undef=True)
+            elif op == "subquery":
+                # compiled by the same compiler (aggregates, paths,
+                # nested OPTIONALs all legal inside), joined on the
+                # variables it projects
+                sq, names = arg
+                ssub, sname = compile_spark(triples, sq), fresh("sq")
+                scols = {v: "%s__%s" % (sname, v) for v in names}
+                for v in names:
+                    ssub = ssub.withColumnRenamed(v, scols[v])
+                plan = join(plan, cols, ssub, scols, keys)
+            elif op == "marker":
+                # EXISTS-in-expression probe: the body's shared
+                # variables, DISTINCT (one boolean per outer key — no
+                # row multiplication), left-joined with a TRUE marker
+                # that EExistsMarker reads as COALESCE(marker, FALSE);
+                # with no shared variable a 0/1-row existence relation
+                name, body = arg
+                esub, ecols = compile_group(body)
+                mcol = fresh("xm")
+                kcols = {v: "%s_k%d" % (mcol, i)
+                         for i, v in enumerate(keys)}
+                probe = (esub.select(*[F.col(ecols[v]).alias(kcols[v])
+                                       for v in keys]).distinct()
+                         if keys else esub.limit(1).select())
+                plan = join(plan, cols,
+                            probe.withColumn(mcol, F.lit(True)), kcols,
+                            keys, "left")
+                cols[name] = mcol
+            elif op == "bind":
+                e, var = arg
+                bname = fresh("b") + "__" + var
+                plan = plan.withColumn(bname, e.spark(colenv(cols)))
+                cols[var] = bname
+            elif op == "optional":
+                plan = join(plan, cols, *compile_group(arg), keys, "left")
+            elif op == "exists":
+                # left-semi / left-anti join (the Spark-native form:
+                # the probe side streams, AQE broadcasts a small body)
+                positive, body = arg
+                plan = join(plan, cols, *compile_group(body), keys,
+                            "left_semi" if positive else "left_anti")
+            elif op == "minus":
+                plan = join(plan, cols, *compile_group(arg), keys,
+                            "left_anti")
+            else:   # filter
+                plan = plan.filter(arg.spark(colenv(cols)))
+        return plan, cols
 
-    def compile_optional(ng: Group, prefix: str, outer_cols):
-        """An OPTIONAL body → (DataFrame, cols). A union-bodied
-        OPTIONAL compiles every alternative, aligns them on the union
-        of their variables (NULL-padded) and left-joins ONCE against
-        the combined relation — left joins don't distribute over
-        union, so this is the only correct shape."""
-        if not ng.union_alts:
-            return compile_group(ng, prefix)
-        compiled = [compile_group(a, prefix) for a in ng.union_alts]
-        shared_sets = [frozenset(set(cols) & set(outer_cols))
-                       for _, cols in compiled]
-        if len(set(shared_sets)) > 1:
-            raise SparqlError("UNION branches in an OPTIONAL/EXISTS "
-                              "body must bind the same outer "
-                              "variables")
-        all_vars: list[str] = []
-        for _, cols in compiled:
-            for v in cols:
-                if v not in all_vars:
-                    all_vars.append(v)
-        canon = {v: "oa%d__%s" % (counter[0], v) for v in all_vars}
-        counter[0] += 1
-        aligned = None
-        for sub, cols in compiled:
-            sel = [(F.col(cols[v]) if v in cols
-                    else F.lit(None).cast("string")).alias(canon[v])
-                   for v in all_vars]
-            part = sub.select(*sel)
-            aligned = part if aligned is None else aligned.unionByName(part)
-        return aligned, canon
-
-    def join_exists_marker(plan_df, plan_cols, mname, mg, prefix):
-        """EXISTS-in-expression probe: compile the body, project the
-        variables it shares with the enclosing group, DISTINCT them
-        (one boolean per outer key — no row multiplication), left-join
-        with a TRUE marker column. EExistsMarker then reads
-        COALESCE(marker, FALSE). With no shared variable the probe is
-        a 0/1-row existence relation (limit 1)."""
-        esub, ecols = (compile_optional(mg, prefix, plan_cols)
-                       if mg.union_alts else compile_group(mg, prefix))
-        shared = [v for v in ecols if v in plan_cols]
-        mcol = "%sxm__%s" % (prefix, mname)
-        if shared:
-            keys = {v: "%s_k%d" % (mcol, i)
-                    for i, v in enumerate(shared)}
-            probe = (esub.select(*[F.col(ecols[v]).alias(keys[v])
-                                   for v in shared])
-                     .distinct().withColumn(mcol, F.lit(True)))
-            cond = None
-            for v in shared:
-                c = F.col(plan_cols[v]) == F.col(keys[v])
-                cond = c if cond is None else (cond & c)
-            plan_df = plan_df.join(probe, cond, "left")
-        else:
-            probe = esub.limit(1).select(F.lit(True).alias(mcol))
-            plan_df = plan_df.join(probe, F.lit(True), "left")
-        plan_cols[mname] = mcol
-        return plan_df, plan_cols
-
-    plan, env_cols = chain(query.where.triples, "t")
-
-    for bi, alts in enumerate(query.unions):
-        compiled = [compile_group(g, "u") for g in alts]
-        all_vars = []
-        for _, cols in compiled:
-            for v in cols:
-                if v not in all_vars:
-                    all_vars.append(v)
-        shared_sets = [set(cols) & set(env_cols or {})
-                       for _, cols in compiled]
-        if plan is not None and len(set(map(frozenset, shared_sets))) > 1:
-            raise SparqlError(
-                "UNION branches must bind the same outer variables")
-        canon = {v: "u%d__%s" % (bi, v) for v in all_vars}
-        aligned = None
-        for sub, cols in compiled:
-            sel = [(F.col(cols[v]) if v in cols
-                    else F.lit(None).cast("string")).alias(canon[v])
-                   for v in all_vars]
-            part = sub.select(*sel)
-            aligned = part if aligned is None else aligned.unionByName(part)
-        if plan is None:
-            plan, env_cols = aligned, dict(canon)
-        else:
-            shared = sorted(shared_sets[0])
-            cond = None
-            for v in shared:
-                c = F.col(env_cols[v]) == F.col(canon[v])
-                cond = c if cond is None else (cond & c)
-            plan = plan.join(aligned,
-                             cond if cond is not None else F.lit(True),
-                             "inner")
-            for v in all_vars:
-                env_cols.setdefault(v, canon[v])
-
-    # subqueries: compiled by the same compiler (full recursion —
-    # aggregates, paths, nested OPTIONALs all legal inside), then
-    # joined on the variables they project that the outer query binds
-    for sq in query.where.subqueries:
-        names = [_proj_alias(p) for p in sq.proj]
-        sub = compile_spark(triples, sq)
-        cols = {}
-        for v in names:
-            c = "sq%d__%s" % (counter[0], v)
-            counter[0] += 1
-            sub = sub.withColumnRenamed(v, c)
-            cols[v] = c
-        shared = [v for v in names if v in env_cols]
-        if plan is None:
-            plan, env_cols = sub, dict(cols)
-            continue
-        cond = None
-        for v in shared:
-            c = F.col(env_cols[v]) == F.col(cols[v])
-            cond = c if cond is None else (cond & c)
-        plan = (plan.join(sub, cond, "inner") if cond is not None
-                else plan.crossJoin(sub))
-        for v, c in cols.items():
-            env_cols.setdefault(v, c)
-
-    # VALUES blocks join as tiny inline relations (broadcast by AQE);
-    # UNDEF rows leave that variable unconstrained for the row
-    for names, rows in query.where.values:
-        vname = "v%d" % counter[0]
-        counter[0] += 1
-        cols = {v: "%s__%s" % (vname, v) for v in names}
-        data = [tuple(None if t is None else t[1] for t in row)
-                for row in rows]
-        vdf = triples.sparkSession.createDataFrame(
-            data, schema=", ".join("%s string" % cols[v] for v in names))
-        if plan is None:
-            plan, env_cols = vdf, dict(cols)
-            continue
-        shared = [v for v in names if v in env_cols]
-        if shared:
-            cond = None
-            for v in shared:
-                c = (F.col(cols[v]).isNull() |
-                     (F.col(env_cols[v]) == F.col(cols[v])))
-                cond = c if cond is None else (cond & c)
-            plan = plan.join(F.broadcast(vdf), cond, "inner")
-        else:
-            plan = plan.crossJoin(F.broadcast(vdf))
-        for v, c in cols.items():
-            env_cols.setdefault(v, c)
-
-    # EXISTS-in-expression markers join before the binds/filters that
-    # read them (same probe machinery as nested groups)
-    for mname, mg in query.where.exists_markers:
-        if plan is None:
-            raise SparqlError("EXISTS requires a preceding pattern")
-        plan, env_cols = join_exists_marker(plan, env_cols, mname, mg,
-                                            "x")
-
-    # BINDs project new columns; evaluated after BGP/UNION/VALUES and
-    # before FILTER/OPTIONAL — EXCEPT a BIND referencing a variable
-    # only an OPTIONAL binds (the COALESCE-defaulting idiom "OPTIONAL
-    # { … ?o } BIND(COALESCE(?o, d) AS ?x)"), which defers until after
-    # the OPTIONAL left joins; FILTERs still can't see deferred binds
-    # (documented subset restriction)
-    post_binds = []
-    for bi2, (e, var) in enumerate(query.where.binds):
-        if var in env_cols:
-            raise SparqlError("BIND target ?%s is already bound" % var)
-        if plan is None:
-            raise SparqlError("BIND requires a preceding pattern")
-        if _expr_vars(e) - set(env_cols):
-            post_binds.append((bi2, e, var))
-            continue
-        cname = "b%d__%s" % (bi2, var)
-        plan = plan.withColumn(cname, e.spark(colenv(env_cols)))
-        env_cols[var] = cname
-
-    # group-level FILTERs range over the whole group, union blocks
-    # included, so they apply after the union joins
-    for f in query.where.filters:
-        plan = plan.filter(f.spark(colenv(env_cols)))
-
-    # a WHERE group with no patterns but FILTER EXISTS / MINUS blocks
-    # evaluates them against the single empty solution (SPARQL
-    # semantics; the SQL twin compiles to SELECT … WHERE EXISTS(…)
-    # without a FROM — same one-or-zero-rows result)
-    if plan is None and (query.where.exists or query.where.minus):
-        plan = triples.sparkSession.range(1).select(
-            F.lit(1).alias("__one"))
-
-    # FILTER [NOT] EXISTS → left-semi / left-anti join on the shared
-    # variables (the Spark-native form: no row multiplication, the
-    # probe side streams, AQE broadcasts a small EXISTS pattern)
-    for positive, g in query.where.exists:
-        sub, sub_cols = (compile_optional(g, "e", env_cols)
-                         if g.union_alts else compile_group(g, "e"))
-        shared = [v for v in sub_cols if v in env_cols]
-        cond = None
-        for v in shared:
-            c = F.col(env_cols[v]) == F.col(sub_cols[v])
-            cond = c if cond is None else (cond & c)
-        plan = plan.join(sub, cond if cond is not None else F.lit(True),
-                         "left_semi" if positive else "left_anti")
-
-    # MINUS { … } → left-anti join on the shared variables; with NO
-    # shared variable the domains are disjoint and SPARQL MINUS removes
-    # nothing (the spec's incompatibility rule — unlike NOT EXISTS)
-    for g in query.where.minus:
-        sub, sub_cols = compile_group(g, "m")
-        shared = [v for v in sub_cols if v in env_cols]
-        if not shared:
-            continue
-        cond = None
-        for v in shared:
-            c = F.col(env_cols[v]) == F.col(sub_cols[v])
-            cond = c if cond is None else (cond & c)
-        plan = plan.join(sub, cond, "left_anti")
-
-    for g in query.optionals:
-        sub, sub_cols = compile_optional(g, "o", env_cols)
-        shared = [v for v in sub_cols if v in env_cols]
-        cond = None
-        for v in shared:
-            c = F.col(env_cols[v]) == F.col(sub_cols[v])
-            cond = c if cond is None else (cond & c)
-        plan = plan.join(sub, cond if cond is not None else F.lit(True),
-                         "left")
-        for v, c in sub_cols.items():
-            env_cols.setdefault(v, c)
-
-    # deferred BINDs: everything they reference is now in scope (or
-    # the reference really is unbound — the _Env error reports it)
-    for bi2, e, var in post_binds:
-        cname = "b%d__%s" % (bi2, var)
-        plan = plan.withColumn(cname, e.spark(colenv(env_cols)))
-        env_cols[var] = cname
-
-    # GROUP BY expression keys: derived columns computed before the
-    # grouping (their names are already in query.group_by)
-    for gi, (ge, name) in enumerate(query.group_exprs):
-        if name in env_cols:
-            raise SparqlError("GROUP BY alias ?%s is already bound"
-                              % name)
-        cname = "gk%d__%s" % (gi, name)
-        plan = plan.withColumn(cname, ge.spark(colenv(env_cols)))
-        env_cols[name] = cname
+    plan, env_cols = compile_group(_scope_query(query))
 
     if query.construct is not None:
         # instantiate each template triple per solution; template rows
@@ -3245,8 +3100,6 @@ def compile_spark(triples: DataFrame, query: Query | str) -> DataFrame:
         return out.dropDuplicates()
 
     if query.ask:
-        if plan is None:    # ASK {} — trivially true, like the SQL twin
-            plan = triples.sparkSession.range(1)
         return (plan.limit(1)
                 .agg(F.count(F.lit(1)).alias("c"))
                 .select((F.col("c") > 0).alias("ask")))
@@ -3485,19 +3338,17 @@ def compile_sql(table_sql: str, query: Query | str) -> str:
             path_names[(uri, "*", Ellipsis)] = name
         return path_names[(uri, mod, Ellipsis)]
 
-    def scan_sql(t: Triple, prefix: str):
-        alias = "%s%d" % (prefix, n[0])
+    def fresh(kind: str) -> str:
         n[0] += 1
+        return "%s%d" % (kind, n[0])
+
+    def scan_sql(t: Triple):
+        alias = fresh("t")
         if t.p[0] == "path":
-            if t.graph_var:
-                rel = grouped_path_cte(t.p[1], t.p[2])
-                terms = (("g", ("var", t.graph_var)),
-                         ("a", t.s), ("b", t.o))
-            else:
-                rel = path_cte(t.p[1], t.p[2], t.graph)
-                terms = (("a", t.s), ("b", t.o))
+            rel = (grouped_path_cte(t.p[1], t.p[2]) if t.graph_var
+                   else path_cte(t.p[1], t.p[2], t.graph))
             varcols, conds = {}, []
-            for col, term in terms:
+            for col, term in _path_terms(t):
                 if term[0] == "var":
                     if term[1] in varcols:
                         conds.append("%s = %s" % (varcols[term[1]], col))
@@ -3529,368 +3380,104 @@ def compile_sql(table_sql: str, query: Query | str) -> str:
         sub = "(SELECT %s FROM %s%s) %s" % (cols, table_sql, where, alias)
         return sub, {var: "%s__%s" % (alias, var) for var in varcols}
 
-    env_cols: dict[str, str] = {}
-    parts: list[str] = []
-    for t in _order_patterns(query.where.triples):
-        sub, cols = scan_sql(t, "t")
-        shared = [v for v in cols if v in env_cols]
-        if not parts:
-            parts.append("FROM %s" % sub)
-        elif shared:
-            on = " AND ".join("%s = %s" % (env_cols[v], cols[v])
-                              for v in shared)
-            parts.append("JOIN %s ON %s" % (sub, on))
-        else:
-            parts.append("CROSS JOIN %s" % sub)
-        for v, c in cols.items():
-            env_cols.setdefault(v, c)
-
     def sqlenv(cols):
         return _Env((v, (None, c)) for v, c in cols.items())
 
-    def render(g_parts, fconds):
-        body = " ".join(g_parts)
-        if fconds:
-            body += " WHERE " + " AND ".join(fconds)
-        return body
+    def group_select(sc: _Scope):
+        """One scoped group → (cols-map, FROM/JOIN parts, WHERE conds)
+        — the SQL rendering of the steps compile_spark's compile_group
+        renders. BINDs become carried expressions, OPTIONALs LEFT JOIN
+        a subquery, EXISTS/MINUS become correlated (NOT) EXISTS conds
+        and VALUES an inline relation."""
+        cols: dict = {}
+        parts: list = []
+        conds: list = []
 
-    def group_select(g: Group, prefix: str):
-        """One sub-group (UNION branch / OPTIONAL / EXISTS / MINUS
-        body) → (cols-map, FROM/JOIN parts, WHERE conds). BINDs become
-        carried expressions; nested OPTIONALs recurse into LEFT-JOINed
-        subqueries; nested EXISTS/MINUS become correlated (NOT) EXISTS
-        conds; VALUES joins as an inline relation (mirror of the Spark
-        backend's compile_group)."""
-        g_cols: dict[str, str] = {}
-        g_parts: list[str] = []
-        for t in _order_patterns(g.triples):
-            sub, cols = scan_sql(t, prefix)
-            shared = [v for v in cols if v in g_cols]
-            if not g_parts:
-                g_parts.append("FROM %s" % sub)
-            elif shared:
-                on = " AND ".join("%s = %s" % (g_cols[v], cols[v])
-                                  for v in shared)
-                g_parts.append("JOIN %s ON %s" % (sub, on))
-            else:
-                g_parts.append("CROSS JOIN %s" % sub)
-            for v, c in cols.items():
-                g_cols.setdefault(v, c)
-        for names, rows in g.values:
-            al = "%sv%d" % (prefix, n[0])
-            n[0] += 1
-            vcols = {v: "%s__%s" % (al, v) for v in names}
-            rows_sql = ", ".join(
-                "(%s)" % ", ".join(
-                    "NULL" if t is None else
-                    "'%s'" % t[1].replace("'", "''") for t in row)
-                for row in rows)
-            rel = "(VALUES %s) %s(%s)" % (
-                rows_sql, al, ", ".join(vcols[v] for v in names))
-            shared = [v for v in names if v in g_cols]
-            if not g_parts:
-                g_parts.append("FROM %s" % rel)
-            elif shared:
-                on = " AND ".join(
-                    "(%s IS NULL OR %s = %s)"
-                    % (vcols[v], g_cols[v], vcols[v]) for v in shared)
-                g_parts.append("JOIN %s ON %s" % (rel, on))
-            else:
-                g_parts.append("CROSS JOIN %s" % rel)
-            for v, c in vcols.items():
-                g_cols.setdefault(v, c)
-        for sq in g.subqueries:
-            names = [_proj_alias(p) for p in sq.proj]
-            al = "%ssq%d" % (prefix, n[0])
-            n[0] += 1
-            scols = {v: "%s__%s" % (al, v) for v in names}
-            inner = "SELECT %s FROM (%s) %s_raw" % (
-                ", ".join("%s AS %s" % (v, scols[v]) for v in names),
-                compile_sql(table_sql, sq), al)
-            shared = [v for v in names if v in g_cols]
-            if not g_parts:
-                g_parts.append("FROM (%s) %s" % (inner, al))
-            elif shared:
-                on = " AND ".join("%s = %s" % (g_cols[v], scols[v])
-                                  for v in shared)
-                g_parts.append("JOIN (%s) %s ON %s" % (inner, al, on))
-            else:
-                g_parts.append("CROSS JOIN (%s) %s" % (inner, al))
-            for v, c in scols.items():
-                g_cols.setdefault(v, c)
-        for mname, mg in g.exists_markers:
-            if not g_parts:
-                raise SparqlError("EXISTS requires a preceding "
-                                  "pattern")
-            g_cols[mname] = exists_marker_sql(mg, g_cols, prefix)
-        gpost_binds = []
-        for e, var in g.binds:
-            if var in g_cols:
-                raise SparqlError("BIND target ?%s is already bound"
-                                  % var)
-            if not g_parts:
-                raise SparqlError("BIND requires a preceding pattern")
-            if _expr_vars(e) - set(g_cols):
-                gpost_binds.append((e, var))   # defer past OPTIONALs
-                continue
-            g_cols[var] = e.sql(sqlenv(g_cols))
-        for ng in g.optionals:
-            out_cols, inner, al = optional_select(ng, prefix, g_cols)
-            shared = [v for v in out_cols if v in g_cols]
-            on = " AND ".join("%s = %s" % (g_cols[v], out_cols[v])
-                              for v in shared) or "TRUE"
-            g_parts.append("LEFT JOIN (%s) %s ON %s" % (inner, al, on))
-            for v, c in out_cols.items():
-                g_cols.setdefault(v, c)
-        for e, var in gpost_binds:
-            g_cols[var] = e.sql(sqlenv(g_cols))
-        fconds = []
-        for positive, eg in g.exists:
-            if not g_parts:
-                raise SparqlError("FILTER EXISTS requires a preceding "
-                                  "pattern")
-            if eg.union_alts:
-                e_out, inner, al = optional_select(eg, prefix, g_cols)
-                conds = ["%s = %s" % (e_out[v], g_cols[v])
-                         for v in sorted(e_out) if v in g_cols]
-                fconds.append(
-                    "%sEXISTS (SELECT 1 FROM (%s) %s%s)"
-                    % ("" if positive else "NOT ", inner, al,
-                       (" WHERE " + " AND ".join(conds))
-                       if conds else ""))
-                continue
-            e_cols, e_parts, econds = group_select(eg, prefix)
-            econds = list(econds)
-            econds += ["%s = %s" % (e_cols[v], g_cols[v])
-                       for v in sorted(e_cols) if v in g_cols]
-            fconds.append("%sEXISTS (SELECT 1 %s)"
-                          % ("" if positive else "NOT ",
-                             render(e_parts, econds)))
-        for mg in g.minus:
-            m_cols, m_parts, mconds = group_select(mg, prefix)
-            shared = [v for v in sorted(m_cols) if v in g_cols]
-            if not shared:   # disjoint domains: MINUS removes nothing
-                continue
-            mconds = list(mconds)
-            mconds += ["%s = %s" % (m_cols[v], g_cols[v])
-                       for v in shared]
-            fconds.append("NOT EXISTS (SELECT 1 %s)"
-                          % render(m_parts, mconds))
-        fconds += [f.sql(sqlenv(g_cols)) for f in g.filters]
-        return g_cols, g_parts, fconds
-
-    def optional_select(ng: Group, prefix: str, outer_cols):
-        """An OPTIONAL body → (out_cols, inner-select SQL, alias);
-        union-bodied OPTIONALs become one LEFT JOIN against a
-        NULL-padded UNION ALL of the alternatives (mirror of the
-        Spark backend's compile_optional)."""
-        al = "n%d" % n[0]
-        n[0] += 1
-        if not ng.union_alts:
-            ncols, nparts, nconds = group_select(ng, prefix)
-            out_cols = {v: "%s__%s" % (al, v) for v in ncols}
-            inner_sel = ", ".join("%s AS %s" % (ncols[v], out_cols[v])
-                                  for v in ncols) or "1 AS %s__x" % al
-            return out_cols, "SELECT %s %s" % (
-                inner_sel, render(nparts, nconds)), al
-        compiled = [group_select(a, prefix) for a in ng.union_alts]
-        shared_sets = [frozenset(set(cols) & set(outer_cols))
-                       for cols, _, _ in compiled]
-        if len(set(shared_sets)) > 1:
-            raise SparqlError("UNION branches in an OPTIONAL/EXISTS "
-                              "body must bind the same outer "
-                              "variables")
-        all_vars: list[str] = []
-        for cols, _, _ in compiled:
-            for v in cols:
-                if v not in all_vars:
-                    all_vars.append(v)
-        out_cols = {v: "%s__%s" % (al, v) for v in all_vars}
-        selects = []
-        for cols, g_parts2, fconds2 in compiled:
-            sel = ", ".join(
-                ("%s AS %s" % (cols[v], out_cols[v])) if v in cols
-                else ("CAST(NULL AS VARCHAR) AS %s" % out_cols[v])
-                for v in all_vars) or "1 AS %s__x" % al
-            selects.append("SELECT %s %s" % (sel,
-                                             render(g_parts2, fconds2)))
-        return out_cols, " UNION ALL ".join(selects), al
-
-    def exists_marker_sql(mg: Group, outer_cols, prefix: str) -> str:
-        """EXISTS-in-expression → a correlated EXISTS subquery carried
-        as the marker variable's expression text (the SQL twin of the
-        Spark backend's DISTINCT-probe left join; same emission as the
-        statement-level FILTER EXISTS)."""
-        if mg.union_alts:
-            e_out, inner, al = optional_select(mg, prefix, outer_cols)
-            conds = ["%s = %s" % (e_out[v], outer_cols[v])
-                     for v in sorted(e_out) if v in outer_cols]
-            return "(EXISTS (SELECT 1 FROM (%s) %s%s))" % (
-                inner, al,
-                (" WHERE " + " AND ".join(conds)) if conds else "")
-        e_cols, e_parts, econds = group_select(mg, prefix)
-        econds = list(econds)
-        econds += ["%s = %s" % (e_cols[v], outer_cols[v])
-                   for v in sorted(e_cols) if v in outer_cols]
-        return "(EXISTS (SELECT 1 %s))" % render(e_parts, econds)
-
-    for bi, alts in enumerate(query.unions):
-        compiled = [group_select(g, "u") for g in alts]
-        all_vars: list[str] = []
-        for cols, _, _ in compiled:
-            for v in cols:
-                if v not in all_vars:
-                    all_vars.append(v)
-        shared_sets = [set(cols) & set(env_cols)
-                       for cols, _, _ in compiled]
-        if parts and len(set(map(frozenset, shared_sets))) > 1:
-            raise SparqlError(
-                "UNION branches must bind the same outer variables")
-        canon = {v: "ub%d__%s" % (bi, v) for v in all_vars}
-        selects = []
-        for cols, g_parts, fconds in compiled:
-            sel = ", ".join(
-                ("%s AS %s" % (cols[v], canon[v])) if v in cols
-                else ("CAST(NULL AS VARCHAR) AS %s" % canon[v])
-                for v in all_vars) or "1 AS ub%d__x" % bi
-            selects.append("SELECT %s %s" % (sel, render(g_parts, fconds)))
-        alias = "ub%d" % bi
-        union_sql = "(%s) %s" % (" UNION ALL ".join(selects), alias)
-        if not parts:
-            parts.append("FROM %s" % union_sql)
-        else:
-            shared = sorted(shared_sets[0])
-            on = " AND ".join("%s = %s" % (env_cols[v], canon[v])
-                              for v in shared) or "TRUE"
-            parts.append("JOIN %s ON %s" % (union_sql, on))
-        for v in all_vars:
-            env_cols.setdefault(v, canon[v])
-
-    # subqueries: recursive compile_sql, joined on shared projected vars
-    for sq in query.where.subqueries:
-        names = [_proj_alias(p) for p in sq.proj]
-        alias = "sq%d" % n[0]
-        n[0] += 1
-        cols = {v: "%s__%s" % (alias, v) for v in names}
-        inner = "SELECT %s FROM (%s) %s_raw" % (
-            ", ".join("%s AS %s" % (v, cols[v]) for v in names),
-            compile_sql(table_sql, sq), alias)
-        shared = [v for v in names if v in env_cols]
-        if not parts:
-            parts.append("FROM (%s) %s" % (inner, alias))
-        elif shared:
-            on = " AND ".join("%s = %s" % (env_cols[v], cols[v])
-                              for v in shared)
-            parts.append("JOIN (%s) %s ON %s" % (inner, alias, on))
-        else:
-            parts.append("CROSS JOIN (%s) %s" % (inner, alias))
-        for v, c in cols.items():
-            env_cols.setdefault(v, c)
-
-    # VALUES blocks: inline relations, same null-means-UNDEF join
-    # condition as the Spark backend
-    for names, rows in query.where.values:
-        alias = "v%d" % n[0]
-        n[0] += 1
-        cols = {v: "%s__%s" % (alias, v) for v in names}
-
-        def vterm(t):
-            return "NULL" if t is None else \
-                "'%s'" % t[1].replace("'", "''")
-        rows_sql = ", ".join(
-            "(%s)" % ", ".join(vterm(t) for t in row) for row in rows)
-        rel = "(VALUES %s) %s(%s)" % (
-            rows_sql, alias, ", ".join(cols[v] for v in names))
-        shared = [v for v in names if v in env_cols]
-        if not parts:
-            parts.append("FROM %s" % rel)
-        elif shared:
+        def join(rel, rcols, keys, how="JOIN", undef=False):
             on = " AND ".join(
-                "(%s IS NULL OR %s = %s)" % (cols[v], env_cols[v], cols[v])
-                for v in shared)
-            parts.append("JOIN %s ON %s" % (rel, on))
-        else:
-            parts.append("CROSS JOIN %s" % rel)
-        for v, c in cols.items():
-            env_cols.setdefault(v, c)
+                ("(%s IS NULL OR %s = %s)" % (rcols[v], cols[v], rcols[v]))
+                if undef else "%s = %s" % (cols[v], rcols[v])
+                for v in keys)
+            if not parts:
+                parts.append("FROM %s" % rel)
+            elif on or how != "JOIN":
+                parts.append("%s %s ON %s" % (how, rel, on or "TRUE"))
+            else:
+                parts.append("CROSS JOIN %s" % rel)
+            for v, c in rcols.items():
+                cols.setdefault(v, c)
 
-    # EXISTS-in-expression markers: correlated EXISTS text carried as
-    # the marker's expression (before the binds/filters that read it)
-    for mname, mg in query.where.exists_markers:
-        if not parts:
-            raise SparqlError("EXISTS requires a preceding pattern")
-        env_cols[mname] = exists_marker_sql(mg, env_cols, "x")
+        for op, arg, keys in sc.steps:
+            if op == "one":
+                parts.append("FROM (SELECT 1 AS one) %s" % fresh("one"))
+            elif op == "scan":
+                join(*scan_sql(arg), keys)
+            elif op in ("union", "optional"):
+                ocols, inner, al = body_select(arg)
+                join("(%s) %s" % (inner, al), ocols, keys,
+                     "LEFT JOIN" if op == "optional" else "JOIN")
+            elif op == "values":
+                names, rows = arg
+                al = fresh("v")
+                vcols = {v: "%s__%s" % (al, v) for v in names}
+                rows_sql = ", ".join(
+                    "(%s)" % ", ".join(
+                        "NULL" if t is None else
+                        "'%s'" % t[1].replace("'", "''") for t in row)
+                    for row in rows)
+                join("(VALUES %s) %s(%s)" % (
+                    rows_sql, al, ", ".join(vcols[v] for v in names)),
+                    vcols, keys, undef=True)
+            elif op == "subquery":
+                sq, names = arg
+                al = fresh("sq")
+                scols = {v: "%s__%s" % (al, v) for v in names}
+                inner = "SELECT %s FROM (%s) %s_raw" % (
+                    ", ".join("%s AS %s" % (v, scols[v]) for v in names),
+                    compile_sql(table_sql, sq), al)
+                join("(%s) %s" % (inner, al), scols, keys)
+            elif op == "marker":
+                name, body = arg
+                cols[name] = "(%s)" % exists_sql(body, keys, cols)
+            elif op == "bind":
+                e, var = arg
+                cols[var] = e.sql(sqlenv(cols))
+            elif op == "exists":
+                positive, body = arg
+                conds.append("%s%s" % ("" if positive else "NOT ",
+                                       exists_sql(body, keys, cols)))
+            elif op == "minus":
+                conds.append("NOT " + exists_sql(arg, keys, cols))
+            else:   # filter
+                conds.append(arg.sql(sqlenv(cols)))
+        return cols, parts, conds
 
-    # BINDs become SQL expressions carried in env_cols — projection,
-    # later FILTERs and GROUP/ORDER BY all substitute the text; a
-    # BIND referencing an OPTIONAL-bound var defers past the OPTIONAL
-    # joins (mirror of the Spark flow's post_binds)
-    bind_vars = set()
-    sql_post_binds = []
-    for e, var in query.where.binds:
-        if var in env_cols:
-            raise SparqlError("BIND target ?%s is already bound" % var)
-        if not parts:
-            raise SparqlError("BIND requires a preceding pattern")
-        if _expr_vars(e) - set(env_cols):
-            sql_post_binds.append((e, var))
-            continue
-        env_cols[var] = e.sql(sqlenv(env_cols))
-        bind_vars.add(var)
+    def body_select(sc: _Scope):
+        """A scoped group as a subquery → (out_cols, SELECT text,
+        alias). A UNION selects every branch NULL-padded onto the
+        union of their variables, combined by UNION ALL."""
+        al = fresh("n")
+        out = {v: "%s__%s" % (al, v) for v in sc.vars}
+        selects = []
+        for cols, parts, conds in map(group_select, sc.alts or [sc]):
+            sel = ", ".join(
+                ("%s AS %s" % (cols[v], out[v])) if v in cols
+                else ("CAST(NULL AS VARCHAR) AS %s" % out[v])
+                for v in sc.vars) or "1 AS %s__x" % al
+            selects.append(" ".join(
+                ["SELECT %s" % sel] + parts
+                + (["WHERE " + " AND ".join(conds)] if conds else [])))
+        return out, " UNION ALL ".join(selects), al
 
-    where_conds = [f.sql(sqlenv(env_cols)) for f in query.where.filters]
+    def exists_sql(body: _Scope, keys, outer_cols) -> str:
+        """EXISTS over a scoped group, correlated on the keys."""
+        ocols, inner, al = body_select(body)
+        corr = " AND ".join("%s = %s" % (ocols[v], outer_cols[v])
+                            for v in keys)
+        return "EXISTS (SELECT 1 FROM (%s) %s%s)" % (
+            inner, al, (" WHERE " + corr) if corr else "")
 
-    # FILTER [NOT] EXISTS → correlated (NOT) EXISTS subquery joined to
-    # the outer scan aliases on the shared variables
-    for positive, g in query.where.exists:
-        if g.union_alts:
-            e_out, inner, al = optional_select(g, "e", env_cols)
-            conds = ["%s = %s" % (e_out[v], env_cols[v])
-                     for v in sorted(e_out) if v in env_cols]
-            where_conds.append(
-                "%sEXISTS (SELECT 1 FROM (%s) %s%s)"
-                % ("" if positive else "NOT ", inner, al,
-                   (" WHERE " + " AND ".join(conds)) if conds else ""))
-            continue
-        e_cols, e_parts, conds = group_select(g, "e")
-        conds += ["%s = %s" % (e_cols[v], env_cols[v])
-                  for v in sorted(e_cols) if v in env_cols]
-        inner = "SELECT 1 %s" % render(e_parts, conds)
-        where_conds.append("%sEXISTS (%s)"
-                           % ("" if positive else "NOT ", inner))
-
-    # MINUS → NOT EXISTS on the shared variables; no shared variable →
-    # disjoint domains, MINUS removes nothing (per-spec asymmetry with
-    # NOT EXISTS — same rule as the Spark backend)
-    for g in query.where.minus:
-        m_cols, m_parts, conds = group_select(g, "m")
-        shared = [v for v in sorted(m_cols) if v in env_cols]
-        if not shared:
-            continue
-        conds += ["%s = %s" % (m_cols[v], env_cols[v]) for v in shared]
-        where_conds.append("NOT EXISTS (SELECT 1 %s)"
-                           % render(m_parts, conds))
-
-    for g in query.optionals:
-        out_cols, inner, alias = optional_select(g, "o", env_cols)
-        shared = [v for v in out_cols if v in env_cols]
-        on = " AND ".join("%s = %s" % (env_cols[v], out_cols[v])
-                          for v in shared) or "TRUE"
-        parts.append("LEFT JOIN (%s) %s ON %s" % (inner, alias, on))
-        for v, c in out_cols.items():
-            env_cols.setdefault(v, c)
-
-    for e, var in sql_post_binds:
-        env_cols[var] = e.sql(sqlenv(env_cols))
-        bind_vars.add(var)
-
-    # GROUP BY expression keys: carried expressions (the GROUP BY
-    # clause and the select list both substitute the text)
-    for ge, name in query.group_exprs:
-        if name in env_cols:
-            raise SparqlError("GROUP BY alias ?%s is already bound"
-                              % name)
-        env_cols[name] = ge.sql(sqlenv(env_cols))
+    env_cols, parts, where_conds = group_select(_scope_query(query))
 
     def with_prefix(extra_ctes=()):
         allc = ctes + list(extra_ctes)
@@ -3906,10 +3493,10 @@ def compile_sql(table_sql: str, query: Query | str) -> str:
             % (with_prefix(), inner)
 
     if query.construct is not None:
-        # bind vars carry an expression, not a column reference — give
-        # them a plain alias inside the solution CTE
-        sol_cols = {v: ("bind__%s" % v if v in bind_vars else c)
-                    for v, c in env_cols.items()}
+        # BIND / EXISTS vars carry an expression, not a column
+        # reference — every variable gets a plain alias in the
+        # solution CTE
+        sol_cols = {v: "sol__" + v for v in env_cols}
         sol = "SELECT %s %s" % (
             ", ".join("%s AS %s" % (c, sol_cols[v])
                       for v, c in env_cols.items())

@@ -46,8 +46,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .sparql import (Group, Query, SparqlError, Triple, _Parser,
-                     _rewrite_istype, compile_spark, compile_sql)
+from .sparql import (Query, SparqlError, Triple, _Parser, _scope,
+                     compile_spark, compile_sql)
 
 URI_SCHEME_RE = "^[A-Za-z][A-Za-z0-9+.-]*://"
 
@@ -103,7 +103,7 @@ class _UpdateParser(_Parser):
                     if not self.kw("WHERE"):
                         raise SparqlError("INSERT {…} needs WHERE")
                     ops.append(UpdateOp("modify", insert=ins,
-                                        where=self._where_query(ins)))
+                                        where=self._where_query()))
             elif self.kw("DELETE"):
                 if self.kw("DATA"):
                     ops.append(UpdateOp("delete_data",
@@ -111,17 +111,8 @@ class _UpdateParser(_Parser):
                 elif self.kw("WHERE"):
                     # DELETE WHERE { G }: the pattern is the template;
                     # restrict to a plain BGP so template = triples
-                    q = self._where_query(None)
-                    g = q.where
-                    if (q.unions or q.optionals or g.filters or g.binds
-                            or g.values or g.exists or g.minus
-                            or g.optionals or g.subqueries):
-                        raise SparqlError("DELETE WHERE supports a "
-                                          "plain triple pattern only")
-                    if any(t.p[0] == "path" for t in g.triples):
-                        raise SparqlError("DELETE WHERE template "
-                                          "cannot contain paths")
-                    ops.append(UpdateOp("modify", delete=g.triples,
+                    q = self._where_query("DELETE")
+                    ops.append(UpdateOp("modify", delete=q.where.triples,
                                         where=q))
                 else:
                     dele = self._template(False)
@@ -132,7 +123,7 @@ class _UpdateParser(_Parser):
                         raise SparqlError("DELETE {…} needs WHERE")
                     ops.append(UpdateOp(
                         "modify", delete=dele, insert=ins,
-                        where=self._where_query(dele + ins)))
+                        where=self._where_query()))
             else:
                 raise SparqlError("expected INSERT/DELETE/CLEAR, got %r"
                                   % (self.peek(),))
@@ -167,60 +158,10 @@ class _UpdateParser(_Parser):
                                   "constant triples")
         return tmpl
 
-    def _where_query(self, tmpl: list[Triple] | None) -> Query:
+    def _where_query(self, bgp_only: str | None = None) -> Query:
         """Parse ``{ G }`` into a ``SELECT * WHERE { G }`` Query (the
-        binding source both compilers run), mirroring parse()'s
-        assembly: top-level-optional promotion + isUri rewrite."""
-        where, optionals, unions = self.group(allow_optional=True)
-        optionals = where.optionals + optionals
-        where.optionals = []
-        q = Query(False, ["*"], where, optionals, [], None, unions,
-                  None, [], False, None, None)
-
-        def walk(g):
-            yield g
-            for ng in g.optionals:
-                yield from walk(ng)
-            for mg in g.minus:
-                yield from walk(mg)
-            for _, eg in g.exists:
-                yield from walk(eg)
-            for ag in g.union_alts:
-                yield from walk(ag)
-        for top in ([q.where] + q.optionals
-                    + [a for alts in q.unions for a in alts]):
-            for g in walk(top):
-                _rewrite_istype(g)
-        return q
-
-
-def _where_vars(q: Query) -> set[str]:
-    """Variables a SELECT-* over the parsed WHERE can bind (triples,
-    BIND targets, VALUES, subquery projections, recursively through
-    OPTIONAL/UNION; MINUS/EXISTS bodies bind nothing outward)."""
-    out: set[str] = set()
-
-    def grp(g: Group):
-        for t in g.triples:
-            for term in (t.s, t.p, t.o):
-                if term[0] == "var":
-                    out.add(term[1])
-        for _, var in g.binds:
-            out.add(var)
-        for names, _ in g.values:
-            out.update(names)
-        for sq in g.subqueries:
-            out.update(v for v in sq.proj if isinstance(v, str))
-            out.update(p[4] for p in sq.proj
-                       if not isinstance(p, str) and p[0] == "agg")
-        for ng in g.optionals:
-            grp(ng)
-        for ag in g.union_alts:
-            grp(ag)
-    for top in ([q.where] + q.optionals
-                + [a for alts in q.unions for a in alts]):
-        grp(top)
-    return out
+        binding source both compilers run)."""
+        return Query(False, ["*"], self.where_group(bgp_only), [], None)
 
 
 def parse_update(text: str) -> list[UpdateOp]:
@@ -231,7 +172,7 @@ def parse_update(text: str) -> list[UpdateOp]:
     for op in ops:
         if op.kind != "modify":
             continue
-        bound = _where_vars(op.where)
+        bound = set(_scope(op.where.where).vars)
         loose = set(_tmpl_vars(op.delete + op.insert)) - bound
         if loose:
             raise SparqlError("template variables not bound by WHERE: "
