@@ -2,10 +2,8 @@
 
 The pipeline's storage layer is Iceberg-shaped (SURVEY §3: triple +
 entity + entries tables in an Iceberg lake), but this sandbox ships no
-Iceberg runtime, so round ≤4 hand-rolled the semantics over a
-(bucket, predicate)-partitioned parquet layout inside
-``operators/lineage.py``. This module makes that swap mechanical: one
-interface, two backends —
+Iceberg runtime, so the semantics are hand-rolled over a
+bucket-partitioned parquet layout. One interface, two backends —
 
 - :class:`ParquetBucketFormat` — the sandbox backend; owns the code
   that used to live as free functions in ``operators.lineage`` (which
@@ -20,35 +18,57 @@ Method-by-method mapping (the contract both backends satisfy):
 =================  ===================================================
 method             Iceberg equivalent
 =================  ===================================================
-``write``          ``CREATE OR REPLACE TABLE t ... AS SELECT`` — full
-                   snapshot write, partitioned by
-                   ``(bucket(64, source_url), predicate)``
+``write``          ``CREATE OR REPLACE TABLE t ... PARTITIONED BY
+                   (bucket(n, source_url)) AS SELECT`` — full snapshot
+                   write — then ``WRITE ORDERED BY predicate, subject``
 ``merge``          ``MERGE INTO t USING batch ON
                    t.source_url = batch.source_url WHEN MATCHED THEN
                    DELETE`` + ``INSERT`` — per-url replace, the
-                   CLEAR-context-and-reload analog; atomic snapshot
-                   commit replaces the local drop-dir-and-append
+                   CLEAR-context-and-reload analog; snapshot commits
+                   replace the local drop-dir-and-append
 ``compact``        ``CALL catalog.system.rewrite_data_files(t,
-                   sort_order => 'subject')`` — small-file maintenance
-``manifest``       ``SELECT partition, count(*) ... FROM t.files`` —
-                   the files metadata table replaces the
-                   input_file_name() census
+                   sort_order => 'predicate, subject')`` — small-file
+                   maintenance
+``manifest``       ``SELECT partition.source_url_bucket, count(*) ...
+                   FROM t.files`` — the files metadata table replaces
+                   the input_file_name() census
 ``read``           ``spark.table(t)`` (snapshot isolation for free;
                    time travel via ``VERSION AS OF`` feeds
                    ``operators/versioning.py``'s snapshot diff)
 =================  ===================================================
 
-Scale design is identical in both backends: the write unit is
-(source_url-hash bucket × predicate) — buckets bound the idempotent
-re-run/overwrite granularity, the predicate axis gives every
-predicate-bound SPARQL pattern scan directory-level pruning, and RDF's
-small closed predicate set keeps the partition count far from the
-small-files cliff at 10^12 documents (see write_triples' original plan
-evidence in BENCH.md).
+Layout, the same in both backends: the triple table's one partition
+level is a bucket, murmur3(source_url) mod n — the unit a merge
+rewrites (a changed page rewrites its bucket). Rows sort by
+(predicate, subject) within each file: a predicate-bound SPARQL
+pattern scan still hands its predicate equality to the parquet reader
+as a pushed filter, and row-group min/max statistics on the sorted
+column skip the other predicates' rows — the pruning the former
+predicate directories gave. The bucket count n is table metadata
+(``_lake.json`` beside the data; Spark and pyarrow skip
+``_``-prefixed files): the first write sets it to
+ceil(rows / ROWS_PER_FILE), every merge reads it back, and only
+``compact`` re-buckets. A write runs one task per bucket and leaves
+one file per bucket.
+
+Why bucket-only, and why this constant — measured on the kgbench
+corpus (25,100 triples, 14 predicates; local[4], 4-core host, medians
+of 9, of 5 for the former layout): a file costs a fixed ~17 ms to write and ~5.5 ms to scan on top
+of its rows. The former (64 url-hash buckets × predicate) layout cut
+that corpus into 893 files of ~2.8 KB: 10.6 s to write, 1.07 s to scan
+in full. Bucket-only, 4 / 8 / 16 / 64 buckets write in 0.26 / 0.32 /
+0.48 / 1.27 s and scan in 0.13 / 0.14 / 0.14 / 0.46 s; 1 or 2 buckets
+are no faster than 4 (0.31 / 0.29 s to write), as fewer files than
+cores leave cores idle. ROWS_PER_FILE = 8,000 gives that corpus its 4
+buckets, one per core. The constant fixes rows per file, not the file
+count: at 10^9 triples it gives 125,000 buckets of 8,000 rows (~56 KB
+each at this corpus's ~7 bytes per row), so a table that size wants
+the constant raised, and ``compact`` re-buckets it to the new value.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 from abc import ABC, abstractmethod
@@ -56,11 +76,32 @@ from abc import ABC, abstractmethod
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-N_BUCKETS = 64  # url-hash buckets; the write/overwrite unit
+ROWS_PER_FILE = 8_000   # target rows per bucket file; sets the bucket count
+META = "_lake.json"     # the table's bucket count, beside the data
 
 
-def bucket_of(col):
-    return F.pmod(F.xxhash64(col), F.lit(N_BUCKETS)).cast("int")
+def bucket_of(col, n_buckets: int):
+    """A row's bucket: Spark's murmur3 hash of ``col`` mod ``n_buckets``
+    — the partition id ``repartition(n_buckets, col)`` assigns, so a
+    write's task i holds exactly bucket i."""
+    return F.pmod(F.hash(col), F.lit(n_buckets)).cast("int")
+
+
+def buckets_for(n_rows: int) -> int:
+    """The bucket count a table of ``n_rows`` rows is written with."""
+    return max(1, -(-n_rows // ROWS_PER_FILE))
+
+
+def read_buckets(target: str) -> int:
+    """The bucket count recorded in ``target``'s ``_lake.json``."""
+    meta = os.path.join(target, META)
+    if not os.path.exists(meta):
+        raise ValueError(
+            "%s has no %s: it predates the bucket-only layout (or its "
+            "write did not finish); run compact on it once to rewrite "
+            "it" % (target, META))
+    with open(meta) as f:
+        return int(json.load(f)["buckets"])
 
 
 class TableFormat(ABC):
@@ -85,7 +126,7 @@ class TableFormat(ABC):
 
     @abstractmethod
     def manifest(self, spark: SparkSession, target: str) -> DataFrame:
-        """(bucket, predicate, n_files, n_rows, min_rows_per_file)."""
+        """(bucket, n_files, n_rows, min_rows_per_file)."""
 
     @abstractmethod
     def read(self, spark: SparkSession, target: str) -> DataFrame:
@@ -93,75 +134,90 @@ class TableFormat(ABC):
 
 
 class ParquetBucketFormat(TableFormat):
-    """The sandbox backend: (bucket, predicate) directory-partitioned
-    parquet with hand-rolled MERGE/compaction semantics. See module
-    docstring for the per-method Iceberg mapping; per-method scale
-    notes kept from the original free functions."""
+    """The sandbox backend: bucket-partitioned parquet, rows sorted by
+    (predicate, subject) within each file, with hand-rolled
+    MERGE/compaction semantics. See the module docstring for the
+    layout and the per-method Iceberg mapping."""
+
+    @staticmethod
+    def _write(df: DataFrame, target: str, n_buckets: int, mode: str,
+               max_records_per_file: int = 0) -> None:
+        # one task per bucket: the explicit partition count keeps AQE
+        # from coalescing the write into one task, and bucket_of is the
+        # hash partitioner's own partition id; the bucket leads the
+        # sort so it satisfies the writer's partition-column ordering
+        # and no second sort replaces (predicate, subject)
+        w = (df.drop("bucket")
+             .withColumn("bucket", bucket_of(F.col("source_url"),
+                                             n_buckets))
+             .repartition(n_buckets, "source_url")
+             .sortWithinPartitions("bucket", "predicate", "subject")
+             .write.partitionBy("bucket").mode(mode))
+        if max_records_per_file:
+            w = w.option("maxRecordsPerFile", max_records_per_file)
+        w.parquet(target)
+
+    @staticmethod
+    def _write_meta(target: str, n_buckets: int) -> None:
+        with open(os.path.join(target, META), "w") as f:
+            json.dump({"buckets": n_buckets}, f)
 
     def write(self, triples: DataFrame, target: str) -> None:
-        # rows sort by subject within each file for row-group skipping
-        # on subject-bound scans; one shuffle on the partition key
-        (triples.withColumn("bucket", bucket_of(F.col("source_url")))
-         .repartition("bucket", "predicate")
-         .sortWithinPartitions("subject")
-         .write.partitionBy("bucket", "predicate").mode("overwrite")
-         .parquet(target))
+        n = buckets_for(triples.count())
+        self._write(triples, target, n, "overwrite")
+        self._write_meta(target, n)
 
     def merge(self, spark: SparkSession, new_triples: DataFrame,
               target: str) -> None:
         # Affected buckets are replaced WHOLE (their directories
-        # dropped, merged rows appended): with predicate
-        # sub-partitions, leaf-level dynamic overwrite would leave a
-        # stale (bucket, predicate) dir behind whenever a re-parsed
-        # url stopped emitting some predicate and no other url in the
-        # bucket carries it. In production this read-union-rewrite is
-        # one atomic Iceberg MERGE INTO; the local parquet form trades
-        # that atomicity for the same end state.
+        # dropped, merged rows appended) in the table's recorded bucket
+        # count — a merge never re-buckets. Not atomic: a crash between
+        # the rmtree and the append loses those buckets; the Iceberg
+        # backend reaches the same end state through snapshot commits.
         if not os.path.exists(target):
             self.write(new_triples, target)
             return
-        new_b = new_triples.withColumn(
-            "bucket", bucket_of(F.col("source_url")))
-        changed_urls = new_b.select("source_url", "bucket").distinct()
+        n = read_buckets(target)
+        changed_urls = (new_triples.select("source_url").distinct()
+                        .withColumn("bucket",
+                                    bucket_of(F.col("source_url"), n)))
         buckets = [r["bucket"] for r in
                    changed_urls.select("bucket").distinct().collect()]
         if not buckets:
             return
         existing = (spark.read.parquet(target)
                     .where(F.col("bucket").isin(buckets))
-                    .join(changed_urls.select("source_url").distinct(),
-                          "source_url", "left_anti"))
+                    .join(changed_urls.select("source_url"),
+                          "source_url", "left_anti")
+                    .drop("bucket"))
         # materialize before touching the path we just read
-        merged = existing.unionByName(new_b).localCheckpoint(eager=True)
+        merged = existing.unionByName(new_triples) \
+            .localCheckpoint(eager=True)
         for b in buckets:
             shutil.rmtree(os.path.join(target, "bucket=%d" % b),
                           ignore_errors=True)
-        (merged.repartition("bucket", "predicate")
-         .sortWithinPartitions("subject")
-         .write.partitionBy("bucket", "predicate")
-         .mode("append").parquet(target))
+        self._write(merged, target, n, "append")
 
     def compact(self, spark: SparkSession, target: str,
                 max_records_per_file: int = 5_000_000) -> None:
-        # one shuffle on the uniform partition key; maxRecordsPerFile
-        # bounds any rdf:type-sized partition's files without a second
-        # exchange; content unchanged (round-trip tested)
-        df = spark.read.parquet(target).localCheckpoint(eager=True)
-        (df.repartition("bucket", "predicate")
-         .sortWithinPartitions("subject")
-         .write.partitionBy("bucket", "predicate")
-         .option("maxRecordsPerFile", max_records_per_file)
-         .mode("overwrite").parquet(target))
+        # the one place that re-buckets: the count follows the table's
+        # current size, and a table in an older layout (any partition
+        # directories, no _lake.json) is rewritten into this one;
+        # content unchanged (round-trip tested)
+        df = spark.read.parquet(target).drop("bucket") \
+            .localCheckpoint(eager=True)
+        n = buckets_for(df.count())
+        self._write(df, target, n, "overwrite", max_records_per_file)
+        self._write_meta(target, n)
 
     def manifest(self, spark: SparkSession, target: str) -> DataFrame:
         # file identity from input_file_name inside the scan, never
         # the driver; one scan + one hash agg on the partition key
         df = spark.read.parquet(target)
-        per_file = (df.select("bucket", "predicate",
-                              F.input_file_name().alias("f"))
-                    .groupBy("bucket", "predicate", "f")
+        per_file = (df.select("bucket", F.input_file_name().alias("f"))
+                    .groupBy("bucket", "f")
                     .agg(F.count(F.lit(1)).alias("rows")))
-        return (per_file.groupBy("bucket", "predicate")
+        return (per_file.groupBy("bucket")
                 .agg(F.count(F.lit(1)).alias("n_files"),
                      F.sum("rows").alias("n_rows"),
                      F.min("rows").alias("min_rows_per_file")))
@@ -183,17 +239,19 @@ class IcebergFormat(TableFormat):
     TRIPLE_COLS = ("source_url", "subject", "predicate", "object",
                    "objtype", "lang", "datatype")
 
-    def write_sql(self, table: str, source_view: str) -> tuple[str, str]:
+    def write_sql(self, table: str, source_view: str,
+                  n_buckets: int) -> tuple[str, str]:
         return (
             "CREATE OR REPLACE TABLE %s "
             "USING iceberg "
-            "PARTITIONED BY (bucket(%d, source_url), predicate) "
+            "PARTITIONED BY (bucket(%d, source_url)) "
             "TBLPROPERTIES ('write.distribution-mode' = 'hash') "
-            "AS SELECT * FROM %s" % (table, N_BUCKETS, source_view),
+            "AS SELECT * FROM %s" % (table, n_buckets, source_view),
             # a sort order is table metadata, not a table property; it
             # orders every later write (merges, and compaction's sort
             # rewrite), not the files the CTAS above already wrote
-            "ALTER TABLE %s WRITE ORDERED BY subject ASC" % table)
+            "ALTER TABLE %s WRITE ORDERED BY predicate ASC, subject ASC"
+            % table)
 
     def merge_sql(self, table: str, batch_view: str) -> tuple[str, str]:
         cols = ", ".join(self.TRIPLE_COLS)
@@ -216,7 +274,7 @@ class IcebergFormat(TableFormat):
         return (
             "CALL %s.system.rewrite_data_files("
             "table => '%s', strategy => 'sort', "
-            "sort_order => 'subject ASC', "
+            "sort_order => 'predicate ASC, subject ASC', "
             "options => map('target-file-size-bytes', '536870912', "
             "'max-records-per-file', '%d'))"
             % (catalog, table, max_records_per_file))
@@ -224,16 +282,16 @@ class IcebergFormat(TableFormat):
     def manifest_sql(self, table: str) -> str:
         return (
             "SELECT partition.source_url_bucket AS bucket, "
-            "partition.predicate AS predicate, "
             "COUNT(*) AS n_files, SUM(record_count) AS n_rows, "
             "MIN(record_count) AS min_rows_per_file "
-            "FROM %s.files GROUP BY 1, 2" % table)
+            "FROM %s.files GROUP BY 1" % table)
 
     # -- executing forms ------------------------------------------------
     def write(self, triples: DataFrame, target: str) -> None:
         view = "_lake_write_src"
         triples.createOrReplaceTempView(view)
-        for stmt in self.write_sql(target, view):
+        n = buckets_for(triples.count())
+        for stmt in self.write_sql(target, view, n):
             triples.sparkSession.sql(stmt)
 
     def merge(self, spark: SparkSession, new_triples: DataFrame,

@@ -7,9 +7,8 @@ RDFa mining of rendered XHTML, ferenda/documentrepository.py:2182-2217).
 
 Scale notes: ONE Arrow-batched ``mapInPandas`` stage — per-page work,
 no shuffle at all; the output is a narrow 6-column triple stream that
-downstream consumers (merge_triples' (bucket, predicate) layout, the
-SPARQL scans, entity linking) partition exactly like extraction
-triples. At 100 TB the stage is embarrassingly parallel and bounded by
+downstream consumers (merge_triples' url-bucketed layout, the SPARQL
+scans, entity linking) partition exactly like extraction triples. At 100 TB the stage is embarrassingly parallel and bounded by
 parse CPU, which is why the kernels stay allocation-light and the
 HTML is parsed once per syntax pair (shared tree would save ~30% — a
 documented future fold; correctness first, the two kernels stay

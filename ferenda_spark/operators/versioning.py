@@ -80,12 +80,10 @@ def triple_diff(old: DataFrame, new: DataFrame) -> DataFrame:
     → (change 'added'|'removed', source_url, subject, predicate,
     object), set semantics (duplicates within a snapshot collapse).
 
-    Scale notes: two anti-joins on the SAME composite key — when both
-    snapshots live in the (bucket, predicate)-partitioned triple
-    layout, the exchange is co-located on bucket and each predicate
-    partition prunes; the delta is crawl-batch-sized, never
-    corpus-sized, and AQE skew-split covers pathological urls. Nothing
-    collects to the driver.
+    Scale notes: two anti-joins on the SAME composite key, whose
+    leading column source_url is the triple table's bucket key; the
+    delta is crawl-batch-sized, never corpus-sized, and AQE skew-split
+    covers pathological urls. Nothing collects to the driver.
     """
     cols = ["source_url", "subject", "predicate", "object"]
     a = old.select(*cols).distinct()

@@ -162,7 +162,8 @@ Scale shape (100 TB triples table):
 
 - every triple pattern is a *predicate-bound scan* — the predicate
   equality reaches the parquet reader as a pushed filter, and with the
-  production table partitioned by predicate it is a partition prune;
+  lake's files sorted by (predicate, subject) row-group min/max
+  statistics skip the other predicates' rows;
 - the join plan is ordered greedily most-bound-first among connected
   patterns, so the most selective scan anchors the pipeline; pattern
   scans are narrow (only the variable columns survive the scan
@@ -2605,16 +2606,22 @@ class _Scope:
       ``marker`` ((name, body _Scope) — an EXISTS-in-expression probe);
     - ``bind`` ((Expr, var));
     - ``optional`` (body _Scope), then the deferred ``bind`` steps;
-    - ``exists`` ((positive, body _Scope)), ``minus`` (body _Scope;
-      dropped when the domains are disjoint), ``filter`` (Expr).
+    - ``exists`` ((positive, body _Scope, loose keys)), ``minus``
+      (body _Scope; dropped when the domains are disjoint), ``filter``
+      (Expr).
 
     ``vars`` are the variables in scope after the group, in column
-    order. A UNION — a WHERE block or a UNION-bodied OPTIONAL / EXISTS
-    — is a _Scope whose ``alts`` are the branch scopes and whose
-    ``vars`` are their aligned (NULL-padded) union."""
+    order; ``maybe`` are those of them a solution may leave unbound
+    (bound only by an OPTIONAL or by some UNION branches). An exists
+    step's loose keys are its keys in ``maybe``: an unbound key is
+    compatible with any value, so they join null-tolerantly. A UNION
+    — a WHERE block or a UNION-bodied OPTIONAL / EXISTS — is a _Scope
+    whose ``alts`` are the branch scopes and whose ``vars`` are their
+    aligned (NULL-padded) union."""
     steps: list = field(default_factory=list)
     vars: list = field(default_factory=list)
     alts: list = field(default_factory=list)
+    maybe: set = field(default_factory=set)
 
 
 def _scope(g: Group) -> _Scope:
@@ -2623,18 +2630,21 @@ def _scope(g: Group) -> _Scope:
     keys, the empty-group solution — recursively for nested groups."""
     if g.union_alts:
         alts = [_scope(a) for a in g.union_alts]
-        return _Scope(vars=list(dict.fromkeys(
-            v for a in alts for v in a.vars)), alts=alts)
+        vars_ = list(dict.fromkeys(v for a in alts for v in a.vars))
+        return _Scope(vars=vars_, alts=alts, maybe={
+            v for v in vars_
+            if any(v not in a.vars or v in a.maybe for a in alts)})
     sc = _Scope()
     bound: dict = {}        # ordered set: the in-scope variables
 
-    def step(op, arg, joins=(), adds=(), body=None):
+    def step(op, arg, joins=(), adds=(), body=None, maybe=()):
         if body is not None and body.alts and len(
                 {frozenset(bound.keys() & set(a.vars))
                  for a in body.alts}) > 1:
             raise SparqlError(
                 "UNION branches must bind the same outer variables")
         sc.steps.append((op, arg, [v for v in joins if v in bound]))
+        sc.maybe.update(v for v in maybe if v not in bound)
         bound.update(dict.fromkeys(adds))
 
     def bind(e, var):
@@ -2648,7 +2658,7 @@ def _scope(g: Group) -> _Scope:
         step("scan", t, vs, vs)
     for block in g.unions:
         u = _scope(Group(union_alts=block))
-        step("union", u, u.vars, u.vars, u)
+        step("union", u, u.vars, u.vars, u, u.maybe)
     for names, rows in g.values:
         step("values", (names, rows), names, names)
     for sq in g.subqueries:
@@ -2681,13 +2691,14 @@ def _scope(g: Group) -> _Scope:
         bind(e, var)
     # 3. OPTIONAL left joins; 4. deferred BINDs
     for o in optionals:
-        step("optional", o, o.vars, o.vars, o)
+        step("optional", o, o.vars, o.vars, o, o.vars)
     for e, var in deferred:
         bind(e, var)
     # 5. FILTER [NOT] EXISTS, MINUS and FILTERs see the whole group
     for positive, eg in g.exists:
         body = _scope(eg)
-        step("exists", (positive, body), body.vars, body=body)
+        loose = sc.maybe & set(body.vars)
+        step("exists", (positive, body, loose), body.vars, body=body)
     for mg in g.minus:
         body = _scope(mg)
         if bound.keys() & set(body.vars):   # disjoint: removes nothing
@@ -2948,10 +2959,12 @@ def compile_spark(triples: DataFrame, query: Query | str) -> DataFrame:
         return df.select(*sel), {var: "%s__%s" % (alias, var)
                                  for var in varcols}
 
-    def join(plan, cols, df, dcols, keys, how="inner", undef=False):
+    def join(plan, cols, df, dcols, keys, how="inner", undef=False,
+             loose=()):
         """Join ``df`` onto a group's plan on the scoping pass's keys
-        (an UNDEF-tolerant condition for VALUES); the left side keeps
-        its column for a shared variable."""
+        (an UNDEF-tolerant condition for VALUES, a null-tolerant one
+        on the plan's ``loose`` keys); the left side keeps its column
+        for a shared variable."""
         if plan is None:
             plan = df
         else:
@@ -2960,6 +2973,8 @@ def compile_spark(triples: DataFrame, query: Query | str) -> DataFrame:
                 c = F.col(cols[v]) == F.col(dcols[v])
                 if undef:
                     c = F.col(dcols[v]).isNull() | c
+                if v in loose:
+                    c = F.col(cols[v]).isNull() | c
                 cond = c if cond is None else (cond & c)
             if cond is None and how == "inner":
                 plan = plan.crossJoin(df)
@@ -3051,9 +3066,10 @@ def compile_spark(triples: DataFrame, query: Query | str) -> DataFrame:
             elif op == "exists":
                 # left-semi / left-anti join (the Spark-native form:
                 # the probe side streams, AQE broadcasts a small body)
-                positive, body = arg
+                positive, body, loose = arg
                 plan = join(plan, cols, *compile_group(body), keys,
-                            "left_semi" if positive else "left_anti")
+                            "left_semi" if positive else "left_anti",
+                            loose=loose)
             elif op == "minus":
                 plan = join(plan, cols, *compile_group(arg), keys,
                             "left_anti")
@@ -3443,9 +3459,10 @@ def compile_sql(table_sql: str, query: Query | str) -> str:
                 e, var = arg
                 cols[var] = e.sql(sqlenv(cols))
             elif op == "exists":
-                positive, body = arg
+                positive, body, loose = arg
                 conds.append("%s%s" % ("" if positive else "NOT ",
-                                       exists_sql(body, keys, cols)))
+                                       exists_sql(body, keys, cols,
+                                                  loose)))
             elif op == "minus":
                 conds.append("NOT " + exists_sql(arg, keys, cols))
             else:   # filter
@@ -3469,11 +3486,14 @@ def compile_sql(table_sql: str, query: Query | str) -> str:
                 + (["WHERE " + " AND ".join(conds)] if conds else [])))
         return out, " UNION ALL ".join(selects), al
 
-    def exists_sql(body: _Scope, keys, outer_cols) -> str:
-        """EXISTS over a scoped group, correlated on the keys."""
+    def exists_sql(body: _Scope, keys, outer_cols, loose=()) -> str:
+        """EXISTS over a scoped group, correlated on the keys (an
+        unbound outer value matches any for the ``loose`` ones)."""
         ocols, inner, al = body_select(body)
-        corr = " AND ".join("%s = %s" % (ocols[v], outer_cols[v])
-                            for v in keys)
+        eqs = {v: "%s = %s" % (ocols[v], outer_cols[v]) for v in keys}
+        corr = " AND ".join(
+            "(%s IS NULL OR %s)" % (outer_cols[v], eqs[v]) if v in loose
+            else eqs[v] for v in keys)
         return "EXISTS (SELECT 1 FROM (%s) %s%s)" % (
             inner, al, (" WHERE " + corr) if corr else "")
 

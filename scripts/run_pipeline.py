@@ -112,10 +112,11 @@ def main() -> None:
     counters = {r["stage"] + "/" + r["status"]: r["n_urls"]
                 for r in stage_counters(
                     spark.read.parquet(entries_path)).collect()}
+    processed = todo.count()
     print(json.dumps({
         "run_id": run_id,
-        "processed": todo.count(),
-        "skipped_fresh": pages.count() - todo.count(),
+        "processed": processed,
+        "skipped_fresh": pages.count() - processed,
         "triples": all_triples.count(),
         "counters": counters,
     }))

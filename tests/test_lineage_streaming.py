@@ -104,11 +104,16 @@ def test_merge_drops_stale_predicate_partitions(spark, pages, tmp_path):
     assert after.count() == t.count()
 
 
-def test_sparql_scan_prunes_predicate_partitions(spark, pages, tmp_path):
-    """The (bucket, predicate) layout must turn a predicate-bound
-    SPARQL pattern scan into a partition prune — the predicate
-    equality appears in PartitionFilters, before any file I/O
-    (VERDICT r3 #7)."""
+def test_sparql_scan_pushes_predicate_into_sorted_files(spark, pages,
+                                                      tmp_path):
+    """A predicate-bound SPARQL pattern scan hands the predicate
+    equality to the parquet reader as a pushed filter, and every file
+    the lake writes is sorted by (predicate, subject), so row-group
+    min/max statistics can skip the other predicates' rows."""
+    import glob
+
+    import pyarrow.parquet as pq
+
     from ferenda_spark import sparql
     from ferenda_spark.operators.extract import triples_table
     from ferenda_spark.operators.lineage import write_triples
@@ -118,10 +123,17 @@ def test_sparql_scan_prunes_predicate_partitions(spark, pages, tmp_path):
          "SELECT ?s ?o WHERE { ?s dct:title ?o }")
     df = sparql.compile_spark(spark.read.parquet(path), q)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    scan = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
-    assert scan and "predicate" in scan[0].split("PartitionFilters")[1] \
-        .split("]")[0], plan
+    scan = [ln for ln in plan.splitlines() if "PushedFilters" in ln]
+    assert scan and "EqualTo(predicate," in scan[0].split(
+        "PushedFilters")[1], plan
     assert df.count() > 0
+    files = glob.glob(os.path.join(path, "bucket=*", "*.parquet"))
+    assert files
+    for f in files:
+        t = pq.read_table(f, columns=["predicate", "subject"])
+        keys = list(zip(t["predicate"].to_pylist(),
+                        t["subject"].to_pylist()))
+        assert keys == sorted(keys), f
 
 
 def test_watermark_incremental(spark, pages, tmp_path):
@@ -193,10 +205,10 @@ def test_prov_triples_golden(spark):
 
 
 def test_compact_triples_roundtrip(spark, tmp_path):
-    """Fragmented (bucket, predicate) partitions compact to one file
-    each with the content multiset unchanged."""
-    from ferenda_spark.operators.lineage import (bucket_of,
-                                                 compact_triples,
+    """Fragmented bucket partitions compact to one file each with the
+    content multiset unchanged."""
+    from ferenda_spark.lake import bucket_of, read_buckets
+    from ferenda_spark.operators.lineage import (compact_triples,
                                                  table_manifest,
                                                  write_triples)
     cols = ("source_url string, subject string, predicate string, "
@@ -207,11 +219,12 @@ def test_compact_triples_roundtrip(spark, tmp_path):
     path = str(tmp_path / "triples")
     write_triples(spark.createDataFrame(rows[:30], cols), path)
     # two append writes (the streaming-sink path) fragment partitions
+    n = read_buckets(path)
     for lo, hi in ((30, 35), (35, 40)):
         (spark.createDataFrame(rows[lo:hi], cols)
-         .withColumn("bucket", bucket_of(F.col("source_url")))
-         .repartition("bucket", "predicate")
-         .write.partitionBy("bucket", "predicate")
+         .withColumn("bucket", bucket_of(F.col("source_url"), n))
+         .repartition("bucket")
+         .write.partitionBy("bucket")
          .mode("append").parquet(path))
     before = sorted(map(tuple, spark.read.parquet(path).collect()))
     m = table_manifest(spark, path).collect()

@@ -117,6 +117,26 @@ def test_top_level_not_exists_and_minus_see_optional_vars(graph):
             }""" % block, [("d3", "p2")])
 
 
+# §18.6: EXISTS substitutes the solution's bound variables only, so a
+# correlation key a solution leaves unbound (bound only by an OPTIONAL
+# or by some UNION branches) matches any body row
+
+def test_exists_on_possibly_unbound_key(graph):
+    query = """
+        SELECT ?s WHERE {
+          ?s a foaf:Document
+          OPTIONAL { ?s dct:publisher ?p }
+          FILTER %sEXISTS { ?p dct:title ?pt }
+        }"""
+    check(graph, query % "", [("d1",), ("d2",)])
+    check(graph, query % "NOT ", [("d3",)])
+    check(graph, """
+        SELECT ?s ?p WHERE {
+          { ?s a foaf:Document } UNION { ?s dct:publisher ?p }
+          FILTER EXISTS { ?p dct:title ?pt }
+        }""", [("d1", None), ("d2", None), ("d3", None), ("d1", "p1")])
+
+
 # §8.3: MINUS over disjoint domains removes nothing; NOT EXISTS over
 # the same uncorrelated pattern removes everything
 
