@@ -124,27 +124,6 @@ def toc_pageset(faceted: DataFrame, value_col: str,
             .orderBy("firstletter"))
 
 
-def toc_page_entries(faceted: DataFrame, value_col: str,
-                     label_col: str = "dcterms_title",
-                     top_n: int = 50) -> DataFrame:
-    """Flat TOC rows — one row per member: (firstletter, pos, label,
-    uri), pos 1..top_n ordered by (label, uri) within the page. The
-    flat surface of :func:`toc_pageset` (the driver's result
-    canonicalizer cannot hash array columns, and the reference's
-    toc_select_for_pages is row-shaped anyway —
-    ref documentrepository.py:2868-2921)."""
-    src = (faceted
-           .where(F.col(value_col).isNotNull())
-           .select(F.lower(F.substring(F.col(value_col), 1, 1))
-                    .alias("firstletter"),
-                   F.col(label_col).alias("label"), "uri"))
-    w = Window.partitionBy("firstletter").orderBy("label", "uri")
-    return (src.withColumn("pos", F.row_number().over(w))
-            .where(F.col("pos") <= top_n)
-            .select("firstletter", "pos", "label", "uri")
-            .orderBy("firstletter", "pos"))
-
-
 def facet_stats(triples: DataFrame,
                 dimensions: list[str] | None = None) -> DataFrame:
     """Per-dimension observation counts, deduped per (subject, value):

@@ -30,7 +30,7 @@ Streaming: cms_counters and bloom_words are pure groupBy aggregates
 over monotone merges (+ / |), so they run UNCHANGED on a readStream
 input in update mode — the counter/lane table is the streaming state
 (tests/test_stream_sketch.py asserts batch ≡ stream). HLL's max-merge
-needs per-key array state; streaming/sketchstate.py carries it.
+needs per-key array state, which a stream would have to carry.
 """
 
 from __future__ import annotations
@@ -55,8 +55,8 @@ def hll_registers(df: DataFrame, keys: list[str], value: str,
     mergeable sketch state itself. Mergeable by construction: max per
     (keys, _idx) of any union of register tables ≡ the table of the
     unioned corpus, which is what makes the sketch incrementally
-    maintainable (streaming/sketchstate.py) and cross-crawl
-    combinable without rescanning either side."""
+    maintainable and cross-crawl combinable without rescanning either
+    side."""
     m = 1 << p
     width = HLL_HASH_BITS - p
     h = F.conv(F.substring(F.md5(F.col(value)), 1, 15), 16, 10) \
@@ -75,7 +75,7 @@ def hll_estimate(regs: DataFrame, keys: list[str], p: int = 12,
                  round_to: int = 3) -> DataFrame:
     """Register table → per-``keys`` (est_distinct, n_registers):
     the HLL estimate with linear-counting correction, shared by the
-    batch census and the streaming state read-out — identical
+    batch census and any merged register table — identical
     arithmetic either way."""
     m = 1 << p
     width = HLL_HASH_BITS - p

@@ -1,1 +1,2 @@
-from .ingest import incremental_extract, stream_extract  # noqa: F401
+"""Event-time windowed rollups and sessionization, batch and
+Structured Streaming (windows.py)."""

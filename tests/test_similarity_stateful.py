@@ -1,6 +1,4 @@
-"""IVF ANN recall + stateful streaming first-seen dedup."""
-
-import time
+"""IVF and PQ ANN recall and determinism."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -34,43 +32,6 @@ def test_ann_ivf_deterministic(spark, emb):
     a = sorted(map(tuple, ann_ivf_topk(emb, queries, k=3).collect()))
     b = sorted(map(tuple, ann_ivf_topk(emb, queries, k=3).collect()))
     assert a == b
-
-
-def test_stream_first_seen_across_batches(spark, tmp_path):
-    """A key that re-lands in a later micro-batch is suppressed by the
-    cross-batch GroupState; within a batch the first-by-payload row
-    wins."""
-    from ferenda_spark.streaming.stateful import stream_first_seen
-    src = tmp_path / "src"
-    src.mkdir()
-    schema = "url string, warc_ts timestamp, html binary"
-
-    def write_batch(name, rows):
-        spark.createDataFrame(rows, schema).coalesce(1) \
-            .write.mode("overwrite").parquet(str(src / name))
-        time.sleep(1.1)  # distinct mtimes → deterministic batch order
-
-    import datetime as dt
-    t = dt.datetime(2014, 1, 4)
-    write_batch("b1", [("u1", t, b"a"), ("u2", t, b"b"),
-                       ("u1", t + dt.timedelta(seconds=5), b"a2")])
-    write_batch("b2", [("u1", t + dt.timedelta(days=1), b"dup"),
-                       ("u3", t, b"c")])
-
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1)
-              .parquet(str(src / "*")))
-    out = stream_first_seen(stream, "url", ("warc_ts",))
-    q = (out.writeStream.format("memory").queryName("first_seen")
-         .outputMode("append")
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    rows = {r["url"]: r["warc_ts"]
-            for r in spark.sql("SELECT * FROM first_seen").collect()}
-    assert set(rows) == {"u1", "u2", "u3"}
-    assert rows["u1"] == t  # first occurrence by warc_ts, not the dup
 
 
 def test_ann_pq_recall_and_determinism(spark, emb):

@@ -1,63 +1,8 @@
-"""Streaming HLL census: cross-batch register state must be
-bit-identical to the batch sketch over the same rows, and the shared
-estimate read-out must agree with hll_distinct."""
+"""Sketch operators on a streaming input: the batch CMS and Bloom
+aggregates run unchanged on a readStream and converge to the batch
+sketch over the same rows."""
 
-import time
-
-import pytest
 from pyspark.sql import functions as F
-
-
-def test_stream_hll_census_equals_batch(spark, tmp_path):
-    from ferenda_spark.operators.sketches import (hll_distinct,
-                                                  hll_estimate,
-                                                  hll_registers)
-    from ferenda_spark.streaming.sketchstate import stream_hll_census
-
-    src = tmp_path / "src"
-    src.mkdir()
-    schema = "host string, url string"
-
-    def batch_rows(lo, hi):
-        return [("h%d" % (i % 3), "u%d" % (i % 170)) for i in range(lo, hi)]
-
-    def write_batch(name, rows):
-        spark.createDataFrame(rows, schema).coalesce(1) \
-            .write.mode("overwrite").parquet(str(src / name))
-        time.sleep(1.1)  # distinct mtimes → deterministic batch order
-
-    write_batch("b1", batch_rows(0, 200))
-    write_batch("b2", batch_rows(150, 420))   # overlap re-lands keys
-
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1)
-              .parquet(str(src / "*")))
-    out = stream_hll_census(stream, "host", "url", p=6)
-    q = (out.writeStream.format("memory").queryName("hll_census")
-         .outputMode("update")
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-
-    # update mode re-emits each key's merged registers per batch; the
-    # final state is the elementwise max across emissions (max IS the
-    # merge, so folding the emissions reproduces the last one)
-    got = (spark.sql("SELECT * FROM hll_census")
-           .groupBy("host", "_idx").agg(F.max("_r").alias("_r")))
-
-    whole = spark.createDataFrame(batch_rows(0, 200) +
-                                  batch_rows(150, 420), schema)
-    want = hll_registers(whole, ["host"], "url", p=6)
-    sym = (got.exceptAll(want)).union(want.exceptAll(got))
-    assert sym.count() == 0     # register-for-register identical
-
-    est_stream = {r["host"]: (r["est_distinct"], r["n_registers"])
-                  for r in hll_estimate(got, ["host"], p=6).collect()}
-    est_batch = {r["host"]: (r["est_distinct"], r["n_registers"])
-                 for r in hll_distinct(whole, ["host"], "url",
-                                       p=6).collect()}
-    assert est_stream == est_batch
 
 
 def test_stream_cms_and_bloom_equal_batch(spark, tmp_path):
