@@ -8,6 +8,8 @@ DuckDB SQL (EXPLAIN — no execution), and oracle keys must be a subset
 of query keys. bench.py must time the registry's own build fns, not
 private copies of them."""
 
+import ast
+import glob
 import os
 import sys
 
@@ -45,8 +47,7 @@ def test_oracle_keys_subset_of_queries(entrymod):
     os_ = set(entrymod.oracle_sql())
     assert os_ <= qs, os_ - qs
     # since round 3 every query carries an oracle (cross-execution
-    # twins cover the seeded sketch/ANN ops, generative-formula SQL
-    # covers media_decode) — keep it that way
+    # twins cover the seeded sketch/ANN ops) — keep it that way
     assert qs - os_ == set(), qs - os_
 
 
@@ -93,3 +94,60 @@ def test_bench_times_registry_build_fns(entrymod):
     copies = sorted(name for name in flagged
                     if entries[name] is not reg[name].build)
     assert not copies, copies
+
+
+# elements.py is the golden serializer test_fsm_corpus compares fsm.py's
+# reference-corpus output through; fsm.py is on the production path
+# (rfcdoc), so its test harness stays although no entry point imports it.
+TEST_ONLY_MODULES = {"ferenda_spark.elements"}
+
+
+def _imports(path: str, package: str) -> set[str]:
+    """Dotted names a file imports, relative imports resolved against
+    ``package``."""
+    with open(path) as f:
+        tree = ast.parse(f.read())
+    out = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            out.update(a.name for a in node.names)
+        elif isinstance(node, ast.ImportFrom):
+            base = node.module or ""
+            if node.level:
+                parts = package.split(".")
+                parts = parts[:len(parts) - node.level + 1]
+                base = ".".join(parts + [base] if base else parts)
+            out.add(base)
+            out.update(base + "." + a.name for a in node.names)
+    return out
+
+
+def test_every_module_is_reachable():
+    """Every ferenda_spark module is in the import closure of an entry
+    point: scripts/, the driver contract, bench.py or kgbench/. A
+    package counts as reached when any of its submodules is. A module
+    that only tests import is dead code."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    modules = {}
+    for path in glob.glob(os.path.join(root, "ferenda_spark", "**", "*.py"),
+                          recursive=True):
+        name = os.path.relpath(path, root)[:-3].replace(os.sep, ".")
+        modules[name.removesuffix(".__init__")] = path
+    entry_points = [os.path.join(root, "__spark_entry__.py"),
+                    os.path.join(root, "bench.py"),
+                    *glob.glob(os.path.join(root, "scripts", "*.py")),
+                    *glob.glob(os.path.join(root, "kgbench", "*.py"))]
+    todo = [m for p in entry_points for m in _imports(p, "")]
+    reached = set()
+    while todo:
+        parts = todo.pop().split(".")
+        for i in range(1, len(parts) + 1):
+            name = ".".join(parts[:i])
+            if name in modules and name not in reached:
+                reached.add(name)
+                path = modules[name]
+                package = (name if path.endswith("__init__.py")
+                           else name.rpartition(".")[0])
+                todo += _imports(path, package)
+    unreached = set(modules) - reached - TEST_ONLY_MODULES
+    assert not unreached, sorted(unreached)
