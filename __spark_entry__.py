@@ -13,10 +13,12 @@
   unrolled power iteration) over the same files. Reference-fixture
   value parity is additionally covered by pytest
   (tests/test_rfc_parity.py, tests/test_extract_stage.py).
-- everything else: training-data pipeline + relational operators over
-  the driver's parquet tables, each with an exact DuckDB oracle
-  (exceptions documented per query: recall-probabilistic operators
-  stay rows-only with pytest recall assertions).
+- everything else: crawl/WARC ingestion, sketches, text statistics,
+  dedup and ANN (the entity-resolution blocking family), event-time and
+  relational operators over the driver's parquet tables, each with an
+  exact DuckDB oracle (exceptions documented per query:
+  recall-probabilistic operators stay rows-only with pytest recall
+  assertions).
 """
 
 from __future__ import annotations
@@ -2519,12 +2521,7 @@ def _q_kg_stage_counters(spark, sf_dir, n):
     return stage_counters(entries)
 
 
-# ---- training-data ops over driver parquet tables (oracle-checked)
-
-def _q_token_stats(spark, sf_dir, n):
-    from ferenda_spark.operators.textops import token_stats
-    return token_stats(_read(spark, sf_dir, "documents"))
-
+# ---- sketch, text and dedup ops over driver parquet tables (oracle-checked)
 
 def _q_hll_distinct(spark, sf_dir, n):
     """Deterministic HyperLogLog distinct census
@@ -2537,26 +2534,6 @@ def _q_hll_distinct(spark, sf_dir, n):
     from ferenda_spark.operators.sketches import hll_distinct
     return hll_distinct(_read(spark, sf_dir, "documents"),
                         keys=["lang"], value="text", p=6)
-
-
-def _q_length_quantiles(spark, sf_dir, n):
-    """Exact per-language word-length quantiles
-    (textops.length_quantiles): Spark percentile ≡ DuckDB
-    quantile_cont on the same (n−1)·q interpolation (spiked), the
-    corpus length census that sets truncation budgets."""
-    from ferenda_spark.operators.textops import length_quantiles
-    return length_quantiles(_read(spark, sf_dir, "documents"),
-                            keys=["lang"])
-
-
-def _q_chunk_documents(spark, sf_dir, n):
-    """Sliding context-window chunking (packing.chunk_documents):
-    documents split into size-64/stride-48 word windows — the step
-    between raw docs and trainer sequences; pure codegen, no shuffle
-    (explode + slice + array_join); list-slice twin."""
-    from ferenda_spark.operators.packing import chunk_documents
-    return chunk_documents(_read(spark, sf_dir, "documents"),
-                           size=64, stride=48)
 
 
 CMS_CANDIDATES = ["the", "batch", "stream", "zzz-absent"]
@@ -2887,108 +2864,9 @@ def _q_bloom_words(spark, sf_dir, n):
     return bloom_contains(bloom_words(words, "w"), cand)
 
 
-def _q_quality(spark, sf_dir, n):
-    from ferenda_spark.operators.textops import quality_score
-    return quality_score(_read(spark, sf_dir, "documents"))
-
-
 def _q_langid(spark, sf_dir, n):
     from ferenda_spark.operators.textops import language_id
     return language_id(_read(spark, sf_dir, "documents"))
-
-
-def _q_fingerprint(spark, sf_dir, n):
-    from ferenda_spark.operators.textops import fingerprint
-    return fingerprint(_read(spark, sf_dir, "documents"))
-
-
-def _q_corpus_curate(spark, sf_dir, n):
-    """End-to-end training-corpus curation: quality filter
-    (quality ≥ 0.65) → exact dedup (keep the min doc_id per normalized
-    fingerprint) → greedy sequence packing — the composed pipeline a
-    training-data user actually runs, with every stage an
-    already-oracled operator."""
-    from ferenda_spark.operators.packing import pack_sequences
-    from ferenda_spark.operators.textops import fingerprint, quality_score
-    # injected exact dups (same corpus twist dedup_exact uses) so the
-    # dedup stage demonstrably drops rows; quality >= 0.65 drops the
-    # bottom ~40% of this corpus (median 0.677)
-    docs = _with_injected_dups(_read(spark, sf_dir, "documents"))
-    good = (quality_score(docs).where(F.col("quality") >= 0.65)
-            .select("doc_id"))
-    keep = (fingerprint(docs).join(good, "doc_id")
-            .groupBy("fp_exact").agg(F.min("doc_id").alias("doc_id"))
-            .select("doc_id"))
-    return pack_sequences(docs.join(keep, "doc_id"),
-                          budget=256, n_shards=8)
-
-
-def _corpus_curate_sql() -> str:
-    from ferenda_spark.operators import packing, textops
-    dup_docs = DUP_DOCS_SQL
-    survivors = f"""(
-      WITH q AS (SELECT doc_id FROM ({textops.oracle_sql_quality(dup_docs)})
-                 WHERE quality >= 0.65),
-           fp AS ({textops.oracle_sql_fingerprint(dup_docs)}),
-           keep AS (SELECT min(fp.doc_id) AS doc_id
-                    FROM fp JOIN q ON fp.doc_id = q.doc_id
-                    GROUP BY fp.fp_exact)
-      SELECT d.doc_id, d.text FROM {dup_docs} d
-      JOIN keep ON keep.doc_id = d.doc_id)"""
-    return packing.oracle_sql_pack(survivors, budget=256, n_shards=8)
-
-
-def _q_stratified_sample(spark, sf_dir, n):
-    """Deterministic per-language quota sampling (30% of each lang
-    stratum, hash-ranked) — corpus re-balancing before training."""
-    from ferenda_spark.operators.sampling import stratified_sample
-    return stratified_sample(_read(spark, sf_dir, "documents"),
-                             "lang", 0.3)
-
-
-_MIXTURE_WEIGHTS = {"en": 0.3, "zh": 0.2, "es": 0.2,
-                    "de": 0.15, "fr": 0.15}
-_MIXTURE_TOTAL = 300
-
-
-def _q_resample_mixture(spark, sf_dir, n):
-    """Deterministic mixture resampling: per-language quotas from
-    target domain weights (floor(w·300), capped at stratum size),
-    hash-rank selection — the static domain re-weighting step of a
-    training-data pipeline."""
-    from ferenda_spark.operators.sampling import resample_mixture
-    return resample_mixture(_read(spark, sf_dir, "documents"), "lang",
-                            _MIXTURE_WEIGHTS, _MIXTURE_TOTAL)
-
-
-def _q_dsir_resample(spark, sf_dir, n):
-    """DSIR importance resampling: select 60 documents distributed
-    like the German-language slice via hashed-ngram importance weights
-    + deterministic Gumbel top-k."""
-    from ferenda_spark.operators.sampling import dsir_resample
-    d = _read(spark, sf_dir, "documents")
-    return dsir_resample(d, d.where("lang = 'de'"), k=60,
-                         n_buckets=2048, seed=7)
-
-
-def _q_top_ngrams(spark, sf_dir, n):
-    """Corpus bigram census: top-50 word bigrams with occurrence and
-    document counts (map-side partial agg + TakeOrdered top-k)."""
-    from ferenda_spark.operators.textops import top_ngrams
-    return top_ngrams(_read(spark, sf_dir, "documents"), n=2, k=50)
-
-
-_PROFILE_COLS = ["o_orderkey", "o_custkey", "o_orderstatus",
-                 "o_orderdate", "o_orderpriority"]
-
-
-def _q_profile_orders(spark, sf_dir, n):
-    """Single-pass data-quality census over the orders table (row/
-    null/distinct counts + min/max per column) — the profile-before-
-    training sanity step; all columns aggregate in ONE hash-aggregate
-    pass."""
-    from ferenda_spark.operators.textops import profile_columns
-    return profile_columns(_read(spark, sf_dir, "orders"), _PROFILE_COLS)
 
 
 def _q_top_terms(spark, sf_dir, n):
@@ -3000,15 +2878,6 @@ def _q_top_terms(spark, sf_dir, n):
     return top_terms_per_doc(_read(spark, sf_dir, "documents"), k=5)
 
 
-def _q_bpe_pairs(spark, sf_dir, n):
-    """Tokenizer-training statistics: corpus-weighted adjacent
-    character-pair counts (the first BPE merge decision). Pairs are
-    generated per DISTINCT word — the vocabulary, not the corpus,
-    crosses into Python."""
-    from ferenda_spark.operators.textops import bpe_pair_counts
-    return bpe_pair_counts(_read(spark, sf_dir, "documents"), k=100)
-
-
 def _q_related_docs(spark, sf_dir, n):
     """More-like-this over the corpus: per document, its 5 most
     similar documents by shared tf·idf-selected keywords (integer
@@ -3016,143 +2885,6 @@ def _q_related_docs(spark, sf_dir, n):
     order; idf lives in the keyword selection)."""
     from ferenda_spark.operators.textops import related_docs
     return related_docs(_read(spark, sf_dir, "documents"))
-
-
-def _q_bpe_train(spark, sf_dir, n):
-    """Full BPE tokenizer training (Sennrich et al.): 60 merge rules
-    learned from the corpus word census. One corpus shuffle; the
-    merge loop runs on the driver over the capped vocabulary (the
-    bounded-driver-train pattern, like IVF). Oracle: single-threaded
-    pandas rerun of the same pure kernels (annoracle scheme)."""
-    from ferenda_spark.operators.bpe import bpe_train
-    return bpe_train(_read(spark, sf_dir, "documents"))
-
-
-def _q_bpe_encode(spark, sf_dir, n):
-    """Train + encode: the top-200 BPE token census over the corpus
-    (token_count = Σ word-freq × occurrences). The encode stage maps
-    over the DISTINCT word census inside Arrow — corpus text never
-    re-enters Python."""
-    from ferenda_spark.operators.bpe import bpe_token_census
-    return bpe_token_census(_read(spark, sf_dir, "documents"))
-
-
-def _q_pack_sequences(spark, sf_dir, n):
-    """Greedy sequence packing into 256-token bins, 8 shards — the
-    training-batch construction step (shard-parallel applyInPandas;
-    oracle replays the fold with a recursive CTE)."""
-    from ferenda_spark.operators.packing import pack_sequences
-    return pack_sequences(_read(spark, sf_dir, "documents"),
-                          budget=256, n_shards=8)
-
-
-def _q_decontaminate(spark, sf_dir, n):
-    """Benchmark decontamination: docs with doc_id % 37 == 0 act as the
-    held-out eval set; every other document is scored by how many of
-    its word 3-grams appear in that set (broadcast benchmark shingles →
-    one hash join + one partial agg on the corpus side)."""
-    from ferenda_spark.operators.curation import decontaminate
-    docs = _read(spark, sf_dir, "documents")
-    return decontaminate(docs.where(F.col("doc_id") % 37 != 0),
-                         docs.where(F.col("doc_id") % 37 == 0),
-                         n=3, threshold=0.2)
-
-
-def _q_lm_perplexity(spark, sf_dir, n):
-    """CCNet-style LM quality signal: Laplace bigram model trained on
-    the even-doc_id half of the corpus, every document scored by
-    per-bigram -log2 likelihood (pure codegen — linear zip_with bigram
-    extraction, vocabulary-sized LM join tables)."""
-    from ferenda_spark.operators.curation import ngram_lm_perplexity
-    docs = _read(spark, sf_dir, "documents")
-    return ngram_lm_perplexity(docs, docs.where(F.col("doc_id") % 2 == 0))
-
-
-def _q_quality_classifier(spark, sf_dir, n):
-    """Trained quality filter (GPT-3/LLaMA classifier step):
-    multinomial NB over words, trained set-at-a-time on a
-    deterministically labeled split, scored with one vocab join."""
-    from ferenda_spark.operators.curation import nb_quality_classifier
-    docs = _read(spark, sf_dir, "documents")
-    labeled = docs.withColumn(
-        "label", F.when(F.col("doc_id") % 2 == 0, "pos")
-        .otherwise("neg"))
-    return nb_quality_classifier(docs, labeled)
-
-
-def _q_repetition_stats(spark, sf_dir, n):
-    """Gopher-style within-document repetition signals (boilerplate /
-    degenerate-text filter features)."""
-    from ferenda_spark.operators.curation import repetition_stats
-    return repetition_stats(_read(spark, sf_dir, "documents"), n=3)
-
-
-def _q_pii_scrub(spark, sf_dir, n):
-    """PII redaction over web text: the synthetic corpus carries no
-    PII, so the query plants deterministic emails / phones / IPv4s
-    derived from doc_id (same expression in PII_DOCS_SQL) and the
-    operator must scrub exactly those — a pure codegen regexp pass."""
-    from ferenda_spark.operators.curation import pii_scrub
-    docs = _read(spark, sf_dir, "documents")
-    d = F.col("doc_id")
-
-    def s(c):
-        return c.cast("string")
-
-    email = F.concat(F.lit(" mail user"), s(d), F.lit("@ex"),
-                     s(d % 10), F.lit(".org"))
-    phone = F.concat(F.lit(" call +1-555-"),
-                     F.lpad(s((d * 7) % 10000), 4, "0"))
-    ip = F.concat(F.lit(" host "), s(d % 256), F.lit(".10.20."),
-                  s((d * 3) % 256))
-    injected = docs.select(
-        "doc_id",
-        F.concat(F.coalesce(F.col("text"), F.lit("")),
-                 F.when(d % 3 == 0, email).otherwise(F.lit("")),
-                 F.when(d % 5 == 0, phone).otherwise(F.lit("")),
-                 F.when(d % 7 == 0, ip).otherwise(F.lit("")))
-        .alias("text"))
-    return pii_scrub(injected)
-
-
-# SQL twin of _q_pii_scrub's injection — change BOTH or parity breaks
-PII_DOCS_SQL = (
-    "(SELECT doc_id, coalesce(text, '')"
-    " || CASE WHEN doc_id % 3 = 0 THEN ' mail user' || doc_id::varchar"
-    "         || '@ex' || (doc_id % 10)::varchar || '.org'"
-    "    ELSE '' END"
-    " || CASE WHEN doc_id % 5 = 0 THEN ' call +1-555-'"
-    "         || lpad(((doc_id * 7) % 10000)::varchar, 4, '0')"
-    "    ELSE '' END"
-    " || CASE WHEN doc_id % 7 = 0 THEN ' host ' || (doc_id % 256)::varchar"
-    "         || '.10.20.' || ((doc_id * 3) % 256)::varchar"
-    "    ELSE '' END AS text"
-    " FROM documents)")
-
-
-def _url_injected_docs(spark, sf_dir) -> DataFrame:
-    """documents with deterministic URLs planted (twin: URL_DOCS_SQL) —
-    shared domains across moduli exercise aggregation, a WWW./mixed-
-    case host the normalization."""
-    docs = _read(spark, sf_dir, "documents")
-    d = F.col("doc_id")
-
-    def s(c):
-        return c.cast("string")
-
-    u1 = F.concat(F.lit(" see https://www.example"), s(d % 5),
-                  F.lit(".com/page/"), s(d))
-    u2 = F.concat(F.lit(" at http://Blog.Example"), s(d % 7),
-                  F.lit(".org"))
-    u3 = F.concat(F.lit(" ref https://example"), s(d % 5),
-                  F.lit(".com/other?q="), s(d % 11))
-    return docs.select(
-        "doc_id",
-        F.concat(F.coalesce(F.col("text"), F.lit("")),
-                 F.when(d % 3 == 0, u1).otherwise(F.lit("")),
-                 F.when(d % 4 == 0, u2).otherwise(F.lit("")),
-                 F.when(d % 6 == 0, u3).otherwise(F.lit("")))
-        .alias("text"))
 
 
 def _delta_batch(spark, sf_dir) -> DataFrame:
@@ -3258,53 +2990,6 @@ def _q_page_metadata(spark, sf_dir, n):
     (textops.page_metadata)."""
     from ferenda_spark.operators.textops import page_metadata
     return page_metadata(_head_injected_docs(spark, sf_dir))
-
-
-def _justext_injected_docs(spark, sf_dir) -> DataFrame:
-    """documents with three planted paragraph kinds (twin:
-    JUSTEXT_DOCS_SQL): a link-farm nav row (link-density reject), a
-    short fragment (min-words reject), and a prose paragraph that
-    passes all three rules."""
-    docs = _read(spark, sf_dir, "documents")
-    d = F.col("doc_id")
-    nav = F.lit('\n\nHome | <a href="/a">About us</a> '
-                '<a href="/b">Contact</a> <a href="/c">Login</a>')
-    short = F.lit("\n\nRead more")
-    prose = F.concat(
-        F.lit("\n\nThe committee met at the old mill by the river "
-              "and agreed on the plan for section "),
-        (d % 7).cast("string"), F.lit(" of the report."))
-    return docs.select(
-        "doc_id",
-        F.concat(F.coalesce(F.col("text"), F.lit("")),
-                 F.when(d % 2 == 0, nav).otherwise(F.lit("")),
-                 F.when(d % 3 == 0, short).otherwise(F.lit("")),
-                 prose).alias("text"))
-
-
-# SQL twin of _justext_injected_docs — change BOTH or parity breaks
-JUSTEXT_DOCS_SQL = (
-    "(SELECT doc_id, coalesce(text, '')"
-    " || CASE WHEN doc_id % 2 = 0 THEN"
-    "      chr(10) || chr(10) || 'Home | <a href=\"/a\">About us</a>"
-    " <a href=\"/b\">Contact</a> <a href=\"/c\">Login</a>'"
-    "    ELSE '' END"
-    " || CASE WHEN doc_id % 3 = 0 THEN"
-    "      chr(10) || chr(10) || 'Read more' ELSE '' END"
-    " || chr(10) || chr(10)"
-    " || 'The committee met at the old mill by the river and agreed"
-    " on the plan for section ' || (doc_id % 7)::varchar"
-    " || ' of the report.' AS text"
-    " FROM documents)")
-
-
-def _q_boilerplate(spark, sf_dir, n):
-    """jusText-style main-content extraction: paragraph classification
-    (min-words / stopword-fraction / link-density) + in-order
-    reassembly, one shuffle-free codegen projection
-    (curation.boilerplate_filter)."""
-    from ferenda_spark.operators.curation import boilerplate_filter
-    return boilerplate_filter(_justext_injected_docs(spark, sf_dir))
 
 
 def _anchor_injected_docs(spark, sf_dir) -> DataFrame:
@@ -3473,160 +3158,6 @@ REDIRECTS_SQL = (
     " FROM m LEFT JOIN res ON res.start = m.src")
 
 
-def _q_url_stats(spark, sf_dir, n):
-    """Outbound-link census over web text (deterministic URL
-    injection, same expression in URL_DOCS_SQL)."""
-    from ferenda_spark.operators.textops import url_stats
-    return url_stats(_url_injected_docs(spark, sf_dir))
-
-
-def _url_variant_docs(spark, sf_dir) -> DataFrame:
-    """One messy URL per document (twin: URLDEDUP_DOCS_SQL): mixed-case
-    scheme/host, www., default ports, trailing slash, tracking params,
-    fragments — distinct strings that canonicalize into shared
-    targets (host mod 5 × page mod 10 → real duplicate clusters)."""
-    docs = _read(spark, sf_dir, "documents")
-    d = F.col("doc_id")
-
-    def s(c):
-        return c.cast("string")
-
-    url = F.concat(
-        F.when(d % 8 == 0, F.lit("HTTP://")).otherwise(F.lit("HTTPS://")),
-        F.when(d % 2 == 0, F.lit("WWW.")).otherwise(F.lit("")),
-        F.lit("Example"), s(d % 5), F.lit(".COM"),
-        F.when(d % 8 == 0, F.lit(":80"))
-         .when(d % 4 == 0, F.lit(":443")).otherwise(F.lit("")),
-        F.lit("/Page/"), s(d % 10),
-        F.when(d % 2 == 0, F.lit("/")).otherwise(F.lit("")),
-        F.when(d % 3 == 0, F.lit("?utm_source=feed&b=2&a=1"))
-         .when(d % 3 == 1, F.lit("?a=1&b=2")).otherwise(F.lit("")),
-        F.when(d % 5 == 0, F.concat(F.lit("#sec"), s(d)))
-         .otherwise(F.lit("")))
-    return docs.select("doc_id", url.alias("url"))
-
-
-# SQL twin of _url_variant_docs — change BOTH or parity breaks
-URLDEDUP_DOCS_SQL = (
-    "(SELECT doc_id,"
-    " CASE WHEN doc_id % 8 = 0 THEN 'HTTP://' ELSE 'HTTPS://' END"
-    " || CASE WHEN doc_id % 2 = 0 THEN 'WWW.' ELSE '' END"
-    " || 'Example' || (doc_id % 5)::varchar || '.COM'"
-    " || CASE WHEN doc_id % 8 = 0 THEN ':80'"
-    "         WHEN doc_id % 4 = 0 THEN ':443' ELSE '' END"
-    " || '/Page/' || (doc_id % 10)::varchar"
-    " || CASE WHEN doc_id % 2 = 0 THEN '/' ELSE '' END"
-    " || CASE WHEN doc_id % 3 = 0 THEN '?utm_source=feed&b=2&a=1'"
-    "         WHEN doc_id % 3 = 1 THEN '?a=1&b=2' ELSE '' END"
-    " || CASE WHEN doc_id % 5 = 0 THEN '#sec' || doc_id::varchar"
-    "         ELSE '' END AS url"
-    " FROM documents)")
-
-
-def _q_url_dedup(spark, sf_dir, n):
-    """Refetch dedup by canonical URL (RFC 3986 syntax normalization +
-    tracking-param strip): per fetched row, its canonical form, the
-    keep/drop verdict (min doc_id representative) and cluster size.
-    Map-only canonicalization + one canonical-url-keyed window."""
-    from ferenda_spark.operators.curation import url_dedup
-    return url_dedup(_url_variant_docs(spark, sf_dir))
-
-
-# the blocklisted domains for _q_blocklist_filter — one definition,
-# rendered into both the Spark broadcast side and the oracle VALUES
-_BLOCKLIST_DOMAINS = ("example0.com", "example3.com", "blog.example2.org")
-
-
-def _q_blocklist_filter(spark, sf_dir, n):
-    """Domain-blocklist verdicts over the same injected-URL corpus:
-    per document, how many outbound links hit the blocklist and
-    whether the document would be dropped (C4's badwords/blocklist
-    step, done as a broadcast join against extracted domains)."""
-    from ferenda_spark.operators.textops import domain_blocklist_filter
-    bl = spark.createDataFrame([(d,) for d in _BLOCKLIST_DOMAINS],
-                               "domain string")
-    return domain_blocklist_filter(_url_injected_docs(spark, sf_dir), bl)
-
-
-# SQL twin of _q_url_stats's injection — change BOTH or parity breaks
-URL_DOCS_SQL = (
-    "(SELECT doc_id, coalesce(text, '')"
-    " || CASE WHEN doc_id % 3 = 0 THEN ' see https://www.example'"
-    "         || (doc_id % 5)::varchar || '.com/page/'"
-    "         || doc_id::varchar"
-    "    ELSE '' END"
-    " || CASE WHEN doc_id % 4 = 0 THEN ' at http://Blog.Example'"
-    "         || (doc_id % 7)::varchar || '.org'"
-    "    ELSE '' END"
-    " || CASE WHEN doc_id % 6 = 0 THEN ' ref https://example'"
-    "         || (doc_id % 5)::varchar || '.com/other?q='"
-    "         || (doc_id % 11)::varchar"
-    "    ELSE '' END AS text"
-    " FROM documents)")
-
-
-# Mojibake injection for _q_normalize_text: one token list (ASCII str
-# or unicode codepoint int) renders BOTH the Spark literal and the SQL
-# chr()-concat — change the list, both twins follow.
-_MESS_SNIPPETS = (
-    (2, ("\r\nit", 0x2019, "s ", 0x201C, "fine", 0x201D)),
-    (3, (" x ", 0x2014, " y", 0x2026)),
-    (4, ("  double  spaced\t tail ",)),
-    (5, (0xA0, "nb", 0x200B, "zw")),
-    (7, ("\x01ctl\n\n\n\nafter ",)),
-)
-
-
-def _mess_py(parts) -> str:
-    return "".join(chr(p) if isinstance(p, int) else p for p in parts)
-
-
-def _mess_sql(parts) -> str:
-    exprs, buf = [], ""
-
-    def flush():
-        nonlocal buf
-        if buf:
-            exprs.append("'%s'" % buf.replace("'", "''"))
-            buf = ""
-    for p in parts:
-        if isinstance(p, int):
-            flush()
-            exprs.append("chr(%d)" % p)
-        else:
-            for ch in p:
-                if ord(ch) < 32:
-                    flush()
-                    exprs.append("chr(%d)" % ord(ch))
-                else:
-                    buf += ch
-    flush()
-    return " || ".join(exprs)
-
-
-MESS_DOCS_SQL = (
-    "(SELECT doc_id, coalesce(text, '')"
-    + "".join(" || CASE WHEN doc_id %% %d = 0 THEN %s ELSE '' END"
-              % (m, _mess_sql(parts)) for m, parts in _MESS_SNIPPETS)
-    + " AS text FROM documents)")
-
-
-def _q_normalize_text(spark, sf_dir, n):
-    """ftfy-lite normalization over web text: the synthetic corpus is
-    already clean, so the query plants deterministic mojibake (CRLF,
-    curly quotes, zero-widths, NBSP, control chars, runaway blank
-    lines — same token list renders MESS_DOCS_SQL) and the operator
-    must normalize exactly that — a pure codegen regexp chain."""
-    from ferenda_spark.operators.curation import normalize_text
-    docs = _read(spark, sf_dir, "documents")
-    text = F.coalesce(F.col("text"), F.lit(""))
-    for m, parts in _MESS_SNIPPETS:
-        text = F.concat(text, F.when(F.col("doc_id") % m == 0,
-                                     F.lit(_mess_py(parts)))
-                        .otherwise(F.lit("")))
-    return normalize_text(docs.select("doc_id", text.alias("text")))
-
-
 # SQL twin of _with_injected_dups — change BOTH or parity breaks,
 # which is why they sit side by side as the single definition site
 DUP_DOCS_SQL = ("(SELECT doc_id, text FROM documents UNION ALL "
@@ -3740,17 +3271,6 @@ def _q_dedup_exact(spark, sf_dir, n):
         _read(spark, sf_dir, "documents")))
 
 
-def _q_curriculum_order(spark, sf_dir, n):
-    """Length-curriculum ordering (sampling.curriculum_order): four
-    difficulty bands by exact n_chars quantiles (the percentile ≡
-    quantile_cont device), easy-first seq within band + interleaved
-    mixed_pos — no global sort (the ntile curriculum is a
-    single-partition window at corpus scale; quantile-balanced bands
-    cost only a B-row broadcast + per-band windows)."""
-    from ferenda_spark.operators.sampling import curriculum_order
-    return curriculum_order(_read(spark, sf_dir, "documents"))
-
-
 def _q_dedup_containment(spark, sf_dir, n):
     """Directed shingle-containment pairs (dedup.containment_pairs):
     the asymmetric dedup Jaccard misses — snippet docs built as the
@@ -3862,21 +3382,6 @@ def _q_embedding_clusters(spark, sf_dir, n):
     (ferenda_spark.annoracle, bit-exact fold-order kernels)."""
     from ferenda_spark.operators.similarity import kmeans_clusters
     return kmeans_clusters(_read(spark, sf_dir, "embeddings"))
-
-
-def _q_media_decode(spark, sf_dir, n):
-    """Real header decode (PNG IHDR, WAV RIFF) over a synthetic media
-    table with genuine container bytes; video stays an explicit
-    'unsupported' row (no codec in this environment). The oracle
-    recomputes expected metadata from the generative formulas, so the
-    byte-parsing decoders are hard-checked."""
-    from ferenda_spark.operators.multimodal import (decode_media,
-                                                    synthetic_media)
-    # feature is array<float>; serialize for the driver harness (its
-    # canonicalizer cannot hash list-valued columns)
-    return (decode_media(synthetic_media(spark, 200))
-            .withColumn("feature", F.to_json("feature"))
-            .orderBy("media_id"))
 
 
 # ---- relational / faceting analogs (SURVEY.md §2.5) over parquet
@@ -4171,7 +3676,7 @@ class Query(NamedTuple):
 
 class OracleInputs(NamedTuple):
     kg: dict[str, str]   # materialized KG extraction parquet at n
-    ann: dict            # cross-execution ANN/BPE twin tables
+    ann: dict            # cross-execution ANN twin tables
     jaccard: str         # brute-force jaccard ground truth (3 oracles)
 
 
@@ -4195,9 +3700,7 @@ def registry() -> tuple[Query, ...]:
     """Every driver query in driver order; queries(), oracle_sql() and
     bench.py are views over this one list."""
     from ferenda_spark import annoracle, kgoracle, sparql
-    from ferenda_spark.operators import (curation, dedup, graphops,
-                                         multimodal, packing, sampling,
-                                         similarity, textops)
+    from ferenda_spark.operators import dedup, graphops, similarity, textops
     from ferenda_spark.operators import linking as _linking_ops
     from ferenda_spark.operators import sketches as _sketches
     from ferenda_spark.operators import validate as _validate
@@ -4494,18 +3997,10 @@ def registry() -> tuple[Query, ...]:
               lambda o: kgoracle.sql_versions(o.kg, KG_NEW_URL)),
         Query("kg_stage_counters", _q_kg_stage_counters,
               lambda o: kgoracle.sql_stage_counters(o.kg)),
-        # training-data pipeline ops over the driver's parquet views
-        Query("token_stats", _q_token_stats,
-              lambda o: textops.oracle_sql_token_stats(), bench=True),
+        # sketch / text / crawl ops over the driver's parquet views
         Query("hll_distinct", _q_hll_distinct,
               lambda o: _sketches.sql_hll_distinct(
                   "documents", keys=["lang"], value="text", p=6), bench=True),
-        Query("chunk_documents", _q_chunk_documents,
-              lambda o: packing.oracle_sql_chunk_documents(
-                  size=64, stride=48), bench=True),
-        Query("length_quantiles", _q_length_quantiles,
-              lambda o: textops.oracle_sql_length_quantiles(
-                  keys=["lang"]), bench=True),
         Query("cms_counts", _q_cms_counts,
               lambda o: _sketches.sql_cms_estimate(
                   ("(SELECT unnest(CASE WHEN trim(coalesce(text, '')) = ''"
@@ -4526,77 +4021,12 @@ def registry() -> tuple[Query, ...]:
                       "('%s')" % c for c in BLOOM_CANDIDATES)), bench=True),
         Query("crawl_overlap", _q_crawl_overlap,
               lambda o: _crawl_overlap_oracle_sql(), bench=True),
-        Query("pack_sequences", _q_pack_sequences,
-              lambda o: packing.oracle_sql_pack(budget=256, n_shards=8),
-              bench=True),
-        Query("stratified_sample", _q_stratified_sample,
-              lambda o: sampling.oracle_sql_stratified(
-                  "documents", "lang", 0.3,
-                  ["doc_id", "text", "lang", "source", "n_chars"])),
-        Query("curriculum_order", _q_curriculum_order,
-              lambda o: sampling.oracle_sql_curriculum(), bench=True),
-        Query("resample_mixture", _q_resample_mixture,
-              lambda o: sampling.oracle_sql_mixture(
-                  "documents", "lang", _MIXTURE_WEIGHTS, _MIXTURE_TOTAL,
-                  ["doc_id", "text", "lang", "source", "n_chars"])),
-        Query("dsir_resample", _q_dsir_resample,
-              lambda o: sampling.oracle_sql_dsir(
-                  "documents",
-                  "(SELECT * FROM documents WHERE lang = 'de')",
-                  60, 2048, seed=7), bench=True),
-        Query("top_ngrams", _q_top_ngrams,
-              lambda o: textops.oracle_sql_top_ngrams(n=2, k=50), bench=True),
-        Query("bpe_pairs", _q_bpe_pairs,
-              lambda o: textops.oracle_sql_bpe_pairs(k=100), bench=True),
-        # o.ann oracles: seeded probabilistic kernels (bpe_*,
-        # dedup_simhash, ann_lsh/pq/ivf_topk, embedding_clusters) cannot
-        # promise equality with brute force (recall is asserted in
-        # pytest), but a single-threaded rerun of the same kernels is a
-        # hard oracle for the distributed execution
-        # (ferenda_spark.annoracle explains why it is bit-exact)
-        Query("bpe_train", _q_bpe_train,
-              lambda o: annoracle.sql_bpe_train(o.ann)),
-        Query("bpe_encode", _q_bpe_encode,
-              lambda o: annoracle.sql_bpe_census(o.ann), bench=True),
         Query("related_docs", _q_related_docs,
               lambda o: textops.oracle_sql_related_docs(), bench=True),
-        Query("profile_orders", _q_profile_orders,
-              lambda o: textops.oracle_sql_profile(
-                  "orders", _PROFILE_COLS)),
         Query("top_terms", _q_top_terms,
               lambda o: textops.oracle_sql_top_terms(k=5)),
-        Query("corpus_curate", _q_corpus_curate,
-              lambda o: _corpus_curate_sql()),
-        Query("quality_score", _q_quality,
-              lambda o: textops.oracle_sql_quality(), bench=True),
         Query("language_id", _q_langid,
               lambda o: textops.oracle_sql_language_id(), bench=True),
-        Query("fingerprint", _q_fingerprint,
-              lambda o: textops.oracle_sql_fingerprint()),
-        Query("decontaminate", _q_decontaminate,
-              lambda o: curation.oracle_sql_decontaminate(
-                  n=3, threshold=0.2)),
-        Query("lm_perplexity", _q_lm_perplexity,
-              lambda o: curation.oracle_sql_lm_perplexity(
-                  "documents",
-                  "(SELECT * FROM documents WHERE doc_id % 2 = 0)"),
-              bench=True),
-        Query("quality_classifier", _q_quality_classifier,
-              lambda o: curation.oracle_sql_nb_classifier(
-                  "documents",
-                  "(SELECT *, CASE WHEN doc_id % 2 = 0 THEN 'pos' "
-                  "ELSE 'neg' END AS label FROM documents)"), bench=True),
-        Query("repetition_stats", _q_repetition_stats,
-              lambda o: curation.oracle_sql_repetition(n=3)),
-        Query("pii_scrub", _q_pii_scrub,
-              lambda o: curation.oracle_sql_pii(table=PII_DOCS_SQL),
-              bench=True),
-        Query("normalize_text", _q_normalize_text,
-              lambda o: curation.oracle_sql_normalize(
-                  table=MESS_DOCS_SQL), bench=True),
-        Query("url_stats", _q_url_stats,
-              lambda o: textops.oracle_sql_url_stats(table=URL_DOCS_SQL),
-              bench=True),
         Query("anchor_stats", _q_anchor_stats,
               lambda o: textops.oracle_sql_anchor_stats(
                   table=ANCHOR_DOCS_SQL), bench=True),
@@ -4605,9 +4035,6 @@ def registry() -> tuple[Query, ...]:
                                         ANCHOR_DOCS_SQL}, bench=True),
         Query("redirect_resolve", _q_redirect_resolve,
               lambda o: REDIRECTS_SQL, bench=True),
-        Query("boilerplate_filter", _q_boilerplate,
-              lambda o: curation.oracle_sql_boilerplate(
-                  table=JUSTEXT_DOCS_SQL), bench=True),
         Query("page_metadata", _q_page_metadata,
               lambda o: textops.oracle_sql_page_metadata(
                   table=HEAD_DOCS_SQL), bench=True),
@@ -4615,12 +4042,6 @@ def registry() -> tuple[Query, ...]:
               lambda o: dedup.oracle_sql_dedup_delta(
                   "(SELECT doc_id, text FROM documents)", DELTA_BATCH_SQL),
               bench=True),
-        Query("blocklist_filter", _q_blocklist_filter,
-              lambda o: textops.oracle_sql_blocklist(
-                  _BLOCKLIST_DOMAINS, table=URL_DOCS_SQL), bench=True),
-        Query("url_dedup", _q_url_dedup,
-              lambda o: curation.oracle_sql_url_dedup(
-                  table=URLDEDUP_DOCS_SQL + " urls"), bench=True),
         # relational / faceting analogs
         Query("facet_pivot", _q_facet_pivot,
               lambda o: FACET_PIVOT_SQL, bench=True),
@@ -4640,8 +4061,6 @@ def registry() -> tuple[Query, ...]:
               lambda o: REVERSE_REFS_SQL, bench=True),
         Query("lineitem_pricing", _q_lineitem_pricing,
               lambda o: LINEITEM_PRICING_SQL, bench=True),
-        Query("media_decode", _q_media_decode,
-              lambda o: multimodal.oracle_sql_media_decode(200)),
         # dedup / ANN family LAST — the wall-time tail of the gate
         # (VERDICT r3 #1: budget truncation hits the cheapest coverage
         # first when these run in the middle); ordered so the shared
@@ -4658,6 +4077,12 @@ def registry() -> tuple[Query, ...]:
               lambda o: similarity.oracle_sql_brute_force_topk(k=5,
                                                                n_queries=50),
               bench=True),
+        # o.ann oracles: seeded probabilistic kernels (dedup_simhash,
+        # ann_lsh/pq/ivf_topk, embedding_clusters) cannot promise
+        # equality with brute force (recall is asserted in pytest), but
+        # a single-threaded rerun of the same kernels is a hard oracle
+        # for the distributed execution (ferenda_spark.annoracle
+        # explains why it is bit-exact)
         Query("ann_lsh_topk", _q_ann_lsh_topk,
               lambda o: annoracle.sql_ann_topk(o.ann, "ann_lsh_topk")),
         Query("ann_pq_topk", _q_ann_pq_topk,

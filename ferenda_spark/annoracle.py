@@ -45,11 +45,10 @@ _REPO_ROOT = os.path.dirname(_PKG_DIR)
 
 # kernel modules whose bytes key the cache (editing them invalidates)
 _FINGERPRINT_MODULES = ["annoracle.py", "operators/dedup.py",
-                        "operators/similarity.py", "operators/bpe.py",
-                        "operators/textops.py"]
+                        "operators/similarity.py", "operators/textops.py"]
 
 TABLES = ("ann_pq_topk", "dedup_simhash", "ann_lsh_topk", "ann_ivf_topk",
-          "embedding_clusters", "bpe_train", "bpe_census")
+          "embedding_clusters")
 
 
 def _round6(x: float) -> float:
@@ -319,21 +318,12 @@ def ensure_ann_tables(sf_dir: str) -> dict[str, str]:
         "embedding_clusters": pa.schema([("vec_id", pa.int64()),
                                          ("cluster", pa.int32()),
                                          ("sim", pa.float64())]),
-        "bpe_train": pa.schema([("merge_rank", pa.int32()),
-                                ("lhs", pa.string()),
-                                ("rhs", pa.string())]),
-        "bpe_census": pa.schema([("token", pa.string()),
-                                 ("token_count", pa.int64()),
-                                 ("vocab_occurrences", pa.int64())]),
     }
-    from .operators import bpe
     outs = {"dedup_simhash": simhash_twin(sf_dir),
             "ann_lsh_topk": ann_lsh_twin(sf_dir),
             "ann_pq_topk": ann_pq_twin(sf_dir),
             "ann_ivf_topk": ann_ivf_twin(sf_dir),
-            "embedding_clusters": kmeans_clusters_twin(sf_dir),
-            "bpe_train": bpe.train_twin(sf_dir),
-            "bpe_census": bpe.census_twin(sf_dir)}
+            "embedding_clusters": kmeans_clusters_twin(sf_dir)}
     for t, pdf in outs.items():
         pq.write_table(pa.Table.from_pandas(pdf, schema=schemas[t],
                                             preserve_index=False),
@@ -360,14 +350,3 @@ def sql_embedding_clusters(paths: dict[str, str]) -> str:
 def sql_ann_topk(paths: dict[str, str], table: str) -> str:
     return ("SELECT query_id, neighbor_id, rank FROM read_parquet('%s') "
             "ORDER BY query_id, rank" % paths[table])
-
-
-def sql_bpe_train(paths: dict[str, str]) -> str:
-    return ("SELECT merge_rank, lhs, rhs FROM read_parquet('%s') "
-            "ORDER BY merge_rank" % paths["bpe_train"])
-
-
-def sql_bpe_census(paths: dict[str, str]) -> str:
-    return ("SELECT token, token_count, vocab_occurrences "
-            "FROM read_parquet('%s') "
-            "ORDER BY token_count DESC, token" % paths["bpe_census"])

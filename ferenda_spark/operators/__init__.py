@@ -1,3 +1,3 @@
 """Distributed operators: Arrow-UDF extraction stage, relate joins,
-graph algorithms, dedup/similarity/text-stats for training-data
-pipelines."""
+graph algorithms, crawl/WARC ingestion, and the dedup / similarity /
+text operators that entity resolution and linking build on."""

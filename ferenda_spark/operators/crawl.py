@@ -167,7 +167,7 @@ def politeness_schedule(urls: DataFrame, per_host_rate: int = 10,
     per host per slot — the per-host politeness budget that turns a
     skewed frontier (one giant host) into bounded waves instead of one
     hot fetch partition. Deterministic: within a host, URLs order by
-    their md5 (seedable rank, same device as the sampling operators).
+    their md5 (seedable rank, the md5 device random_walks uses).
 
     Scale notes: one hash exchange on host + a running row_number —
     the canonical window; hosts are the natural politeness key so the

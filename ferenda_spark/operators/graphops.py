@@ -513,8 +513,8 @@ def label_propagation(edges: DataFrame, rounds: int = 4) -> DataFrame:
 # host extraction shared with the DuckDB twins (same regex through
 # RE2): scheme-full URLs only, authority chars [A-Za-z0-9.-] — the
 # class excludes ':' so ports never enter the host — lower-cased,
-# leading "www." stripped. Mirrors textops.url_stats' domain rule so
-# the census and the graph agree on what a "host" is.
+# leading "www." stripped — one rule, so every host rollup (host_graph,
+# the domain pagerank queries) agrees on what a "host" is.
 HOST_RE = r"https?://([A-Za-z0-9.-]+)"
 
 
@@ -663,9 +663,9 @@ def random_walks(edges: DataFrame, length: int = 8,
     """→ (walk_id, step, node): fixed-length random walks from every
     node — the DeepWalk/node2vec corpus-preparation step (walks become
     'sentences' for embedding training). Deterministic: the step
-    choice is the engine-agnostic md5 device the sampling operators
-    use (first 8 hex chars as an integer, mod degree), so re-runs and
-    both engines emit identical walks — seedable via ``seed``.
+    choice is the engine-agnostic md5 device (first 8 hex chars as an
+    integer, mod degree), so re-runs and both engines emit identical
+    walks — seedable via ``seed``.
 
     Walks stop early at sink nodes (no outgoing edge). step 0 is the
     start node; walk_id = start:replica.

@@ -1,17 +1,20 @@
-"""Text-analysis operators for a large-scale training-data pipeline.
+"""Text operators over document text: language ID, per-document
+keywords and related documents, anchor-text and head-metadata
+extraction, plus the whitespace tokenization (``words_col`` /
+``py_words`` / ``WS_SPLIT``) that dedup and the sketch queries share.
 
 Everything here is built from native ``pyspark.sql.functions`` column
 expressions — no Python UDFs — so the work stays inside whole-stage
 codegen on executors and the same logic is expressible as ANSI SQL for
 the DuckDB oracle. The reference's analog surface is the facet
 selector/key scalar functions and fulltext plumbing
-(ref ferenda/facet.py:128-338, ferenda/fulltextindex.py:120-152); the
-token/quality/langid/fingerprint set extends it to the operations a
-web-scale corpus pipeline needs before training.
+(ref ferenda/facet.py:128-338, ferenda/fulltextindex.py:120-152).
 
-Scale notes: all operators are per-row projections — no shuffle, no
-skew sensitivity; they scale linearly with executor count and pipeline
-with the parquet scan (predicate pushdown + column pruning intact).
+Scale notes: language ID and head-metadata extraction are per-row
+projections — no shuffle, no skew sensitivity; they scale linearly
+with executor count and pipeline with the parquet scan (predicate
+pushdown + column pruning intact). The keyword and anchor operators
+document their own shuffles.
 """
 
 from __future__ import annotations
@@ -38,12 +41,6 @@ LANG_MARKERS = {
 # \t/\n/\x0b/\f/\r identically.
 WS_CLASS = " \\t\\n\\x0b\\f\\r"
 WS_SPLIT = "[%s]+" % WS_CLASS           # the \s+ twin
-PUNCT_RE = "[^A-Za-z0-9%s]" % WS_CLASS  # the [^A-Za-z0-9\s] twin
-
-# BPE-ish tokenization regex: letter runs, digit runs, single other glyphs
-TOKEN_RE = r"[A-Za-z]+|[0-9]+|" + PUNCT_RE
-
-EN_STOPWORDS = LANG_MARKERS["en"]
 
 
 def words_col(text: Column) -> Column:
@@ -67,56 +64,6 @@ def py_words(text: str | None) -> list[str]:
     leading tab would produce, exactly like split on WS_SPLIT)."""
     t = (text or "").strip(" ")
     return _ASCII_WS.split(t) if t else []
-
-
-def token_stats(df: DataFrame, text_col: str = "text",
-                id_col: str = "doc_id") -> DataFrame:
-    """Per-document token counts: whitespace words + regex (BPE-ish)
-    tokens + distinct-word count."""
-    words = words_col(F.col(text_col))
-    txt = F.coalesce(F.col(text_col), F.lit(""))
-    return df.select(
-        F.col(id_col),
-        F.size(words).alias("n_words"),
-        F.regexp_count(txt, F.lit(TOKEN_RE)).alias("n_tokens"),
-        F.size(F.array_distinct(words)).alias("n_distinct_words"),
-    )
-
-
-def quality_score(df: DataFrame, text_col: str = "text",
-                  id_col: str = "doc_id") -> DataFrame:
-    """Heuristic document-quality features + composite score.
-
-    Features follow the usual web-corpus filters: length, mean word
-    length, stopword ratio, punctuation density, repetition
-    (distinct/total words). Composite = mean of clamped sub-scores,
-    rounded to 4dp for cross-engine comparison stability.
-    """
-    text = F.coalesce(F.col(text_col), F.lit(""))
-    words = words_col(text)
-    n_words = F.size(words)
-    n_chars = F.length(text)
-    nw = F.when(n_words > 0, n_words.cast("double")).otherwise(F.lit(1.0))
-    stop_arr = F.array(*[F.lit(w) for w in EN_STOPWORDS])
-    n_stop = F.size(F.filter(words, lambda w: F.array_contains(stop_arr, w)))
-    n_punct = F.regexp_count(text, F.lit(PUNCT_RE))
-    mean_word_len = (n_chars.cast("double") - (n_words - 1)) / nw
-    stop_ratio = n_stop.cast("double") / nw
-    punct_ratio = n_punct.cast("double") / F.greatest(n_chars.cast("double"),
-                                                      F.lit(1.0))
-    rep_ratio = F.size(F.array_distinct(words)).cast("double") / nw
-    len_score = F.least(n_words.cast("double") / F.lit(100.0), F.lit(1.0))
-    score = F.round((len_score + rep_ratio + (F.lit(1.0) - punct_ratio)) /
-                    F.lit(3.0), 4)
-    return df.select(
-        F.col(id_col),
-        n_words.alias("n_words"),
-        F.round(mean_word_len, 4).alias("mean_word_len"),
-        F.round(stop_ratio, 4).alias("stop_ratio"),
-        F.round(punct_ratio, 4).alias("punct_ratio"),
-        F.round(rep_ratio, 4).alias("rep_ratio"),
-        score.alias("quality"),
-    )
 
 
 def language_id(df: DataFrame, text_col: str = "text",
@@ -146,69 +93,11 @@ def language_id(df: DataFrame, text_col: str = "text",
     return out
 
 
-def fingerprint(df: DataFrame, text_col: str = "text",
-                id_col: str = "doc_id") -> DataFrame:
-    """Deterministic document fingerprint: md5 over case/whitespace
-    normalized text (the exact-dedup key), plus a coarser "shape"
-    fingerprint that drops digits (catches template-only edits)."""
-    norm = F.regexp_replace(
-        F.lower(F.trim(F.coalesce(F.col(text_col), F.lit("")))),
-        WS_SPLIT, " ")
-    return df.select(
-        F.col(id_col),
-        F.md5(norm).alias("fp_exact"),
-        F.md5(F.regexp_replace(norm, r"[0-9]+", "#")).alias("fp_shape"),
-    )
-
-
-def oracle_sql_token_stats(table: str = "documents") -> str:
-    return f"""
-    SELECT doc_id,
-           CASE WHEN trim(coalesce(text, '')) = '' THEN 0
-                ELSE len(regexp_split_to_array(trim(coalesce(text, '')), '{WS_SPLIT}')) END AS n_words,
-           len(regexp_extract_all(coalesce(text, ''), '{TOKEN_RE}')) AS n_tokens,
-           CASE WHEN trim(coalesce(text, '')) = '' THEN 0
-                ELSE len(list_distinct(regexp_split_to_array(trim(coalesce(text, '')), '{WS_SPLIT}'))) END
-             AS n_distinct_words
-    FROM {table}
-    """
-
-
 def _sql_words(expr: str = "trim(coalesce(text, ''))") -> str:
     return f"regexp_split_to_array({expr}, '{WS_SPLIT}')"
 
 
 _LOWER_TEXT = "lower(trim(coalesce(text, '')))"
-
-
-def oracle_sql_quality(table: str = "documents") -> str:
-    stop_list = "[" + ",".join("'%s'" % w for w in EN_STOPWORDS) + "]"
-    return f"""
-    WITH base AS (
-      SELECT doc_id, text,
-             CASE WHEN trim(coalesce(text, ''))='' THEN []::varchar[]
-                  ELSE {_sql_words()} END AS words,
-             length(coalesce(text, '')) AS n_chars
-      FROM {table}
-    ), feat AS (
-      SELECT doc_id, len(words) AS n_words, n_chars,
-             greatest(CASE WHEN len(words)>0 THEN len(words) ELSE 1 END, 1)::double AS nw,
-             len(list_filter(words, w -> list_contains({stop_list}, w))) AS n_stop,
-             len(regexp_extract_all(coalesce(text, ''), '{PUNCT_RE}')) AS n_punct,
-             len(list_distinct(words)) AS n_distinct
-      FROM base
-    )
-    SELECT doc_id, n_words,
-           round((n_chars::double - (n_words - 1)) / nw, 4) AS mean_word_len,
-           round(n_stop::double / nw, 4) AS stop_ratio,
-           round(n_punct::double / greatest(n_chars::double, 1.0), 4) AS punct_ratio,
-           round(n_distinct::double / nw, 4) AS rep_ratio,
-           round((least(n_words::double / 100.0, 1.0)
-                  + n_distinct::double / nw
-                  + (1.0 - n_punct::double / greatest(n_chars::double, 1.0))) / 3.0,
-                 4) AS quality
-    FROM feat
-    """
 
 
 def oracle_sql_language_id(table: str = "documents") -> str:
@@ -238,195 +127,6 @@ def oracle_sql_language_id(table: str = "documents") -> str:
            CASE WHEN m = 0 THEN 'und' {pick} END AS lang_guess
     FROM best
     """
-
-
-def oracle_sql_fingerprint(table: str = "documents") -> str:
-    return f"""
-    SELECT doc_id,
-           md5(regexp_replace(lower(trim(coalesce(text, ''))), '{WS_SPLIT}', ' ', 'g')) AS fp_exact,
-           md5(regexp_replace(regexp_replace(lower(trim(coalesce(text, ''))), '{WS_SPLIT}', ' ', 'g'),
-                              '[0-9]+', '#', 'g')) AS fp_shape
-    FROM {table}
-    """
-
-
-def top_ngrams(df: DataFrame, n: int = 2, k: int = 100,
-               id_col: str = "doc_id",
-               text_col: str = "text") -> DataFrame:
-    """Corpus-level n-gram statistics: the ``k`` most frequent word
-    ``n``-grams with occurrence and document counts — the vocabulary /
-    boilerplate-phrase census step of a corpus audit.
-
-    → (ngram, n_docs, n_occurrences), ordered by occurrences desc with
-    the ngram string as a deterministic tiebreak.
-
-    Scale shape: the explode→count is the canonical word-count plan —
-    map-side partial aggregation absorbs hot n-grams before the single
-    shuffle on the gram key; the top-k is a TakeOrdered (per-partition
-    heap + driver merge of k rows), never a full sort. countDistinct
-    adds one expand pass; at 100 TB swap it for an (ngram, doc_id)
-    dropDuplicates pre-pass if doc-counts dominate the plan.
-
-    Gram rows come from an Arrow stage, not a native transform()
-    expression: element_at(words, i) under transform re-inlines the
-    split() child per element (no cross-expression CSE — the same
-    O(len²) trap dedup.shingle_table documents); the Python fold is
-    O(len) and measured 2.7× faster at sf0.1.
-    """
-    import pandas as pd
-
-    from .util import ensure_parallelism
-
-    def run(batches):
-        for pdf in batches:
-            ids, grams = [], []
-            for i, t in zip(pdf[id_col], pdf[text_col]):
-                w = py_words(t)     # exact words_col/regexp_split twin
-                for j in range(len(w) - n + 1):
-                    ids.append(i)
-                    grams.append(" ".join(w[j:j + n]))
-            yield pd.DataFrame({id_col: pd.array(ids, dtype="int64"),
-                                "ngram": grams})
-
-    ex = ensure_parallelism(df.select(id_col, text_col)) \
-        .mapInPandas(run, "%s long, ngram string" % id_col)
-    return (ex.groupBy("ngram")
-            .agg(F.countDistinct(id_col).alias("n_docs"),
-                 F.count(F.lit(1)).alias("n_occurrences"))
-            .orderBy(F.desc("n_occurrences"), F.asc("ngram"))
-            .limit(k))
-
-
-def oracle_sql_top_ngrams(table: str = "documents", n: int = 2,
-                          k: int = 100) -> str:
-    gram = " || ' ' || ".join(f"words[i+{j}]" for j in range(n))
-    grams = (f"CASE WHEN len(words) >= {n} THEN "
-             f"[ {gram} for i in range(1, len(words) - {n - 2}) ] "
-             f"ELSE []::varchar[] END")
-    return f"""
-    WITH base AS (
-      SELECT doc_id,
-             CASE WHEN trim(coalesce(text, ''))='' THEN []::varchar[]
-                  ELSE {_sql_words()} END AS words
-      FROM {table}
-    ), g AS (SELECT doc_id, unnest({grams}) AS ngram FROM base)
-    SELECT ngram, count(DISTINCT doc_id)::bigint AS n_docs,
-           count(*)::bigint AS n_occurrences
-    FROM g GROUP BY ngram
-    ORDER BY n_occurrences DESC, ngram LIMIT {k}
-    """
-
-
-def bpe_pair_counts(df: DataFrame, k: int = 100, id_col: str = "doc_id",
-                    text_col: str = "text") -> DataFrame:
-    """First iteration of BPE tokenizer training: corpus-weighted
-    adjacent character-pair frequencies — the statistic whose argmax is
-    the first merge rule (Sennrich et al.'s public algorithm).
-
-    → (pair, pair_count) for the ``k`` most frequent pairs, pair
-    rendered "left right", count = Σ over words of
-    (occurrences of the pair within the word) × (word frequency).
-
-    Scale shape: the classic BPE optimization — pairs are generated
-    per DISTINCT word (the word-frequency groupBy shrinks web text by
-    orders of magnitude before any Python runs), so the Arrow stage
-    sees the vocabulary, not the corpus. Two shuffles total (word
-    count, pair sum — both partial-aggregated), then TakeOrdered.
-    """
-    import pandas as pd
-
-    from .util import ensure_parallelism
-
-    words = words_col(F.col(text_col))
-    wc = (df.select(F.explode(words).alias("word"))
-          .groupBy("word").agg(F.count(F.lit(1)).alias("n")))
-
-    def run(batches):
-        for pdf in batches:
-            pairs, ns = [], []
-            for w, n in zip(pdf["word"], pdf["n"]):
-                for a, b in zip(w, w[1:]):
-                    pairs.append(a + " " + b)
-                    ns.append(n)
-            yield pd.DataFrame({"pair": pairs,
-                                "n": pd.array(ns, dtype="int64")})
-
-    ex = ensure_parallelism(wc).mapInPandas(run, "pair string, n long")
-    return (ex.groupBy("pair").agg(F.sum("n").alias("pair_count"))
-            .orderBy(F.desc("pair_count"), F.asc("pair"))
-            .limit(k))
-
-
-def oracle_sql_bpe_pairs(table: str = "documents", k: int = 100) -> str:
-    return f"""
-    WITH base AS (
-      SELECT CASE WHEN trim(coalesce(text, ''))='' THEN []::varchar[]
-                  ELSE {_sql_words()} END AS words
-      FROM {table}
-    ), wc AS (
-      SELECT word, count(*)::bigint AS n
-      FROM (SELECT unnest(words) AS word FROM base) GROUP BY word
-    ), ch AS (
-      SELECT n, regexp_split_to_array(word, '') AS cs FROM wc
-    ), p AS (
-      SELECT n, unnest([cs[i] || ' ' || cs[i+1]
-                        for i in range(1, len(cs))]) AS pair
-      FROM ch
-    )
-    SELECT pair, sum(n)::bigint AS pair_count
-    FROM p GROUP BY pair
-    ORDER BY pair_count DESC, pair LIMIT {k}
-    """
-
-
-def profile_columns(df: DataFrame, columns: list[str]) -> DataFrame:
-    """Data-quality census over arbitrary columns: one output row per
-    column with row/null/distinct counts and lexicographic min/max
-    (values cast to string so heterogeneous columns stack into one
-    typed result — the profile-before-training sanity step).
-
-    Scale shape: ONE pass — all per-column aggregates compute in a
-    single global hash-aggregate (partial combine map-side, a
-    single-row exchange), then unpivot driver-side expressions; no
-    per-column scans, no shuffle beyond the 1-row final agg.
-    """
-    aggs = []
-    for c in columns:
-        sc = F.col(c).cast("string")
-        aggs += [
-            F.count(F.lit(1)).alias("%s__n" % c),
-            F.sum(F.when(sc.isNull(), 1).otherwise(0))
-             .alias("%s__nnull" % c),
-            F.countDistinct(sc).alias("%s__ndist" % c),
-            F.min(sc).alias("%s__min" % c),
-            F.max(sc).alias("%s__max" % c),
-        ]
-    one = df.agg(*aggs)
-    rows = None
-    for c in columns:
-        row = one.select(
-            F.lit(c).alias("column"),
-            F.col("%s__n" % c).alias("n_rows"),
-            F.col("%s__nnull" % c).alias("n_null"),
-            F.col("%s__ndist" % c).alias("n_distinct"),
-            F.col("%s__min" % c).alias("min_value"),
-            F.col("%s__max" % c).alias("max_value"))
-        rows = row if rows is None else rows.unionByName(row)
-    return rows.orderBy("column")
-
-
-def oracle_sql_profile(table: str, columns: list[str]) -> str:
-    selects = []
-    for c in columns:
-        selects.append(f"""
-        SELECT '{c}' AS "column", count(*)::bigint AS n_rows,
-               sum(CASE WHEN {c}::VARCHAR IS NULL THEN 1 ELSE 0 END)::bigint
-                 AS n_null,
-               count(DISTINCT {c}::VARCHAR)::bigint AS n_distinct,
-               min({c}::VARCHAR) AS min_value,
-               max({c}::VARCHAR) AS max_value
-        FROM {table}""")
-    return '%s ORDER BY "column"' % " UNION ALL ".join(selects)
 
 
 def top_terms_per_doc(df: DataFrame, k: int = 5, id_col: str = "doc_id",
@@ -490,136 +190,6 @@ def oracle_sql_top_terms(table: str = "documents", k: int = 5) -> str:
       FROM scored)
     SELECT doc_id, term, tf, df, score, rank
     FROM ranked WHERE rank <= {k} ORDER BY doc_id, rank
-    """
-
-
-# ------------------------------------------------------------ URL census
-
-# http(s) URL matcher in the Java-regex / RE2 dialect intersection;
-# the negated path class spells out the ASCII whitespace set (WS_CLASS
-# discipline) so the twins cannot diverge on vertical tabs
-URL_RE = (r"https?://[A-Za-z0-9.-]+(?::[0-9]+)?"
-          r"(?:/[^%s\"<>]*)?" % WS_CLASS)
-_HOST_RE = r"https?://([A-Za-z0-9.-]+)"
-
-
-def url_stats(df: DataFrame, text_col: str = "text",
-              id_col: str = "doc_id") -> DataFrame:
-    """Corpus URL census: → (domain, n_urls, n_docs) per linked host
-    (lower-cased, leading ``www.`` stripped), ordered by frequency —
-    the per-domain inventory behind blocklist filtering and domain
-    mixture decisions in public web pipelines (C4's blocklists,
-    RefinedWeb/Dolma domain stats).
-
-    Reference analog: ferenda mines intra-corpus citation URIs
-    (operators/citations.py); this is the same census over *outbound
-    web links* in raw text.
-
-    Scale notes: extract + explode are narrow; the aggregation is a
-    two-level hash agg on (domain) with map-side partial combine —
-    one shuffle whose key count is the number of distinct hosts, with
-    hot domains (the whole point of the census) reduced map-side.
-    countDistinct(doc_id) expands to the standard two-round expand
-    agg; both rounds stay partial-aggregatable.
-    """
-    urls = df.select(
-        F.col(id_col),
-        F.explode(F.regexp_extract_all(
-            F.coalesce(F.col(text_col), F.lit("")),
-            F.lit(URL_RE), 0)).alias("url"))
-    domain = F.regexp_replace(
-        F.lower(F.regexp_extract(F.col("url"), _HOST_RE, 1)),
-        r"^www\.", "")
-    return (urls.select(domain.alias("domain"), id_col)
-            .groupBy("domain")
-            .agg(F.count(F.lit(1)).alias("n_urls"),
-                 F.countDistinct(F.col(id_col)).alias("n_docs"))
-            .orderBy(F.desc("n_urls"), "domain"))
-
-
-def oracle_sql_url_stats(table: str = "documents",
-                         text_expr: str = "coalesce(text, '')") -> str:
-    """DuckDB twin of :func:`url_stats` (same patterns through RE2)."""
-    return f"""
-    WITH urls AS (
-      SELECT doc_id, unnest(regexp_extract_all({text_expr},
-                                               '{URL_RE}')) AS url
-      FROM {table}),
-    dom AS (
-      SELECT doc_id,
-             regexp_replace(lower(regexp_extract(url, '{_HOST_RE}', 1)),
-                            '^www\\.', '') AS domain
-      FROM urls)
-    SELECT domain, count(*)::bigint AS n_urls,
-           count(DISTINCT doc_id)::bigint AS n_docs
-    FROM dom GROUP BY domain
-    ORDER BY n_urls DESC, domain
-    """
-
-
-def domain_blocklist_filter(df: DataFrame, blocklist: DataFrame,
-                            text_col: str = "text",
-                            id_col: str = "doc_id") -> DataFrame:
-    """Per-document domain-blocklist verdicts: → (doc_id,
-    n_blocked_urls, blocked) for EVERY document (callers drop with
-    ``.where(~F.col("blocked"))``) — the C4/RefinedWeb blocklist step
-    over outbound links. ``blocklist`` is a one-column ``domain``
-    DataFrame; matching is on the same lower-cased, www-stripped host
-    as :func:`url_stats`.
-
-    Scale notes: blocklists are the small side (10⁴–10⁷ domains vs a
-    100 TB corpus), so the match is an explicit ``broadcast`` hash
-    join — the corpus never shuffles; the per-document hit count is a
-    partial-aggregated groupBy on ``doc_id``, and the verdict join
-    back to the corpus is doc_id-equi (AQE-planned).
-    """
-    urls = df.select(
-        F.col(id_col),
-        F.explode(F.regexp_extract_all(
-            F.coalesce(F.col(text_col), F.lit("")),
-            F.lit(URL_RE), 0)).alias("url"))
-    domain = F.regexp_replace(
-        F.lower(F.regexp_extract(F.col("url"), _HOST_RE, 1)),
-        r"^www\.", "")
-    bl = blocklist.select(
-        F.regexp_replace(F.lower(F.col("domain")), r"^www\.", "")
-        .alias("domain")).distinct()
-    hits = (urls.select(F.col(id_col), domain.alias("domain"))
-            .join(F.broadcast(bl), "domain")
-            .groupBy(id_col)
-            .agg(F.count(F.lit(1)).alias("n_blocked_urls")))
-    n = F.coalesce(F.col("n_blocked_urls"), F.lit(0)).cast("long")
-    return (df.select(id_col).join(hits, id_col, "left")
-            .select(F.col(id_col), n.alias("n_blocked_urls"),
-                    (n > 0).alias("blocked"))
-            .orderBy(id_col))
-
-
-def oracle_sql_blocklist(domains, table: str = "documents",
-                         text_expr: str = "coalesce(text, '')") -> str:
-    """DuckDB twin of :func:`domain_blocklist_filter` for a literal
-    domain list."""
-    vals = ", ".join("('%s')" % d.lower().replace("'", "''")
-                     for d in domains)
-    return f"""
-    WITH urls AS (
-      SELECT doc_id, unnest(regexp_extract_all({text_expr},
-                                               '{URL_RE}')) AS url
-      FROM {table}),
-    dom AS (
-      SELECT doc_id,
-             regexp_replace(lower(regexp_extract(url, '{_HOST_RE}', 1)),
-                            '^www\\.', '') AS domain
-      FROM urls),
-    bl AS (SELECT DISTINCT regexp_replace(lower(domain), '^www\\.', '')
-                    AS domain
-           FROM (VALUES {vals}) b(domain)),
-    hits AS (SELECT doc_id, count(*) AS n
-             FROM dom JOIN bl USING (domain) GROUP BY doc_id)
-    SELECT d.doc_id, coalesce(h.n, 0)::bigint AS n_blocked_urls,
-           coalesce(h.n, 0) > 0 AS blocked
-    FROM {table} d LEFT JOIN hits h USING (doc_id)
-    ORDER BY d.doc_id
     """
 
 
@@ -817,7 +387,7 @@ def page_metadata(df: DataFrame, html_col: str = "text",
     """Head-metadata extraction over raw page HTML — the fields a
     Common-Crawl-style KG/curation pipeline reads before (or instead
     of) a full parse: <title>, rel=canonical (the dedup key
-    url_dedup consumes), meta description, og:title / og:image, and
+    for refetched pages), meta description, og:title / og:image, and
     the meta-tag census. Attribute ORDER inside a tag is free: tags
     are captured whole, the attribute of interest is then extracted
     from the tag — so <meta content=… property=…> matches too.
@@ -892,60 +462,3 @@ def oracle_sql_page_metadata(table: str = "documents",
     """
 
 
-LENGTH_QUANTILES = (0.25, 0.5, 0.75, 0.9, 0.99)
-
-
-def length_quantiles(docs: DataFrame, keys: list[str] | None = None,
-                     text_col: str = "text",
-                     qs: tuple = LENGTH_QUANTILES) -> DataFrame:
-    """→ (keys…, q, n_words_q): EXACT interpolated word-length
-    quantiles per key group — the corpus length census that sets
-    truncation budgets and flags degenerate slices. Spark's
-    ``percentile`` and DuckDB's ``quantile_cont`` implement the same
-    (n−1)·q interpolation on the sorted group, so the twin is
-    bit-checkable (spiked before shipping; rounded to 6).
-
-    Scale notes: exact per-group quantiles sort within the key
-    exchange — that is the price of "exact" (and the reason the
-    estimate-only path would use percentile_approx, which no oracle
-    can cross-check). Groups are language/host-sized; the melt to
-    (q, value) rows happens after aggregation on the key-sized frame.
-    """
-    keys = list(keys or [])
-    n = F.size(words_col(F.col(text_col)))
-    aggs = [F.round(F.percentile(F.col("_n"), F.lit(q)), 6)
-            .alias("_q%d" % i) for i, q in enumerate(qs)]
-    agg = docs.select(*keys, n.alias("_n")).groupBy(*keys).agg(*aggs)
-    stack = F.expr("stack(%d, %s) AS (q, n_words_q)" % (
-        len(qs), ", ".join("cast(%r as double), _q%d" % (q, i)
-                           for i, q in enumerate(qs))))
-    return agg.select(*keys, stack)
-
-
-def oracle_sql_length_quantiles(table: str = "documents",
-                                keys: list[str] | None = None,
-                                text_col: str = "text",
-                                qs: tuple = LENGTH_QUANTILES) -> str:
-    """DuckDB twin of :func:`length_quantiles`."""
-    keys = list(keys or [])
-    kcols = ", ".join(keys)
-    kpfx = (kcols + ", ") if keys else ""
-    branches = "\n      UNION ALL ".join(
-        f"SELECT {kpfx}{q} AS q, q{i} AS n_words_q FROM agg"
-        for i, q in enumerate(qs))
-    qaggs = ", ".join(
-        f"round(quantile_cont(n, {q}), 6) AS q{i}"
-        for i, q in enumerate(qs))
-    grp = ("GROUP BY " + kcols) if keys else ""
-    return f"""
-    WITH w AS (
-      SELECT {kpfx}
-             CASE WHEN trim(coalesce({text_col}, '')) = '' THEN 0
-                  ELSE len(regexp_split_to_array(
-                         trim(coalesce({text_col}, '')), '{WS_SPLIT}'))
-             END AS n
-      FROM {table}),
-    agg AS (SELECT {kpfx}{qaggs} FROM w {grp})
-    {branches}
-    ORDER BY {kpfx}q
-    """

@@ -1,5 +1,6 @@
-"""Training-data pipeline operators: Spark vs DuckDB oracle parity at
-sf0.001, plus structural checks for the non-SQL-expressible ops."""
+"""Text, dedup, ANN and linking operators: Spark vs DuckDB oracle
+parity at sf0.001, plus structural checks for the non-SQL-expressible
+ops."""
 
 import os
 
@@ -50,28 +51,10 @@ def emb(spark):
     return spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
 
 
-def test_token_stats_parity(spark, duck):
-    from ferenda_spark.operators.textops import (oracle_sql_token_stats,
-                                                 token_stats)
-    assert_parity(token_stats(docs(spark)), duck, oracle_sql_token_stats())
-
-
-def test_quality_parity(spark, duck):
-    from ferenda_spark.operators.textops import (oracle_sql_quality,
-                                                 quality_score)
-    assert_parity(quality_score(docs(spark)), duck, oracle_sql_quality())
-
-
 def test_language_id_parity(spark, duck):
     from ferenda_spark.operators.textops import (language_id,
                                                  oracle_sql_language_id)
     assert_parity(language_id(docs(spark)), duck, oracle_sql_language_id())
-
-
-def test_fingerprint_parity(spark, duck):
-    from ferenda_spark.operators.textops import (fingerprint,
-                                                 oracle_sql_fingerprint)
-    assert_parity(fingerprint(docs(spark)), duck, oracle_sql_fingerprint())
 
 
 def test_ngram_jaccard_parity(spark, duck):
@@ -154,49 +137,6 @@ def test_exact_duplicates(spark):
     assert len(got) == 2 * n_injected  # rep + dup rows per group
 
 
-def test_media_decode_headers(spark):
-    """Built-in decoders parse REAL container bytes: PNG IHDR and WAV
-    RIFF metadata must match the generative formulas; video has no
-    codec and reports unsupported."""
-    from ferenda_spark.operators.multimodal import (decode_media,
-                                                    synthetic_media)
-    out = {r.media_id: r for r in
-           decode_media(synthetic_media(spark, 60)).collect()}
-    assert len(out) == 60
-    for i in range(60):
-        r = out["m%d" % i]
-        if i % 3 == 0:
-            assert (r.status, r.width, r.height, r.n_frames) == \
-                ("ok", 1 + (7 * i) % 64, 1 + (13 * i) % 64, 1)
-        elif i % 3 == 1:
-            assert (r.status, r.width, r.height, r.n_frames) == \
-                ("ok", 8000 + (i % 8) * 1000, 1 + i % 2,
-                 100 + (17 * i) % 900)
-        else:
-            assert r.status == "unsupported" and r.width is None
-
-
-def test_media_decode_corrupt_and_custom(spark):
-    """Corrupt bytes → per-row error (task survives); register_decoder
-    swaps in a full codec (feature path)."""
-    import pandas as pd
-    from ferenda_spark.operators.multimodal import (_DECODERS, _fake_decode,
-                                                    decode_media,
-                                                    register_decoder)
-    df = spark.createDataFrame(
-        pd.DataFrame([("x1", "image", "image/png", b"not a png"),
-                      ("x2", "blob", "application/x-custom", b"payload")],
-                     columns=["media_id", "kind", "mime", "payload"]),
-        schema="media_id string, kind string, mime string, payload binary")
-    register_decoder("blob", _fake_decode)
-    try:
-        out = {r.media_id: r for r in decode_media(df).collect()}
-    finally:
-        _DECODERS.pop("blob", None)
-    assert out["x1"].status == "error" and "PNG" in out["x1"].error
-    assert out["x2"].status == "ok" and len(out["x2"].feature) == 8
-
-
 def test_link_labels_difflib_parity(spark):
     """Distributed linker must agree with the reference-semantics
     single-node ResourceLookup on exact and fuzzy hits."""
@@ -267,254 +207,6 @@ def test_embedding_blocked_prunes_subquadratically(spark):
     assert stats["n_cell_pairs_kept"] < stats["n_cell_pairs_total"], stats
 
 
-# ----------------------------------------------------- sequence packing
-
-def test_pack_sequences_matches_single_fold(spark):
-    """Distributed packer == single-threaded greedy fold, regardless of
-    how the input happens to be partitioned (the shuffle on shard must
-    restore per-shard doc_id order before packing)."""
-    import pandas as pd
-    from ferenda_spark.operators.packing import (pack_sequences,
-                                                 pack_sequences_single)
-    rng = np.random.RandomState(7)
-    rows = [(int(i), " ".join("w%d" % k for k in range(rng.randint(0, 90))))
-            for i in rng.permutation(400)]
-    df = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]),
-                               schema="doc_id long, text string") \
-        .repartition(7)  # adversarial partitioning
-    got = sorted(map(tuple, pack_sequences(
-        df, budget=128, n_shards=5).collect()))
-    expected = pack_sequences_single(
-        [(i, len(t.split()) if t.strip() else 0) for i, t in rows],
-        budget=128, n_shards=5)
-    assert got == sorted(expected)
-
-
-def test_pack_sequences_invariants(spark):
-    """Bins respect the budget except single-oversized-doc bins;
-    positions are contiguous from 0 per bin; every doc appears once."""
-    import pandas as pd
-    from ferenda_spark.operators.packing import pack_sequences
-    rows = [(0, " ".join(["w"] * 300)),   # oversized: own bin
-            (5, "a b c"), (10, " ".join(["w"] * 120)),
-            (15, "x y"), (20, ""), (25, " ".join(["w"] * 128))]
-    df = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]),
-                               schema="doc_id long, text string")
-    out = pack_sequences(df, budget=128, n_shards=1).collect()
-    assert len(out) == len(rows)
-    by_bin = {}
-    for r in out:
-        by_bin.setdefault(r.bin_id, []).append(r)
-    for bin_id, members in by_bin.items():
-        fill = sum(m.n_tokens for m in members)
-        assert fill <= 128 or len(members) == 1, (bin_id, fill)
-        assert sorted(m.pos_in_bin for m in members) == list(range(len(members)))
-    # the oversized 300-token doc (doc_id 0, first in shard) sits alone
-    first_bin = [m for m in out if m.doc_id == 0][0].bin_id
-    assert len(by_bin[first_bin]) == 1
-
-
-def test_stratified_sample_deterministic_and_quota(spark):
-    """Same selection regardless of input partitioning; per-stratum
-    quota = ceil(fraction * stratum_size); selection is a function of
-    (id, seed) only."""
-    import pandas as pd
-    from ferenda_spark.operators.sampling import stratified_sample
-    rows = [(i, "t%d" % i, ["en", "de", "fr"][i % 3]) for i in range(90)]
-    df = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["doc_id", "text", "lang"]),
-        schema="doc_id long, text string, lang string")
-    a = sorted(r.doc_id for r in stratified_sample(df, "lang", 0.25).collect())
-    b = sorted(r.doc_id for r in
-               stratified_sample(df.repartition(13), "lang", 0.25).collect())
-    assert a == b and len(a) == 3 * 8          # ceil(0.25*30) per stratum
-    c = sorted(r.doc_id for r in
-               stratified_sample(df, "lang", 0.25, seed=1).collect())
-    assert c != a                               # seed changes the draw
-    assert len(c) == len(a)                     # but not the quota
-
-
-def test_dsir_parity(spark, duck):
-    """dsir_resample vs its DuckDB twin on the driver corpus: same k
-    rows, same n_feats/log_w/skey/rank bit-for-bit (6-dp keys)."""
-    from ferenda_spark.operators.sampling import (dsir_resample,
-                                                  oracle_sql_dsir)
-    d = docs(spark)
-    duck.sql("create or replace view dsir_tgt as "
-             "select * from documents where lang = 'de'")
-    assert_parity(
-        dsir_resample(d, d.where("lang = 'de'"), k=40, n_buckets=512,
-                      seed=3),
-        duck, oracle_sql_dsir("documents", "dsir_tgt", 40, 512, seed=3))
-
-
-def test_dsir_python_twin_and_semantics(spark):
-    """log_w and the Gumbel key match an independent pure-Python fold
-    (hashlib md5 + math.log) on a hand-sized corpus; the selection is
-    partitioning-invariant; docs resembling the target outscore docs
-    that don't."""
-    import hashlib
-    import math
-
-    import pandas as pd
-    from ferenda_spark.operators.sampling import dsir_resample
-
-    corpus = [(0, "the cat sat"), (1, "the cat sat"), (2, "dogs bark"),
-              (3, "cats purr loudly"), (4, "stock market crash"),
-              (5, "")]
-    target = ["the cat sat on the mat", "cats purr"]
-    nb = 64
-
-    def grams(text):
-        ws = text.split() if text.strip(" ") else []
-        return ws + [ws[i] + " " + ws[i + 1] for i in range(len(ws) - 1)]
-
-    def bucket(g):
-        return int(hashlib.md5(g.encode()).hexdigest()[:8], 16) % nb
-
-    tcnt, rcnt = {}, {}
-    for t in target:
-        for g in grams(t):
-            tcnt[bucket(g)] = tcnt.get(bucket(g), 0) + 1
-    for _, t in corpus:
-        for g in grams(t):
-            rcnt[bucket(g)] = rcnt.get(bucket(g), 0) + 1
-    tt, rt = sum(tcnt.values()), sum(rcnt.values())
-
-    def log_w(text):
-        s = 0.0
-        cnt = {}
-        for g in grams(text):
-            cnt[bucket(g)] = cnt.get(bucket(g), 0) + 1
-        for b, c in cnt.items():
-            s += c * (math.log((tcnt.get(b, 0) + 1) / (tt + nb))
-                      - math.log((rcnt.get(b, 0) + 1) / (rt + nb)))
-        return round(s, 6)
-
-    def skey(doc_id, text, seed=0):
-        h = hashlib.md5(f"{doc_id}:{seed}".encode()).hexdigest()[:13]
-        u = (int(h, 16) + 0.5) / 2 ** 52
-        return round(log_w(text) - math.log(-math.log(u)), 6)
-
-    cdf = spark.createDataFrame(
-        pd.DataFrame(corpus, columns=["doc_id", "text"]),
-        schema="doc_id long, text string")
-    tdf = spark.createDataFrame(
-        pd.DataFrame([(i, t) for i, t in enumerate(target)],
-                     columns=["doc_id", "text"]),
-        schema="doc_id long, text string")
-    out = {r.doc_id: r for r in
-           dsir_resample(cdf, tdf, k=6, n_buckets=nb).collect()}
-    assert len(out) == 6
-    for doc_id, text in corpus:
-        assert out[doc_id].log_w == log_w(text), doc_id
-        assert out[doc_id].skey == skey(doc_id, text), doc_id
-    # the empty doc has no features: weight 1 (log_w = 0)
-    assert out[5].log_w == 0.0 and out[5].n_feats == 0
-    # cat-like docs carry more target mass than the stock-market doc
-    assert out[0].log_w > out[4].log_w
-    assert out[3].log_w > out[4].log_w
-    # partitioning-invariant selection at k < n
-    a = sorted(r.doc_id for r in
-               dsir_resample(cdf, tdf, k=3, n_buckets=nb).collect())
-    b = sorted(r.doc_id for r in
-               dsir_resample(cdf.repartition(7), tdf, k=3,
-                             n_buckets=nb).collect())
-    assert a == b
-
-
-def test_decontaminate_semantics(spark):
-    """A doc copied verbatim from the benchmark is 100% contaminated;
-    a doc sharing no 3-grams scores 0 and is unflagged; partial overlap
-    lands strictly between."""
-    import pandas as pd
-    from ferenda_spark.operators.curation import decontaminate
-    bench = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [1000],
-                      "text": ["the quick brown fox jumps over the lazy dog"]}),
-        schema="doc_id long, text string")
-    corpus = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [1, 2, 3],
-                      "text": ["the quick brown fox jumps over the lazy dog",
-                               "completely different words in here now friend",
-                               "the quick brown fox went somewhere else entirely"]}),
-        schema="doc_id long, text string")
-    out = {r.doc_id: r for r in
-           decontaminate(corpus, bench, n=3, threshold=0.2).collect()}
-    assert out[1].contamination == 1.0 and out[1].contaminated
-    assert out[2].contamination == 0.0 and not out[2].contaminated
-    assert 0.0 < out[3].contamination < 1.0     # shares "the quick brown" etc.
-    assert out[3].n_hit == 2                    # 2 shared trigrams
-
-
-def test_decontaminate_oracle_parity(spark, duck):
-    from ferenda_spark.operators import curation
-    from pyspark.sql import functions as F
-    d = docs(spark)
-    assert_parity(
-        curation.decontaminate(d.where(F.col("doc_id") % 37 != 0),
-                               d.where(F.col("doc_id") % 37 == 0),
-                               n=3, threshold=0.2),
-        duck, curation.oracle_sql_decontaminate(n=3, threshold=0.2))
-
-
-def test_repetition_stats_semantics(spark):
-    import pandas as pd
-    from ferenda_spark.operators.curation import repetition_stats
-    df = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [1, 2, 3, 4],
-                      "text": ["spam spam spam spam spam",
-                               "all words here are unique tokens",
-                               "ab", ""]}),
-        schema="doc_id long, text string")
-    out = {r.doc_id: r for r in repetition_stats(df, n=3).collect()}
-    assert out[1].dup_word_frac == 0.8          # 1 distinct / 5 words
-    assert out[1].top_word_frac == 1.0
-    assert out[1].dup_ngram_frac == pytest.approx(1 - 1 / 3, abs=1e-6)
-    assert out[2].dup_word_frac == 0.0
-    assert out[2].top_word_frac == pytest.approx(1 / 6, abs=1e-6)
-    assert out[3].n_words == 1 and out[3].dup_ngram_frac == 0.0
-    assert out[4].n_words == 0 and out[4].top_word_frac == 0.0
-
-
-def test_repetition_stats_oracle_parity(spark, duck):
-    from ferenda_spark.operators import curation
-    assert_parity(curation.repetition_stats(docs(spark), n=3),
-                  duck, curation.oracle_sql_repetition(n=3))
-
-
-def test_pii_scrub_semantics(spark):
-    """Each PII class is replaced by its typed placeholder and counted;
-    scrub order protects email digits/dots from the IP/phone patterns;
-    clean text carries no match residue."""
-    import pandas as pd
-    from ferenda_spark.operators.curation import pii_scrub
-    df = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [1, 2, 3, 4],
-                      "text": ["write to jo.doe+spam@sub.ex.org today",
-                               "server at 10.0.255.7 then 8.8.8.8",
-                               "call +46-8-555-123-45 or +1-5550042",
-                               "plain text, no pii; v1.2 stays"]}),
-        schema="doc_id long, text string")
-    out = {r.doc_id: r for r in pii_scrub(df).collect()}
-    assert out[1].clean_text == "write to <EMAIL> today"
-    assert (out[1].n_emails, out[1].n_ips, out[1].n_phones) == (1, 0, 0)
-    assert out[2].clean_text == "server at <IP> then <IP>"
-    assert (out[2].n_emails, out[2].n_ips, out[2].n_phones) == (0, 2, 0)
-    assert out[3].clean_text == "call <PHONE> or <PHONE>"
-    assert (out[3].n_emails, out[3].n_ips, out[3].n_phones) == (0, 0, 2)
-    assert out[4].clean_text == "plain text, no pii; v1.2 stays"
-    assert (out[4].n_emails, out[4].n_ips, out[4].n_phones) == (0, 0, 0)
-
-
-def test_pii_scrub_driver_parity(spark, duck):
-    """The driver query (deterministic PII injection + scrub) against
-    its DuckDB twin — the same pair the correctness gate runs."""
-    import __spark_entry__ as E
-    assert_parity(E.queries()["pii_scrub"](spark, SF_DIR),
-                  duck, E.oracle_sql()["pii_scrub"])
-
-
 def test_kmeans_clusters_deterministic_and_twin_parity(spark):
     """Assignment is invariant to input partitioning and bit-equal to
     the single-threaded annoracle twin (same fold-order kernels)."""
@@ -543,84 +235,6 @@ def test_kmeans_clusters_quality(spark):
     assert (out["sim"] > -1.0).all() and (out["sim"] <= 1.0 + 1e-9).all()
 
 
-def test_resample_mixture_quotas_and_caps(spark):
-    """Quota = floor(weight·total) capped at stratum size; unweighted
-    strata are dropped; selection deterministic under repartitioning."""
-    import pandas as pd
-    from ferenda_spark.operators.sampling import resample_mixture
-    # 60 en, 20 de, 5 fr, 15 xx (unweighted)
-    langs = ["en"] * 60 + ["de"] * 20 + ["fr"] * 5 + ["xx"] * 15
-    rows = [(i, "t%d" % i, lg) for i, lg in enumerate(langs)]
-    df = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["doc_id", "text", "lang"]),
-        schema="doc_id long, text string, lang string")
-    weights = {"en": 0.5, "de": 0.3, "fr": 0.2}
-    out = resample_mixture(df, "lang", weights, total=40).collect()
-    by = {}
-    for r in out:
-        by.setdefault(r.lang, []).append(r)
-    assert len(by["en"]) == 20                  # floor(0.5*40)
-    assert len(by["de"]) == 12                  # floor(0.3*40)
-    assert len(by["fr"]) == 5                   # floor(0.2*40)=8, capped
-    assert by["fr"][0].quota == 5               # shortfall is visible
-    assert "xx" not in by                       # no weight → dropped
-    again = resample_mixture(df.repartition(7), "lang", weights,
-                             total=40).collect()
-    assert sorted(r.doc_id for r in again) == \
-        sorted(r.doc_id for r in out)
-
-
-def test_top_ngrams_counts_and_order(spark):
-    import pandas as pd
-    from ferenda_spark.operators.textops import top_ngrams
-    docs = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [1, 2, 3],
-                      "text": ["a b a b c",
-                               "a b x",
-                               "single"]}),
-        schema="doc_id long, text string")
-    out = top_ngrams(docs, n=2, k=3).collect()
-    # "a b": doc1 twice + doc2 once = 3 occurrences, 2 docs; ties
-    # ("b a", "b c", "b x") break on the gram string ascending
-    assert (out[0].ngram, out[0].n_docs, out[0].n_occurrences) == \
-        ("a b", 2, 3)
-    assert [r.ngram for r in out[1:]] == ["b a", "b c"]
-    # a 1-word doc contributes no bigrams
-    assert all("single" not in r.ngram for r in out)
-
-
-def test_bpe_pair_counts(spark):
-    """Hand-checked corpus: pair count = within-word occurrences ×
-    word frequency; unicode chars pair correctly; 1-char words
-    contribute nothing."""
-    import pandas as pd
-    from ferenda_spark.operators.textops import bpe_pair_counts
-    docs = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [1, 2],
-                      "text": ["aa aa ab", "aa x é漢"]}),
-        schema="doc_id long, text string")
-    out = {r.pair: r.pair_count for r in bpe_pair_counts(docs).collect()}
-    # "aa" appears 3× (pair "a a" once per occurrence), "ab" once
-    assert out["a a"] == 3
-    assert out["a b"] == 1
-    assert out["é 漢"] == 1
-    assert "x" not in " ".join(out)   # 1-char word → no pairs
-
-
-def test_profile_columns(spark):
-    import pandas as pd
-    from ferenda_spark.operators.textops import profile_columns
-    df = spark.createDataFrame(
-        pd.DataFrame({"a": ["x", "y", None, "x"],
-                      "b": [1, 2, 2, None]}),
-        schema="a string, b long")
-    out = {r.column: r for r in profile_columns(df, ["a", "b"]).collect()}
-    assert out["a"].n_rows == 4 and out["a"].n_null == 1
-    assert out["a"].n_distinct == 2           # nulls not counted
-    assert (out["a"].min_value, out["a"].max_value) == ("x", "y")
-    assert out["b"].n_null == 1 and out["b"].n_distinct == 2
-
-
 def test_top_terms_per_doc(spark):
     """tf·idf with raw-inverse idf: a corpus-wide word scores low, a
     doc-unique word scores high; rank ties break on the term string."""
@@ -645,33 +259,29 @@ def test_top_terms_per_doc(spark):
 
 def test_null_text_and_unicode_ws_parity(spark, duck):
     """Code-review regressions: NULL text rows and non-ASCII
-    whitespace behave identically in the operators and their SQL
-    twins (Java/RE2 \\s is ASCII-only; str.split() is not)."""
+    whitespace behave identically in language_id and its SQL twin (Java/RE2 \\s is ASCII-only; str.split() is not)."""
     import pandas as pd
+    from pyspark.sql import functions as F
+
     from ferenda_spark.operators import textops
     pdf = pd.DataFrame({
         "doc_id": [1, 2, 3],
         "text": [None, "foo bar baz", "plain words here"]})
     df = spark.createDataFrame(pdf, schema="doc_id long, text string")
     duck.register("nulldocs", pdf)
-    for op, osql in [
-            (textops.token_stats, textops.oracle_sql_token_stats),
-            (textops.quality_score, textops.oracle_sql_quality),
-            (textops.language_id, textops.oracle_sql_language_id),
-            (textops.fingerprint, textops.oracle_sql_fingerprint),
-            (lambda d: textops.top_ngrams(d, 2, 10),
-             lambda t: textops.oracle_sql_top_ngrams(t, 2, 10))]:
-        spdf = op(df).toPandas()
-        odf = duck.sql(osql("nulldocs")).df()
-        cols = sorted(spdf.columns)
-        a = (spdf[cols].astype(str).sort_values(by=cols)
-             .reset_index(drop=True))
-        b = (odf[cols].astype(str).sort_values(by=cols)
-             .reset_index(drop=True))
-        pd.testing.assert_frame_equal(a, b)
+    spdf = textops.language_id(df).toPandas()
+    odf = duck.sql(textops.oracle_sql_language_id("nulldocs")).df()
+    cols = sorted(spdf.columns)
+    a = (spdf[cols].astype(str).sort_values(by=cols)
+         .reset_index(drop=True))
+    b = (odf[cols].astype(str).sort_values(by=cols)
+         .reset_index(drop=True))
+    pd.testing.assert_frame_equal(a, b)
     # the U+00A0 word must stay ONE token (ASCII-only \s)
-    ts = {r.doc_id: r for r in textops.token_stats(df).collect()}
-    assert ts[2].n_words == 2 and ts[1].n_words == 0
+    n_words = {r.doc_id: r.n for r in df.select(
+        "doc_id", F.size(textops.words_col(F.col("text"))).alias("n"))
+        .collect()}
+    assert n_words[2] == 2 and n_words[1] == 0
 
 
 def test_line_dedup_semantics(spark):
@@ -704,93 +314,6 @@ def test_line_dedup_driver_parity(spark, duck):
     import __spark_entry__ as E
     assert_parity(E.queries()["dedup_lines"](spark, SF_DIR),
                   duck, E.oracle_sql()["dedup_lines"])
-
-
-def test_normalize_text_semantics(spark):
-    """Each NORM_STEPS rule fires and the fixed order composes: CRLF
-    unification feeds the newline rules, control/zero-width deletion,
-    NBSP/typography mapping, whitespace collapse, blank-line cap,
-    trim; clean text reports changed=false, delta 0."""
-    import pandas as pd
-    from ferenda_spark.operators.curation import normalize_text
-    rows = [
-        (1, "it’s “fine”", "it's \"fine\"", True),
-        (2, "a\r\nb\rc", "a\nb\nc", True),
-        (3, "x​y﻿z w", "xyz w", True),
-        (4, "a  \t b \n c\n\n\n\n\nd", "a b\nc\n\nd", True),
-        (5, " \n A — b… \n ", "A - b...", True),
-        (6, "a\x01b\x7fc", "abc", True),
-        (7, "plain text stays", "plain text stays", False),
-    ]
-    df = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [r[0] for r in rows],
-                      "text": [r[1] for r in rows]}),
-        schema="doc_id long, text string")
-    out = {r.doc_id: r for r in normalize_text(df).collect()}
-    for doc_id, raw, want, want_changed in rows:
-        assert out[doc_id].clean_text == want, doc_id
-        assert out[doc_id].changed is want_changed, doc_id
-        assert out[doc_id].n_chars_delta == len(raw) - len(want), doc_id
-
-
-def test_normalize_text_driver_parity(spark, duck):
-    """The driver query (deterministic mojibake injection + normalize)
-    against its DuckDB twin — the same pair the gate runs."""
-    import __spark_entry__ as E
-    assert_parity(E.queries()["normalize_text"](spark, SF_DIR),
-                  duck, E.oracle_sql()["normalize_text"])
-
-
-def test_url_stats_semantics(spark):
-    """Hosts are lower-cased and www-stripped, ports and paths don't
-    split domains, n_docs counts distinct documents, and text without
-    a scheme match contributes nothing."""
-    import pandas as pd
-    from ferenda_spark.operators.textops import url_stats
-    df = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [1, 2, 3, 4],
-                      "text": ["see https://www.Ex.COM/a and http://ex.com:8080/b?q=1",
-                               "again https://EX.com plus https://other.org/x",
-                               "bare ex.com is not a url; ftp://ex.com neither",
-                               None]}),
-        schema="doc_id long, text string")
-    out = {r.domain: r for r in url_stats(df).collect()}
-    assert set(out) == {"ex.com", "other.org"}
-    assert (out["ex.com"].n_urls, out["ex.com"].n_docs) == (3, 2)
-    assert (out["other.org"].n_urls, out["other.org"].n_docs) == (1, 1)
-
-
-def test_url_stats_driver_parity(spark, duck):
-    """The driver query (deterministic URL injection + census) against
-    its DuckDB twin — the same pair the gate runs."""
-    import __spark_entry__ as E
-    assert_parity(E.queries()["url_stats"](spark, SF_DIR),
-                  duck, E.oracle_sql()["url_stats"])
-
-
-def test_blocklist_filter_semantics(spark):
-    """Blocklist hits count per document (www-/case-normalized on both
-    sides), unlinked and clean documents survive with blocked=false."""
-    import pandas as pd
-    from ferenda_spark.operators.textops import domain_blocklist_filter
-    docs = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [1, 2, 3],
-                      "text": ["bad https://www.Evil.COM/x and https://evil.com/y",
-                               "fine https://good.org only",
-                               "no links at all"]}),
-        schema="doc_id long, text string")
-    bl = spark.createDataFrame([("WWW.evil.com",)], "domain string")
-    out = {r.doc_id: r for r in
-           domain_blocklist_filter(docs, bl).collect()}
-    assert (out[1].n_blocked_urls, out[1].blocked) == (2, True)
-    assert (out[2].n_blocked_urls, out[2].blocked) == (0, False)
-    assert (out[3].n_blocked_urls, out[3].blocked) == (0, False)
-
-
-def test_blocklist_filter_driver_parity(spark, duck):
-    import __spark_entry__ as E
-    assert_parity(E.queries()["blocklist_filter"](spark, SF_DIR),
-                  duck, E.oracle_sql()["blocklist_filter"])
 
 
 def test_duplicate_window_stats_semantics(spark):
@@ -827,100 +350,6 @@ def test_duplicate_window_driver_parity(spark, duck):
                   duck, E.oracle_sql()["dedup_windows"])
 
 
-def test_bpe_learn_merges_golden():
-    """Hand-traced Sennrich training on a toy vocabulary."""
-    from ferenda_spark.operators.bpe import END, learn_merges
-    merges = learn_merges([("abab", 2), ("ab", 3)], 10)
-    assert merges == [("a", "b"), ("ab", END), ("ab", "ab" + END)]
-    # tiebreak: equal counts pick the lexicographically smaller pair —
-    # "(a, </w>)" beats "(a, b)" because "<" sorts before "b"
-    merges = learn_merges([("ba", 2), ("ab", 2)], 1)
-    assert merges == [("a", END)]
-    # a pair must occur at least twice to merge
-    assert learn_merges([("xy", 1)], 5) == []
-
-
-def test_bpe_encode_word_golden():
-    from ferenda_spark.operators.bpe import END, encode_word
-    ranks = {("a", "b"): 0, ("ab", END): 1, ("ab", "ab" + END): 2}
-    assert encode_word("ababab", ranks) == ["ab", "abab" + END]
-    assert encode_word("ab", ranks) == ["ab" + END]
-    # untrained symbols stay as characters + end marker
-    assert encode_word("xy", ranks) == ["x", "y", END]
-
-
-def test_bpe_train_spark_equals_kernel(spark):
-    """The distributed census + cap feeding the driver loop gives the
-    same merge table as running the kernel on hand-counted words."""
-    from ferenda_spark.operators.bpe import bpe_train, learn_merges
-    rows = [("d%d" % i, "the cat sat on the mat the cat" )
-            for i in range(4)] + [("e", "wildcard words here")]
-    df = spark.createDataFrame(rows, "doc_id string, text string")
-    out = bpe_train(df, num_merges=8, min_count=1, max_vocab=100) \
-        .toPandas()
-    counts = {}
-    for _, t in rows:
-        for w in t.split():
-            counts[w] = counts.get(w, 0) + 1
-    expected = learn_merges(
-        sorted(counts.items(), key=lambda kv: (-kv[1], kv[0])), 8)
-    got = list(zip(out["lhs"], out["rhs"]))
-    assert got == expected
-    assert list(out["merge_rank"]) == list(range(len(expected)))
-
-
-def test_bpe_driver_parity(spark, duck):
-    import __spark_entry__ as E
-    from ferenda_spark import annoracle
-    ann = annoracle.ensure_ann_tables(SF_DIR)
-    assert_parity(E.queries()["bpe_train"](spark, SF_DIR), duck,
-                  annoracle.sql_bpe_train(ann))
-    assert_parity(E.queries()["bpe_encode"](spark, SF_DIR), duck,
-                  annoracle.sql_bpe_census(ann))
-
-
-def test_canonical_url_semantics(spark):
-    from ferenda_spark.operators.curation import canonical_url_col
-    from pyspark.sql import functions as F
-    cases = [
-        # full mess: case, www, default port, trailing slash,
-        # tracking params, unsorted params, fragment
-        ("HTTPS://WWW.Example.COM:443/a/B/?utm_source=x&z=1&a=2#frag",
-         "https://example.com/a/B?a=2&z=1"),
-        ("http://Example.com:80", "http://example.com"),
-        # non-default port survives; path case survives
-        ("http://example.com:8080/X", "http://example.com:8080/X"),
-        # ftp: unknown scheme keeps its port
-        ("ftp://Host.com:80/f", "ftp://host.com:80/f"),
-        ("https://a.com/p///", "https://a.com/p"),
-        # all params tracking → no '?' at all
-        ("https://a.com/p?utm_a=1&gclid=2", "https://a.com/p"),
-        # degenerate input degrades deterministically, never errors
-        ("not a url", "://"),
-    ]
-    df = spark.createDataFrame([(u,) for u, _ in cases], "url string")
-    got = [r["c"] for r in
-           df.select(canonical_url_col(F.col("url")).alias("c"))
-           .collect()]
-    assert got == [want for _, want in cases]
-
-
-def test_url_dedup_driver_parity(spark, duck):
-    import __spark_entry__ as E
-    assert_parity(E.queries()["url_dedup"](spark, SF_DIR), duck,
-                  E.oracle_sql()["url_dedup"])
-    # the injection actually produces duplicate clusters
-    out = E.queries()["url_dedup"](spark, SF_DIR).toPandas()
-    assert (out["dup_count"] > 1).any()
-    assert (~out["keep"]).any()
-    # exactly one representative per canonical url
-    reps = out[out["keep"]].groupby("canonical_url").size()
-    assert (reps == 1).all()
-    assert set(out[out["keep"]]
-               .groupby("canonical_url")["doc_id"].min()) == \
-        set(out[out["keep"]]["doc_id"])
-
-
 def test_related_docs_semantics(spark):
     from ferenda_spark.operators.textops import related_docs
     rows = [(1, "apple banana apple cherry"),
@@ -944,83 +373,6 @@ def test_related_docs_driver_parity(spark, duck):
     import __spark_entry__ as E
     assert_parity(E.queries()["related_docs"](spark, SF_DIR), duck,
                   E.oracle_sql()["related_docs"])
-
-
-def test_lm_perplexity_semantics(spark):
-    """Hand-computed Laplace bigram model: LM corpus 'a b a b c' gives
-    U(a)=2,U(b)=2,U(c)=1, V=3, B(a,b)=2,B(b,a)=1,B(b,c)=1."""
-    import math
-    import pandas as pd
-    from ferenda_spark.operators.curation import ngram_lm_perplexity
-    lm = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [10], "text": ["a b a b c"]}),
-        schema="doc_id long, text string")
-    corpus = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [1, 2, 3], "text": ["a b x", "z", ""]}),
-        schema="doc_id long, text string")
-    out = {r.doc_id: r for r in
-           ngram_lm_perplexity(corpus, lm).collect()}
-    r = out[1]
-    assert (r.n_words, r.n_oov, r.n_bigrams) == (3, 1, 2)
-    # (a,b): (2+1)/(2+3+1) = .5 → 1 bit; (b,x): (0+1)/(2+3+1) → log2 6
-    assert r.log2_ppl == round((1.0 + math.log2(6)) / 2, 6)
-    assert (out[2].n_words, out[2].n_oov, out[2].n_bigrams,
-            out[2].log2_ppl) == (1, 1, 0, None)
-    assert (out[3].n_words, out[3].n_oov, out[3].n_bigrams,
-            out[3].log2_ppl) == (0, 0, 0, None)
-
-
-def test_lm_perplexity_oracle_parity(spark, duck):
-    from ferenda_spark.operators import curation
-    from pyspark.sql import functions as F
-    d = docs(spark)
-    assert_parity(
-        curation.ngram_lm_perplexity(d, d.where(F.col("doc_id") % 2 == 0)),
-        duck, curation.oracle_sql_lm_perplexity(
-            "documents", "(SELECT * FROM documents WHERE doc_id % 2 = 0)"))
-
-
-def test_nb_classifier_hand_values(spark):
-    """Laplace NB on a 2-doc training set, hand-computed llr/oov."""
-    import math
-    import pandas as pd
-    from ferenda_spark.operators.curation import nb_quality_classifier
-    labeled = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [1, 2],
-                      "text": ["good fine", "bad awful bad"],
-                      "label": ["pos", "neg"]}),
-        schema="doc_id long, text string, label string")
-    corpus = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [10, 11, 12],
-                      "text": ["good new", "bad bad", ""]}),
-        schema="doc_id long, text string")
-    out = {r.doc_id: r for r in
-           nb_quality_classifier(corpus, labeled).collect()}
-    # tp=2 tn=3 v=4; prior=ln(1/1)=0
-    llr_good = math.log(2 / 7) - math.log(1 / 8)
-    llr_bad = math.log(1 / 7) - math.log(3 / 8)
-    oov = math.log(1 / 7) - math.log(1 / 8)
-    assert out[10].logit == round(llr_good + oov, 6)
-    assert out[10].pred  # good-ish
-    assert out[11].logit == round(2 * llr_bad, 6)
-    assert not out[11].pred
-    assert (out[12].n_words, out[12].logit, out[12].pred) == (0, 0.0,
-                                                              False)
-
-
-def test_nb_classifier_oracle_parity(spark, duck):
-    from ferenda_spark.operators import curation
-    from pyspark.sql import functions as F
-    d = docs(spark)
-    labeled = d.withColumn(
-        "label", F.when(F.col("doc_id") % 2 == 0, "pos")
-        .otherwise("neg"))
-    assert_parity(
-        curation.nb_quality_classifier(d, labeled),
-        duck, curation.oracle_sql_nb_classifier(
-            "documents",
-            "(SELECT *, CASE WHEN doc_id % 2 = 0 THEN 'pos' "
-            "ELSE 'neg' END AS label FROM documents)"))
 
 
 def test_anchor_text_stats_semantics(spark):
@@ -1053,37 +405,6 @@ def test_anchor_stats_driver_parity(spark, duck):
     assert len(hub) == 1 and hub.iloc[0]["top_anchor"] == "the hub"
     # the empty-anchor image link never appears
     assert not (out["target"] == "https://img.example.com/i.png").any()
-
-
-def test_boilerplate_filter_semantics(spark):
-    from ferenda_spark.operators.curation import boilerplate_filter
-    prose = ("The committee met at the old mill by the river and "
-             "agreed on the plan for the report.")
-    nav = ('Home | <a href="/a">About us page</a> '
-           '<a href="/b">Contact form</a> <a href="/c">Login now</a>')
-    docs = spark.createDataFrame(
-        [(1, prose + "\n\n" + nav + "\n\nShort one\n\n" + prose),
-         (2, nav), (3, ""), (4, None)],
-        "doc_id int, text string")
-    out = {r["doc_id"]: r for r in boilerplate_filter(docs).collect()}
-    r1 = out[1]
-    # link-farm nav (link density) and the short fragment both drop
-    assert r1["n_paras"] == 4 and r1["n_kept"] == 2
-    assert r1["main_text"] == prose + "\n\n" + prose
-    assert out[2]["n_kept"] == 0 and out[2]["main_text"] == ""
-    assert out[3]["n_paras"] == 0 and out[4]["n_paras"] == 0
-
-
-def test_boilerplate_driver_parity(spark, duck):
-    import __spark_entry__ as E
-    assert_parity(E.queries()["boilerplate_filter"](spark, SF_DIR), duck,
-                  E.oracle_sql()["boilerplate_filter"])
-    out = E.queries()["boilerplate_filter"](spark, SF_DIR).toPandas()
-    # every doc keeps the planted prose paragraph; nav/short drop
-    assert (out["n_kept"] >= 1).all()
-    assert (out["n_paras"] > out["n_kept"]).any()
-    assert out["main_text"].str.contains("committee met at the old "
-                                         "mill").all()
 
 
 def test_page_metadata_semantics(spark):
@@ -1157,29 +478,6 @@ def test_dedup_delta_driver_parity(spark, duck):
     assert (~novel["is_dup"]).all()
 
 
-def test_chunk_documents_windows(spark):
-    from ferenda_spark.operators.packing import chunk_documents
-    import pytest as _pytest
-    docs = spark.createDataFrame(
-        [(1, "w0 w1 w2 w3 w4 w5 w6"),   # 7 words
-         (2, "a b"),                    # fits one window
-         (3, ""), (4, None)],           # emit nothing
-        "doc_id long, text string")
-    got = {(r["doc_id"], r["chunk_id"]):
-           (r["start_word"], r["n_words"], r["chunk_text"])
-           for r in chunk_documents(docs, size=4, stride=2).collect()}
-    # starts 0,2,4 for doc 1: 1 + ceil((7-4)/2) = 3 chunks
-    assert got[(1, 0)] == (0, 4, "w0 w1 w2 w3")
-    assert got[(1, 1)] == (2, 4, "w2 w3 w4 w5")
-    assert got[(1, 2)] == (4, 3, "w4 w5 w6")       # short tail
-    assert got[(2, 0)] == (0, 2, "a b")
-    assert {d for d, _ in got} == {1, 2}
-    # overlap: consecutive windows share size - stride words
-    assert got[(1, 0)][2].split()[2:] == got[(1, 1)][2].split()[:2]
-    with _pytest.raises(ValueError):
-        chunk_documents(docs, size=4, stride=5)
-
-
 def test_completeness_report_grid(spark):
     from ferenda_spark.namespaces import RDF_TYPE
     from ferenda_spark.operators.validate import completeness_report
@@ -1230,18 +528,3 @@ def test_containment_prefix_filter_complete(spark, duck):
                   oracle_sql_containment(threshold=0.5))
 
 
-def test_curriculum_order_parity_and_shape(spark, duck):
-    from ferenda_spark.operators.sampling import (curriculum_order,
-                                                  oracle_sql_curriculum)
-    out = curriculum_order(docs(spark))
-    assert_parity(out, duck, oracle_sql_curriculum())
-    rows = out.collect()
-    # every doc exactly once; buckets quantile-balanced (within 2x);
-    # mixed_pos unique (a total interleave)
-    n = docs(spark).count()
-    assert len(rows) == n
-    from collections import Counter
-    sizes = Counter(r["bucket"] for r in rows)
-    assert set(sizes) == {1, 2, 3, 4}
-    assert max(sizes.values()) <= 2 * min(sizes.values())
-    assert len({r["mixed_pos"] for r in rows}) == n
