@@ -2607,14 +2607,18 @@ class _Scope:
     - ``bind`` ((Expr, var));
     - ``optional`` (body _Scope), then the deferred ``bind`` steps;
     - ``exists`` ((positive, body _Scope, loose keys)), ``minus``
-      (body _Scope; dropped when the domains are disjoint), ``filter``
-      (Expr).
+      ((body _Scope, loose keys); dropped when the domains are
+      disjoint), ``filter`` (Expr).
 
     ``vars`` are the variables in scope after the group, in column
     order; ``maybe`` are those of them a solution may leave unbound
     (bound only by an OPTIONAL or by some UNION branches). An exists
     step's loose keys are its keys in ``maybe``: an unbound key is
-    compatible with any value, so they join null-tolerantly. A UNION
+    compatible with any value, so they join null-tolerantly. A minus
+    step's loose keys are its keys either side may leave unbound; they
+    match null-tolerantly on both sides, and when every key is loose
+    a solution is removed only if some key is bound on both sides
+    (§8.3: solutions with disjoint domains remove nothing). A UNION
     — a WHERE block or a UNION-bodied OPTIONAL / EXISTS — is a _Scope
     whose ``alts`` are the branch scopes and whose ``vars`` are their
     aligned (NULL-padded) union."""
@@ -2701,8 +2705,10 @@ def _scope(g: Group) -> _Scope:
         step("exists", (positive, body, loose), body.vars, body=body)
     for mg in g.minus:
         body = _scope(mg)
-        if bound.keys() & set(body.vars):   # disjoint: removes nothing
-            step("minus", body, body.vars)
+        shared = bound.keys() & set(body.vars)
+        if shared:                          # disjoint: removes nothing
+            loose = (sc.maybe | body.maybe) & shared
+            step("minus", (body, loose), body.vars)
     for f in g.filters:
         step("filter", f)
     sc.vars = list(bound)
@@ -2960,22 +2966,29 @@ def compile_spark(triples: DataFrame, query: Query | str) -> DataFrame:
                                  for var in varcols}
 
     def join(plan, cols, df, dcols, keys, how="inner", undef=False,
-             loose=()):
+             loose=(), minus=False):
         """Join ``df`` onto a group's plan on the scoping pass's keys
         (an UNDEF-tolerant condition for VALUES, a null-tolerant one
-        on the plan's ``loose`` keys); the left side keeps its column
-        for a shared variable."""
+        on the plan's ``loose`` keys — on both sides for a ``minus``);
+        the left side keeps its column for a shared variable."""
         if plan is None:
             plan = df
         else:
             cond = None
             for v in keys:
                 c = F.col(cols[v]) == F.col(dcols[v])
-                if undef:
+                if undef or (minus and v in loose):
                     c = F.col(dcols[v]).isNull() | c
                 if v in loose:
                     c = F.col(cols[v]).isNull() | c
                 cond = c if cond is None else (cond & c)
+            if minus and set(keys) <= set(loose):
+                shared = None
+                for v in keys:
+                    b = F.col(cols[v]).isNotNull() & \
+                        F.col(dcols[v]).isNotNull()
+                    shared = b if shared is None else (shared | b)
+                cond = cond & shared
             if cond is None and how == "inner":
                 plan = plan.crossJoin(df)
             else:
@@ -3071,8 +3084,9 @@ def compile_spark(triples: DataFrame, query: Query | str) -> DataFrame:
                             "left_semi" if positive else "left_anti",
                             loose=loose)
             elif op == "minus":
-                plan = join(plan, cols, *compile_group(arg), keys,
-                            "left_anti")
+                body, loose = arg
+                plan = join(plan, cols, *compile_group(body), keys,
+                            "left_anti", loose=loose, minus=True)
             else:   # filter
                 plan = plan.filter(arg.spark(colenv(cols)))
         return plan, cols
@@ -3464,7 +3478,9 @@ def compile_sql(table_sql: str, query: Query | str) -> str:
                                        exists_sql(body, keys, cols,
                                                   loose)))
             elif op == "minus":
-                conds.append("NOT " + exists_sql(arg, keys, cols))
+                body, loose = arg
+                conds.append("NOT " + exists_sql(body, keys, cols, loose,
+                                                 minus=True))
             else:   # filter
                 conds.append(arg.sql(sqlenv(cols)))
         return cols, parts, conds
@@ -3486,14 +3502,27 @@ def compile_sql(table_sql: str, query: Query | str) -> str:
                 + (["WHERE " + " AND ".join(conds)] if conds else [])))
         return out, " UNION ALL ".join(selects), al
 
-    def exists_sql(body: _Scope, keys, outer_cols, loose=()) -> str:
+    def exists_sql(body: _Scope, keys, outer_cols, loose=(),
+                   minus=False) -> str:
         """EXISTS over a scoped group, correlated on the keys (an
-        unbound outer value matches any for the ``loose`` ones)."""
+        unbound outer value matches any for the ``loose`` ones; for a
+        ``minus`` an unbound body value too, and some key must be bound
+        on both sides when all are loose)."""
         ocols, inner, al = body_select(body)
-        eqs = {v: "%s = %s" % (ocols[v], outer_cols[v]) for v in keys}
-        corr = " AND ".join(
-            "(%s IS NULL OR %s)" % (outer_cols[v], eqs[v]) if v in loose
-            else eqs[v] for v in keys)
+
+        def eq(v):
+            c = "%s = %s" % (ocols[v], outer_cols[v])
+            if v not in loose:
+                return c
+            nulls = [outer_cols[v]] + ([ocols[v]] if minus else [])
+            return "(%s)" % " OR ".join(
+                ["%s IS NULL" % n for n in nulls] + [c])
+        corr = [eq(v) for v in keys]
+        if minus and set(keys) <= set(loose):
+            corr.append("(%s)" % " OR ".join(
+                "(%s IS NOT NULL AND %s IS NOT NULL)"
+                % (outer_cols[v], ocols[v]) for v in keys))
+        corr = " AND ".join(corr)
         return "EXISTS (SELECT 1 FROM (%s) %s%s)" % (
             inner, al, (" WHERE " + corr) if corr else "")
 

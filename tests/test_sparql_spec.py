@@ -155,6 +155,31 @@ def test_minus_vs_not_exists_disjoint(graph):
         }""", [("p2",)])
 
 
+# §8.3: MINUS removes a solution when some body solution is compatible
+# with it (an unbound variable, on either side, is compatible with
+# anything) and their domains share a variable; a solution whose shared
+# variables are all unbound keeps its disjoint domain
+
+def test_minus_on_possibly_unbound_key(graph):
+    check(graph, """
+        SELECT ?s WHERE {
+          ?s a foaf:Document
+          OPTIONAL { ?s dct:publisher ?p }
+          MINUS { ?s dct:title ?t . ?p a foaf:Organization }
+        }""", [])
+    check(graph, """
+        SELECT ?s ?p WHERE {
+          ?s dct:publisher ?p
+          MINUS { ?s dct:title ?t OPTIONAL { ?s dct:isPartOf ?p } }
+        }""", [("d3", "p2")])
+    check(graph, """
+        SELECT ?s WHERE {
+          ?s a foaf:Document
+          OPTIONAL { ?s dct:publisher ?p }
+          MINUS { ?p a foaf:Organization }
+        }""", [("d2",)])
+
+
 # §15.1: an unbound value sorts lowest — first ascending, last
 # descending
 
