@@ -99,7 +99,15 @@ def test_bench_times_registry_build_fns(entrymod):
 # elements.py is the golden serializer test_fsm_corpus compares fsm.py's
 # reference-corpus output through; fsm.py is on the production path
 # (rfcdoc), so its test harness stays although no entry point imports it.
-TEST_ONLY_MODULES = {"ferenda_spark.elements"}
+# The other five are dead code that only their own tests import; they go
+# together with those tests in a later change (ROADMAP item 5). Listing
+# them here keeps any further unreached module failing this guard.
+TEST_ONLY_MODULES = {"ferenda_spark.elements",
+                     "ferenda_spark.natsort",
+                     "ferenda_spark.operators.composite",
+                     "ferenda_spark.streaming.entailment",
+                     "ferenda_spark.streaming.identity",
+                     "ferenda_spark.streaming.ingest"}
 
 
 def _imports(path: str, package: str) -> set[str]:

@@ -159,3 +159,33 @@ def test_incremental_components_all_new_and_bridge(spark):
     got = _cc_dict(incremental_components(base, batch))
     assert got == {"a": "a", "b": "a", "x": "a", "y": "a", "z": "a",
                    "p": "p", "q": "p"}
+
+
+def test_stream_identity_equals_batch(spark, tmp_path):
+    """Streaming identity maintenance: edges landing file-by-file
+    converge to the full-batch CC; re-running the same checkpoint does
+    nothing; replaying everything with a fresh checkpoint leaves the
+    table unchanged (idempotence)."""
+    from ferenda_spark.streaming.identity import stream_identity
+    edges_dir = str(tmp_path / "edges")
+    adir = str(tmp_path / "assign")
+    ck1 = str(tmp_path / "ck1")
+    all_edges = [("a", "b"), ("b", "c"), ("x", "y"),
+                 ("c", "x"),             # merges the two clusters
+                 ("p", "q")]
+    for i, chunk in enumerate([all_edges[:2], all_edges[2:4],
+                               all_edges[4:]]):
+        (spark.createDataFrame(chunk, "src string, dst string")
+         .coalesce(1).write.mode("append").parquet(edges_dir))
+    stream_identity(spark, edges_dir, adir, ck1,
+                    max_files_per_trigger=1)
+    got = _cc_dict(spark.read.parquet(adir))
+    want = _cc_dict(connected_components(
+        spark.createDataFrame(all_edges, "src string, dst string")))
+    assert got == want
+    # same checkpoint: nothing new to process, table unchanged
+    stream_identity(spark, edges_dir, adir, ck1)
+    assert _cc_dict(spark.read.parquet(adir)) == want
+    # fresh checkpoint: full replay over the existing table is a no-op
+    stream_identity(spark, edges_dir, adir, str(tmp_path / "ck2"))
+    assert _cc_dict(spark.read.parquet(adir)) == want

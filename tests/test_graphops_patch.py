@@ -1,9 +1,25 @@
-"""Citation-graph analytics and pre-parse patching."""
+"""Citation-graph analytics, natural sort, and pre-parse patching."""
 
 import pytest
 from pyspark.sql import functions as F
 
+from ferenda_spark.natsort import numcmp_key, ordinal_sortkey, split_numalpha
 from ferenda_spark.patch import apply_unified_diff, maybe_rot13, patch_text
+
+
+def test_split_numalpha_reference_parity():
+    assert split_numalpha("10 a §") == ["", 10, " a §"]
+    assert sorted(["2", "10", "1"], key=numcmp_key) == ["1", "2", "10"]
+    assert sorted(["1.9", "1.10", "1.2"], key=numcmp_key) == \
+        ["1.2", "1.9", "1.10"]
+
+
+def test_ordinal_sortkey_native(spark):
+    df = spark.createDataFrame([("1.10",), ("1.9",), ("2",), ("1.2.3",)],
+                               ["ordinal"])
+    got = [r["ordinal"] for r in
+           df.orderBy(ordinal_sortkey(F.col("ordinal"))).collect()]
+    assert got == ["1.2.3", "1.9", "1.10", "2"]
 
 
 DIFF = """--- a

@@ -1,4 +1,4 @@
-"""Lineage, incremental skip, kill/resume and triple-table merges."""
+"""Lineage, incremental skip, kill/resume, and streaming ingestion."""
 
 import os
 
@@ -134,6 +134,33 @@ def test_sparql_scan_pushes_predicate_into_sorted_files(spark, pages,
         keys = list(zip(t["predicate"].to_pylist(),
                         t["subject"].to_pylist()))
         assert keys == sorted(keys), f
+
+
+def test_watermark_incremental(spark, pages, tmp_path):
+    from ferenda_spark.streaming.ingest import (incremental_extract,
+                                                read_watermark,
+                                                write_watermark)
+    wm = str(tmp_path / "wm")
+    out1 = incremental_extract(spark, pages, wm)
+    assert out1.count() == pages.count()
+    write_watermark(spark, pages, wm)
+    assert read_watermark(spark, wm) is not None
+    out2 = incremental_extract(spark, pages, wm)
+    assert out2.count() == 0  # nothing newer than the watermark
+
+
+def test_stream_extract_checkpoint(spark, pages, tmp_path):
+    from ferenda_spark.streaming.ingest import stream_extract
+    src = str(tmp_path / "pages")
+    out = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+    pages.write.parquet(src)
+    stream_extract(spark, src, out, ckpt)
+    n1 = spark.read.parquet(out).count()
+    assert n1 == pages.count()
+    # restart with same checkpoint: no files reprocessed, no dup rows
+    stream_extract(spark, src, out, ckpt)
+    assert spark.read.parquet(out).count() == n1
 
 
 def test_prov_triples_golden(spark):

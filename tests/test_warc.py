@@ -127,6 +127,40 @@ def test_latest_captures_picks_newest_with_stable_ties(spark):
     assert two.where(two["surt"] == "example,a)/x").count() == 2
 
 
+def test_stream_warc_ingest_matches_batch_and_resumes(spark, tmp_path):
+    import pandas as pd
+
+    from ferenda_spark.operators.warc import warc_records
+    from ferenda_spark.streaming.ingest import stream_warc_ingest
+    blobs_dir = str(tmp_path / "blobs")
+    (tmp_path / "blobs").mkdir()
+    out = str(tmp_path / "records")
+    ckpt = str(tmp_path / "ckpt")
+    rows = []
+    for i in range(4):
+        blob = (build_response("https://a.example/%d" % i,
+                               "2026-01-01T00:00:0%dZ" % i,
+                               b"body-%d" % i) +
+                build_record("metadata", None, "2026-01-01T00:00:00Z",
+                             b"m", "application/warc-fields"))
+        rows.append((i, blob))
+    # two files → two checkpointable source units
+    for half, name in ((rows[:2], "a"), (rows[2:], "b")):
+        pd.DataFrame(half, columns=["blob_id", "warc"]).to_parquet(
+            "%s/%s.parquet" % (blobs_dir, name))
+    stream_warc_ingest(spark, blobs_dir, out, ckpt)
+    got = spark.read.parquet(out)
+    batch = warc_records(spark.createDataFrame(
+        [(i, bytearray(b)) for i, b in rows],
+        "blob_id long, warc binary"))
+    key = ["blob_id", "offset", "rec_type", "url", "warc_date"]
+    assert sorted(map(tuple, got.select(*key).collect())) == \
+        sorted(map(tuple, batch.select(*key).collect()))
+    # re-run against the same checkpoint: nothing reprocessed
+    stream_warc_ingest(spark, blobs_dir, out, ckpt)
+    assert spark.read.parquet(out).count() == got.count()
+
+
 def test_revisit_stats_digest_semantics(spark):
     from ferenda_spark.operators.warc import revisit_stats
     rows = [
