@@ -3,41 +3,47 @@
 The reference's annotation query uses a SPARQL property path
 ``?s dcterms:isPartOf* <uri>`` (ref res/sparql/annotations.rq:12-17,
 driver ferenda/documentrepository.py:2557-2612). Both iterative
-variants run to FIXPOINT by default — the same semantics as the SQL
-twin's recursive CTE, so the three codepaths (all-pairs closure,
-seeded BFS, DuckDB oracle) can never diverge on deep chains. The loop
-terminates because the frontier is anti-joined against everything
-seen: pair/node sets grow strictly, bounded by |V|² / |V|.
-``max_depth`` remains available as an explicit bound for callers that
-want one (bounded SPARQL quantifiers pass their own n).
+forms — the all-pairs closure and the seeded BFS — run to FIXPOINT,
+the same semantics as the SQL twin's recursive CTE, so they and the
+DuckDB oracle can never diverge on deep chains. The loop terminates
+because the frontier is anti-joined against everything seen: pair/node
+sets grow strictly, bounded by |V|² / |V|. Bounded SPARQL quantifiers
+(``p{m,n}``) do not come here: sparql.py unrolls their n rounds itself.
 """
 
 from __future__ import annotations
 
-import itertools
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
 def transitive_closure(edges: DataFrame, src: str = "src", dst: str = "dst",
-                       max_depth: int | None = None) -> DataFrame:
-    """edges(src,dst) → all (src,dst) pairs reachable in 1..max_depth
-    hops (reflexive pairs excluded); ``max_depth=None`` = fixpoint."""
-    base = (edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+                       keys: Sequence[str] = ()) -> DataFrame:
+    """edges(*keys, src, dst) → all (*keys, a, b) pairs reachable in 1+
+    hops, reflexive pairs excluded. A path never crosses a ``keys``
+    value: one closure per key (per named graph under GRAPH ?var, per
+    predicate in owl_materialize), all keys in one shared iteration
+    joined on (key, node) rather than one job per key — so small
+    per-key pair sets make the uniform join keys the skew defense."""
+    base = (edges.select(*keys, F.col(src).alias("a"), F.col(dst).alias("b"))
             .where(F.col("a") != F.col("b")).distinct()
             .localCheckpoint(eager=True))
+    cond = F.col("p.b") == F.col("e.a")
+    for k in keys:
+        cond = cond & (F.col("p." + k) == F.col("e." + k))
     paths = base
     frontier = base
-    rounds = itertools.count() if max_depth is None else range(max_depth - 1)
-    for _ in rounds:
+    while True:
         nxt = (frontier.alias("p")
-               .join(base.alias("e"), F.col("p.b") == F.col("e.a"))
-               .select(F.col("p.a").alias("a"), F.col("e.b").alias("b"))
+               .join(base.alias("e"), cond)
+               .select(*[F.col("p." + k).alias(k) for k in keys],
+                       F.col("p.a").alias("a"), F.col("e.b").alias("b"))
                .where(F.col("a") != F.col("b"))
                .distinct()
                .localCheckpoint(eager=True))
-        frontier = (nxt.join(paths, ["a", "b"], "left_anti")
+        frontier = (nxt.join(paths, [*keys, "a", "b"], "left_anti")
                     .localCheckpoint(eager=True))
         if frontier.isEmpty():
             break
@@ -57,13 +63,11 @@ def ispartof_closure(triples: DataFrame) -> DataFrame:
 
 
 def reachable_nodes(edges: DataFrame, start: str, reverse: bool = False,
-                    src: str = "src", dst: str = "dst",
-                    max_depth: int | None = None) -> DataFrame:
+                    src: str = "src", dst: str = "dst") -> DataFrame:
     """Single-column (n) DataFrame: nodes reachable FROM ``start`` in
-    1..max_depth hops — or nodes that can REACH it when ``reverse``;
-    ``max_depth=None`` = fixpoint (same depth semantics as
-    :func:`transitive_closure`, so the seeded/all-pairs hybrid switch
-    in sparql.py cannot change query results).
+    1+ hops — or nodes that can REACH it when ``reverse`` (same depth
+    semantics as :func:`transitive_closure`, so the seeded/all-pairs
+    hybrid switch in sparql.py cannot change query results).
 
     The seeded twin of :func:`transitive_closure` for property paths
     with one constant endpoint (``?s dcterms:references+ <uri>`` — the
@@ -78,8 +82,7 @@ def reachable_nodes(edges: DataFrame, start: str, reverse: bool = False,
         .localCheckpoint(eager=True)
     seen = frontier
     out = None
-    rounds = itertools.count() if max_depth is None else range(max_depth)
-    for _ in rounds:
+    while True:
         nxt = (base.join(F.broadcast(frontier),
                          base["s"] == frontier["n"])
                .select(F.col("d").alias("n")).distinct()
@@ -96,38 +99,3 @@ def reachable_nodes(edges: DataFrame, start: str, reverse: bool = False,
     # cycle's re-reach is anti-joined away before entering out —
     # matching transitive_closure's reflexive-pair exclusion
     return out.distinct()
-
-
-def grouped_transitive_closure(edges: DataFrame, group: str = "g",
-                               src: str = "src", dst: str = "dst"
-                               ) -> DataFrame:
-    """Per-group transitive closure to fixpoint: edges (group, src,
-    dst) → all (group, a, b) pairs reachable within ONE group — the
-    GRAPH ?var property-path semantics (one closure per named graph,
-    computed in a single shared iteration keyed on (group, node)
-    rather than one job per graph). Same fixpoint/termination argument
-    as :func:`transitive_closure`; per-document graphs keep each
-    group's pair set tiny, so the uniform (group, node) join keys are
-    the skew defense."""
-    base = (edges.select(F.col(group).alias("g"), F.col(src).alias("a"),
-                         F.col(dst).alias("b"))
-            .where(F.col("a") != F.col("b")).distinct()
-            .localCheckpoint(eager=True))
-    paths = base
-    frontier = base
-    while True:
-        nxt = (frontier.alias("p")
-               .join(base.alias("e"),
-                     (F.col("p.b") == F.col("e.a")) &
-                     (F.col("p.g") == F.col("e.g")))
-               .select(F.col("p.g").alias("g"), F.col("p.a").alias("a"),
-                       F.col("e.b").alias("b"))
-               .where(F.col("a") != F.col("b"))
-               .distinct()
-               .localCheckpoint(eager=True))
-        frontier = (nxt.join(paths, ["g", "a", "b"], "left_anti")
-                    .localCheckpoint(eager=True))
-        if frontier.isEmpty():
-            break
-        paths = paths.union(frontier).localCheckpoint(eager=True)
-    return paths.distinct()

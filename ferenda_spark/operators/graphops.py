@@ -14,12 +14,11 @@ GraphFrames dependency:
 
 Scale notes: every iteration shuffles contributions keyed by dst —
 uniform unless the citation graph has hubs, which AQE skew-split
-handles. Small graphs (≤ driver_threshold edges) iterate in numpy on
-the driver (max_iter rounds); the distributed branch — the
-load-bearing path at 100× — caps at 6 rounds (geometric convergence;
-ranking-stable) and resets lineage with a disk checkpoint every 3rd
-round (iter_checkpoint), keeping per-round wall time flat for
-arbitrarily many rounds.
+handles. Small graphs (≤ ``DRIVER_THRESHOLD`` edges) iterate in numpy
+on the driver; the distributed branch — the load-bearing path at
+100× — runs the same max_iter rounds and resets lineage with a disk
+checkpoint every 3rd round (iter_checkpoint), keeping per-round wall
+time flat for arbitrarily many rounds.
 """
 
 from __future__ import annotations
@@ -28,6 +27,11 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 DCTERMS_REFERENCES = "http://purl.org/dc/terms/references"
+
+# edges; at or below, every hybrid operator here (pagerank, hits,
+# kcore, bfs, scc, sssp, …) solves on the driver, above it the
+# distributed iteration; per-call ``driver_threshold`` overrides it
+DRIVER_THRESHOLD = 2_000_000
 
 
 def citation_edges(triples: DataFrame,
@@ -55,8 +59,7 @@ def degrees(edges: DataFrame) -> DataFrame:
 
 def pagerank(edges: DataFrame, damping: float = 0.85,
              max_iter: int = 15, round_to: int = 6,
-             driver_threshold: int = 2_000_000,
-             distributed_iter: int | None = None,
+             driver_threshold: int = DRIVER_THRESHOLD,
              init_ranks: DataFrame | None = None) -> DataFrame:
     """→ (node, rank) over the directed edge set, power iteration.
 
@@ -70,10 +73,7 @@ def pagerank(edges: DataFrame, damping: float = 0.85,
     so results agree with each other and with the unrolled oracle
     regardless of which branch a corpus lands in; per-round wall time
     stays flat past the localCheckpoint lineage ceiling via
-    iter_checkpoint (tests/test_iterative_scale.py). Pass
-    ``distributed_iter`` to cap distributed rounds lower for
-    bench-only runs (PR converges geometrically; 6 is
-    ranking-stable).
+    iter_checkpoint (tests/test_iterative_scale.py).
 
     ``init_ranks`` (node, rank) warm-starts the iteration — the
     incremental-maintenance lever when the graph GROWS between
@@ -135,8 +135,7 @@ def pagerank(edges: DataFrame, damping: float = 0.85,
                      "node", F.col("rank").alias("_ir")), "node", "left")
                  .select("node", F.coalesce("_ir", F.lit(1.0))
                          .alias("rank")))
-    for i in range(min(max_iter, distributed_iter)
-                   if distributed_iter else max_iter):
+    for i in range(max_iter):
         contribs = (ed.join(ranks.withColumnRenamed("node", "src"), "src")
                     .select(F.col("dst").alias("node"),
                             (F.col("rank") / F.col("out_degree"))
@@ -160,12 +159,8 @@ def pagerank(edges: DataFrame, damping: float = 0.85,
                 .orderBy(F.desc("rank"), "node")
 
 
-HITS_DRIVER_THRESHOLD = 2_000_000  # edges; below → numpy on the driver
-
-
 def hits(edges: DataFrame, max_iter: int = 15, round_to: int = 6,
-         driver_threshold: int = HITS_DRIVER_THRESHOLD,
-         distributed_iter: int | None = None) -> DataFrame:
+         driver_threshold: int = DRIVER_THRESHOLD) -> DataFrame:
     """→ (node, hub, authority), classic HITS power iteration with L2
     normalization per round (the reference computes it via networkx on
     the driver, ref graphanalyze.py:412-560).
@@ -176,8 +171,7 @@ def hits(edges: DataFrame, max_iter: int = 15, round_to: int = 6,
     ops; milliseconds); above it, the join-based iteration, also at
     full ``max_iter`` rounds (flat per-round cost via iter_checkpoint's
     periodic disk reset) so both branches agree with the unrolled
-    oracle. ``distributed_iter`` caps distributed rounds for bench-only
-    runs (HITS converges geometrically; 6 is ranking-stable)."""
+    oracle."""
     E = edges.select("src", "dst").distinct()
     n_edges = E.limit(driver_threshold + 1).count()
     spark = edges.sparkSession
@@ -220,8 +214,7 @@ def hits(edges: DataFrame, max_iter: int = 15, round_to: int = 6,
                 .drop("_n"))
 
     from .util import iter_checkpoint
-    for i in range(min(max_iter, distributed_iter)
-                   if distributed_iter else max_iter):
+    for i in range(max_iter):
         auth = (ed.join(scores.select(F.col("node").alias("src"), "hub"),
                         "src")
                 .groupBy(F.col("dst").alias("node"))
@@ -556,7 +549,7 @@ def host_graph(edges: DataFrame, src_col: str = "src",
 def personalized_pagerank(edges: DataFrame, seeds: DataFrame,
                           damping: float = 0.85, max_iter: int = 15,
                           round_to: int = 6,
-                          driver_threshold: int = 2_000_000
+                          driver_threshold: int = DRIVER_THRESHOLD
                           ) -> DataFrame:
     """→ (node, rank): PageRank with the teleport biased to a seed
     set — entity importance *relative to* a topic/domain/document
@@ -811,12 +804,11 @@ def adamic_adar(edges: DataFrame, min_score: float = 0.0,
 # same superset).  Real web/citation graphs converge in a handful of
 # rounds — the driver parity run would surface a corpus that doesn't.
 KCORE_ROUNDS = 24
-KCORE_DRIVER_THRESHOLD = 2_000_000  # edges; below -> plain-Python peel
 
 
 def kcore(edges: DataFrame, k: int = 2,
           rounds: int = KCORE_ROUNDS,
-          driver_threshold: int = KCORE_DRIVER_THRESHOLD) -> DataFrame:
+          driver_threshold: int = DRIVER_THRESHOLD) -> DataFrame:
     """Directed edges → (node, core_deg): the k-core of the undirected
     simple graph — the maximal subgraph where every node keeps degree
     ≥ k — with each surviving node's degree inside the core. The
@@ -1013,12 +1005,11 @@ def characteristic_sets(triples: DataFrame) -> DataFrame:
 # rationale as KCORE_ROUNDS: both engines bound the expansion at the
 # same depth, so they agree by construction on any graph.
 BFS_ROUNDS = 32
-BFS_DRIVER_THRESHOLD = 2_000_000  # edges; below -> plain-Python BFS
 
 
 def bfs_distances(edges: DataFrame, seeds: DataFrame,
                   rounds: int = BFS_ROUNDS,
-                  driver_threshold: int = BFS_DRIVER_THRESHOLD
+                  driver_threshold: int = DRIVER_THRESHOLD
                   ) -> DataFrame:
     """(src, dst) directed edges + seeds(node) → (node, dist): the
     hop count from the NEAREST seed, multi-source BFS — "how far is
@@ -1225,7 +1216,8 @@ def entity_summaries(triples: DataFrame, k: int = 3,
 
 def weighted_pagerank(edges: DataFrame, damping: float = 0.85,
                       max_iter: int = 15, round_to: int = 6,
-                      driver_threshold: int = 2_000_000) -> DataFrame:
+                      driver_threshold: int = DRIVER_THRESHOLD
+                      ) -> DataFrame:
     """(src, dst, weight) → (node, rank): PageRank where each node
     splits its rank over out-edges IN PROPORTION TO EDGE WEIGHT
     (contrib = PR(u)·w_uv/W_u, W_u = Σ_v w_uv) — the correct domain
@@ -1307,9 +1299,6 @@ def weighted_pagerank(edges: DataFrame, damping: float = 0.85,
                 .orderBy(F.desc("rank"), "node")
 
 
-SCC_DRIVER_THRESHOLD = 2_000_000  # edges; below → Tarjan on the driver
-
-
 def _driver_scc(spark, pairs):
     """Iterative Tarjan (1972) over collected (src, dst) pairs →
     (node, scc_id) rows, scc_id = lexicographic min member."""
@@ -1367,7 +1356,7 @@ def _driver_scc(spark, pairs):
 
 
 def scc(edges: DataFrame,
-        driver_threshold: int = SCC_DRIVER_THRESHOLD,
+        driver_threshold: int = DRIVER_THRESHOLD,
         max_rounds: int = 64) -> DataFrame:
     """(src, dst) directed edges → (node, scc_id): strongly connected
     components, scc_id = lexicographic min member of the component.
@@ -1824,12 +1813,9 @@ def sql_anf_centrality(edges_sql: str, rounds: int = 6, p: int = 5,
     ORDER BY est0.node""")
 
 
-SSSP_DRIVER_THRESHOLD = 2_000_000
-
-
 def weighted_sssp(edges: DataFrame, seeds: DataFrame,
                   rounds: int = 16,
-                  driver_threshold: int = SSSP_DRIVER_THRESHOLD
+                  driver_threshold: int = DRIVER_THRESHOLD
                   ) -> DataFrame:
     """(src, dst, w) weighted directed edges + seeds(node) →
     (node, dist): minimum path cost from the NEAREST seed over paths
@@ -1930,7 +1916,7 @@ def sql_weighted_sssp(edges_sql: str, seeds_sql: str,
 
 def condensation(edges: DataFrame, rounds: int = 32,
                  scc_assign: DataFrame | None = None,
-                 driver_threshold: int = SCC_DRIVER_THRESHOLD
+                 driver_threshold: int = DRIVER_THRESHOLD
                  ) -> DataFrame:
     """→ (component, level, n_members): the condensation DAG of the
     directed graph — every SCC contracted to one node (id = the SCC's

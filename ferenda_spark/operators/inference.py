@@ -518,10 +518,10 @@ def owl_materialize(triples: DataFrame,
     — so nothing new can feed back. Schema is ontology-sized: the
     rule tables broadcast; the per-predicate closure runs as ONE
     shared (predicate, node)-keyed iteration
-    (graph/closure.grouped_transitive_closure), not one job per
-    predicate.
+    (graph/closure.transitive_closure keyed on the predicate), not one
+    job per predicate.
     """
-    from ..graph.closure import grouped_transitive_closure
+    from ..graph.closure import transitive_closure
     spark = triples.sparkSession
     data_schema = []
     if include_data_schema:
@@ -605,10 +605,10 @@ def owl_materialize(triples: DataFrame,
                        "object string, objtype string") \
                 .localCheckpoint(eager=True)
         else:
-            closed = grouped_transitive_closure(
-                edges, group="predicate", src="subject", dst="object")
+            closed = transitive_closure(
+                edges, src="subject", dst="object", keys=["predicate"])
             tc = closed.select(F.col("a").alias("subject"),
-                               F.col("g").alias("predicate"),
+                               "predicate",
                                F.col("b").alias("object"),
                                F.lit("uri").alias("objtype"))
         e1.append(tc)

@@ -67,10 +67,10 @@ Supported subset (what ferenda's own queries use):
   aligned union (EXISTS(A∪B) = EXISTS A OR EXISTS B)
 - ``GRAPH <ctx> { … }`` → context-column constraint on the scans,
   property-path triples included (the closure runs over that
-  context's edges only); under ``GRAPH ?var`` paths compile to a
-  grouped per-named-graph closure (one shared iteration keyed on
-  (graph, node) — Spark — / a context-carrying recursive CTE — SQL)
-  with ?var bound to the closure's graph column
+  context's edges only); under ``GRAPH ?var`` a path is the same
+  closure with the graph as one more join key (``g``, which no hop
+  crosses: one shared iteration keyed on (graph, node) — Spark — / a
+  context-carrying recursive CTE — SQL), ?var bound to ``g``
 - aggregates ``COUNT/SUM/AVG/MIN/MAX/SAMPLE/GROUP_CONCAT`` (SAMPLE
   is deterministic-MIN; GROUP_CONCAT concatenates in sorted order —
   both choices valid per spec and identical across backends), over a
@@ -1679,8 +1679,8 @@ class _Parser:
                     if ctx[0] == "uri":
                         t.graph = ctx[1]
                     else:
-                        # paths under GRAPH ?var compile to a grouped
-                        # per-named-graph closure in both backends
+                        # paths under GRAPH ?var compile to a
+                        # closure keyed on the graph in both backends
                         t.graph_var = ctx[1]
                 g.triples.extend(sub.triples)
                 g.filters.extend(sub.filters)
@@ -2743,9 +2743,13 @@ def compile_spark(triples: DataFrame, query: Query | str) -> DataFrame:
         """Triples scan restricted to a GRAPH context (None = all) —
         every path-edge/term scan below goes through this, so GRAPH
         constraints apply to property-path triples exactly as to plain
-        scans."""
+        scans. Ellipsis (GRAPH ?var) keeps the named graphs and adds
+        their context as ``g``, the key no path crosses."""
         if graph is None:
             return triples
+        if graph is Ellipsis:
+            return (triples.filter(_extra_spark("named", None))
+                    .withColumn("g", F.col("context")))
         return triples.filter(F.col("context") == graph)
 
     def pred_cond(uri):
@@ -2760,120 +2764,68 @@ def compile_spark(triples: DataFrame, query: Query | str) -> DataFrame:
 
     def all_terms(graph=None):
         t = in_graph(graph)
-        return (t.select(F.col("subject").alias("n"))
+        keys = ["g"] if graph is Ellipsis else []
+        return (t.select(*keys, F.col("subject").alias("n"))
                 .union(t.filter(F.col("objtype") == "uri")
-                       .select(F.col("object").alias("n")))
+                       .select(*keys, F.col("object").alias("n")))
                 .distinct())
 
     def path_relation(uri: str, mod, graph=None) -> DataFrame:
         """(a, b) pairs connected by 1+ hops of ``uri`` edges; for "*"
         additionally the reflexive pairs over every graph term; for a
         bounded (m, n) quantifier, pairs within m..n hops (n rounds of
-        self-join — quantifiers in practice are {,1}). Cached per
+        self-join — quantifiers in practice are {,1}). Under GRAPH
+        ?var (graph = Ellipsis) the relation is (g, a, b): every hop
+        and reflexive row stays inside one named graph. Cached per
         compile — the same path in two UNION branches (the
         annotations.rq shape) computes its closure once."""
         from .graph.closure import transitive_closure
+        keys = ["g"] if graph is Ellipsis else []
+
+        def reflexive(rel):
+            return rel.unionByName(
+                all_terms(graph).select(*keys, F.col("n").alias("a"),
+                                        F.col("n").alias("b")))
         if isinstance(mod, tuple):
             if (uri, mod, graph) not in path_cache:
                 m, n = mod
                 edges = (in_graph(graph)
                          .filter(pred_cond(uri))
-                         .select(F.col("subject").alias("a"),
+                         .select(*keys, F.col("subject").alias("a"),
                                  F.col("object").alias("b"))
                          .where(F.col("a") != F.col("b")).distinct())
+                cond = F.col("p.b") == F.col("e.a")
+                for k in keys:
+                    cond = cond & (F.col("p." + k) == F.col("e." + k))
                 rel = edges if m <= 1 else None
                 cur = edges
                 for k in range(2, n + 1):
                     cur = (cur.alias("p")
-                           .join(edges.alias("e"),
-                                 F.col("p.b") == F.col("e.a"))
-                           .select(F.col("p.a").alias("a"),
+                           .join(edges.alias("e"), cond)
+                           .select(*[F.col("p." + c).alias(c)
+                                     for c in keys],
+                                   F.col("p.a").alias("a"),
                                    F.col("e.b").alias("b"))
                            .where(F.col("a") != F.col("b")).distinct())
                     if k >= m:      # depths below m are NOT in the path
                         rel = cur if rel is None else rel.union(cur)
                 if m == 0:
-                    rel = rel.unionByName(
-                        all_terms(graph).select(F.col("n").alias("a"),
-                                                F.col("n").alias("b")))
+                    rel = reflexive(rel)
                 path_cache[(uri, mod, graph)] = rel.distinct()
             return path_cache[(uri, mod, graph)]
         if (uri, mod, graph) not in path_cache:
             if (uri, "+", graph) not in path_cache:
                 edges = (in_graph(graph)
                          .filter(pred_cond(uri))
-                         .select(F.col("subject").alias("src"),
+                         .select(*keys, F.col("subject").alias("src"),
                                  F.col("object").alias("dst")))
-                path_cache[(uri, "+", graph)] = transitive_closure(edges)
+                path_cache[(uri, "+", graph)] = transitive_closure(
+                    edges, keys=keys)
             rel = path_cache[(uri, "+", graph)]
             if mod == "*":
-                rel = rel.unionByName(
-                    all_terms(graph).select(F.col("n").alias("a"),
-                                            F.col("n").alias("b")))
+                rel = reflexive(rel)
                 path_cache[(uri, "*", graph)] = rel
         return path_cache[(uri, mod, graph)]
-
-    def grouped_terms() -> DataFrame:
-        t = triples.filter(_extra_spark("named", None))
-        return (t.select(F.col("context").alias("g"),
-                         F.col("subject").alias("n"))
-                .union(t.filter(F.col("objtype") == "uri")
-                       .select(F.col("context").alias("g"),
-                               F.col("object").alias("n")))
-                .distinct())
-
-    def grouped_path_relation(uri: str, mod) -> DataFrame:
-        """(g, a, b) path pairs per NAMED graph — the GRAPH ?var
-        semantics: one closure per graph, all graphs in one shared
-        iteration keyed on (g, node). No seeded hybrid here: each
-        graph's pair set is bounded by that graph's size (per-document
-        graphs in the quad-store model), so the all-pairs form is the
-        scale path."""
-        from .graph.closure import grouped_transitive_closure
-        key = (uri, mod, Ellipsis)
-        if key in path_cache:
-            return path_cache[key]
-        named = triples.filter(_extra_spark("named", None))
-        if isinstance(mod, tuple):
-            m, n2 = mod
-            edges = (named.filter(pred_cond(uri))
-                     .select(F.col("context").alias("g"),
-                             F.col("subject").alias("a"),
-                             F.col("object").alias("b"))
-                     .where(F.col("a") != F.col("b")).distinct())
-            rel = edges if m <= 1 else None
-            cur = edges
-            for k in range(2, n2 + 1):
-                cur = (cur.alias("p")
-                       .join(edges.alias("e"),
-                             (F.col("p.b") == F.col("e.a")) &
-                             (F.col("p.g") == F.col("e.g")))
-                       .select(F.col("p.g").alias("g"),
-                               F.col("p.a").alias("a"),
-                               F.col("e.b").alias("b"))
-                       .where(F.col("a") != F.col("b")).distinct())
-                if k >= m:
-                    rel = cur if rel is None else rel.union(cur)
-            if m == 0:
-                rel = rel.unionByName(
-                    grouped_terms().select("g", F.col("n").alias("a"),
-                                           F.col("n").alias("b")))
-            path_cache[key] = rel.distinct()
-            return path_cache[key]
-        if (uri, "+", Ellipsis) not in path_cache:
-            edges = (named.filter(pred_cond(uri))
-                     .select(F.col("context").alias("g"),
-                             F.col("subject").alias("src"),
-                             F.col("object").alias("dst")))
-            path_cache[(uri, "+", Ellipsis)] = \
-                grouped_transitive_closure(edges)
-        rel = path_cache[(uri, "+", Ellipsis)]
-        if mod == "*":
-            rel = rel.unionByName(
-                grouped_terms().select("g", F.col("n").alias("a"),
-                                       F.col("n").alias("b")))
-            path_cache[(uri, "*", Ellipsis)] = rel
-        return path_cache[(uri, mod, Ellipsis)]
 
     def seeded_path(uri: str, mod: str, const: str,
                     forward: bool, graph=None) -> DataFrame:
@@ -2908,14 +2860,10 @@ def compile_spark(triples: DataFrame, query: Query | str) -> DataFrame:
             if mod == "*":
                 # zero-length hop iff the constant is a graph term
                 # (matches path_relation's reflexive-node set)
-                tg = in_graph(graph)
-                terms = (tg.select(F.col("subject").alias("n"))
-                         .union(tg.filter(F.col("objtype") == "uri")
-                                .select(F.col("object").alias("n")))
-                         .where(F.col("n") == const).distinct())
                 rel = rel.unionByName(
-                    terms.select(F.lit(const).alias("a"),
-                                 F.lit(const).alias("b")))
+                    all_terms(graph).where(F.col("n") == const)
+                    .select(F.lit(const).alias("a"),
+                            F.lit(const).alias("b")))
             path_cache[key] = rel
         return path_cache[key]
 
@@ -2928,7 +2876,7 @@ def compile_spark(triples: DataFrame, query: Query | str) -> DataFrame:
         if t.p[0] == "path":
             s_bound, o_bound = t.s[0] != "var", t.o[0] != "var"
             if t.graph_var:
-                df = grouped_path_relation(t.p[1], t.p[2])
+                df = path_relation(t.p[1], t.p[2], Ellipsis)
             elif s_bound != o_bound and t.p[2] in ("*", "+"):
                 df = seeded_path(t.p[1], t.p[2],
                                  (t.s if s_bound else t.o)[1], s_bound,
@@ -3243,10 +3191,22 @@ def compile_sql(table_sql: str, query: Query | str) -> str:
         plus the reflexive-extended twin for "*" and the
         depth-tracked bounded variant for (m, n) quantifiers. A GRAPH
         context restricts every edge/term scan (mirror of the Spark
-        backend's in_graph)."""
-        esc = None if graph is None else graph.replace("'", "''")
-        gc = "" if esc is None else " AND context = '%s'" % esc
-        gce = "" if esc is None else " AND e.context = '%s'" % esc
+        backend's in_graph); under GRAPH ?var (graph = Ellipsis) every
+        CTE carries the context as ``g`` and the recursion joins on it
+        — one closure per named graph."""
+        if graph is Ellipsis:
+            g, gsel, gp = "g, ", "context AS g, ", "p.g, "
+            gc = " AND " + _extra_sql("named", None)
+            gce = " AND e.context = p.g"
+        else:
+            g = gsel = gp = ""
+            esc = None if graph is None else graph.replace("'", "''")
+            gc = "" if esc is None else " AND context = '%s'" % esc
+            gce = "" if esc is None else " AND e.context = '%s'" % esc
+        terms = ("SELECT %sn, n FROM (SELECT %ssubject AS n FROM %s"
+                 " WHERE TRUE%s UNION SELECT %sobject FROM %s"
+                 " WHERE objtype = 'uri'%s)"
+                 % (g, gsel, table_sql, gc, gsel, table_sql, gc))
 
         def pc(prefix=""):
             return _pc_sql(uri, prefix)
@@ -3262,111 +3222,39 @@ def compile_sql(table_sql: str, query: Query | str) -> str:
             # plan can't (hypothesis-found, pinned in
             # test_bounded_negset_selfloop_parity)
             ctes.append(
-                "%s AS (SELECT subject AS a, object AS b, 1 AS d FROM %s"
-                " WHERE %s%s AND subject <> object"
-                " UNION ALL SELECT p.a, e.object, p.d + 1 FROM %s p"
+                "%s AS (SELECT %ssubject AS a, object AS b, 1 AS d"
+                " FROM %s WHERE %s%s AND subject <> object"
+                " UNION ALL SELECT %sp.a, e.object, p.d + 1 FROM %s p"
                 " JOIN %s e ON p.b = e.subject AND %s%s"
                 " AND e.subject <> e.object"
                 " WHERE p.d < %d AND p.a <> e.object)"
-                % (inner, table_sql, pc(), gc, inner, table_sql,
-                   pc("e."), gce, n2))
+                % (inner, gsel, table_sql, pc(), gc, gp, inner,
+                   table_sql, pc("e."), gce, n2))
             name = "pathq%d" % len(ctes)
-            sel = ("SELECT DISTINCT a, b FROM %s WHERE d BETWEEN %d AND %d"
-                   % (inner, max(m, 1), n2))
+            sel = ("SELECT DISTINCT %sa, b FROM %s WHERE d BETWEEN %d"
+                   " AND %d" % (g, inner, max(m, 1), n2))
             if m == 0:
-                sel += (" UNION SELECT n, n FROM"
-                        " (SELECT subject AS n FROM %s WHERE TRUE%s"
-                        " UNION SELECT object FROM %s"
-                        " WHERE objtype = 'uri'%s)"
-                        % (table_sql, gc, table_sql, gc))
+                sel += " UNION " + terms
             ctes.append("%s AS (%s)" % (name, sel))
             path_names[(uri, mod, graph)] = name
             return name
         if (uri, "+", graph) not in path_names:
             name = "path%d" % len(ctes)
             ctes.append(
-                "%s AS (SELECT subject AS a, object AS b FROM %s"
+                "%s AS (SELECT %ssubject AS a, object AS b FROM %s"
                 " WHERE %s%s AND subject <> object"
-                " UNION SELECT p.a, e.object FROM %s p JOIN %s e"
+                " UNION SELECT %sp.a, e.object FROM %s p JOIN %s e"
                 " ON p.b = e.subject AND %s%s"
                 " WHERE p.a <> e.object)"
-                % (name, table_sql, pc(), gc, name, table_sql,
+                % (name, gsel, table_sql, pc(), gc, gp, name, table_sql,
                    pc("e."), gce))
             path_names[(uri, "+", graph)] = name
         if mod == "*":
             name = "star%d" % len(ctes)
-            ctes.append(
-                "%s AS (SELECT a, b FROM %s UNION"
-                " SELECT n, n FROM (SELECT subject AS n FROM %s"
-                " WHERE TRUE%s"
-                " UNION SELECT object FROM %s WHERE objtype = 'uri'%s))"
-                % (name, path_names[(uri, "+", graph)], table_sql, gc,
-                   table_sql, gc))
+            ctes.append("%s AS (SELECT %sa, b FROM %s UNION %s)"
+                        % (name, g, path_names[(uri, "+", graph)], terms))
             path_names[(uri, "*", graph)] = name
         return path_names[(uri, mod, graph)]
-
-    def grouped_path_cte(uri: str, mod) -> str:
-        """Per-named-graph twin of path_cte (GRAPH ?var): the
-        recursive CTEs carry the context as ``g`` and the recursion
-        joins on it — one closure per graph, mirroring the Spark
-        backend's grouped_path_relation."""
-        named = _extra_sql("named", None)
-
-        def pc(prefix=""):
-            return _pc_sql(uri, prefix)
-
-        key = (uri, mod, Ellipsis)
-        if key in path_names:
-            return path_names[key]
-        terms_sql = ("(SELECT context AS g, subject AS n FROM %s"
-                     " WHERE %s UNION SELECT context, object FROM %s"
-                     " WHERE objtype = 'uri' AND %s)"
-                     % (table_sql, named, table_sql, named))
-        if isinstance(mod, tuple):
-            m, n2 = mod
-            inner = "gpb%d" % len(ctes)
-            # e.subject <> e.object — same self-loop-free recursion
-            # edge set as path_cte's bounded branch (see note there)
-            ctes.append(
-                "%s AS (SELECT context AS g, subject AS a,"
-                " object AS b, 1 AS d FROM %s"
-                " WHERE %s AND %s AND subject <> object"
-                " UNION ALL SELECT p.g, p.a, e.object, p.d + 1"
-                " FROM %s p JOIN %s e"
-                " ON p.b = e.subject AND e.context = p.g AND %s"
-                " AND e.subject <> e.object"
-                " WHERE p.d < %d AND p.a <> e.object)"
-                % (inner, table_sql, pc(), named, inner, table_sql,
-                   pc("e."), n2))
-            name = "gpathq%d" % len(ctes)
-            sel = ("SELECT DISTINCT g, a, b FROM %s"
-                   " WHERE d BETWEEN %d AND %d"
-                   % (inner, max(m, 1), n2))
-            if m == 0:
-                sel += " UNION SELECT g, n, n FROM %s" % terms_sql
-            ctes.append("%s AS (%s)" % (name, sel))
-            path_names[key] = name
-            return name
-        if (uri, "+", Ellipsis) not in path_names:
-            name = "gpath%d" % len(ctes)
-            ctes.append(
-                "%s AS (SELECT context AS g, subject AS a,"
-                " object AS b FROM %s"
-                " WHERE %s AND %s AND subject <> object"
-                " UNION SELECT p.g, p.a, e.object FROM %s p JOIN %s e"
-                " ON p.b = e.subject AND e.context = p.g AND %s"
-                " WHERE p.a <> e.object)"
-                % (name, table_sql, pc(), named, name, table_sql,
-                   pc("e.")))
-            path_names[(uri, "+", Ellipsis)] = name
-        if mod == "*":
-            name = "gstar%d" % len(ctes)
-            ctes.append(
-                "%s AS (SELECT g, a, b FROM %s"
-                " UNION SELECT g, n, n FROM %s)"
-                % (name, path_names[(uri, "+", Ellipsis)], terms_sql))
-            path_names[(uri, "*", Ellipsis)] = name
-        return path_names[(uri, mod, Ellipsis)]
 
     def fresh(kind: str) -> str:
         n[0] += 1
@@ -3375,8 +3263,8 @@ def compile_sql(table_sql: str, query: Query | str) -> str:
     def scan_sql(t: Triple):
         alias = fresh("t")
         if t.p[0] == "path":
-            rel = (grouped_path_cte(t.p[1], t.p[2]) if t.graph_var
-                   else path_cte(t.p[1], t.p[2], t.graph))
+            rel = path_cte(t.p[1], t.p[2],
+                           Ellipsis if t.graph_var else t.graph)
             varcols, conds = {}, []
             for col, term in _path_terms(t):
                 if term[0] == "var":

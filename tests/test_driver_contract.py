@@ -99,15 +99,7 @@ def test_bench_times_registry_build_fns(entrymod):
 # elements.py is the golden serializer test_fsm_corpus compares fsm.py's
 # reference-corpus output through; fsm.py is on the production path
 # (rfcdoc), so its test harness stays although no entry point imports it.
-# The other five are dead code that only their own tests import; they go
-# together with those tests in a later change (ROADMAP item 5). Listing
-# them here keeps any further unreached module failing this guard.
-TEST_ONLY_MODULES = {"ferenda_spark.elements",
-                     "ferenda_spark.natsort",
-                     "ferenda_spark.operators.composite",
-                     "ferenda_spark.streaming.entailment",
-                     "ferenda_spark.streaming.identity",
-                     "ferenda_spark.streaming.ingest"}
+TEST_ONLY_MODULES = {"ferenda_spark.elements"}
 
 
 def _imports(path: str, package: str) -> set[str]:
@@ -134,7 +126,9 @@ def test_every_module_is_reachable():
     """Every ferenda_spark module is in the import closure of an entry
     point: scripts/, the driver contract, bench.py or kgbench/. A
     package counts as reached when any of its submodules is. A module
-    that only tests import is dead code."""
+    that only tests import is dead code. Every TEST_ONLY_MODULES entry
+    must still exist and still be unreached, so the list cannot go
+    stale."""
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     modules = {}
     for path in glob.glob(os.path.join(root, "ferenda_spark", "**", "*.py"),
@@ -159,3 +153,7 @@ def test_every_module_is_reachable():
                 todo += _imports(path, package)
     unreached = set(modules) - reached - TEST_ONLY_MODULES
     assert not unreached, sorted(unreached)
+    assert TEST_ONLY_MODULES <= set(modules), \
+        sorted(TEST_ONLY_MODULES - set(modules))
+    assert not TEST_ONLY_MODULES & reached, \
+        sorted(TEST_ONLY_MODULES & reached)

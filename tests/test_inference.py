@@ -211,30 +211,6 @@ def test_delta_branches_identical(spark, monkeypatch):
     assert broad == shuf and broad
 
 
-def test_stream_entailment(spark, tmp_path):
-    """Continuous maintenance: two micro-batches through the streaming
-    sink must leave exactly the full recompute over their union, and a
-    whole-stream REPLAY (fresh checkpoint, same input) must append
-    nothing — the at-least-once idempotence the sink's docstring
-    claims."""
-    from ferenda_spark.streaming.entailment import stream_entailment
-    tdir, edir = str(tmp_path / "t"), str(tmp_path / "e")
-    b1 = spark.createDataFrame(DATA, TRIPLE_SCHEMA)
-    b2 = spark.createDataFrame(DELTA_PLAIN + DELTA_SCHEMA, TRIPLE_SCHEMA)
-    b1.coalesce(1).write.mode("append").parquet(tdir)
-    b2.coalesce(1).write.mode("append").parquet(tdir)
-    stream_entailment(spark, tdir, edir, str(tmp_path / "cp1"), ONTO,
-                      max_files_per_trigger=1)
-    got = _rows(spark.read.parquet(edir))
-    full = _rows(rdfs_materialize(b1.union(b2), ONTO))
-    assert got == full
-    # replay everything with a fresh checkpoint: no new rows, table
-    # unchanged (duplicates are impossible by construction)
-    stream_entailment(spark, tdir, edir, str(tmp_path / "cp2"), ONTO,
-                      max_files_per_trigger=1)
-    assert _rows(spark.read.parquet(edir)) == full
-
-
 # --- OWL property-rule materialization ------------------------------------
 
 OWL = "http://www.w3.org/2002/07/owl#"

@@ -1,23 +1,4 @@
-"""Composite-source priority coalesce (CompositeRepository analog)."""
-
-
-def test_composite_extract_priority(spark):
-    from ferenda_spark.operators.composite import composite_extract
-    a = spark.createDataFrame(
-        [("u1", "A-doc1", "ok"), ("u2", "A-doc2", "fail"),
-         ("u3", "A-doc3", "fail")],
-        ["url", "payload", "status"])
-    b = spark.createDataFrame(
-        [("u1", "B-doc1", "ok"), ("u2", "B-doc2", "ok"),
-         ("u4", "B-doc4", "ok")],
-        ["url", "payload", "status"])
-    got = {r["url"]: r for r in
-           composite_extract([("alpha", a), ("beta", b)]).collect()}
-    assert got["u1"]["source"] == "alpha"      # both ok → priority wins
-    assert got["u2"]["source"] == "beta"       # alpha failed → fallback
-    assert got["u3"]["status"] == "fail"       # all failed → kept, marked
-    assert got["u4"]["source"] == "beta"       # only beta has it
-    assert len(got) == 4                       # one row per url
+"""URI routing: which repo, dataset and basefile a request URI maps to."""
 
 
 def test_route_uris_reference_semantics(spark):

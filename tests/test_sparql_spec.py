@@ -267,3 +267,51 @@ def test_exists_expression_over_bind_or_optional_rejected(graph):
           ?s a foaf:Document OPTIONAL { ?s dct:publisher ?p }
           FILTER(EXISTS { ?p dct:title ?t } || ?s = <d2>)
         }""", r"\?p")
+
+
+# GRAPH ?g over property paths (§9.3, §18.5): every path, reflexive row
+# included, is evaluated inside one named graph. The node names a and c
+# sit in both graphs, and the two graphs' edges chain into a cycle, so a
+# closure that crossed graphs would add pairs such as (a, d); z sits
+# only in the default graph, which GRAPH ?g never ranges over
+
+P = "http://example.org/p"
+QUADS = [
+    # (subject, predicate, object, context)
+    ("a", P, "b", "g1"), ("b", P, "c", "g1"),
+    ("e", "http://example.org/q", "a", "g1"),
+    ("c", P, "d", "g2"), ("d", P, "a", "g2"),
+    ("a", P, "z", ""),
+]
+PLUS_ROWS = [("g1", "a", "b"), ("g1", "b", "c"), ("g1", "a", "c"),
+             ("g2", "c", "d"), ("g2", "d", "a"), ("g2", "c", "a")]
+TERM_ROWS = [("g1", "a"), ("g1", "b"), ("g1", "c"), ("g1", "e"),
+             ("g2", "a"), ("g2", "c"), ("g2", "d")]
+
+
+@pytest.fixture(scope="module")
+def quads(spark, tmp_path_factory):
+    pdf = pd.DataFrame([(s, p, o, "uri", "", "", g) for s, p, o, g in QUADS],
+                       columns=["subject", "predicate", "object", "objtype",
+                                "lang", "datatype", "context"])
+    path = str(tmp_path_factory.mktemp("sparql_spec") / "quads.parquet")
+    pdf.to_parquet(path)
+    return spark.createDataFrame(pdf), path
+
+
+def test_graph_var_path_plus_stays_in_graph(quads):
+    check(quads, """
+        SELECT ?g ?a ?b WHERE { GRAPH ?g { ?a <%s>+ ?b } }""" % P,
+          PLUS_ROWS)
+
+
+def test_graph_var_path_star_reflexive_per_graph(quads):
+    check(quads, """
+        SELECT ?g ?a WHERE { GRAPH ?g { ?a <%s>* ?a } }""" % P,
+          TERM_ROWS)
+
+
+def test_graph_var_bounded_path_stays_in_graph(quads):
+    check(quads, """
+        SELECT ?g ?a ?b WHERE { GRAPH ?g { ?a <%s>{0,2} ?b } }""" % P,
+          PLUS_ROWS + [(g, n, n) for g, n in TERM_ROWS])
