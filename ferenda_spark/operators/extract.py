@@ -12,7 +12,10 @@ Scale notes (100 TB target):
   per-core parse speed × executor count, so scaling efficiency N→4N is
   near-linear (no shuffle in this stage)
 - downstream tables are produced by explode() projections of the wide
-  result, not by re-parsing
+  result, not by re-parsing: the production path
+  (:func:`ferenda_spark.pipeline.run`) persists the result, fills it
+  with one count, and reads documents, resources, triples and lineage
+  entries from that copy
 """
 
 from __future__ import annotations
@@ -46,11 +49,15 @@ EXTRACT_SCHEMA = StructType([
 
 def extract_stage(pages: DataFrame, cfg: RepoConfig | None = None,
                   commondata: dict | None = None,
-                  patches: dict | None = None) -> DataFrame:
+                  patches: dict | None = None,
+                  carry: tuple[str, ...] = ()) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) → wide extraction result.
 
     ``patches``: {url: (unified_diff, description)} applied pre-parse
-    (broadcast with the closure; rare-row branch)."""
+    (broadcast with the closure; rare-row branch). ``carry``: columns of
+    ``pages`` passed through unchanged after the extraction fields (one
+    output row per input row), e.g. the content hash the lineage
+    entries record."""
     cfg = cfg or RepoConfig(alias="doc", url="http://example.org/")
     commondata = commondata or {}
 
@@ -71,11 +78,16 @@ def extract_stage(pages: DataFrame, cfg: RepoConfig | None = None,
                                   for u, t in d["resources"]],
                     "triples": [t._asdict() for t in d["triples"]],
                 })
-            yield pd.DataFrame(rows, columns=EXTRACT_SCHEMA.fieldNames())
+            out = pd.DataFrame(rows, columns=EXTRACT_SCHEMA.fieldNames())
+            for c in carry:
+                out[c] = pdf[c].to_numpy()
+            yield out
 
     from .util import ensure_parallelism
-    return ensure_parallelism(pages.select("url", "html")) \
-        .mapInPandas(run, EXTRACT_SCHEMA)
+    schema = StructType(EXTRACT_SCHEMA.fields +
+                        [pages.schema[c] for c in carry])
+    return ensure_parallelism(pages.select("url", "html", *carry)) \
+        .mapInPandas(run, schema)
 
 
 def documents_table(extracted: DataFrame) -> DataFrame:

@@ -13,6 +13,8 @@ Replaces per-document HTTP probing with set-at-a-time joins:
 - :func:`canonicalize_triples` rewrites subjects/objects onto sameAs
   component representatives (SURVEY.md §2.6)
 - :func:`entities_table` materializes the entity table
+- :func:`sameas_mapping` is the sameAs mapping both of them read; a
+  run builds it once and passes it to both
 """
 
 from __future__ import annotations
@@ -141,7 +143,19 @@ DCT_REFERENCES = "http://purl.org/dc/terms/references"
 DCT_IS_REFERENCED_BY = "http://purl.org/dc/terms/isReferencedBy"
 
 
-def canonicalize_triples(triples: DataFrame) -> DataFrame:
+def sameas_mapping(triples: DataFrame) -> DataFrame:
+    """→ (uri, canonical_id): the owl:sameAs component mapping, with its
+    lineage cut. The mapping is tiny (aliased resources only) but
+    expensive to derive (iterative CC), so every join and action that
+    reads it reuses this copy instead of re-running CC — build it once
+    and hand it to both :func:`canonicalize_triples` and
+    :func:`entities_table`."""
+    sameas = triples.where(F.col("predicate") == OWL_SAMEAS)
+    return canonical_mapping(sameas).localCheckpoint(eager=True)
+
+
+def canonicalize_triples(triples: DataFrame,
+                         mapping: DataFrame | None = None) -> DataFrame:
     """Rewrite subject/object through the owl:sameAs component mapping.
 
     Returns the triple table with ``subject``/``object`` replaced by the
@@ -150,13 +164,11 @@ def canonicalize_triples(triples: DataFrame) -> DataFrame:
     The mapping side is small relative to the corpus (only aliased
     resources appear), so both joins broadcast when below the threshold —
     at larger alias volumes they hash-join on the rewritten key with AQE
-    skew splitting.
+    skew splitting. ``mapping``: a prebuilt :func:`sameas_mapping` of
+    ``triples`` (its columns in any order); default builds one.
     """
-    sameas = triples.where(F.col("predicate") == OWL_SAMEAS)
-    # the mapping is tiny (aliased resources only) but expensive to
-    # derive (iterative CC) — cut its lineage so the two joins below
-    # and any downstream action reuse it instead of re-running CC
-    mapping = canonical_mapping(sameas).localCheckpoint(eager=True)
+    if mapping is None:
+        mapping = sameas_mapping(triples)
     # broadcast when it fits: a sort-merge join here would shuffle the
     # FULL triple table twice just to rewrite the aliased minority
     if mapping.count() <= 5_000_000:
@@ -178,9 +190,13 @@ def canonicalize_triples(triples: DataFrame) -> DataFrame:
     return t
 
 
-def entities_table(triples: DataFrame) -> DataFrame:
+def entities_table(triples: DataFrame,
+                   mapping: DataFrame | None = None) -> DataFrame:
     """→ (canonical_id, uri): every aliased resource with its
-    representative; singletons map to themselves."""
-    sameas = triples.where(F.col("predicate") == OWL_SAMEAS)
-    mapping = canonical_mapping(sameas).localCheckpoint(eager=True)
+    representative; singletons map to themselves. ``mapping``: a
+    prebuilt :func:`sameas_mapping` of ``triples``; default builds one.
+    The result is that mapping, so it can serve as
+    :func:`canonicalize_triples`' ``mapping`` in turn."""
+    if mapping is None:
+        mapping = sameas_mapping(triples)
     return mapping.select("canonical_id", "uri")

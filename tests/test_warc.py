@@ -185,10 +185,12 @@ def test_run_pipeline_warc_mode(spark, tmp_path, monkeypatch, capsys):
     input (--warc): records ingest, 200/HTTP responses become the
     pages table, and the full extract→relate→write pipeline runs."""
     import json as _json
+    import os as _os
     import sys as _sys
 
     import pandas as pd
-    _sys.path.insert(0, "/root/repo/scripts")
+    _sys.path.insert(0, _os.path.join(_os.path.dirname(_os.path.dirname(
+        _os.path.abspath(__file__))), "scripts"))
     import run_pipeline
     blob = b"".join(
         build_response(
