@@ -49,15 +49,11 @@ EXTRACT_SCHEMA = StructType([
 
 def extract_stage(pages: DataFrame, cfg: RepoConfig | None = None,
                   commondata: dict | None = None,
-                  patches: dict | None = None,
-                  carry: tuple[str, ...] = ()) -> DataFrame:
+                  patches: dict | None = None) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) → wide extraction result.
 
     ``patches``: {url: (unified_diff, description)} applied pre-parse
-    (broadcast with the closure; rare-row branch). ``carry``: columns of
-    ``pages`` passed through unchanged after the extraction fields (one
-    output row per input row), e.g. the content hash the lineage
-    entries record."""
+    (broadcast with the closure; rare-row branch)."""
     cfg = cfg or RepoConfig(alias="doc", url="http://example.org/")
     commondata = commondata or {}
 
@@ -78,16 +74,11 @@ def extract_stage(pages: DataFrame, cfg: RepoConfig | None = None,
                                   for u, t in d["resources"]],
                     "triples": [t._asdict() for t in d["triples"]],
                 })
-            out = pd.DataFrame(rows, columns=EXTRACT_SCHEMA.fieldNames())
-            for c in carry:
-                out[c] = pdf[c].to_numpy()
-            yield out
+            yield pd.DataFrame(rows, columns=EXTRACT_SCHEMA.fieldNames())
 
     from .util import ensure_parallelism
-    schema = StructType(EXTRACT_SCHEMA.fields +
-                        [pages.schema[c] for c in carry])
-    return ensure_parallelism(pages.select("url", "html", *carry)) \
-        .mapInPandas(run, schema)
+    return ensure_parallelism(pages.select("url", "html")) \
+        .mapInPandas(run, EXTRACT_SCHEMA)
 
 
 def documents_table(extracted: DataFrame) -> DataFrame:

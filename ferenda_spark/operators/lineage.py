@@ -28,18 +28,11 @@ def with_content_hash(pages: DataFrame) -> DataFrame:
     return pages.withColumn("content_hash", F.sha2(F.col("html"), 256))
 
 
-def entries_from_extracted(extracted: DataFrame, pages: DataFrame | None,
+def entries_from_extracted(extracted: DataFrame, pages: DataFrame,
                            stage: str, run_id: str) -> DataFrame:
-    """One entry per extracted row. ``pages=None``: ``extracted``
-    carries its input's ``content_hash`` itself
-    (``extract_stage(..., carry=("content_hash",))``), so the pages are
-    not scanned again."""
-    if pages is None:
-        rows = extracted.select("url", "status", "error", "content_hash")
-    else:
-        hashed = with_content_hash(pages).select("url", "content_hash")
-        rows = extracted.select("url", "status", "error").join(hashed, "url")
-    return (rows
+    hashed = with_content_hash(pages).select("url", "content_hash")
+    return (extracted.select("url", "status", "error")
+            .join(hashed, "url")
             .select("url",
                     F.lit(stage).alias("stage"),
                     "status", "error", "content_hash",

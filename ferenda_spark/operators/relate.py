@@ -14,7 +14,8 @@ Replaces per-document HTTP probing with set-at-a-time joins:
   component representatives (SURVEY.md §2.6)
 - :func:`entities_table` materializes the entity table
 - :func:`sameas_mapping` is the sameAs mapping both of them read; a
-  run builds it once and passes it to both
+  run builds it once (as the entity table) and passes it to
+  canonicalize
 """
 
 from __future__ import annotations
@@ -147,9 +148,9 @@ def sameas_mapping(triples: DataFrame) -> DataFrame:
     """→ (uri, canonical_id): the owl:sameAs component mapping, with its
     lineage cut. The mapping is tiny (aliased resources only) but
     expensive to derive (iterative CC), so every join and action that
-    reads it reuses this copy instead of re-running CC — build it once
-    and hand it to both :func:`canonicalize_triples` and
-    :func:`entities_table`."""
+    reads it reuses this copy instead of re-running CC.
+    :func:`entities_table` returns it, and :func:`canonicalize_triples`
+    takes it prebuilt."""
     sameas = triples.where(F.col("predicate") == OWL_SAMEAS)
     return canonical_mapping(sameas).localCheckpoint(eager=True)
 
@@ -190,13 +191,9 @@ def canonicalize_triples(triples: DataFrame,
     return t
 
 
-def entities_table(triples: DataFrame,
-                   mapping: DataFrame | None = None) -> DataFrame:
+def entities_table(triples: DataFrame) -> DataFrame:
     """→ (canonical_id, uri): every aliased resource with its
-    representative; singletons map to themselves. ``mapping``: a
-    prebuilt :func:`sameas_mapping` of ``triples``; default builds one.
-    The result is that mapping, so it can serve as
-    :func:`canonicalize_triples`' ``mapping`` in turn."""
-    if mapping is None:
-        mapping = sameas_mapping(triples)
-    return mapping.select("canonical_id", "uri")
+    representative; singletons map to themselves. The result is the
+    :func:`sameas_mapping` of ``triples``, so it can serve as
+    :func:`canonicalize_triples`' ``mapping``."""
+    return sameas_mapping(triples).select("canonical_id", "uri")

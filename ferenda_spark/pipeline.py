@@ -14,9 +14,9 @@ stays a thin argv shim around it). Stages:
      serves entities and canonical triples, then deps
   4. the entries append, last — a run that dies before it is redone
      in full on restart
-  5. counters: per-stage entry counts, plus the page and triple
-     counts, observed on frames the run evaluates anyway
-     (``Observation``) instead of re-scanning them
+  5. counters: per-stage entry counts, the page count observed on the
+     extraction's input (``Observation``) instead of a re-scan of the
+     pages, and the row count of the triple lake
 
 The stage functions are called through their modules (``extract.x``,
 ``lineage.x``, ``relate.x``), so a wrapper installed on a module
@@ -34,6 +34,9 @@ from . import pages as P
 from .operators import extract, lineage, relate
 from .uris import RepoConfig
 
+# the repository every page's URIs are minted under
+CFG = RepoConfig(alias="doc", url="http://example.org/")
+
 
 def warc_pages(blobs: DataFrame) -> DataFrame:
     """WARC blob table (blob_id, warc binary) → the pages table: the
@@ -48,29 +51,22 @@ def warc_pages(blobs: DataFrame) -> DataFrame:
                     F.col("payload").alias("html")))
 
 
-def _counted(df: DataFrame) -> tuple[DataFrame, Observation]:
-    obs = Observation()
-    return df.observe(obs, F.count(F.lit(1)).alias("n")), obs
-
-
-def run(spark: SparkSession, pages: DataFrame, out: str, run_id: str,
-        cfg: RepoConfig | None = None) -> dict:
+def run(spark: SparkSession, pages: DataFrame, out: str,
+        run_id: str) -> dict:
     """Build (or incrementally update) the lake under ``out`` from
     ``pages`` (url, html, ...) → {run_id, processed, skipped_fresh,
     triples, counters}."""
-    cfg = cfg or RepoConfig(alias="doc", url="http://example.org/")
-
     def path(name):
         return os.path.join(out, name)
 
     entries_path = path("entries")
     prev_entries = (spark.read.parquet(entries_path)
                     if os.path.exists(entries_path) else None)
-    pages, n_pages = _counted(pages)
+    n_pages = Observation()
+    pages = pages.observe(n_pages, F.count(F.lit(1)).alias("n"))
     todo = lineage.needed(pages, prev_entries, "parse")
 
-    extracted = extract.extract_stage(todo, cfg, P.COMMONDATA,
-                                      carry=("content_hash",)).persist()
+    extracted = extract.extract_stage(todo, CFG, P.COMMONDATA).persist()
     try:
         # the one Python pass: this count fills the copy every output
         # reads, and its job reports the page count observed beneath
@@ -91,14 +87,13 @@ def run(spark: SparkSession, pages: DataFrame, out: str, run_id: str,
         # once here, it is also canonicalize's mapping
         entities = relate.entities_table(all_triples)
         entities.write.mode("overwrite").parquet(path("entities"))
-        counted, n_triples = _counted(all_triples)
-        relate.canonicalize_triples(counted, entities) \
+        relate.canonicalize_triples(all_triples, entities) \
             .write.mode("overwrite").parquet(path("canonical_triples"))
         docs = spark.read.parquet(path("documents"))
-        relate.deps_table(all_triples, docs, cfg).write.mode("overwrite") \
+        relate.deps_table(all_triples, docs, CFG).write.mode("overwrite") \
             .parquet(path("deps"))
 
-        lineage.entries_from_extracted(extracted, None, "parse", run_id) \
+        lineage.entries_from_extracted(extracted, todo, "parse", run_id) \
             .write.mode("append").parquet(entries_path)
     finally:
         extracted.unpersist()
@@ -110,6 +105,6 @@ def run(spark: SparkSession, pages: DataFrame, out: str, run_id: str,
         "run_id": run_id,
         "processed": processed,
         "skipped_fresh": n_pages.get["n"] - processed,
-        "triples": n_triples.get["n"],
+        "triples": all_triples.count(),
         "counters": counters,
     }

@@ -11,10 +11,9 @@ from pyspark.sql import functions as F
 import ferenda_spark.pages as P
 from ferenda_spark import pipeline
 from ferenda_spark.operators import extract, lineage, relate
-from ferenda_spark.uris import RepoConfig
 
 N = 24
-CFG = RepoConfig(alias="doc", url="http://example.org/")
+CFG = pipeline.CFG
 TABLES = ("documents", "resources", "triples", "canonical_triples",
           "entities", "deps", "entries")
 
@@ -35,8 +34,7 @@ def _table(spark, out, name):
 
 
 def _run(spark, pages_dir, out, run_id):
-    return pipeline.run(spark, spark.read.parquet(pages_dir), out, run_id,
-                        CFG)
+    return pipeline.run(spark, spark.read.parquet(pages_dir), out, run_id)
 
 
 def test_tables_equal_the_composed_stages(spark, pages_dir, tmp_path):
