@@ -56,14 +56,12 @@ def _pages(spark: SparkSession, n: int) -> DataFrame:
 def _extracted(spark: SparkSession, n: int) -> DataFrame:
     from ferenda_spark.operators.extract import extract_stage
     from ferenda_spark.pages import COMMONDATA
-    from ferenda_spark.uris import RepoConfig
-    cfg = RepoConfig(alias="doc", url="http://example.org/")
-    return extract_stage(_pages(spark, n), cfg, COMMONDATA)
+    return extract_stage(_pages(spark, n), _kg_cfg(), COMMONDATA)
 
 
 def _kg_cfg():
-    from ferenda_spark.uris import RepoConfig
-    return RepoConfig(alias="doc", url="http://example.org/")
+    from ferenda_spark.pages import CFG
+    return CFG
 
 
 def _kg_dictionary() -> list[tuple[str, str]]:

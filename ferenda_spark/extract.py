@@ -20,6 +20,7 @@ it from an Arrow-batched UDF. RFC-style plaintext documents (url suffix
 
 from __future__ import annotations
 
+from .fsm import FSMStateError
 from .htmltree import clean_tree, parse_html, select_content, SelectorError
 from .linking import ResourceLookup
 from .metadata import metadata_triples
@@ -61,7 +62,8 @@ def extract_document(url: str, html: bytes, cfg: RepoConfig,
         if url.endswith(".txt"):
             return _extract_rfc(url, html, basefile, cfg, commondata, encoding)
         return _extract_html(url, html, basefile, cfg, encoding)
-    except (SelectorError, ValueError, KeyError, IndexError) as exc:
+    except (SelectorError, FSMStateError, ValueError, KeyError,
+            IndexError) as exc:
         return {"url": url, "uri": cfg.canonical_uri(basefile),
                 "lang": "", "title": None, "text": "", "resources": [],
                 "triples": [], "status": "fail", "error": repr(exc)}

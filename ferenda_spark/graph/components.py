@@ -20,12 +20,17 @@ north rule asks for; no single reducer ever owns a hub's full edge list.
 
 Convergence: iterate until the edge multiset hash is stable (cheap
 single-pass agg), capped at max_iter.
+
+Small edge sets are solved on the driver instead; the graph operators'
+one gate, ``operators.util.driver_edges``, takes that branch.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..operators.util import DRIVER_THRESHOLD, driver_edges, iter_checkpoint
 
 
 def _sym(edges: DataFrame) -> DataFrame:
@@ -68,9 +73,6 @@ def _signature(edges: DataFrame):
     return (row["n"], row["h"])
 
 
-DRIVER_CC_THRESHOLD = 2_000_000  # edges; below this, solve on the driver
-
-
 def _driver_cc(spark, pairs) -> DataFrame:
     """Union-find on the driver for small edge sets. The sameAs graph
     is a minuscule slice of the corpus (only aliased resources appear);
@@ -108,7 +110,7 @@ def _driver_cc(spark, pairs) -> DataFrame:
 
 def connected_components(edges: DataFrame, src: str = "src",
                          dst: str = "dst", max_iter: int = 25,
-                         driver_threshold: int = DRIVER_CC_THRESHOLD
+                         driver_threshold: int = DRIVER_THRESHOLD
                          ) -> DataFrame:
     """edges(src, dst) undirected → (node, component) where component is
     the lexicographic minimum node id of the component. Isolated nodes
@@ -120,19 +122,12 @@ def connected_components(edges: DataFrame, src: str = "src",
     """
     E = (edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
          .where(F.col("u") != F.col("v")).distinct())
-    # one Arrow job decides the branch AND feeds the driver path: the
-    # former limit-count job + separate Row-object collect re-ran the
-    # scan + distinct shuffle twice, and Row indexing is ~3× slower
-    # than the Arrow batch — this non-scaling driver cost was the
-    # largest fixed term in the canonicalize stage (BENCH.md)
-    head = E.limit(driver_threshold + 1).toPandas()
-    n_edges = len(head)
-    if n_edges == 0:
+    head = driver_edges(E, driver_threshold)
+    if head is not None and head.empty:
         return E.select(F.col("u").alias("node"), F.col("v").alias("component"))
-    if n_edges <= driver_threshold:
-        pairs = list(zip(head["u"].tolist(), head["v"].tolist()))
+    if head is not None:
+        pairs = list(head.itertuples(index=False, name=None))
         return _driver_cc(edges.sparkSession, pairs)
-    from ..operators.util import iter_checkpoint
     prev_sig = None
     for i in range(max_iter):
         # disk checkpoint every 3rd round: localCheckpoint chains stop

@@ -68,12 +68,10 @@ def kg_paths(n: int) -> dict[str, str]:
 def _build_tables(n: int):
     """Single-threaded reference run of the extraction kernel."""
     from .extract import extract_document
-    from .pages import COMMONDATA, page_row
-    from .uris import RepoConfig
+    from .pages import CFG, COMMONDATA, page_row
 
     from .operators.minting import default_space_ttl, mint_rows
 
-    cfg = RepoConfig(alias="doc", url="http://example.org/")
     space_ttl = default_space_ttl()
     doc_rows, trip_rows, raw_rows, res_rows, mint_rows_ = [], [], [], [], []
     meta_rows = []
@@ -82,7 +80,7 @@ def _build_tables(n: int):
         url = page["url"]
         meta_rows.append({"url": url,
                           "warc_ts": page["warc_ts"].isoformat(sep=" ")})
-        d = extract_document(url, page["html"], cfg, dict(COMMONDATA))
+        d = extract_document(url, page["html"], CFG, dict(COMMONDATA))
         doc_rows.append({"url": d["url"], "uri": d["uri"],
                          "lang": d["lang"], "title": d["title"],
                          "text": d["text"], "status": d["status"]})
@@ -93,7 +91,7 @@ def _build_tables(n: int):
                               "source_url": url, "context": "kg"})
         for uri, text in d["resources"]:
             res_rows.append({"url": url, "resource_uri": uri, "text": text})
-        raw = extract_document(url, page["html"], cfg, None)
+        raw = extract_document(url, page["html"], CFG, None)
         for t in raw.get("triples", []):
             raw_rows.append({"subject": t.subject, "predicate": t.predicate,
                              "object": t.object, "objtype": t.objtype,

@@ -23,7 +23,7 @@ from .namespaces import NS, OWL_SAMEAS, RDF_TYPE
 DCT = NS["dcterms"]
 
 # basefile extraction pattern for the synthetic corpus config
-# (RepoConfig(alias='doc', url='http://example.org/')); mirrors
+# (pages.CFG); mirrors
 # operators/relate.py _basefile_pattern
 BF_PATTERN = r"^http://example\.org/res/doc/([^#]+?)(?:#.*)?$"
 

@@ -47,16 +47,12 @@ EXTRACT_SCHEMA = StructType([
 ])
 
 
-def extract_stage(pages: DataFrame, cfg: RepoConfig | None = None,
-                  commondata: dict | None = None,
+def extract_stage(pages: DataFrame, cfg: RepoConfig, commondata: dict,
                   patches: dict | None = None) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) → wide extraction result.
 
     ``patches``: {url: (unified_diff, description)} applied pre-parse
     (broadcast with the closure; rare-row branch)."""
-    cfg = cfg or RepoConfig(alias="doc", url="http://example.org/")
-    commondata = commondata or {}
-
     def run(batches):
         from ..linking import ResourceLookup
         lookup = (ResourceLookup.from_dict(commondata).lookup

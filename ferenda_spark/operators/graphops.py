@@ -14,11 +14,12 @@ GraphFrames dependency:
 
 Scale notes: every iteration shuffles contributions keyed by dst —
 uniform unless the citation graph has hubs, which AQE skew-split
-handles. Small graphs (≤ ``DRIVER_THRESHOLD`` edges) iterate in numpy
-on the driver; the distributed branch — the load-bearing path at
-100× — runs the same max_iter rounds and resets lineage with a disk
-checkpoint every 3rd round (iter_checkpoint), keeping per-round wall
-time flat for arbitrarily many rounds.
+handles. Small graphs (≤ ``DRIVER_THRESHOLD`` edges, decided by the
+one gate :func:`.util.driver_edges`) iterate on the driver; the
+distributed branch — the load-bearing path at 100× — runs the same
+rounds and resets lineage with a disk checkpoint every 3rd round
+(iter_checkpoint), keeping per-round wall time flat for arbitrarily
+many rounds.
 """
 
 from __future__ import annotations
@@ -26,12 +27,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-DCTERMS_REFERENCES = "http://purl.org/dc/terms/references"
+from .util import DRIVER_THRESHOLD, driver_edges, iter_checkpoint
 
-# edges; at or below, every hybrid operator here (pagerank, hits,
-# kcore, bfs, scc, sssp, …) solves on the driver, above it the
-# distributed iteration; per-call ``driver_threshold`` overrides it
-DRIVER_THRESHOLD = 2_000_000
+DCTERMS_REFERENCES = "http://purl.org/dc/terms/references"
 
 
 def citation_edges(triples: DataFrame,
@@ -44,6 +42,17 @@ def citation_edges(triples: DataFrame,
                     F.col("object").alias("dst"))
             .where(F.col("src") != F.col("dst"))
             .distinct())
+
+
+def _node_index(head):
+    """Driver-branch (src, dst, …) frame → (sorted node names, src
+    index array, dst index array): the node numbering every numpy
+    iteration here runs over."""
+    import numpy as np
+    names, idx = np.unique(np.concatenate([head["src"].to_numpy(),
+                                           head["dst"].to_numpy()]),
+                           return_inverse=True)
+    return names, idx[:len(head)], idx[len(head):]
 
 
 def degrees(edges: DataFrame) -> DataFrame:
@@ -84,18 +93,14 @@ def pagerank(edges: DataFrame, damping: float = 0.85,
     branches honor it identically.
     """
     E = edges.select("src", "dst").distinct()
-    n_edges = E.limit(driver_threshold + 1).count()
+    head = driver_edges(E, driver_threshold)
     spark = edges.sparkSession
-    if n_edges == 0:
+    if head is not None and head.empty:
         return spark.createDataFrame([], "node string, rank double")
-    if n_edges <= driver_threshold:
+    if head is not None:
         import numpy as np
         import pandas as pd
-        pairs = [(r["src"], r["dst"]) for r in E.collect()]
-        names = sorted({x for p in pairs for x in p})
-        idx = {n: i for i, n in enumerate(names)}
-        src = np.array([idx[s] for s, _ in pairs])
-        dst = np.array([idx[d] for _, d in pairs])
+        names, src, dst = _node_index(head)
         n = len(names)
         out_deg = np.bincount(src, minlength=n)
         if init_ranks is None:
@@ -116,7 +121,6 @@ def pagerank(edges: DataFrame, damping: float = 0.85,
     # distributed branch: join iteration; lineage reset for real by a
     # disk checkpoint every 3rd round (iter_checkpoint), so per-round
     # cost stays flat at full max_iter rounds.
-    from .util import iter_checkpoint
     edges = E
     nodes = (edges.select(F.col("src").alias("node"))
              .union(edges.select(F.col("dst").alias("node")))
@@ -173,19 +177,15 @@ def hits(edges: DataFrame, max_iter: int = 15, round_to: int = 6,
     periodic disk reset) so both branches agree with the unrolled
     oracle."""
     E = edges.select("src", "dst").distinct()
-    n_edges = E.limit(driver_threshold + 1).count()
+    head = driver_edges(E, driver_threshold)
     spark = edges.sparkSession
-    if n_edges == 0:
+    if head is not None and head.empty:
         return spark.createDataFrame(
             [], "node string, hub double, authority double")
-    if n_edges <= driver_threshold:
+    if head is not None:
         import numpy as np
         import pandas as pd
-        pairs = [(r["src"], r["dst"]) for r in E.collect()]
-        nodes = sorted({x for p in pairs for x in p})
-        idx = {n: i for i, n in enumerate(nodes)}
-        src = np.array([idx[s] for s, _ in pairs])
-        dst = np.array([idx[d] for _, d in pairs])
+        nodes, src, dst = _node_index(head)
         h = np.ones(len(nodes)); a = np.ones(len(nodes))
         for _ in range(max_iter):
             a = np.bincount(dst, weights=h[src], minlength=len(nodes))
@@ -213,7 +213,6 @@ def hits(edges: DataFrame, max_iter: int = 15, round_to: int = 6,
                              .otherwise(F.lit(1.0)))
                 .drop("_n"))
 
-    from .util import iter_checkpoint
     for i in range(max_iter):
         auth = (ed.join(scores.select(F.col("node").alias("src"), "hub"),
                         "src")
@@ -482,7 +481,6 @@ def label_propagation(edges: DataFrame, rounds: int = 4) -> DataFrame:
     third round (iter_checkpoint) so per-round cost stays flat for
     arbitrarily many rounds.
     """
-    from .util import iter_checkpoint
     und = _undirected(edges)
     adj = (und.select(F.col("a").alias("node"), F.col("b").alias("nbr"))
            .unionAll(und.select(F.col("b").alias("node"),
@@ -566,22 +564,18 @@ def personalized_pagerank(edges: DataFrame, seeds: DataFrame,
     :func:`pagerank`.
     """
     E = edges.select("src", "dst").distinct()
-    n_edges = E.limit(driver_threshold + 1).count()
+    head = driver_edges(E, driver_threshold)
     spark = edges.sparkSession
-    if n_edges == 0:
+    if head is not None and head.empty:
         return spark.createDataFrame([], "node string, rank double")
-    if n_edges <= driver_threshold:
+    if head is not None:
         import numpy as np
         import pandas as pd
-        pairs = [(r["src"], r["dst"]) for r in E.collect()]
-        names = sorted({x for p in pairs for x in p})
-        idx = {n: i for i, n in enumerate(names)}
+        names, src, dst = _node_index(head)
         seed_set = {r["node"] for r in seeds.select("node").collect()}
-        seed_idx = [idx[s] for s in seed_set if s in idx]
-        if not seed_idx:
+        seed_idx = np.flatnonzero(np.isin(names, list(seed_set)))
+        if not len(seed_idx):
             raise ValueError("no seed is a node of the edge set")
-        src = np.array([idx[s] for s, _ in pairs])
-        dst = np.array([idx[d] for _, d in pairs])
         n = len(names)
         w = np.zeros(n)
         w[seed_idx] = n / len(seed_idx)
@@ -599,7 +593,6 @@ def personalized_pagerank(edges: DataFrame, seeds: DataFrame,
                             "rank": np.round(r, round_to)})
         return spark.createDataFrame(out).orderBy(F.desc("rank"),
                                                   "node")
-    from .util import iter_checkpoint
     edges = E
     nodes = (edges.select(F.col("src").alias("node"))
              .union(edges.select(F.col("dst").alias("node")))
@@ -832,11 +825,10 @@ def kcore(edges: DataFrame, k: int = 2,
     corpus, so below the edge cutoff the peel runs in plain Python on
     the driver — same rounds, same result (tested branch-for-branch).
     """
-    from .util import iter_checkpoint
     und = _undirected(edges)
-    n_edges = und.limit(driver_threshold + 1).count()
-    if n_edges <= driver_threshold:
-        pairs = [(r["a"], r["b"]) for r in und.collect()]
+    head = driver_edges(und, driver_threshold)
+    if head is not None:
+        pairs = list(head.itertuples(index=False, name=None))
         for _ in range(rounds):
             deg: dict = {}
             for a, b in pairs:
@@ -1027,14 +1019,13 @@ def bfs_distances(edges: DataFrame, seeds: DataFrame,
     runs in plain Python on the driver — same cap, same result
     (tested branch-for-branch).
     """
-    from .util import iter_checkpoint
     E = edges.select("src", "dst").where(
         F.col("src") != F.col("dst")).distinct()
-    n_edges = E.limit(driver_threshold + 1).count()
-    if n_edges <= driver_threshold:
+    head = driver_edges(E, driver_threshold)
+    if head is not None:
         adj: dict = {}
-        for r in E.collect():
-            adj.setdefault(r["src"], []).append(r["dst"])
+        for u, v in head.itertuples(index=False, name=None):
+            adj.setdefault(u, []).append(v)
         d = {r["node"]: 0 for r in
              seeds.select("node").distinct().collect()}
         frontier = list(d)
@@ -1237,20 +1228,16 @@ def weighted_pagerank(edges: DataFrame, damping: float = 0.85,
                       .alias("w"))
          .where(F.col("src") != F.col("dst"))
          .groupBy("src", "dst").agg(F.sum("w").alias("w")))
-    n_edges = E.limit(driver_threshold + 1).count()
+    head = driver_edges(E, driver_threshold)
     spark = edges.sparkSession
-    if n_edges == 0:
+    if head is not None and head.empty:
         return spark.createDataFrame([], "node string, rank double")
-    if n_edges <= driver_threshold:
+    if head is not None:
         import numpy as np
         import pandas as pd
-        rows = [(r["src"], r["dst"], r["w"]) for r in E.collect()]
-        names = sorted({x for s, d, _ in rows for x in (s, d)})
-        idx = {n: i for i, n in enumerate(names)}
+        names, src, dst = _node_index(head)
         n = len(names)
-        src = np.array([idx[s] for s, _, _ in rows])
-        dst = np.array([idx[d] for _, d, _ in rows])
-        w = np.array([x for _, _, x in rows])
+        w = head["w"].to_numpy()
         wsum = np.bincount(src, weights=w, minlength=n)
         dangling_mask = wsum == 0
         safe = np.where(dangling_mask, 1.0, wsum)
@@ -1264,7 +1251,6 @@ def weighted_pagerank(edges: DataFrame, damping: float = 0.85,
                             "rank": np.round(r, round_to)})
         return spark.createDataFrame(out).orderBy(F.desc("rank"),
                                                   "node")
-    from .util import iter_checkpoint
     nodes = (E.select(F.col("src").alias("node"))
              .union(E.select(F.col("dst").alias("node")))
              .distinct().localCheckpoint(eager=True))
@@ -1391,24 +1377,22 @@ def scc(edges: DataFrame,
     spark = edges.sparkSession
     E = (edges.select("src", "dst")
          .where(F.col("src") != F.col("dst")).distinct())
-    n_edges = E.limit(driver_threshold + 1).count()
-    if n_edges == 0:
+    head = driver_edges(E, driver_threshold)
+    if head is not None and head.empty:
         # self-loops / empty input: every named node is its own SCC
         return (edges.select(F.col("src").alias("node"))
                 .union(edges.select(F.col("dst").alias("node")))
                 .distinct()
                 .select("node", F.col("node").alias("scc_id"))
                 .orderBy("node"))
-    if n_edges <= driver_threshold:
-        pairs = [(r["src"], r["dst"]) for r in E.collect()]
+    if head is not None:
+        pairs = list(head.itertuples(index=False, name=None))
         # nodes appearing only in self-loops still need a row
         extra = (edges.select(F.col("src").alias("node"))
                  .union(edges.select(F.col("dst").alias("node")))
                  .distinct().collect())
         pairs += [(r["node"], r["node"]) for r in extra]
         return _driver_scc(spark, pairs).orderBy("node")
-
-    from .util import iter_checkpoint
 
     live_nodes = (edges.select(F.col("src").alias("node"))
                   .union(edges.select(F.col("dst").alias("node")))
@@ -1540,7 +1524,6 @@ def anf_neighborhood(edges: DataFrame, rounds: int = 6, p: int = 5,
     -in-expectation at every t it reports.
     """
     from .sketches import HLL_HASH_BITS, _alpha
-    from .util import iter_checkpoint
     m = 1 << p
     width = HLL_HASH_BITS - p
     spark = edges.sparkSession
@@ -1701,7 +1684,6 @@ def anf_centrality(edges: DataFrame, rounds: int = 6, p: int = 5,
     a new pass over edges.
     """
     from .sketches import HLL_HASH_BITS, _alpha
-    from .util import iter_checkpoint
     m = 1 << p
     width = HLL_HASH_BITS - p
     spark = edges.sparkSession
@@ -1841,16 +1823,15 @@ def weighted_sssp(edges: DataFrame, seeds: DataFrame,
     node-sized, edges never move; iter_checkpoint bounds lineage.
     Hybrid like bfs_distances below the edge cutoff.
     """
-    from .util import iter_checkpoint
     E = (edges.select("src", "dst", F.col("w").cast("double").alias("w"))
          .where(F.col("src") != F.col("dst"))
          .groupBy("src", "dst").agg(F.min("w").alias("w")))
-    n_edges = E.limit(driver_threshold + 1).count()
+    head = driver_edges(E, driver_threshold)
     spark = edges.sparkSession
-    if n_edges <= driver_threshold:
+    if head is not None:
         adj: dict = {}
-        for r in E.collect():
-            adj.setdefault(r["src"], []).append((r["dst"], r["w"]))
+        for u, v, w in head.itertuples(index=False, name=None):
+            adj.setdefault(u, []).append((v, w))
         d = {r["node"]: 0.0 for r in
              seeds.select("node").distinct().collect()}
         for _ in range(rounds):
@@ -1936,17 +1917,17 @@ def condensation(edges: DataFrame, rounds: int = 32,
     order-free — digit-free of batching, like the twin
     (:func:`sql_condensation`).
     """
-    from .util import iter_checkpoint
     spark = edges.sparkSession
     E0 = (edges.select("src", "dst")
           .where(F.col("src") != F.col("dst")).distinct())
-    if (scc_assign is None and
-            E0.limit(driver_threshold + 1).count() <= driver_threshold):
+    head = (driver_edges(E0, driver_threshold) if scc_assign is None
+            else None)
+    if head is not None:
         # driver branch (hybrid like scc/pagerank): the level loop is
         # depth-many Spark jobs on the distributed path — on a small
         # graph that is pure fixed cost (measured 19 s → <2 s at
         # bench SF). Same capped Jacobi semantics as below.
-        pairs = [(r["src"], r["dst"]) for r in E0.collect()]
+        pairs = list(head.itertuples(index=False, name=None))
         extra = (edges.select(F.col("src").alias("node"))
                  .union(edges.select(F.col("dst").alias("node")))
                  .distinct().collect())

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..namespaces import NS, RDF_TYPE
+from .util import DRIVER_THRESHOLD, driver_edges
 
 RDFS_SUBCLASS = NS["rdfs"] + "subClassOf"
 RDFS_SUBPROP = NS["rdfs"] + "subPropertyOf"
@@ -498,7 +499,7 @@ def _owl_schema(ontology, data_schema=()):
 def owl_materialize(triples: DataFrame,
                     ontology: list[tuple[str, str, str]],
                     include_data_schema: bool = True,
-                    driver_threshold: int = DELTA_BROADCAST_THRESHOLD
+                    driver_threshold: int = DRIVER_THRESHOLD
                     ) -> DataFrame:
     """→ distinct entailed (subject, predicate, object, objtype): the
     asserted triples plus the OWL-RL *property-rule* subset —
@@ -570,12 +571,11 @@ def owl_materialize(triples: DataFrame,
         # the per-predicate closure runs in plain Python (same
         # fixpoint, tested branch-for-branch); above it, the shared
         # (predicate, node)-keyed distributed iteration
-        n_edges = edges.limit(driver_threshold + 1).count()
-        if n_edges <= driver_threshold:
+        head = driver_edges(edges, driver_threshold)
+        if head is not None:
             by_p: dict = {}
-            for r in edges.collect():
-                by_p.setdefault(r["predicate"], {}).setdefault(
-                    r["subject"], set()).add(r["object"])
+            for p, s, o in head.itertuples(index=False, name=None):
+                by_p.setdefault(p, {}).setdefault(s, set()).add(o)
             rows = []
             for p, adj in by_p.items():
                 # per-source BFS: cost = closure size (NOT the

@@ -49,6 +49,22 @@ def iter_checkpoint(df: DataFrame, round_no: int,
     return df.localCheckpoint(eager=True)
 
 
+# edges; the default driver cutoff of every hybrid graph operator
+DRIVER_THRESHOLD = 2_000_000
+
+
+def driver_edges(E: DataFrame, threshold: int):
+    """The hybrid graph operators' one driver-or-distributed gate: →
+    ``E`` as a pandas frame when it has at most ``threshold`` rows (the
+    driver branch solves over it), else ``None`` (the distributed
+    branch). One Arrow job both decides and fetches: a limit-count and
+    then a Row collect ran the scan and the distinct shuffle twice, the
+    largest fixed term in the canonicalize stage (BENCH.md). Above the
+    cutoff at most ``threshold + 1`` rows reach the driver."""
+    head = E.limit(threshold + 1).toPandas()
+    return head if len(head) <= threshold else None
+
+
 def salted_agg(df: DataFrame, key_cols: list[str], aggs: dict,
                salt: int = 16) -> DataFrame:
     """Two-stage aggregation with an explicit salt on the group key —

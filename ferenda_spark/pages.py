@@ -28,6 +28,8 @@ from __future__ import annotations
 import datetime
 import random
 
+from .uris import RepoConfig
+
 VOCAB = ("data query scan table join merge filter window batch stream key "
          "value row column vector hash sort group order part small big fast "
          "slow spark agg line customer the a").split()
@@ -60,6 +62,8 @@ for _label, _uri in CATEGORIES:
     COMMONDATA[("bibo:identifier", _label)] = _uri
 
 BASE_URL = "http://example.org/"
+# the repository every page's URIs are minted under
+CFG = RepoConfig(alias="doc", url=BASE_URL)
 HOT_HOST = "http://hot.example.org/"
 
 

@@ -32,10 +32,8 @@ from pyspark.sql import functions as F
 
 from . import pages as P
 from .operators import extract, lineage, relate
-from .uris import RepoConfig
 
-# the repository every page's URIs are minted under
-CFG = RepoConfig(alias="doc", url="http://example.org/")
+CFG = P.CFG
 
 
 def warc_pages(blobs: DataFrame) -> DataFrame:

@@ -69,8 +69,6 @@ print("pages written")
 WORKLOAD_EXTRACT = r'''
 from ferenda_spark.operators.extract import extract_stage, triples_table
 from ferenda_spark.operators.relate import canonicalize_triples
-from ferenda_spark.uris import RepoConfig
-cfg = RepoConfig(alias="doc", url="http://example.org/")
 TRIPLES = "/tmp/scaling_triples_%d_c%d" % (n_docs, cores)
 
 def run():
@@ -81,7 +79,7 @@ def run():
     # shape (triples land in the lake between stages); caching 25M+
     # nested rows in the JVM heap GC-thrashes and does not scale.
     pages = spark.read.parquet(path)
-    triples_table(extract_stage(pages, cfg, P.COMMONDATA), "kg") \
+    triples_table(extract_stage(pages, P.CFG, P.COMMONDATA), "kg") \
         .write.mode("overwrite").parquet(TRIPLES)
     t = spark.read.parquet(TRIPLES)
     return canonicalize_triples(t).count()

@@ -122,6 +122,19 @@ def _imports(path: str, package: str) -> set[str]:
     return out
 
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _package_modules() -> dict[str, str]:
+    """Dotted name → path of every ferenda_spark module."""
+    modules = {}
+    for path in glob.glob(os.path.join(ROOT, "ferenda_spark", "**", "*.py"),
+                          recursive=True):
+        name = os.path.relpath(path, ROOT)[:-3].replace(os.sep, ".")
+        modules[name.removesuffix(".__init__")] = path
+    return modules
+
+
 def test_every_module_is_reachable():
     """Every ferenda_spark module is in the import closure of an entry
     point: scripts/, the driver contract, bench.py or kgbench/. A
@@ -129,12 +142,8 @@ def test_every_module_is_reachable():
     that only tests import is dead code. Every TEST_ONLY_MODULES entry
     must still exist and still be unreached, so the list cannot go
     stale."""
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    modules = {}
-    for path in glob.glob(os.path.join(root, "ferenda_spark", "**", "*.py"),
-                          recursive=True):
-        name = os.path.relpath(path, root)[:-3].replace(os.sep, ".")
-        modules[name.removesuffix(".__init__")] = path
+    root = ROOT
+    modules = _package_modules()
     entry_points = [os.path.join(root, "__spark_entry__.py"),
                     os.path.join(root, "bench.py"),
                     *glob.glob(os.path.join(root, "scripts", "*.py")),
@@ -157,3 +166,54 @@ def test_every_module_is_reachable():
         sorted(TEST_ONLY_MODULES - set(modules))
     assert not TEST_ONLY_MODULES & reached, \
         sorted(TEST_ONLY_MODULES & reached)
+
+
+GATE_MODULE = "ferenda_spark.operators.util"
+# shares the gate's value but picks between two distributed closure
+# plans (all-pairs vs seeded BFS); nothing is collected to the driver
+OTHER_CUTOFFS = {"ferenda_spark.sparql.PATH_DRIVER_THRESHOLD"}
+
+
+def test_one_driver_gate():
+    """The hybrid graph operators decide driver-or-distributed in one
+    place, operators/util.driver_edges. No other module computes a
+    threshold plus one (the limit of a count-then-collect gate) or
+    defines a driver cutoff constant, and every ``driver_threshold``
+    parameter defaults to the gate's ``DRIVER_THRESHOLD``."""
+    bad = []
+    for name, path in sorted(_package_modules().items()):
+        if name == GATE_MODULE:
+            continue
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        for node in ast.walk(tree):
+            where = "%s:%d" % (name, getattr(node, "lineno", 0))
+            if isinstance(node, ast.BinOp) and \
+                    isinstance(node.op, ast.Add):
+                sides = [node.left, node.right]
+                if any(isinstance(x, ast.Constant) and x.value == 1
+                       for x in sides) and \
+                        any(isinstance(x, (ast.Name, ast.Attribute)) and
+                            "threshold" in ast.unparse(x).lower()
+                            for x in sides):
+                    bad.append((where, ast.unparse(node)))
+            elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = (node.targets if isinstance(node, ast.Assign)
+                           else [node.target])
+                for t in targets:
+                    if isinstance(t, ast.Name) and "DRIVER" in t.id and \
+                            "THRESHOLD" in t.id and \
+                            name + "." + t.id not in OTHER_CUTOFFS:
+                        bad.append((where, t.id))
+            elif isinstance(node, (ast.FunctionDef, ast.Lambda)):
+                a = node.args
+                args = a.posonlyargs + a.args
+                pairs = (list(zip(args[len(args) - len(a.defaults):],
+                                  a.defaults)) +
+                         list(zip(a.kwonlyargs, a.kw_defaults)))
+                for arg, default in pairs:
+                    if arg.arg == "driver_threshold" and (
+                            default is None or
+                            ast.unparse(default) != "DRIVER_THRESHOLD"):
+                        bad.append((where, arg.arg))
+    assert not bad, bad

@@ -95,6 +95,21 @@ def test_counters_cold_unchanged_and_changed(spark, pages_dir, tmp_path):
     assert part["triples"] == full["triples"] == len(merged)
 
 
+def test_unparseable_rfc_page_is_one_parse_failure(spark, pages_dir,
+                                                   tmp_path):
+    """An RFC (.txt) page whose body no recognizer matches fails alone:
+    one parse/fail entry, and the build finishes with the other pages
+    ok."""
+    bad = P.BASE_URL + "doc/4.txt"
+    pages = spark.read.parquet(pages_dir).withColumn(
+        "html", F.when(F.col("url") == bad,
+                       F.lit("<html><head></head><body></body></html>")
+                       .cast("binary")).otherwise(F.col("html")))
+    assert pages.where(F.col("url") == bad).count() == 1
+    res = pipeline.run(spark, pages, str(tmp_path / "kg"), "r1")
+    assert res["counters"] == {"parse/ok": N - 1, "parse/fail": 1}
+
+
 def test_extracts_once_and_releases_the_cache(spark, pages_dir, tmp_path,
                                               monkeypatch):
     plans = {}
