@@ -13,12 +13,11 @@
   unrolled power iteration) over the same files. Reference-fixture
   value parity is additionally covered by pytest
   (tests/test_rfc_parity.py, tests/test_extract_stage.py).
-- everything else: crawl/WARC ingestion, sketches, text statistics,
-  dedup and ANN (the entity-resolution blocking family), event-time and
-  relational operators over the driver's parquet tables, each with an
-  exact DuckDB oracle (exceptions documented per query:
-  recall-probabilistic operators stay rows-only with pytest recall
-  assertions).
+- everything else: crawl/WARC ingestion, sketches, text statistics and
+  dedup (the entity-resolution blocking family) over the driver's
+  ``documents`` table (``SF_TABLES``), each with an exact DuckDB oracle
+  (the seeded SimHash operator's oracle is a single-threaded rerun of
+  its kernels; its recall against brute force is asserted in pytest).
 """
 
 from __future__ import annotations
@@ -30,16 +29,20 @@ from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import Window
 
 KG_N = 200          # synthetic pages corpus size for driver checks
 KG_PARTS = 8
 
 # The driver's correctness gate runs queries and oracles at sf=0.01;
-# the cross-execution twins (ferenda_spark.annoracle) must read the
-# same input dir. scripts/parity_check.py exports SF_DIR so the dev
-# harness agrees at any SF.
+# the materialized dedup oracles (dedup.ensure_jaccard_pairs_oracle,
+# dedup.ensure_simhash_oracle) must read the same input dir.
+# scripts/parity_check.py exports SF_DIR so the dev harness agrees at
+# any SF.
 CORRECTNESS_SF_DIR = os.environ.get("SF_DIR", "/root/testdata/sf0.01")
+
+# the sf-dir tables the queries read, each through _read; the
+# oracles see them as DuckDB views of the same names
+SF_TABLES = ("documents",)
 
 
 # --------------------------------------------------------------- helpers
@@ -3324,341 +3327,6 @@ def _q_dedup_clusters(spark, sf_dir, n):
     return dup_clusters(_lsh_pairs(spark, sf_dir))
 
 
-def _q_dedup_embedding(spark, sf_dir, n):
-    from ferenda_spark.operators.dedup import embedding_dup_pairs
-    return embedding_dup_pairs(_read(spark, sf_dir, "embeddings"),
-                               threshold=0.45)
-
-
-def _q_dedup_embedding_blocked(spark, sf_dir, n):
-    """Scale path: blocked exact GEMM candidates + fold re-verify —
-    output equals the brute twin bit-for-bit (same oracle)."""
-    from ferenda_spark.operators.dedup import embedding_dup_pairs_blocked
-    return embedding_dup_pairs_blocked(_read(spark, sf_dir, "embeddings"),
-                                       threshold=0.45)
-
-
-def _q_ann_topk(spark, sf_dir, n):
-    from ferenda_spark.operators.similarity import brute_force_topk
-    emb = _read(spark, sf_dir, "embeddings")
-    return brute_force_topk(emb, emb.where(F.col("vec_id") < 50), k=5)
-
-
-def _q_ann_lsh_topk(spark, sf_dir, n):
-    from ferenda_spark.operators.similarity import ann_lsh_topk
-    emb = _read(spark, sf_dir, "embeddings")
-    return ann_lsh_topk(emb, emb.where(F.col("vec_id") < 50), k=5)
-
-
-def _q_ann_pq_topk(spark, sf_dir, n):
-    """Product-quantization ANN (similarity.ann_pq_topk, Jégou et al.
-    TPAMI 2011): the memory-bound end of the ANN family — corpus
-    vectors compressed to 32 sub-codes (2-dim subspaces, 16 centroids
-    each), every query scores the whole
-    code table through per-subspace lookup tables (ADC), no candidate
-    generation; seeded/deterministic, hard cross-execution oracle
-    like the LSH/IVF variants, recall pinned in pytest."""
-    from ferenda_spark.operators.similarity import ann_pq_topk
-    emb = _read(spark, sf_dir, "embeddings")
-    return ann_pq_topk(emb, emb.where(F.col("vec_id") < 50), k=5)
-
-
-def _q_ann_ivf_topk(spark, sf_dir, n):
-    """IVF-bucketed ANN (k-means cells + nprobe); recall vs brute
-    force is probabilistic (asserted in pytest), but the operator is
-    seeded/deterministic so it carries a hard cross-execution oracle
-    (ferenda_spark.annoracle)."""
-    from ferenda_spark.operators.similarity import ann_ivf_topk
-    emb = _read(spark, sf_dir, "embeddings")
-    return ann_ivf_topk(emb, emb.where(F.col("vec_id") < 50), k=5)
-
-
-def _q_embedding_clusters(spark, sf_dir, n):
-    """Corpus k-means clustering (domain balancing / data mixing):
-    every vector assigned to its nearest seeded centroid in one
-    shuffle-free Arrow pass; hard cross-execution oracle
-    (ferenda_spark.annoracle, bit-exact fold-order kernels)."""
-    from ferenda_spark.operators.similarity import kmeans_clusters
-    return kmeans_clusters(_read(spark, sf_dir, "embeddings"))
-
-
-# ---- relational / faceting analogs (SURVEY.md §2.5) over parquet
-
-FACET_PIVOT_SQL = """
-    SELECT user_id,
-           count(*) FILTER (event_type = 'click')    AS n_click,
-           count(*) FILTER (event_type = 'error')    AS n_error,
-           count(*) FILTER (event_type = 'purchase') AS n_purchase,
-           count(*) FILTER (event_type = 'signup')   AS n_signup,
-           count(*) FILTER (event_type = 'view')     AS n_view
-    FROM events GROUP BY user_id ORDER BY user_id
-"""
-
-
-def _q_facet_pivot(spark, sf_dir, n):
-    """faceted_data analog: pivot events per user over event_type."""
-    events = _read(spark, sf_dir, "events")
-    types = ["click", "error", "purchase", "signup", "view"]
-    return (events.groupBy("user_id")
-            .pivot("event_type", types)
-            .agg(F.count(F.lit(1)))
-            .na.fill(0, types)
-            .select("user_id", *[F.col(t).alias("n_" + t) for t in types])
-            .orderBy("user_id"))
-
-
-STATS_GROUPBY_SQL = """
-    SELECT lang, count(DISTINCT doc_id) AS n_docs,
-           sum(n_chars)::BIGINT AS total_chars,
-           round(avg(n_chars), 4) AS avg_chars
-    FROM documents GROUP BY lang ORDER BY lang
-"""
-
-
-def _q_stats_groupby(spark, sf_dir, n):
-    """API-statistics analog (ref ferenda/wsgiapp.py:352-506)."""
-    docs = _read(spark, sf_dir, "documents")
-    return (docs.groupBy("lang")
-            .agg(F.countDistinct("doc_id").alias("n_docs"),
-                 F.sum("n_chars").alias("total_chars"),
-                 F.round(F.avg("n_chars"), 4).alias("avg_chars"))
-            .orderBy("lang"))
-
-
-WINDOW_TOPK_SQL = """
-    SELECT lang, rank, doc_id, n_chars FROM (
-      SELECT lang, doc_id, n_chars,
-             row_number() OVER (PARTITION BY lang
-                                ORDER BY n_chars DESC, doc_id ASC)
-               AS rank
-      FROM documents)
-    WHERE rank <= 3 ORDER BY lang, rank
-"""
-
-
-def _q_window_topk(spark, sf_dir, n):
-    """TOC/news top-k-per-group analog."""
-    docs = _read(spark, sf_dir, "documents")
-    w = Window.partitionBy("lang").orderBy(F.desc("n_chars"), F.asc("doc_id"))
-    return (docs.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= 3)
-            .select("lang", "rank", "doc_id", "n_chars")
-            .orderBy("lang", "rank"))
-
-
-EVENTS_WINDOWED_SQL = """
-    SELECT strftime(time_bucket(INTERVAL 1 DAY, ts),
-                    '%Y-%m-%d %H:%M:%S') AS window_start,
-           event_type, count(*) AS n_events,
-           round(sum(value), 4) AS sum_value
-    FROM events GROUP BY 1, 2 ORDER BY window_start, event_type
-"""
-
-
-def _q_events_windowed(spark, sf_dir, n):
-    """Tumbling event-time window rollup (streaming/windows.py —
-    batch form; the streaming form shares the expression)."""
-    from ferenda_spark.streaming.windows import windowed_event_counts
-    return windowed_event_counts(_read(spark, sf_dir, "events"))
-
-
-def _q_events_asof(spark, sf_dir, n):
-    """Backward as-of join (versioning.asof_join): every event picks
-    the per-user config version current at event time (versions land
-    hourly+6h per user starting 01:00, so first-hour events match
-    NULL); oracle = DuckDB's NATIVE ASOF LEFT JOIN over the same
-    formulaic version table — semantics pinned to the reference
-    implementation of the concept."""
-    from ferenda_spark.operators.versioning import asof_join
-    events = _read(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id")
-    r = F.col("id")
-    versions = spark.range(150 * 4).select(
-        (r % 150).cast("long").alias("user_id"),
-        (F.lit("2024-01-01 01:00:00").cast("timestamp") +
-         F.make_interval(hours=(r / 150).cast("int") * 6)).alias("ts"),
-        (r / 150).cast("long").alias("version"))
-    out = asof_join(events, versions, ["user_id"],
-                    value_cols=["version"])
-    return out.select("event_id", F.col("ts").cast("string").alias("ts"),
-                      "user_id", "version")
-
-
-def _q_events_range_join(spark, sf_dir, n):
-    """Grid-bucketed range join (versioning.range_join): formulaic
-    points land in formulaic per-key validity intervals (start ≤ ts <
-    end); boundary points sit exactly on starts/ends of every 8th
-    interval, intervals span 0-4 grid cells so the explode fan-out and
-    the single-cell point path are both exercised. Oracle: the plain
-    inequality join (DuckDB IEJoin)."""
-    from ferenda_spark.operators.versioning import range_join
-    i = F.col("id")
-    intervals = spark.range(200).select(
-        i.alias("interval_id"), (i % 10).alias("key"),
-        ((i * 7) % 1000).alias("start"),
-        ((i * 7) % 1000 + (i % 5) * 130 + 5).alias("end"))
-    points = spark.range(2000).select(
-        i.alias("point_id"), (i % 10).alias("key"),
-        F.when(i % 8 == 0, (F.floor(i / 8).cast("long") * 7) % 1000)
-         .otherwise(i % 1009).alias("ts"))
-    return range_join(points, intervals, on=["key"], grid=64)
-
-
-EVENTS_RANGE_SQL = """
-    WITH intervals AS (
-      SELECT r AS interval_id, r % 10 AS key,
-             (r * 7) % 1000 AS start,
-             (r * 7) % 1000 + (r % 5) * 130 + 5 AS "end"
-      FROM range(200) t(r)),
-    points AS (
-      SELECT r AS point_id, r % 10 AS key,
-             CASE WHEN r % 8 = 0 THEN ((r // 8) * 7) % 1000
-                  ELSE r % 1009 END AS ts
-      FROM range(2000) t(r))
-    SELECT p.point_id, p.key, p.ts,
-           i.interval_id, i.start, i."end"
-    FROM points p JOIN intervals i
-      ON p.key = i.key AND p.ts >= i.start AND p.ts < i."end"
-"""
-
-
-def _q_events_interval_overlap(spark, sf_dir, n):
-    """Grid-bucketed interval×interval overlap join
-    (versioning.interval_overlap): formulaic validity windows ↔
-    formulaic campaign windows on the same key, half-open semantics
-    (touching ends never match), every 7th campaign empty (matches
-    nothing), spans of 0-4 grid cells on both sides so the
-    first-shared-cell dedup is load-bearing. Oracle: the plain
-    inequality join."""
-    from ferenda_spark.operators.versioning import interval_overlap
-    i = F.col("id")
-    left = spark.range(200).select(
-        i.alias("interval_id"), (i % 10).alias("key"),
-        ((i * 7) % 1000).alias("start"),
-        ((i * 7) % 1000 + (i % 5) * 130 + 5).alias("end"))
-    right = spark.range(150).select(
-        i.alias("campaign_id"), (i % 10).alias("key"),
-        ((i * 13) % 1000).alias("rstart"),
-        ((i * 13) % 1000 + (i % 7) * 60).alias("rend"))
-    return interval_overlap(left, right, on=["key"], grid=64)
-
-
-EVENTS_OVERLAP_SQL = """
-    WITH lv AS (
-      SELECT r AS interval_id, r % 10 AS key,
-             (r * 7) % 1000 AS start,
-             (r * 7) % 1000 + (r % 5) * 130 + 5 AS "end"
-      FROM range(200) t(r)),
-    rv AS (
-      SELECT r AS campaign_id, r % 10 AS key,
-             (r * 13) % 1000 AS rstart,
-             (r * 13) % 1000 + (r % 7) * 60 AS rend
-      FROM range(150) t(r))
-    SELECT l.interval_id, l.key, l.start, l."end",
-           r.campaign_id, r.rstart, r.rend
-    FROM lv l JOIN rv r
-      ON l.key = r.key AND l.start < r.rend AND r.rstart < l."end"
-      AND r.rend > r.rstart AND l."end" > l.start
-"""
-
-
-EVENTS_ASOF_SQL = """
-    WITH versions AS (
-      SELECT (r % 150)::BIGINT AS user_id,
-             TIMESTAMP '2024-01-01 01:00:00'
-               + INTERVAL 6 HOUR * (r // 150) AS ts,
-             (r // 150)::BIGINT AS version
-      FROM range(600) t(r))
-    SELECT e.event_id, e.ts::varchar AS ts, e.user_id, v.version
-    FROM events e ASOF LEFT JOIN versions v
-      ON e.user_id = v.user_id AND e.ts >= v.ts
-"""
-
-
-EVENTS_SESSIONIZE_SQL = """
-    WITH flagged AS (
-      SELECT user_id, ts, event_id,
-             CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER w
-                       >= 1800000000
-                  THEN 1 ELSE 0 END AS new_session
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ), with_id AS (
-      SELECT user_id, ts,
-             sum(new_session) OVER (PARTITION BY user_id
-                                    ORDER BY ts, event_id
-                                    ROWS UNBOUNDED PRECEDING)
-               AS session_seq
-      FROM flagged
-    )
-    SELECT user_id, session_seq::BIGINT AS session_seq,
-           strftime(min(ts), '%Y-%m-%d %H:%M:%S')
-             AS session_start,
-           count(*) AS n_events,
-           (epoch_us(max(ts)) - epoch_us(min(ts)))::BIGINT
-             AS duration_us
-    FROM with_id GROUP BY user_id, session_seq
-    ORDER BY user_id, session_seq
-"""
-
-
-def _q_events_sessionize(spark, sf_dir, n):
-    """Gap-based session reconstruction per user (30-minute gap)."""
-    from ferenda_spark.streaming.windows import sessionize
-    return sessionize(_read(spark, sf_dir, "events"))
-
-
-REVERSE_REFS_SQL = """
-    SELECT o.o_custkey AS custkey, c.c_name,
-           count(*) AS n_orders,
-           round(sum(o.o_totalprice), 2) AS total_price
-    FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-    GROUP BY o.o_custkey, c.c_name ORDER BY custkey
-"""
-
-
-def _q_reverse_refs(spark, sf_dir, n):
-    """relate_dependencies-shaped reverse-reference join on TPC-H:
-    per-customer inbound order count (broadcast dim join)."""
-    orders = _read(spark, sf_dir, "orders")
-    customer = _read(spark, sf_dir, "customer")
-    agg = orders.groupBy("o_custkey").agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        F.round(F.sum("o_totalprice"), 2).alias("total_price"))
-    return (agg.join(F.broadcast(customer.select("c_custkey", "c_name")),
-                     agg.o_custkey == F.col("c_custkey"))
-            .select(F.col("c_custkey").alias("custkey"), "c_name",
-                    "n_orders", "total_price")
-            .orderBy("custkey"))
-
-
-LINEITEM_PRICING_SQL = """
-    SELECT l_returnflag, l_linestatus,
-           round(sum(l_quantity), 2) AS sum_qty,
-           round(sum(l_extendedprice), 2) AS sum_base_price,
-           round(sum(l_extendedprice * (1 - l_discount)), 2)
-             AS sum_disc_price,
-           count(*) AS count_order
-    FROM lineitem WHERE l_shipdate <= DATE '1998-09-02'
-    GROUP BY l_returnflag, l_linestatus
-    ORDER BY l_returnflag, l_linestatus
-"""
-
-
-def _q_lineitem_pricing(spark, sf_dir, n):
-    """TPC-H Q1-shaped scan+agg (bench headline; pushdown showcase)."""
-    li = _read(spark, sf_dir, "lineitem")
-    return (li.where(F.col("l_shipdate") <= "1998-09-02")
-            .groupBy("l_returnflag", "l_linestatus")
-            .agg(F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-                 F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-                 F.round(F.sum(F.col("l_extendedprice") *
-                               (1 - F.col("l_discount"))), 2)
-                  .alias("sum_disc_price"),
-                 F.count(F.lit(1)).alias("count_order"))
-            .orderBy("l_returnflag", "l_linestatus"))
-
-
 # ------------------------------------------------------------ registry
 
 class Query(NamedTuple):
@@ -3674,31 +3342,31 @@ class Query(NamedTuple):
 
 class OracleInputs(NamedTuple):
     kg: dict[str, str]   # materialized KG extraction parquet at n
-    ann: dict            # cross-execution ANN twin tables
     jaccard: str         # brute-force jaccard ground truth (3 oracles)
+    simhash: str         # single-threaded SimHash twin
 
 
 def oracle_inputs(n: int) -> OracleInputs:
     """Materialize what the oracles read (pure pandas/pyarrow; no-op
     when cached), so the driver can run the SQL right away."""
-    from ferenda_spark import annoracle
     from ferenda_spark.operators import dedup
     # the quadratic jaccard ground truth is materialized once (same
     # DuckDB engine + SQL, cached by input/kernel fingerprint) and
-    # shared by three oracles — see dedup.ensure_jaccard_pairs_oracle
-    jaccard = ("SELECT * FROM read_parquet('%s') ORDER BY a_id, b_id"
-               % dedup.ensure_jaccard_pairs_oracle(CORRECTNESS_SF_DIR,
-                                                   threshold=0.5))
-    return OracleInputs(_kg_paths(n),
-                        annoracle.ensure_ann_tables(CORRECTNESS_SF_DIR),
-                        jaccard)
+    # shared by three oracles; the SimHash twin goes through the same
+    # cache — see dedup._cached_oracle
+    pairs = "SELECT * FROM read_parquet('%s') ORDER BY a_id, b_id"
+    return OracleInputs(
+        _kg_paths(n),
+        pairs % dedup.ensure_jaccard_pairs_oracle(CORRECTNESS_SF_DIR,
+                                                  threshold=0.5),
+        pairs % dedup.ensure_simhash_oracle(CORRECTNESS_SF_DIR))
 
 
 def registry() -> tuple[Query, ...]:
     """Every driver query in driver order; queries(), oracle_sql() and
     bench.py are views over this one list."""
-    from ferenda_spark import annoracle, kgoracle, sparql
-    from ferenda_spark.operators import dedup, graphops, similarity, textops
+    from ferenda_spark import kgoracle, sparql
+    from ferenda_spark.operators import dedup, graphops, textops
     from ferenda_spark.operators import linking as _linking_ops
     from ferenda_spark.operators import sketches as _sketches
     from ferenda_spark.operators import validate as _validate
@@ -4040,26 +3708,7 @@ def registry() -> tuple[Query, ...]:
               lambda o: dedup.oracle_sql_dedup_delta(
                   "(SELECT doc_id, text FROM documents)", DELTA_BATCH_SQL),
               bench=True),
-        # relational / faceting analogs
-        Query("facet_pivot", _q_facet_pivot,
-              lambda o: FACET_PIVOT_SQL, bench=True),
-        Query("events_windowed", _q_events_windowed,
-              lambda o: EVENTS_WINDOWED_SQL, bench=True),
-        Query("events_sessionize", _q_events_sessionize,
-              lambda o: EVENTS_SESSIONIZE_SQL, bench=True),
-        Query("events_asof", _q_events_asof,
-              lambda o: EVENTS_ASOF_SQL, bench=True),
-        Query("events_range_join", _q_events_range_join,
-              lambda o: EVENTS_RANGE_SQL, bench=True),
-        Query("events_interval_overlap", _q_events_interval_overlap,
-              lambda o: EVENTS_OVERLAP_SQL, bench=True),
-        Query("stats_groupby", _q_stats_groupby, lambda o: STATS_GROUPBY_SQL),
-        Query("window_topk", _q_window_topk, lambda o: WINDOW_TOPK_SQL),
-        Query("reverse_refs", _q_reverse_refs,
-              lambda o: REVERSE_REFS_SQL, bench=True),
-        Query("lineitem_pricing", _q_lineitem_pricing,
-              lambda o: LINEITEM_PRICING_SQL, bench=True),
-        # dedup / ANN family LAST — the wall-time tail of the gate
+        # dedup family LAST — the wall-time tail of the gate
         # (VERDICT r3 #1: budget truncation hits the cheapest coverage
         # first when these run in the middle); ordered so the shared
         # shingle stage and LSH pair table warm for their reusers
@@ -4071,32 +3720,12 @@ def registry() -> tuple[Query, ...]:
         Query("dedup_windows", _q_dedup_windows,
               lambda o: dedup.oracle_sql_duplicate_windows(
                   table=SPAN_DOCS_SQL, k=20), bench=True),
-        Query("ann_topk", _q_ann_topk,
-              lambda o: similarity.oracle_sql_brute_force_topk(k=5,
-                                                               n_queries=50),
-              bench=True),
-        # o.ann oracles: seeded probabilistic kernels (dedup_simhash,
-        # ann_lsh/pq/ivf_topk, embedding_clusters) cannot promise
-        # equality with brute force (recall is asserted in pytest), but
-        # a single-threaded rerun of the same kernels is a hard oracle
-        # for the distributed execution (ferenda_spark.annoracle
-        # explains why it is bit-exact)
-        Query("ann_lsh_topk", _q_ann_lsh_topk,
-              lambda o: annoracle.sql_ann_topk(o.ann, "ann_lsh_topk")),
-        Query("ann_pq_topk", _q_ann_pq_topk,
-              lambda o: annoracle.sql_ann_topk(o.ann, "ann_pq_topk"),
-              bench=True),
-        Query("ann_ivf_topk", _q_ann_ivf_topk,
-              lambda o: annoracle.sql_ann_topk(o.ann, "ann_ivf_topk")),
-        Query("embedding_clusters", _q_embedding_clusters,
-              lambda o: annoracle.sql_embedding_clusters(o.ann)),
-        Query("dedup_embedding", _q_dedup_embedding,
-              lambda o: dedup.oracle_sql_embedding_dup(threshold=0.45)),
-        Query("dedup_embedding_blocked", _q_dedup_embedding_blocked,
-              lambda o: dedup.oracle_sql_embedding_dup(threshold=0.45),
-              bench=True),
+        # SimHash is seeded and cannot promise equality with brute
+        # force (recall is asserted in pytest), but a single-threaded
+        # rerun of the same kernels is a hard oracle for the
+        # distributed execution (dedup.simhash_twin)
         Query("dedup_simhash", _q_dedup_simhash,
-              lambda o: annoracle.sql_simhash(o.ann), bench=True),
+              lambda o: o.simhash, bench=True),
         # LSH verifies candidates with exact jaccard → same ground
         # truth as brute force (recall checked by the oracle).
         Query("dedup_minhash_lsh", _q_dedup_minhash_lsh,

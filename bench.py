@@ -6,7 +6,8 @@ The timed set is every bench-flagged entry of
 checks, run at the bench corpus size ``kg_n`` (scaled with sf) — plus
 five bench-only entries that time the extraction stage itself:
 kg_extract, kg_extract_materialized, kg_full_pipeline, kg_materialize
-and kg_xhtml.
+and kg_xhtml. Of the sf dir's tables only those in
+``__spark_entry__.SF_TABLES`` (``documents``) are read.
 """
 
 from __future__ import annotations

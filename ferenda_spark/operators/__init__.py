@@ -1,3 +1,3 @@
 """Distributed operators: Arrow-UDF extraction stage, relate joins,
-graph algorithms, crawl/WARC ingestion, and the dedup / similarity /
+graph algorithms, crawl/WARC ingestion, and the dedup and
 text operators that entity resolution and linking build on."""

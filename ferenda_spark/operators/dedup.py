@@ -1,5 +1,5 @@
 """Deduplication operators: exact, n-gram Jaccard, MinHash+LSH,
-SimHash, embedding-cosine near-dup.
+SimHash, containment, line and window dedup.
 
 Design for 100 TB: the only all-pairs comparison ever executed is
 *within LSH/SimHash candidate buckets* — global work is
@@ -244,7 +244,7 @@ def simhash64(text: str, n: int = 3) -> int:
     """64-bit SimHash of one document (signed two's complement):
     per-bit majority vote of the per-shingle 64-bit base hashes. Pure
     — shared by the distributed stage and the single-threaded oracle
-    twin (annoracle.py)."""
+    twin (:func:`simhash_twin`)."""
     import numpy as np
     shingles = _shingle_set(text or "", n)
     if not shingles:
@@ -322,262 +322,6 @@ def simhash_pairs(df: DataFrame, max_hamming: int = 6,
             .orderBy("a_id", "b_id"))
 
 
-# ----------------------------------------------- embedding near-dup
-
-def cosine_sim(a, b):
-    """Sequential-fold double-precision cosine — same operation order
-    as the DuckDB list_reduce oracle, so results are bit-comparable."""
-    dot = F.aggregate(F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-                      F.lit(0.0), lambda acc, v: acc + v)
-    na = F.sqrt(F.aggregate(F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-                            F.lit(0.0), lambda acc, v: acc + v))
-    nb = F.sqrt(F.aggregate(F.transform(b, lambda x: x.cast("double") * x.cast("double")),
-                            F.lit(0.0), lambda acc, v: acc + v))
-    return dot / (na * nb)
-
-
-def normalized_vec(vec):
-    """v / ||v|| — same sequential-fold norm as the DuckDB oracle."""
-    n = F.sqrt(F.aggregate(
-        F.transform(vec, lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0), lambda acc, v: acc + v))
-    return F.transform(vec, lambda x: x.cast("double") / n)
-
-
-def embedding_dup_pairs(df: DataFrame, threshold: float = 0.95,
-                        vec_col: str = "embedding",
-                        id_col: str = "vec_id") -> DataFrame:
-    """Brute-force embedding near-dup pairs (cosine ≥ threshold),
-    a_id < b_id. O(n²) oracle twin; the scale path buckets by
-    random-hyperplane LSH first (see similarity.ann_lsh_topk).
-
-    Vectors are L2-normalized once per row below the join, so each of
-    the O(n²) pairs costs a single dot-product fold rather than three.
-    """
-    a = ensure_parallelism(df).select(
-        F.col(id_col).alias("a_id"),
-        normalized_vec(F.col(vec_col)).alias("a_v"))
-    b = df.select(F.col(id_col).alias("b_id"),
-                  normalized_vec(F.col(vec_col)).alias("b_v"))
-    dot = F.aggregate(F.zip_with("a_v", "b_v", lambda x, y: x * y),
-                      F.lit(0.0), lambda acc, v: acc + v)
-    return (a.join(b, F.col("a_id") < F.col("b_id"))
-            .select("a_id", "b_id",
-                    F.round(dot, 6).alias("cos_sim"))
-            .where(F.col("cos_sim") >= threshold)
-            .orderBy("a_id", "b_id"))
-
-
-def _assign_with_angle(df: DataFrame, id_col: str, vec_col: str,
-                       C) -> DataFrame:
-    """(id, cell, angle): nearest centroid per vector by cosine, plus
-    the angular distance to it — one Arrow-batched numpy stage (the
-    radius input for exact cell-pair pruning)."""
-    import pandas as pd
-    from pyspark.sql.types import (DoubleType, IntegerType, LongType,
-                                   StructField, StructType)
-    schema = StructType([StructField("id", LongType()),
-                         StructField("cell", IntegerType()),
-                         StructField("angle", DoubleType())])
-
-    def run(batches):
-        import numpy as np
-        Cl = np.asarray(C)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy()
-            V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            V = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True),
-                               1e-12)
-            S = V @ Cl.T
-            cell = S.argmax(axis=1)
-            ang = np.arccos(np.clip(S[np.arange(len(V)), cell], -1.0, 1.0))
-            yield pd.DataFrame({"id": ids, "cell": cell.astype("int32"),
-                                "angle": ang})
-
-    from .util import ensure_parallelism
-    return ensure_parallelism(df.select(id_col, vec_col)) \
-        .mapInPandas(run, schema)
-
-
-def embedding_dup_pairs_blocked(df: DataFrame, threshold: float = 0.95,
-                                vec_col: str = "embedding",
-                                id_col: str = "vec_id",
-                                n_blocks: int | None = None,
-                                margin: float = 1e-3,
-                                n_cells: int | None = None,
-                                train_sample: int = 20_000,
-                                seed: int = 11,
-                                stats_out: dict | None = None) -> DataFrame:
-    """Scale-path embedding near-dup: IVF-pruned blocked exact GEMM.
-
-    Hyperplane LSH cannot give oracle-equality recall here — the
-    corpus's qualifying pairs sit on a continuum at the threshold
-    (cos 0.450 vs background 0.4497), so any probabilistic bucketing
-    misses boundary pairs. The scalable *exact* design: cluster the
-    vectors into IVF cells (seeded k-means on a hash-random sample),
-    prune cell pairs that PROVABLY cannot contain a qualifying pair,
-    then run one numpy GEMM per surviving block pair and re-verify
-    candidates with the SAME sequential-fold cosine the brute twin and
-    the DuckDB oracle use — so the output is bit-identical to brute
-    force while candidate work tracks the corpus's cluster structure
-    instead of its size squared.
-
-    The pruning bound is exact, not probabilistic: for unit vectors
-    x∈cell i, y∈cell j with centroids cᵢ,cⱼ and angular radii rᵢ,rⱼ
-    (max member→centroid angle), the spherical triangle inequality
-    gives angle(x,y) ≥ θ(cᵢ,cⱼ) − rᵢ − rⱼ, so
-    cos_sim(x,y) ≤ cos(max(0, θᵢⱼ − rᵢ − rⱼ)). A cell pair is dropped
-    only when that upper bound clears the GEMM cut (threshold − margin)
-    by another 1e-6 float-slack — missing a true pair would need an
-    arccos error > 1e-6 rad (actual ~1e-8). On an unclusterable corpus
-    nothing prunes and the plan degrades to the round-2 all-pairs GEMM
-    (correct, quadratic); on clustered data — the realistic web-corpus
-    shape — surviving pairs grow ~linearly with cell count
-    (tests/test_training_ops.py asserts sub-quadratic growth and
-    bit-equality on such a corpus).
-
-    Cells larger than the block budget split into hash sub-blocks, so
-    per-task memory stays bounded regardless of cluster skew (a hot
-    cell becomes many uniform tasks, not one giant one; AQE covers
-    residual imbalance). Centroid training is O(sample·cells·dim) on
-    the driver and cell-pair pruning O(cells²) centroid math — at
-    10^12 rows both stay driver-cheap for tens of thousands of cells,
-    beyond which the same bound prunes hierarchically.
-
-    → (a_id, b_id, cos_sim), a_id < b_id.
-    """
-    import math
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import (DoubleType, LongType, StructField,
-                                   StructType)
-
-    from .similarity import _kmeans_centroids, train_sample_matrix
-
-    spark = df.sparkSession
-    norm = df.select(F.col(id_col).alias("id"),
-                     normalized_vec(F.col(vec_col)).alias("v"))
-    n = df.count()
-    if n == 0:
-        return spark.createDataFrame(
-            [], "a_id long, b_id long, cos_sim double")
-    if n_blocks is None:
-        n_blocks = max(2, math.ceil(n / 2000))   # ≈2k vectors per block
-    if n_cells is None:
-        n_cells = min(64, max(4, n_blocks))
-    cut = threshold - margin
-    eps = 1e-6
-
-    # IVF front-end: train cells, assign with member→centroid angles
-    C = _kmeans_centroids(
-        train_sample_matrix(df, train_sample, vec_col, id_col),
-        n_cells, seed=seed)
-    assign = _assign_with_angle(df, id_col, vec_col, C) \
-        .localCheckpoint(eager=True)  # reused: radii agg + row blocking
-    cells = (assign.groupBy("cell")
-             .agg(F.max("angle").alias("radius"),
-                  F.count(F.lit(1)).alias("n_rows"))
-             .toPandas().sort_values("cell"))
-    cell_ids = cells["cell"].to_numpy()
-    radius = dict(zip(cell_ids, cells["radius"]))
-    n_rows = dict(zip(cell_ids, cells["n_rows"]))
-    # exact cell-pair pruning on centroid geometry (driver, tiny)
-    Cn = np.asarray(C)
-    theta = np.arccos(np.clip(Cn @ Cn.T, -1.0, 1.0))
-    kept_cell_pairs = []
-    for x in range(len(cell_ids)):
-        for y in range(x, len(cell_ids)):
-            ci, cj = int(cell_ids[x]), int(cell_ids[y])
-            if ci == cj:
-                kept_cell_pairs.append((ci, cj))
-                continue
-            gap = max(0.0, theta[ci, cj] - radius[ci] - radius[cj] - eps)
-            if math.cos(gap) >= cut - eps:
-                kept_cell_pairs.append((ci, cj))
-    # sub-block large cells so every GEMM task stays memory-bounded
-    total = sum(n_rows.values())
-    block_rows = max(1, math.ceil(total / n_blocks))
-    n_sub = {c: max(1, math.ceil(n_rows[c] / block_rows)) for c in n_rows}
-    task_rows = []
-    for ci, cj in kept_cell_pairs:
-        for si in range(n_sub[ci]):
-            for sj in range(n_sub[cj] if ci != cj else n_sub[ci]):
-                if ci == cj and sj < si:
-                    continue
-                task_rows.append((ci * 100_000 + si, cj * 100_000 + sj))
-    if stats_out is not None:
-        nc = len(cell_ids)
-        all_blocks = sum(n_sub.values())
-        stats_out.update(
-            n_cells=nc, n_cell_pairs_total=nc * (nc + 1) // 2,
-            n_cell_pairs_kept=len(kept_cell_pairs),
-            n_blocks=all_blocks,
-            n_block_tasks_unpruned=all_blocks * (all_blocks + 1) // 2,
-            n_block_tasks=len(task_rows))
-    sub_expr = F.create_map(
-        *[F.lit(v) for kv in n_sub.items() for v in kv])
-    blocked = (norm.join(assign.select("id", "cell"), "id")
-               .withColumn("b", (F.col("cell") * 100_000 +
-                                 F.pmod(F.xxhash64("id"),
-                                        sub_expr[F.col("cell")]))
-                           .cast("long")))
-    grouped = blocked.groupBy("b").agg(
-        F.collect_list(F.struct("id", "v")).alias("rows"))
-    tasks = spark.createDataFrame(
-        pd.DataFrame(task_rows, columns=["bi", "bj"]),
-        schema="bi long, bj long")
-    paired = (tasks
-              .join(grouped.select(F.col("b").alias("bi"),
-                                   F.col("rows").alias("rows_i")), "bi")
-              .join(grouped.select(F.col("b").alias("bj"),
-                                   F.col("rows").alias("rows_j")), "bj")
-              .repartition(max(spark.sparkContext.defaultParallelism,
-                               len(task_rows) // 4 + 1)))
-    out_schema = StructType([StructField("a_id", LongType()),
-                             StructField("b_id", LongType()),
-                             StructField("gemm_sim", DoubleType())])
-    cut = threshold - margin
-
-    def gemm(batches):
-        import numpy as np
-        for pdf in batches:
-            for _, row in pdf.iterrows():
-                same = row["bi"] == row["bj"]
-                ids_i = np.array([r["id"] for r in row["rows_i"]])
-                ids_j = (ids_i if same
-                         else np.array([r["id"] for r in row["rows_j"]]))
-                Vi = np.array([r["v"] for r in row["rows_i"]])
-                Vj = Vi if same else np.array([r["v"] for r in row["rows_j"]])
-                S = Vi @ Vj.T
-                ai, bj = np.nonzero(S >= cut)
-                a, b = ids_i[ai], ids_j[bj]
-                if same:
-                    # both (x,y) and (y,x) appear — keep one ordering
-                    keep = a < b
-                    a, b, s = a[keep], b[keep], S[ai, bj][keep]
-                else:
-                    # each unordered pair appears once; order the ids
-                    s = S[ai, bj]
-                    a, b = np.minimum(a, b), np.maximum(a, b)
-                yield pd.DataFrame({"a_id": a, "b_id": b, "gemm_sim": s})
-
-    cand = paired.mapInPandas(gemm, out_schema).select("a_id", "b_id")
-    # exact re-verify: identical fold + rounding to the brute twin
-    withv = (cand
-             .join(norm.select(F.col("id").alias("a_id"),
-                               F.col("v").alias("a_v")), "a_id")
-             .join(norm.select(F.col("id").alias("b_id"),
-                               F.col("v").alias("b_v")), "b_id"))
-    dot = F.aggregate(F.zip_with("a_v", "b_v", lambda x, y: x * y),
-                      F.lit(0.0), lambda acc, v: acc + v)
-    return (withv.select("a_id", "b_id", F.round(dot, 6).alias("cos_sim"))
-            .where(F.col("cos_sim") >= threshold)
-            .orderBy("a_id", "b_id"))
-
-
 def dup_clusters(pairs: DataFrame, a_col: str = "a_id",
                  b_col: str = "b_id") -> DataFrame:
     """Near-dup PAIRS → dedup CLUSTERS: connected components over the
@@ -619,10 +363,94 @@ def oracle_sql_dup_clusters(pairs_sql: str) -> str:
 
 # ----------------------------------------------------------- oracles
 
+def _round6(x: float) -> float:
+    """Spark's round(x, 6): HALF_UP on the shortest decimal repr of the
+    double (java BigDecimal.valueOf semantics; repr() is the Python
+    equivalent shortest form)."""
+    from decimal import ROUND_HALF_UP, Decimal
+    return float(Decimal(repr(float(x)))
+                 .quantize(Decimal("0.000001"), rounding=ROUND_HALF_UP))
+
+
+def simhash_twin(sf_dir: str, max_hamming: int = 16,
+                 verify_threshold: float = 0.5, n: int = 3,
+                 num_blocks: int = 8) -> pd.DataFrame:
+    """Single-threaded :func:`simhash_pairs` (defaults of the driver
+    query _q_dedup_simhash): pigeonhole block candidates → hamming gate
+    → exact-jaccard verify. SimHash is seeded, so "probabilistic
+    recall" describes its relation to brute force, not to a rerun of
+    itself: the per-doc kernels (:func:`simhash64`, :func:`_shingle_set`)
+    are pure, and this rerun over the same parquet is bit-identical to
+    the distributed stage however its rows were batched."""
+    import os
+    docs = pd.read_parquet(os.path.join(sf_dir, "documents.parquet"),
+                           columns=["doc_id", "text"])
+    ids = [int(i) for i in docs["doc_id"]]
+    texts = list(docs["text"])
+    u = {i: simhash64(t or "", n) & ((1 << 64) - 1)
+         for i, t in zip(ids, texts)}
+    bits_per_block = 64 // num_blocks
+    mask = (1 << bits_per_block) - 1
+    buckets: dict[tuple[int, int], list[int]] = {}
+    for i in ids:
+        for b in range(num_blocks):
+            buckets.setdefault(
+                (b, (u[i] >> (b * bits_per_block)) & mask), []).append(i)
+    cand = set()
+    for members in buckets.values():
+        ms = sorted(members)
+        for x in range(len(ms)):
+            for y in range(x + 1, len(ms)):
+                cand.add((ms[x], ms[y]))
+    shingles = {i: set(_shingle_set(t or "", n))
+                for i, t in zip(ids, texts)}
+    rows = []
+    for a, b in sorted(cand):
+        if bin(u[a] ^ u[b]).count("1") > max_hamming:
+            continue
+        sa, sb = shingles[a], shingles[b]
+        union = len(sa | sb)
+        j = _round6((len(sa & sb) / union) if union else 0.0)
+        if j >= verify_threshold:
+            rows.append((a, b, j))
+    return pd.DataFrame(rows, columns=["a_id", "b_id", "jaccard_sim"])
+
+
+# kernel modules whose bytes key the oracle cache (editing them
+# invalidates it): the shingling and hashing here, and the word split
+# (py_words / WS_SPLIT) in textops
+_KERNEL_MODULES = ("dedup.py", "textops.py")
+
+
+def _cached_oracle(sf_dir: str, name: str, params: tuple, write) -> str:
+    """Materialize one oracle table ONCE per (documents bytes, kernel
+    bytes, name, params) fingerprint; → parquet path. ``write(path)``
+    writes the parquet; it runs only on a cache miss. A caller that
+    dies mid-write leaves only its own tmp file behind."""
+    import hashlib
+    import os
+    here = os.path.dirname(os.path.abspath(__file__))
+    h = hashlib.sha256()
+    for path in (os.path.join(sf_dir, "documents.parquet"),
+                 *(os.path.join(here, m) for m in _KERNEL_MODULES)):
+        with open(path, "rb") as f:
+            h.update(f.read())
+    h.update(("%s|%r" % (name, params)).encode())
+    root = os.path.dirname(os.path.dirname(here))
+    out_dir = os.path.join(root, ".dedup_cache", h.hexdigest()[:16])
+    out = os.path.join(out_dir, name + ".parquet")
+    if not os.path.exists(out):
+        os.makedirs(out_dir, exist_ok=True)
+        tmp = "%s.tmp.%d" % (out, os.getpid())
+        write(tmp)
+        os.replace(tmp, out)
+    return out
+
+
 def ensure_jaccard_pairs_oracle(sf_dir: str, threshold: float = 0.5,
                                 n: int = 3) -> str:
-    """Materialize the quadratic DuckDB jaccard-pairs oracle ONCE per
-    (input bytes, kernel bytes, params) fingerprint; → parquet path.
+    """The quadratic DuckDB jaccard-pairs ground truth, materialized
+    once (:func:`_cached_oracle`); → parquet path.
 
     Three driver oracles (dedup_ngram_jaccard, dedup_minhash_lsh,
     dedup_clusters) share the same ground-truth pair set; without this
@@ -631,32 +459,34 @@ def ensure_jaccard_pairs_oracle(sf_dir: str, threshold: float = 0.5,
     parquet IS :func:`oracle_sql_ngram_jaccard`'s output, produced by
     the same DuckDB engine — caching changes when the oracle runs, not
     what is checked."""
-    import hashlib
     import os
 
     import duckdb
-    docs = os.path.join(sf_dir, "documents.parquet")
-    h = hashlib.sha256()
-    with open(docs, "rb") as f:
-        h.update(f.read())
-    with open(os.path.abspath(__file__), "rb") as f:
-        h.update(f.read())
-    h.update(("%r|%r" % (threshold, n)).encode())
-    root = os.path.dirname(os.path.dirname(
-        os.path.dirname(os.path.abspath(__file__))))
-    out_dir = os.path.join(root, ".dedup_cache", h.hexdigest()[:16])
-    out = os.path.join(out_dir, "jaccard_pairs.parquet")
-    if not os.path.exists(out):
-        os.makedirs(out_dir, exist_ok=True)
+
+    def write(path):
         con = duckdb.connect()
         con.execute("CREATE VIEW documents AS SELECT * FROM "
-                    "read_parquet('%s')" % docs)
-        tmp = out + ".tmp"
+                    "read_parquet('%s')"
+                    % os.path.join(sf_dir, "documents.parquet"))
         con.execute("COPY (%s) TO '%s' (FORMAT PARQUET)"
                     % (oracle_sql_ngram_jaccard(threshold=threshold, n=n),
-                       tmp))
-        os.replace(tmp, out)
-    return out
+                       path))
+    return _cached_oracle(sf_dir, "jaccard_pairs", (threshold, n), write)
+
+
+def ensure_simhash_oracle(sf_dir: str) -> str:
+    """:func:`simhash_twin`'s pairs, materialized once
+    (:func:`_cached_oracle`); → parquet path."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    schema = pa.schema([("a_id", pa.int64()), ("b_id", pa.int64()),
+                        ("jaccard_sim", pa.float64())])
+
+    def write(path):
+        pq.write_table(pa.Table.from_pandas(simhash_twin(sf_dir),
+                                            schema=schema,
+                                            preserve_index=False), path)
+    return _cached_oracle(sf_dir, "simhash_pairs", (), write)
 
 
 def oracle_sql_exact_duplicates(table: str = "documents") -> str:
@@ -789,41 +619,6 @@ def oracle_sql_containment(table: str = "documents",
     WHERE len(a.sh) > 0 AND len(b.sh) > 0
       AND len(list_intersect(a.sh, b.sh))::double
           / len(a.sh) >= {threshold}
-    ORDER BY a_id, b_id
-    """
-
-
-def sql_cosine(x: str, y: str) -> str:
-    """Sequential left-fold cosine for DuckDB — identical IEEE op order
-    to :func:`cosine_sim` (Spark's F.aggregate 0.0-init fold and
-    DuckDB's 2-arg list_reduce produce the same sum sequence because
-    0.0 + v1 == v1 exactly)."""
-    def dot(p, q):
-        prods = (f"[{p}[i]::double * {q}[i]::double "
-                 f"for i in range(1, len({p}) + 1)]")
-        return f"list_reduce({prods}, (acc, v) -> acc + v)"
-    return (f"({dot(x, y)} / (sqrt({dot(x, x)}) * sqrt({dot(y, y)})))")
-
-
-def oracle_sql_embedding_dup(table: str = "embeddings",
-                             threshold: float = 0.95) -> str:
-    # mirror embedding_dup_pairs exactly: L2-normalize per row
-    # (sequential fold), dot the normalized vectors, filter on the
-    # 6dp-rounded value — identical IEEE op order to the Spark side
-    sq = ("[embedding[i]::double * embedding[i]::double "
-          "for i in range(1, len(embedding) + 1)]")
-    norm = f"sqrt(list_reduce({sq}, (acc, v) -> acc + v))"
-    nv = (f"[embedding[i]::double / {norm} "
-          f"for i in range(1, len(embedding) + 1)]")
-    return f"""
-    WITH n AS (SELECT vec_id, {nv} AS nv FROM {table})
-    SELECT a_id, b_id, cos_sim FROM (
-      SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-             round(list_reduce(
-               [a.nv[i] * b.nv[i] for i in range(1, len(a.nv) + 1)],
-               (acc, v) -> acc + v), 6) AS cos_sim
-      FROM n a JOIN n b ON a.vec_id < b.vec_id)
-    WHERE cos_sim >= {threshold}
     ORDER BY a_id, b_id
     """
 

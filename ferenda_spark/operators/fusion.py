@@ -23,8 +23,9 @@ set-at-a-time:
 
 Scale notes (100 TB): both operators filter to the functional predicate
 list first — a static IN list that reaches the parquet scan as a pushed
-filter (and prunes partitions on the predicate-partitioned triple
-layout). ``functional_conflicts`` is ONE hash aggregation on
+filter (the lake's files are sorted by (predicate, subject), so
+row-group statistics skip the other predicates' rows).
+``functional_conflicts`` is ONE hash aggregation on
 (subject, predicate) with map-side partial aggregation (the two
 count-distincts expand-rewrite but stay a single exchange).
 ``fuse_triples`` aggregates support on (subject, predicate, object)

@@ -1952,7 +1952,8 @@ def condensation(edges: DataFrame, rounds: int = 32,
         return spark.createDataFrame(
             rows or [], "component string, level int, n_members long") \
             .orderBy("component")
-    comp = scc_assign if scc_assign is not None else scc(edges)
+    comp = (scc_assign if scc_assign is not None
+            else scc(edges, driver_threshold=driver_threshold))
     ca = comp.select(F.col("node").alias("src"),
                      F.col("scc_id").alias("_ca"))
     cb = comp.select(F.col("node").alias("dst"),

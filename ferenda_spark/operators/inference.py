@@ -133,10 +133,9 @@ def rdfs_materialize(triples: DataFrame,
     # disjoint terminal dedups (see the split below), so the only
     # data-sized shuffles in the whole plan are those. Each rule branch
     # pre-filters with a STATIC predicate-IN list (redundant with its
-    # broadcast join) — on the (bucket, predicate)-partitioned
-    # production triple layout those reach the scan as
-    # partition-pruning filters, so a rule over 4 schema predicates
-    # reads 4 predicate partitions, not the corpus.
+    # broadcast join) — pushed into the triple table's parquet scan,
+    # where the files' (predicate, subject) sort lets row-group
+    # statistics skip the other predicates' rows.
     data = triples.select("subject", "predicate", "object", "objtype")
     # Disjoint-family split: rdfs7 can never emit rdf:type (a schema
     # over rdf:type raises above), so the output partitions exactly
@@ -322,9 +321,7 @@ def rdfs_materialize_delta(entailed: DataFrame, delta: DataFrame,
       (rdfs9 last: sc_new over every type triple derived above,
        Δsc over E's existing type rows)
 
-    followed by one (s,p,o,objtype) anti-join against E — Δ-vs-corpus,
-    shuffle-free on the E side when the table is bucketed by subject
-    (operators/lineage.write_triples layout).
+    followed by one (s,p,o,objtype) anti-join against E — Δ-vs-corpus.
 
     100-TB shape: when Δ carries no schema change (the steady state),
     E is touched only by the terminal anti-join; every rule join is a
@@ -432,11 +429,12 @@ def rdfs_materialize_delta(entailed: DataFrame, delta: DataFrame,
     # into one semi scan of E (the already-present candidates), then
     # anti-join the two SMALL sides. The semi scan carries a static
     # predicate-IN (cand's predicates are driver-known: Δ's predicates
-    # closed over sp1, plus rdf:type and Δ's own), which partition-
-    # prunes the (bucket, predicate) production triple layout down to
-    # the affected predicates. Schema-change batches (ΔS non-empty)
-    # can make cand corpus-sized — there the plain shuffle anti-join
-    # is the right plan; both branches are result-identical
+    # closed over sp1, plus rdf:type and Δ's own), pushed into E's
+    # parquet scan, where the (predicate, subject) file sort lets
+    # row-group statistics skip the other predicates. Schema-change
+    # batches (ΔS non-empty) can make cand corpus-sized — there the
+    # plain shuffle anti-join is the right plan; both branches are
+    # result-identical
     # (tests/test_inference.py runs the suite under a forced branch).
     schema_changed = bool(d_sc or d_sp or d_dom or d_rng)
     if not schema_changed and \

@@ -17,8 +17,9 @@ Supported constraint kinds (the sh:NodeShape/sh:property core):
 
 Scale shape: shapes are broadcast (a shapes file is KB-sized). Targets
 come from one pushed-filter scan of the type triples (predicate =
-rdf:type, object IN target classes — both partition-prunable on the
-(bucket, predicate) layout). Row-level constraints are one broadcast
+rdf:type, object IN target classes; the triple files' (predicate,
+subject) sort lets row-group statistics skip the other predicates).
+Row-level constraints are one broadcast
 join + codegen filters over the path-predicate-filtered scan; the only
 data-sized shuffles are the subject-keyed target join (the canonical
 validation join — type triples are a corpus fraction) and the

@@ -156,127 +156,3 @@ def triples_asof(intervals: DataFrame, ts: str,
                    (F.col("valid_to") > F.lit(ts)))
             .select(*key_cols))
 
-
-def asof_join(left: DataFrame, right: DataFrame, on: list[str],
-              left_ts: str = "ts", right_ts: str = "ts",
-              value_cols: list[str] | None = None) -> DataFrame:
-    """Backward as-of join: each left row picks the right row with the
-    greatest ``right_ts`` ≤ ``left_ts`` within the same ``on`` key
-    (inclusive at equality), NULL values when none precedes — the
-    time-series join Spark lacks natively (events ↔ the capture /
-    config / price version current at event time).
-
-    Implemented as the union-merge: both sides tagged and unioned,
-    one window over (key) ordered by (ts, side) carries the last
-    non-null right payload forward (``last(…, ignorenulls)``), left
-    rows then keep their carried match. ONE exchange on the key and
-    one sort — no range-explode, no per-row lookup; equal to a sorted
-    merge per key, which is what a 1000-executor plan wants (the
-    DuckDB twin is the engine's native ASOF JOIN, so the semantics are
-    pinned to the reference implementation of the concept).
-    """
-    value_cols = list(value_cols or
-                      [c for c in right.columns
-                       if c not in on and c != right_ts])
-    lrow = F.struct(*[F.col(c) for c in left.columns])
-    lside = left.select(
-        *[F.col(c) for c in on],
-        F.col(left_ts).alias("_ts"), F.lit(1).alias("_side"),
-        lrow.alias("_lrow"),
-        F.lit(None).cast(
-            "struct<" + ", ".join(
-                "%s: %s" % (c, right.schema[c].dataType.simpleString())
-                for c in value_cols) + ">").alias("_val"))
-    rside = right.select(
-        *[F.col(c) for c in on],
-        F.col(right_ts).alias("_ts"), F.lit(0).alias("_side"),
-        F.lit(None).cast(lside.schema["_lrow"].dataType.simpleString())
-        .alias("_lrow"),
-        F.struct(*[F.col(c) for c in value_cols]).alias("_val"))
-    from pyspark.sql import Window
-    w = (Window.partitionBy(*on).orderBy("_ts", "_side")
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    matched = (lside.unionByName(rside)
-               .withColumn("_m", F.last("_val", ignorenulls=True).over(w))
-               .where(F.col("_side") == 1))
-    return matched.select(
-        *[F.col("_lrow.%s" % c).alias(c) for c in left.columns],
-        *[F.col("_m.%s" % c).alias(c) for c in value_cols])
-
-
-def range_join(points: DataFrame, intervals: DataFrame,
-               point_ts: str = "ts", start_col: str = "start",
-               end_col: str = "end", on: list[str] | None = None,
-               grid: int = 3600) -> DataFrame:
-    """Point-in-interval range join: each point row joined to every
-    interval row (same ``on`` key) with start ≤ ts < end — the other
-    time-series join Spark lacks natively (events ↔ validity windows,
-    captures ↔ crawl campaigns).
-
-    Implemented as the grid-bucket equi-join: intervals explode into
-    the time-grid cells they cover, points key into their single cell,
-    the join runs on (key, cell) and the exact inequality filters
-    after — so the plan is a hash join on uniform composite keys
-    instead of a cross join + filter (or a broadcast nested loop),
-    and the fan-out is bounded by interval length / ``grid``. Pick
-    ``grid`` near the typical interval length: one cell per interval,
-    one candidate bucket per point. Empty intervals (end ≤ start)
-    match nothing. Column names of the two sides must not collide
-    (beyond ``on``).
-    """
-    on = list(on or [])
-    g = F.lit(grid)
-    cell_first = F.floor(F.col(start_col) / g).cast("long")
-    cell_last = F.floor((F.col(end_col) - 1) / g).cast("long")
-    iv = (intervals.where(F.col(end_col) > F.col(start_col))
-          .withColumn("_cell", F.explode(F.sequence(cell_first,
-                                                    cell_last))))
-    pt = points.withColumn(
-        "_cell", F.floor(F.col(point_ts) / g).cast("long"))
-    return (pt.join(iv, on + ["_cell"])
-            .where((F.col(point_ts) >= F.col(start_col)) &
-                   (F.col(point_ts) < F.col(end_col)))
-            .drop("_cell"))
-
-
-def interval_overlap(left: DataFrame, right: DataFrame,
-                     on: list[str] | None = None,
-                     lstart: str = "start", lend: str = "end",
-                     rstart: str = "rstart", rend: str = "rend",
-                     grid: int = 3600) -> DataFrame:
-    """Interval × interval overlap join: every (left, right) pair on
-    the same ``on`` key whose half-open spans intersect
-    (lstart < rend AND rstart < lend) — validity windows ↔ crawl
-    campaigns, entity-presence intervals ↔ incident windows; the
-    third time-series join of the family (asof_join, range_join).
-
-    Grid-bucketed on BOTH sides: each interval explodes into the time
-    cells it covers, candidates hash-join on (key, cell), and each
-    genuinely overlapping pair is kept exactly ONCE — at the first
-    cell the two spans share, cell = max(floor(lstart/g),
-    floor(rstart/g)), the standard dedup predicate (every
-    overlapping pair shares that cell; no DISTINCT over the fan-out
-    needed) — with the exact inequalities filtering false cell-mates.
-    Fan-out per row is span/grid like range_join; empty intervals
-    (end ≤ start) match nothing. Column names must not collide beyond
-    ``on``.
-    """
-    on = list(on or [])
-    g = F.lit(grid)
-
-    def cells(df, s, e):
-        first = F.floor(F.col(s) / g).cast("long")
-        last = F.floor((F.col(e) - 1) / g).cast("long")
-        return (df.where(F.col(e) > F.col(s))
-                .withColumn("_cell", F.explode(F.sequence(first, last))))
-
-    lv = cells(left, lstart, lend)
-    rv = cells(right, rstart, rend)
-    first_shared = F.greatest(
-        F.floor(F.col(lstart) / g).cast("long"),
-        F.floor(F.col(rstart) / g).cast("long"))
-    return (lv.join(rv, on + ["_cell"])
-            .where((F.col(lstart) < F.col(rend)) &
-                   (F.col(rstart) < F.col(lend)) &
-                   (F.col("_cell") == first_shared))
-            .drop("_cell"))

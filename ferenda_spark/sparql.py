@@ -169,8 +169,9 @@ Scale shape (100 TB triples table):
   scans are narrow (only the variable columns survive the scan
   projection) and AQE broadcasts the small sides;
 - subject—subject joins (the dominant shape: facet OPTIONALs all join
-  on ``?uri``) reuse one hash partitioning on the subject column —
-  with the table bucketed by subject they are shuffle-free;
+  on ``?uri``) reuse one hash partitioning on the subject column, so a
+  chain of them shuffles each pattern scan once (the lake buckets its
+  files by ``source_url``, so that one shuffle stays);
 - FILTERs compile to native column expressions — no UDFs anywhere.
 """
 

@@ -104,9 +104,10 @@ def main():
                                              CORPUS_ONTOLOGY).count()
                 full_s = min(full_s or 9e9, time.monotonic() - t0)
 
-            # materialize E in the production predicate-partitioned
-            # layout (untimed — in production E already sits in the
-            # lake; the delta job starts from the table scan)
+            # materialize E as a predicate-partitioned parquet table
+            # (untimed — in production E already sits in the lake; the
+            # delta job starts from a table scan whose predicate
+            # filters prune)
             (rdfs_materialize(triples, CORPUS_ONTOLOGY)
              .write.mode("overwrite").partitionBy("predicate")
              .parquet(edir))

@@ -23,8 +23,6 @@ import numpy as np
 
 SF_DIR = os.environ.get("SF_DIR", "/root/testdata/sf0.01")
 os.environ["SF_DIR"] = SF_DIR  # __spark_entry__ resolves oracle twins from it
-TABLES = ("region nation customer supplier part orders lineitem events "
-          "documents embeddings").split()
 # int width doesn't affect the driver's value hash (round-1
 # window_topk: Spark int32 rank vs DuckDB int64, hash green);
 # int-vs-float does (stats_groupby) — normalize widths only
@@ -72,10 +70,9 @@ def main(only=None):
     from ferenda_spark.session import get_spark
     spark = get_spark("parity", master="local[8]", shuffle_partitions=16)
     con = duckdb.connect()
-    for t in TABLES:
-        p = f"{SF_DIR}/{t}.parquet"
-        if os.path.exists(p):
-            con.sql(f"create view {t} as select * from read_parquet('{p}')")
+    for t in E.SF_TABLES:
+        con.sql(f"create view {t} as select * from "
+                f"read_parquet('{SF_DIR}/{t}.parquet')")
     qs, oracles = E.queries(), E.oracle_sql()
     results = {}
     for name, fn in qs.items():

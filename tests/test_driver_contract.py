@@ -20,8 +20,6 @@ from pyspark.sql.types import ArrayType, MapType, StructType
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = "/root/testdata/sf0.01"
-TABLES = ("region nation customer supplier part orders lineitem events "
-          "documents embeddings").split()
 
 
 @pytest.fixture(scope="module")
@@ -42,22 +40,37 @@ def test_all_query_schemas_are_flat(spark, entrymod):
     assert not bad, bad
 
 
+def test_queries_read_exactly_sf_tables(spark, entrymod, monkeypatch):
+    """SF_TABLES is the one list of sf-dir tables: every table a query
+    plan reads through _read is in it, and every table in it is read,
+    so the list neither misses a table nor names a dead one."""
+    read = set()
+    real = entrymod._read
+
+    def recording(spark, sf_dir, table):
+        read.add(table)
+        return real(spark, sf_dir, table)
+
+    monkeypatch.setattr(entrymod, "_read", recording)
+    for fn in entrymod.queries().values():
+        fn(spark, SF_DIR)               # plan only; nothing executes
+    assert read == set(entrymod.SF_TABLES)
+
+
 def test_oracle_keys_subset_of_queries(entrymod):
     qs = set(entrymod.queries())
     os_ = set(entrymod.oracle_sql())
     assert os_ <= qs, os_ - qs
     # since round 3 every query carries an oracle (cross-execution
-    # twins cover the seeded sketch/ANN ops) — keep it that way
+    # twins cover the seeded sketch ops) — keep it that way
     assert qs - os_ == set(), qs - os_
 
 
 def test_all_oracles_are_valid_duckdb(entrymod):
     con = duckdb.connect()
-    for t in TABLES:
-        p = os.path.join(SF_DIR, t + ".parquet")
-        if os.path.exists(p):
-            con.execute("CREATE VIEW %s AS SELECT * FROM "
-                        "read_parquet('%s')" % (t, p))
+    for t in entrymod.SF_TABLES:
+        con.execute("CREATE VIEW %s AS SELECT * FROM read_parquet('%s')"
+                    % (t, os.path.join(SF_DIR, t + ".parquet")))
     errors = {}
     for name, sql in entrymod.oracle_sql().items():
         try:

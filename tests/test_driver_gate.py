@@ -71,10 +71,11 @@ def test_driver_gate_boundary(spark, monkeypatch, name):
         branches.clear()
         rows[t] = sorted(map(tuple, HYBRIDS[name](spark, edges, t)
                              .collect()))
-        # the operator's own decision comes first (condensation's
-        # distributed branch calls scc, which gates again)
-        rows[t, "branch"] = branches[0]
-    assert rows[len(EDGES), "branch"] == "driver"
-    assert rows[len(EDGES) - 1, "branch"] == "distributed"
+        # every decision of the run, nested ones included (condensation's
+        # distributed branch calls scc, which gates again with the
+        # caller's threshold)
+        rows[t, "branches"] = set(branches)
+    assert rows[len(EDGES), "branches"] == {"driver"}
+    assert rows[len(EDGES) - 1, "branches"] == {"distributed"}
     assert rows[len(EDGES)], name
     assert rows[len(EDGES)] == rows[len(EDGES) - 1], name

@@ -6,7 +6,6 @@ finding was geometric blowup after ~7 localCheckpoint rounds)."""
 
 import time
 
-import pytest
 from pyspark.sql import functions as F
 
 
@@ -56,7 +55,6 @@ def test_distributed_hits_matches_driver(spark):
     assert top_drv == top_dist == "hub"
 
 
-@pytest.mark.slow
 def test_iter_checkpoint_keeps_rounds_flat(spark):
     """12 rounds of a join+agg iteration with iter_checkpoint: late
     rounds must not be geometrically slower than early rounds (the

@@ -1,4 +1,4 @@
-"""Text, dedup, ANN and linking operators: Spark vs DuckDB oracle
+"""Text, dedup and linking operators: Spark vs DuckDB oracle
 parity at sf0.001, plus structural checks for the non-SQL-expressible
 ops."""
 
@@ -16,12 +16,11 @@ pytestmark = pytest.mark.skipif(not os.path.exists(SF_DIR),
 
 @pytest.fixture(scope="module")
 def duck():
+    from __spark_entry__ import SF_TABLES
     con = duckdb.connect()
-    for t in ("documents", "embeddings", "events", "orders", "customer",
-              "lineitem"):
-        p = f"{SF_DIR}/{t}.parquet"
-        if os.path.exists(p):
-            con.sql(f"create view {t} as select * from read_parquet('{p}')")
+    for t in SF_TABLES:
+        con.sql(f"create view {t} as select * from "
+                f"read_parquet('{SF_DIR}/{t}.parquet')")
     return con
 
 
@@ -45,10 +44,6 @@ def assert_parity(spark_df, duck, sql):
 
 def docs(spark):
     return spark.read.parquet(f"{SF_DIR}/documents.parquet")
-
-
-def emb(spark):
-    return spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
 
 
 def test_language_id_parity(spark, duck):
@@ -89,37 +84,17 @@ def test_simhash_recall(spark, duck):
     assert len(got & truth) / len(truth) >= 0.9  # recall
 
 
-def test_embedding_dup_parity(spark, duck):
-    from ferenda_spark.operators.dedup import (embedding_dup_pairs,
-                                               oracle_sql_embedding_dup)
-    assert_parity(embedding_dup_pairs(emb(spark), threshold=0.45), duck,
-                  oracle_sql_embedding_dup(threshold=0.45))
-
-
-def test_ann_topk_parity(spark, duck):
-    from pyspark.sql import functions as F
-
-    from ferenda_spark.operators.similarity import (
-        brute_force_topk, oracle_sql_brute_force_topk)
-    e = emb(spark)
-    got = brute_force_topk(e, e.where(F.col("vec_id") < 20), k=5)
-    assert_parity(got, duck, oracle_sql_brute_force_topk(k=5, n_queries=20))
-
-
-def test_ann_lsh_recall(spark):
-    """LSH ANN with 1-bit multiprobe should recover most exact top-5."""
-    from pyspark.sql import functions as F
-
-    from ferenda_spark.operators.similarity import (ann_lsh_topk,
-                                                    brute_force_topk)
-    e = emb(spark)
-    q = e.where(F.col("vec_id") < 20)
-    exact = {(r.query_id, r.neighbor_id)
-             for r in brute_force_topk(e, q, k=5).collect()}
-    approx = {(r.query_id, r.neighbor_id)
-              for r in ann_lsh_topk(e, q, k=5).collect()}
-    recall = len(exact & approx) / len(exact)
-    assert recall >= 0.5, recall
+def test_simhash_twin_equals_distributed(spark):
+    """The dedup_simhash oracle: the single-threaded rerun of the same
+    kernels returns the distributed operator's rows exactly, at the
+    driver query's parameters."""
+    from ferenda_spark.operators.dedup import simhash_pairs, simhash_twin
+    got = simhash_pairs(docs(spark), max_hamming=16, verify_threshold=0.5) \
+        .select("a_id", "b_id", "jaccard_sim").toPandas()
+    twin = simhash_twin(SF_DIR)
+    assert len(twin) > 0
+    assert list(got.itertuples(index=False)) == \
+        list(twin.itertuples(index=False))
 
 
 def test_exact_duplicates(spark):
@@ -164,75 +139,6 @@ def test_link_labels_difflib_parity(spark):
         assert got[m][0] == expect, m
     assert got["Example Standards Body"][1] == "exact"
     assert got["Example standards body"][1] == "fuzzy"
-
-
-def test_embedding_blocked_equals_brute_on_driver_corpus(spark, duck):
-    """IVF-pruned blocked GEMM must stay bit-equal to brute force on
-    the driver corpus (near-uniform — pruning finds little, output
-    must not change)."""
-    from ferenda_spark.operators.dedup import (embedding_dup_pairs_blocked,
-                                               oracle_sql_embedding_dup)
-    assert_parity(embedding_dup_pairs_blocked(emb(spark), threshold=0.45),
-                  duck, oracle_sql_embedding_dup(threshold=0.45))
-
-
-def test_embedding_blocked_prunes_subquadratically(spark):
-    """On a CLUSTERED corpus (the realistic web-embedding shape) the
-    IVF front-end must prune most block pairs while the output stays
-    exactly equal to brute force — the 100-TB scale contract."""
-    import pandas as pd
-    from ferenda_spark.operators.dedup import (embedding_dup_pairs,
-                                               embedding_dup_pairs_blocked)
-    rng = np.random.RandomState(3)
-    centers = rng.normal(size=(12, 16))
-    centers /= np.linalg.norm(centers, axis=1, keepdims=True)
-    rows = []
-    for i in range(1200):
-        c = centers[i % 12]
-        v = c + rng.normal(scale=0.02, size=16)
-        rows.append((i, [float(x) for x in v]))
-    df = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["vec_id", "embedding"]),
-        schema="vec_id long, embedding array<double>")
-    stats = {}
-    got = sorted(map(tuple, embedding_dup_pairs_blocked(
-        df, threshold=0.95, n_blocks=24, n_cells=12,
-        stats_out=stats).collect()))
-    brute = sorted(map(tuple, embedding_dup_pairs(
-        df, threshold=0.95).collect()))
-    assert got == brute
-    assert len(brute) > 1000            # clusters really are near-dups
-    # pruning evidence: far fewer GEMM tasks than all-pairs blocking
-    assert stats["n_block_tasks"] < 0.5 * stats["n_block_tasks_unpruned"], stats
-    assert stats["n_cell_pairs_kept"] < stats["n_cell_pairs_total"], stats
-
-
-def test_kmeans_clusters_deterministic_and_twin_parity(spark):
-    """Assignment is invariant to input partitioning and bit-equal to
-    the single-threaded annoracle twin (same fold-order kernels)."""
-    from ferenda_spark import annoracle
-    from ferenda_spark.operators.similarity import kmeans_clusters
-    e = emb(spark)
-    a = kmeans_clusters(e).toPandas()
-    b = kmeans_clusters(e.repartition(17)).toPandas()
-    assert a.equals(b.sort_values("vec_id", kind="mergesort")
-                    .reset_index(drop=True))
-    twin = annoracle.kmeans_clusters_twin(SF_DIR).reset_index(drop=True)
-    assert a["vec_id"].tolist() == twin["vec_id"].tolist()
-    assert a["cluster"].tolist() == twin["cluster"].tolist()
-    assert (a["sim"].to_numpy() == twin["sim"].to_numpy()).all()
-
-
-def test_kmeans_clusters_quality(spark):
-    """Clusters are non-trivial: >1 cluster used, every vector at
-    least as close to its own centroid as random, and the dominant
-    cluster holds <90% of the corpus."""
-    from ferenda_spark.operators.similarity import kmeans_clusters
-    out = kmeans_clusters(emb(spark), n_clusters=8).toPandas()
-    sizes = out["cluster"].value_counts()
-    assert len(sizes) > 1
-    assert sizes.iloc[0] < 0.9 * len(out)
-    assert (out["sim"] > -1.0).all() and (out["sim"] <= 1.0 + 1e-9).all()
 
 
 def test_top_terms_per_doc(spark):

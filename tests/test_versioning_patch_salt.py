@@ -170,66 +170,3 @@ def test_asof_equals_snapshot(spark):
         got = {tuple(r) for r in triples_asof(iv, probe).collect()}
         assert got == snap[ts], probe
 
-
-def test_asof_join_semantics(spark):
-    """Backward inclusive match, per-key isolation, NULL before the
-    first right row."""
-    from ferenda_spark.operators.versioning import asof_join
-    left = spark.createDataFrame(
-        [("u1", 5, "e1"), ("u1", 10, "e2"), ("u1", 12, "e3"),
-         ("u2", 7, "e4"), ("u3", 9, "e5")],
-        "user string, ts int, event string")
-    right = spark.createDataFrame(
-        [("u1", 10, "v1"), ("u1", 11, "v2"), ("u2", 1, "w1")],
-        "user string, ts int, version string")
-    got = {r["event"]: r["version"]
-           for r in asof_join(left, right, ["user"]).collect()}
-    assert got == {"e1": None,      # before the first u1 version
-                   "e2": "v1",      # inclusive at equality
-                   "e3": "v2",
-                   "e4": "w1",
-                   "e5": None}      # key with no right rows
-
-
-def test_range_join_semantics(spark):
-    """Inclusive start / exclusive end, per-key isolation, multi-cell
-    intervals, empty intervals match nothing, grid invariance."""
-    from ferenda_spark.operators.versioning import range_join
-    intervals = spark.createDataFrame(
-        [(1, "k1", 10, 20), (2, "k1", 15, 300),   # spans many cells
-         (3, "k2", 10, 20), (4, "k1", 50, 50)],   # empty
-        "iid int, key string, start int, end int")
-    points = spark.createDataFrame(
-        [(1, "k1", 10), (2, "k1", 19), (3, "k1", 20), (4, "k1", 299),
-         (5, "k2", 12), (6, "k1", 50)],
-        "pid int, key string, ts int")
-    for grid in (4, 64, 1000):
-        got = {(r["pid"], r["iid"]) for r in
-               range_join(points, intervals, on=["key"],
-                          grid=grid).collect()}
-        assert got == {(1, 1), (2, 1),       # start incl, end excl
-                       (2, 2), (3, 2), (4, 2), (6, 2),
-                       (5, 3)}, grid          # k2 isolated; empty iv
-
-
-def test_interval_overlap_semantics(spark):
-    """Half-open overlap, exactly-once per pair, key isolation,
-    empty-interval exclusion, grid invariance."""
-    from ferenda_spark.operators.versioning import interval_overlap
-    left = spark.createDataFrame(
-        [("L1", "k", 100, 200),    # overlaps R1 partially, R2 nested
-         ("L2", "k", 200, 300),    # touches R1's end exactly -> no
-         ("L3", "j", 100, 200),    # same span, other key
-         ("L4", "k", 50, 50)],     # empty
-        "lid string, key string, start long, end long")
-    right = spark.createDataFrame(
-        [("R1", "k", 150, 200),    # overlap [150,200) with L1
-         ("R2", "k", 120, 130),    # nested in L1
-         ("R3", "k", 0, 100),      # touches L1's start -> no
-         ("R4", "k", 40, 60)],     # would cover L4's empty point
-        "rid string, key string, rstart long, rend long")
-    for grid in (7, 64, 1000):
-        got = sorted((r["lid"], r["rid"]) for r in
-                     interval_overlap(left, right, on=["key"],
-                                      grid=grid).collect())
-        assert got == [("L1", "R1"), ("L1", "R2")], grid
