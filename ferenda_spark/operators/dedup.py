@@ -21,6 +21,8 @@ the near-dup family is the web-corpus extension the north rule asks for.
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -382,7 +384,6 @@ def simhash_twin(sf_dir: str, max_hamming: int = 16,
     itself: the per-doc kernels (:func:`simhash64`, :func:`_shingle_set`)
     are pure, and this rerun over the same parquet is bit-identical to
     the distributed stage however its rows were batched."""
-    import os
     docs = pd.read_parquet(os.path.join(sf_dir, "documents.parquet"),
                            columns=["doc_id", "text"])
     ids = [int(i) for i in docs["doc_id"]]
@@ -428,7 +429,6 @@ def _cached_oracle(sf_dir: str, name: str, params: tuple, write) -> str:
     writes the parquet; it runs only on a cache miss. A caller that
     dies mid-write leaves only its own tmp file behind."""
     import hashlib
-    import os
     here = os.path.dirname(os.path.abspath(__file__))
     h = hashlib.sha256()
     for path in (os.path.join(sf_dir, "documents.parquet"),
@@ -459,8 +459,6 @@ def ensure_jaccard_pairs_oracle(sf_dir: str, threshold: float = 0.5,
     parquet IS :func:`oracle_sql_ngram_jaccard`'s output, produced by
     the same DuckDB engine — caching changes when the oracle runs, not
     what is checked."""
-    import os
-
     import duckdb
 
     def write(path):
