@@ -18,7 +18,7 @@ extraction kernel (``ferenda_spark.extract.extract_document``), then:
 
 The cache directory is keyed by (n, fingerprint of the extraction
 source modules), so editing the extraction code invalidates it
-automatically. Everything here is pure pandas/pyarrow — no Spark — so
+automatically; installing a fingerprint removes that n's older ones. Everything here is pure pandas/pyarrow — no Spark — so
 ``oracle_sql()`` can trigger materialization regardless of whether the
 driver runs queries or oracles first.
 """
@@ -53,6 +53,15 @@ def _fingerprint() -> str:
             with open(p, "rb") as f:
                 h.update(f.read())
     return h.hexdigest()[:12]
+
+
+def evict_stale(root: str, prefix: str, keep: str) -> None:
+    """Remove the cache directories under ``root`` named ``prefix*``
+    (one cache key's older fingerprints) except ``keep``; an
+    in-progress ``*.tmp.*`` write is left to its writer."""
+    for name in os.listdir(root):
+        if name.startswith(prefix) and name != keep and ".tmp." not in name:
+            shutil.rmtree(os.path.join(root, name), ignore_errors=True)
 
 
 def kg_dir(n: int) -> str:
@@ -146,4 +155,5 @@ def ensure_kg_tables(n: int) -> dict[str, str]:
         shutil.rmtree(tmp)
     else:
         os.replace(tmp, d)
+    evict_stale(os.path.dirname(d), "n%d_" % n, os.path.basename(d))
     return paths

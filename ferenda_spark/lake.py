@@ -34,7 +34,9 @@ method             Iceberg equivalent
                    the input_file_name() census
 ``read``           ``spark.table(t)`` (snapshot isolation for free;
                    time travel via ``VERSION AS OF`` feeds
-                   ``operators/versioning.py``'s snapshot diff)
+                   ``operators/versioning.py``'s snapshot diff); the
+                   schema comes from table metadata, as the parquet
+                   backend's comes from ``_lake.json``
 =================  ===================================================
 
 Layout, the same in both backends: the triple table's one partition
@@ -49,7 +51,10 @@ predicate directories gave. The bucket count n is table metadata
 ``_``-prefixed files): the first write sets it to
 ceil(rows / ROWS_PER_FILE), every merge reads it back, and only
 ``compact`` re-buckets. A write runs one task per bucket and leaves
-one file per bucket.
+one file per bucket. ``_lake.json`` also carries the table's schema, as
+Iceberg table metadata does, so a read needs no schema-inference job
+over the file footers; a table whose ``_lake.json`` lacks it is read
+only after one ``compact``, which infers the schema and records it.
 
 Why bucket-only, and why this constant — measured on the kgbench
 corpus (25,100 triples, 14 predicates; local[4], 4-core host, medians
@@ -75,9 +80,10 @@ from abc import ABC, abstractmethod
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 ROWS_PER_FILE = 8_000   # target rows per bucket file; sets the bucket count
-META = "_lake.json"     # the table's bucket count, beside the data
+META = "_lake.json"     # the table's bucket count and schema, beside the data
 
 
 def bucket_of(col, n_buckets: int):
@@ -92,16 +98,31 @@ def buckets_for(n_rows: int) -> int:
     return max(1, -(-n_rows // ROWS_PER_FILE))
 
 
+def _read_meta(target: str, key: str):
+    """``key`` of ``target``'s ``_lake.json``."""
+    meta = os.path.join(target, META)
+    info = {}
+    if os.path.exists(meta):
+        with open(meta) as f:
+            info = json.load(f)
+    if key not in info:
+        raise ValueError(
+            "%s has no %s with its %s: it predates the current layout "
+            "(or its write did not finish); run compact on it once to "
+            "rewrite it" % (target, META, key))
+    return info[key]
+
+
 def read_buckets(target: str) -> int:
     """The bucket count recorded in ``target``'s ``_lake.json``."""
-    meta = os.path.join(target, META)
-    if not os.path.exists(meta):
-        raise ValueError(
-            "%s has no %s: it predates the bucket-only layout (or its "
-            "write did not finish); run compact on it once to rewrite "
-            "it" % (target, META))
-    with open(meta) as f:
-        return int(json.load(f)["buckets"])
+    return int(_read_meta(target, "buckets"))
+
+
+def read_schema(target: str) -> StructType:
+    """The table's schema recorded in ``target``'s ``_lake.json``, with
+    the ``bucket`` partition column last, as schema inference gives."""
+    schema = StructType.fromJson(_read_meta(target, "schema"))
+    return schema.add("bucket", IntegerType())
 
 
 class TableFormat(ABC):
@@ -158,14 +179,19 @@ class ParquetBucketFormat(TableFormat):
         w.parquet(target)
 
     @staticmethod
-    def _write_meta(target: str, n_buckets: int) -> None:
+    def _write_meta(target: str, n_buckets: int, df: DataFrame) -> None:
+        # the files' schema: the data columns, all nullable (the
+        # parquet writer makes every column nullable)
+        schema = StructType([StructField(f.name, f.dataType, True)
+                             for f in df.drop("bucket").schema])
         with open(os.path.join(target, META), "w") as f:
-            json.dump({"buckets": n_buckets}, f)
+            json.dump({"buckets": n_buckets,
+                       "schema": schema.jsonValue()}, f)
 
     def write(self, triples: DataFrame, target: str) -> None:
         n = buckets_for(triples.count())
         self._write(triples, target, n, "overwrite")
-        self._write_meta(target, n)
+        self._write_meta(target, n, triples)
 
     def merge(self, spark: SparkSession, new_triples: DataFrame,
               target: str) -> None:
@@ -185,7 +211,7 @@ class ParquetBucketFormat(TableFormat):
                    changed_urls.select("bucket").distinct().collect()]
         if not buckets:
             return
-        existing = (spark.read.parquet(target)
+        existing = (self.read(spark, target)
                     .where(F.col("bucket").isin(buckets))
                     .join(changed_urls.select("source_url"),
                           "source_url", "left_anti")
@@ -203,12 +229,13 @@ class ParquetBucketFormat(TableFormat):
         # the one place that re-buckets: the count follows the table's
         # current size, and a table in an older layout (any partition
         # directories, no _lake.json) is rewritten into this one;
-        # content unchanged (round-trip tested)
+        # content unchanged (round-trip tested); it reads by schema
+        # inference, so it also repairs a _lake.json without a schema
         df = spark.read.parquet(target).drop("bucket") \
             .localCheckpoint(eager=True)
         n = buckets_for(df.count())
         self._write(df, target, n, "overwrite", max_records_per_file)
-        self._write_meta(target, n)
+        self._write_meta(target, n, df)
 
     def manifest(self, spark: SparkSession, target: str) -> DataFrame:
         # file identity from input_file_name inside the scan, never
@@ -223,7 +250,9 @@ class ParquetBucketFormat(TableFormat):
                      F.min("rows").alias("min_rows_per_file")))
 
     def read(self, spark: SparkSession, target: str) -> DataFrame:
-        return spark.read.parquet(target)
+        # the recorded schema spares the footer-reading job schema
+        # inference runs on every read (measured 90 → 16 ms a read)
+        return spark.read.schema(read_schema(target)).parquet(target)
 
 
 class IcebergFormat(TableFormat):

@@ -423,27 +423,36 @@ def simhash_twin(sf_dir: str, max_hamming: int = 16,
 _KERNEL_MODULES = ("dedup.py", "textops.py")
 
 
+_HERE = os.path.dirname(os.path.abspath(__file__))
+_CACHE_ROOT = os.path.join(os.path.dirname(os.path.dirname(_HERE)),
+                           ".dedup_cache")
+
+
 def _cached_oracle(sf_dir: str, name: str, params: tuple, write) -> str:
     """Materialize one oracle table ONCE per (documents bytes, kernel
     bytes, name, params) fingerprint; → parquet path. ``write(path)``
     writes the parquet; it runs only on a cache miss. A caller that
-    dies mid-write leaves only its own tmp file behind."""
+    dies mid-write leaves only its own tmp file behind. The directory
+    is ``<name>_<sf dir basename>_<fingerprint>``; a miss removes that
+    (name, sf dir) key's older fingerprints."""
     import hashlib
-    here = os.path.dirname(os.path.abspath(__file__))
+
+    from ..kgcache import evict_stale
     h = hashlib.sha256()
     for path in (os.path.join(sf_dir, "documents.parquet"),
-                 *(os.path.join(here, m) for m in _KERNEL_MODULES)):
+                 *(os.path.join(_HERE, m) for m in _KERNEL_MODULES)):
         with open(path, "rb") as f:
             h.update(f.read())
     h.update(("%s|%r" % (name, params)).encode())
-    root = os.path.dirname(os.path.dirname(here))
-    out_dir = os.path.join(root, ".dedup_cache", h.hexdigest()[:16])
+    key = "%s_%s_" % (name, os.path.basename(os.path.normpath(sf_dir)))
+    out_dir = os.path.join(_CACHE_ROOT, key + h.hexdigest()[:16])
     out = os.path.join(out_dir, name + ".parquet")
     if not os.path.exists(out):
         os.makedirs(out_dir, exist_ok=True)
         tmp = "%s.tmp.%d" % (out, os.getpid())
         write(tmp)
         os.replace(tmp, out)
+        evict_stale(_CACHE_ROOT, key, os.path.basename(out_dir))
     return out
 
 

@@ -19,24 +19,31 @@ terms against billions of data triples — so the schema closures are
 computed on the driver (plain Python fixpoint over the ontology plus
 any schema triples found in the data; that collect is bounded by the
 ontology size, not the corpus) and every rule application is ONE
-broadcast join against the data scan. No data-sized shuffle exists
-except the final ``distinct`` that dedups derived against asserted
-triples — and that one is keyed by the uniform (s,p,o) hash. One pass
-is a fixpoint for this rule set given a static schema: derived triples
-are either (s q o) with q a schema superproperty (closed upfront) or
-``rdf:type`` triples, which feed only rdfs9 (applied last, over the
-closed subclass relation). The one unsupported corner — an ontology
-that declares superproperties or domain/range for ``rdf:type`` itself
-— raises.
+broadcast join against the data scan. The schema tables are Arrow-built
+LocalRelations (``util.local_frame``): a broadcast of them runs no job
+and starts no Python worker. No data-sized shuffle exists except the
+final ``distinct`` that dedups derived against asserted triples — and
+that one is keyed by the uniform (s,p,o) hash. One pass is a fixpoint
+for this rule set given a static schema: the domain/range axioms are
+folded down the closed subproperty relation and up the closed subclass
+relation upfront, so each rule reads only the asserted triples — rdfs7
+emits (s q o) for every superproperty q at once, rdfs2/3 every
+superclass of the axiom's class, and rdfs9 applies the closed subclass
+relation to the asserted ``rdf:type`` rows. The one unsupported corner
+— an ontology that declares superproperties or domain/range for
+``rdf:type`` itself — raises.
 """
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from ..namespaces import NS, RDF_TYPE
-from .util import DRIVER_THRESHOLD, driver_edges
+from .util import DRIVER_THRESHOLD, local_frame
 
 RDFS_SUBCLASS = NS["rdfs"] + "subClassOf"
 RDFS_SUBPROP = NS["rdfs"] + "subPropertyOf"
@@ -47,8 +54,8 @@ SCHEMA_PREDS = (RDFS_SUBCLASS, RDFS_SUBPROP, RDFS_DOMAIN, RDFS_RANGE)
 # rdfs_materialize_delta: Δ batches under this row count dedup against
 # the entailed table via a broadcast semi scan (E never shuffles);
 # at/above it — or on any schema-change batch — the shuffle anti-join
-# branch runs instead (the broadcast-join-selection cutoff pattern,
-# cf. sparql.PATH_DRIVER_THRESHOLD)
+# branch runs instead (the broadcast-join-selection cutoff pattern;
+# both branches are distributed)
 DELTA_BROADCAST_THRESHOLD = 2_000_000
 
 
@@ -90,23 +97,83 @@ def schema_closure(ontology: list[tuple[str, str, str]],
                          "(would need an iterative fixpoint)")
     # rdfs7-then-rdfs2/3 composition: a domain/range axiom on a
     # SUPERproperty applies to data asserted with the SUBproperty, so
-    # fold the axioms down the (closed) subproperty relation upfront —
-    # after this, one broadcast join per rule is the full fixpoint.
-    sub_of = {}
+    # fold the axioms down the (closed) subproperty relation upfront;
+    # rdfs2/3-then-rdfs9: a class an axiom assigns implies its
+    # superclasses, so fold them up the (closed) subclass relation too —
+    # after this, one broadcast join per rule, each over the asserted
+    # rows, is the full fixpoint.
+    sub_of, super_of = {}, {}
     for a, b in sp:
         sub_of.setdefault(b, set()).add(a)
+    for a, b in sc:
+        super_of.setdefault(a, set()).add(b)
     for axioms in (dom, rng):
         for p, c in list(axioms):
             for q in sub_of.get(p, ()):
                 axioms.add((q, c))
+        for p, c in list(axioms):
+            for d in super_of.get(c, ()):
+                axioms.add((p, d))
     return sc, sp, dom, rng
 
 
 def _pair_df(spark: SparkSession, pairs, cols) -> DataFrame | None:
     if not pairs:
         return None
-    return spark.createDataFrame(sorted(pairs), "%s string, %s string"
-                                 % cols)
+    return local_frame(spark, sorted(pairs),
+                       StructType([StructField(c, StringType())
+                                   for c in cols]))
+
+
+def _union(parts: list[DataFrame]) -> DataFrame:
+    return functools.reduce(DataFrame.union, parts)
+
+
+def _rule_joins(data: DataFrame, sp, dom, rng, sc):
+    """The four single-premise rules over ``data`` (subject, predicate,
+    object, objtype) → (rdfs7 rows, derived (subject, object, objtype)
+    rdf:type rows): each rule is one broadcast join of its schema pairs
+    against the data scan. Each pre-filters with a STATIC predicate-IN
+    list (redundant with its broadcast join), pushed into the triple
+    table's parquet scan, where the files' (predicate, subject) sort
+    lets row-group statistics skip the other predicates' rows.
+
+    ``dom`` and ``rng`` come folded down the subproperty relation and up
+    the subclass relation (schema_closure), so rules 2/3 read the
+    asserted rows only and emit every superclass themselves: rdfs9
+    reads ``data``'s own rdf:type rows, never the other rules' output,
+    and no scan runs twice."""
+    spark = data.sparkSession
+    rest, types = [], []
+    sp_df = _pair_df(spark, sp, ("sub_p", "super_p"))
+    if sp_df is not None:  # rdfs7
+        rest.append(
+            data.where(F.col("predicate").isin(*{a for a, _ in sp}))
+            .join(F.broadcast(sp_df), data["predicate"] == sp_df["sub_p"])
+            .select("subject", F.col("super_p").alias("predicate"),
+                    "object", "objtype"))
+    dom_df = _pair_df(spark, dom, ("on_p", "cls"))
+    if dom_df is not None:  # rdfs2
+        types.append(
+            data.where(F.col("predicate").isin(*{p for p, _ in dom}))
+            .join(F.broadcast(dom_df), data["predicate"] == dom_df["on_p"])
+            .select("subject", F.col("cls").alias("object")))
+    rng_df = _pair_df(spark, rng, ("on_p", "cls"))
+    if rng_df is not None:  # rdfs3
+        types.append(
+            data.where((F.col("objtype") == "uri") &
+                       F.col("predicate").isin(*{p for p, _ in rng}))
+            .join(F.broadcast(rng_df), data["predicate"] == rng_df["on_p"])
+            .select(F.col("object").alias("subject"),
+                    F.col("cls").alias("object")))
+    sc_df = _pair_df(spark, sc, ("sub_c", "super_c"))
+    if sc_df is not None:  # rdfs9
+        typed = data.where(F.col("predicate") == RDF_TYPE)
+        types.append(
+            typed.join(F.broadcast(sc_df), typed["object"] == sc_df["sub_c"])
+            .select("subject", F.col("super_c").alias("object")))
+    return rest, [t.select("subject", "object", F.lit("uri").alias("objtype"))
+                  for t in types]
 
 
 def rdfs_materialize(triples: DataFrame,
@@ -117,7 +184,6 @@ def rdfs_materialize(triples: DataFrame,
     under ``ontology`` (∪ schema triples asserted in the data, unless
     disabled). Derived object types: superproperty derivations keep the
     source triple's objtype; rdf:type derivations are 'uri'."""
-    spark = triples.sparkSession
     data_schema = []
     if include_data_schema:
         # bounded collect: schema triples are ontology-sized, never
@@ -131,12 +197,9 @@ def rdfs_materialize(triples: DataFrame,
 
     # No per-branch distinct: derived duplicates collapse in TWO
     # disjoint terminal dedups (see the split below), so the only
-    # data-sized shuffles in the whole plan are those. Each rule branch
-    # pre-filters with a STATIC predicate-IN list (redundant with its
-    # broadcast join) — pushed into the triple table's parquet scan,
-    # where the files' (predicate, subject) sort lets row-group
-    # statistics skip the other predicates' rows.
+    # data-sized shuffles in the whole plan are those.
     data = triples.select("subject", "predicate", "object", "objtype")
+    rest, types = _rule_joins(data, sp, dom, rng, sc)
     # Disjoint-family split: rdfs7 can never emit rdf:type (a schema
     # over rdf:type raises above), so the output partitions exactly
     # into the rdf:type family and the rest. Deduping them separately
@@ -145,66 +208,16 @@ def rdfs_materialize(triples: DataFrame,
     # (URI-width strings — the widest column for the narrowest rows)
     # and (b) the two dedups run as independent stages instead of one
     # monolithic wide-row hash aggregate.
-    parts = [data.where(F.col("predicate") != RDF_TYPE)]
+    rest.insert(0, data.where(F.col("predicate") != RDF_TYPE))
     # asserted rdf:type rows keep their original objtype (degenerate
     # literal-typed assertions survive as distinct rows, exactly as
     # under the old single global distinct and in the SQL twin)
-    type_rows = [data.where(F.col("predicate") == RDF_TYPE)
-                 .select("subject", "object", "objtype")]
-    type_parts = []
-
-    sp_df = _pair_df(spark, sp, ("sub_p", "super_p"))
-    if sp_df is not None:  # rdfs7
-        parts.append(
-            data.where(F.col("predicate").isin(*{a for a, _ in sp}))
-            .join(F.broadcast(sp_df),
-                  data["predicate"] == sp_df["sub_p"])
-            .select("subject", F.col("super_p").alias("predicate"),
-                    "object", "objtype"))
-    # domain/range read the asserted triples only: the axioms were
-    # folded down the subproperty relation in schema_closure, so the
-    # rdfs7-derived copies add nothing rules 2/3 would see
-    dom_df = _pair_df(spark, dom, ("on_p", "cls"))
-    if dom_df is not None:  # rdfs2
-        type_parts.append(
-            data.where(F.col("predicate").isin(*{p for p, _ in dom}))
-            .join(F.broadcast(dom_df),
-                  data["predicate"] == dom_df["on_p"])
-            .select("subject", F.col("cls").alias("object")))
-    rng_df = _pair_df(spark, rng, ("on_p", "cls"))
-    if rng_df is not None:  # rdfs3
-        type_parts.append(
-            data.where((F.col("objtype") == "uri") &
-                       F.col("predicate").isin(*{p for p, _ in rng}))
-            .join(F.broadcast(rng_df),
-                  data["predicate"] == rng_df["on_p"])
-            .select(F.col("object").alias("subject"),
-                    F.col("cls").alias("object")))
-    type_rows.extend(tp.select("subject", "object",
-                               F.lit("uri").alias("objtype"))
-                     for tp in type_parts)
-    sc_df = _pair_df(spark, sc, ("sub_c", "super_c"))
-    if sc_df is not None:  # rdfs9 over asserted ∪ rules-2/3-derived types
-        types = (data.where(F.col("predicate") == RDF_TYPE)
-                 .select("subject", "object"))
-        for tp in type_parts:
-            types = types.union(tp)
-        type_rows.append(
-            types.join(F.broadcast(sc_df),
-                       types["object"] == sc_df["sub_c"])
-            .select("subject", F.col("super_c").alias("object"),
-                    F.lit("uri").alias("objtype")))
-
-    rest = parts[0]
-    for p in parts[1:]:
-        rest = rest.union(p)
-    typ = type_rows[0]
-    for p in type_rows[1:]:
-        typ = typ.union(p)
-    return rest.distinct().union(
-        typ.distinct().select("subject",
-                              F.lit(RDF_TYPE).alias("predicate"),
-                              "object", "objtype"))
+    types.insert(0, data.where(F.col("predicate") == RDF_TYPE)
+                 .select("subject", "object", "objtype"))
+    return _union(rest).distinct().union(
+        _union(types).distinct().select("subject",
+                                        F.lit(RDF_TYPE).alias("predicate"),
+                                        "object", "objtype"))
 
 
 def sql_rdfs_entailed(table_sql: str,
@@ -318,8 +331,9 @@ def rdfs_materialize_delta(entailed: DataFrame, delta: DataFrame,
                                        -- schema triples; predicate-IN
                                        -- pushdown restricts the E scan
                                        -- to the affected predicates
-      (rdfs9 last: sc_new over every type triple derived above,
-       Δsc over E's existing type rows)
+      (rdfs9 over Δ's asserted type rows and, for Δsc, over E's type
+       rows; the other derived types need no rdfs9, as schema_closure
+       folds the subclass relation into the domain/range axioms)
 
     followed by one (s,p,o,objtype) anti-join against E — Δ-vs-corpus.
 
@@ -327,8 +341,6 @@ def rdfs_materialize_delta(entailed: DataFrame, delta: DataFrame,
     E is touched only by the terminal anti-join; every rule join is a
     broadcast of ontology-sized pairs against the Δ scan.
     """
-    spark = entailed.sparkSession
-
     def schema_rows(df):
         # bounded collect: schema triples are ontology-sized
         return [(r.subject, r.predicate, r.object) for r in
@@ -348,79 +360,18 @@ def rdfs_materialize_delta(entailed: DataFrame, delta: DataFrame,
     ddata = delta.select(*cols)
     edata = entailed.select(*cols)
 
-    def rule_joins(data, sp, dom, rng):
-        """→ (rest parts, derived (subject, object) type-pair parts) —
-        the same three single-premise joins as rdfs_materialize."""
-        rest, tparts = [], []
-        sp_df = _pair_df(spark, sp, ("sub_p", "super_p"))
-        if sp_df is not None:  # rdfs7
-            rest.append(
-                data.where(F.col("predicate").isin(*{a for a, _ in sp}))
-                .join(F.broadcast(sp_df),
-                      data["predicate"] == sp_df["sub_p"])
-                .select("subject", F.col("super_p").alias("predicate"),
-                        "object", "objtype"))
-        dom_df = _pair_df(spark, dom, ("on_p", "cls"))
-        if dom_df is not None:  # rdfs2
-            tparts.append(
-                data.where(F.col("predicate").isin(*{p for p, _ in dom}))
-                .join(F.broadcast(dom_df),
-                      data["predicate"] == dom_df["on_p"])
-                .select("subject", F.col("cls").alias("object")))
-        rng_df = _pair_df(spark, rng, ("on_p", "cls"))
-        if rng_df is not None:  # rdfs3
-            tparts.append(
-                data.where((F.col("objtype") == "uri") &
-                           F.col("predicate").isin(*{p for p, _ in rng}))
-                .join(F.broadcast(rng_df),
-                      data["predicate"] == rng_df["on_p"])
-                .select(F.col("object").alias("subject"),
-                        F.col("cls").alias("object")))
-        return rest, tparts
-
     # Δ × full new schema (Δ-sized), E × schema delta (empty in the
     # steady state; folded-axiom deltas included since schema_closure
-    # returns folded dom/rng)
-    rest_parts, type_parts = rule_joins(ddata, sp1, dom1, rng1)
-    e_rest, e_types = rule_joins(edata, d_sp, d_dom, d_rng)
-    rest_parts += e_rest
-    type_parts += e_types
+    # returns folded dom/rng; E's rdf:type rows already hold every
+    # derived type, so the subclass delta applies to them directly)
+    rest_parts, type_rows = _rule_joins(ddata, sp1, dom1, rng1, sc1)
+    e_rest, e_types = _rule_joins(edata, d_sp, d_dom, d_rng, d_sc)
     # Δ's own asserted rows are candidates too (they may duplicate E)
-    rest_parts.append(ddata.where(F.col("predicate") != RDF_TYPE))
-    type_rows = [ddata.where(F.col("predicate") == RDF_TYPE)
-                 .select("subject", "object", "objtype")]
-    type_rows.extend(tp.select("subject", "object",
-                               F.lit("uri").alias("objtype"))
-                     for tp in type_parts)
-
-    sc_df = _pair_df(spark, sc1, ("sub_c", "super_c"))
-    if sc_df is not None:  # rdfs9 over every type pair new this batch
-        new_types = (ddata.where(F.col("predicate") == RDF_TYPE)
-                     .select("subject", "object"))
-        for tp in type_parts:
-            new_types = new_types.union(tp)
-        type_rows.append(
-            new_types.join(F.broadcast(sc_df),
-                           new_types["object"] == sc_df["sub_c"])
-            .select("subject", F.col("super_c").alias("object"),
-                    F.lit("uri").alias("objtype")))
-    dsc_df = _pair_df(spark, d_sc, ("sub_c", "super_c"))
-    if dsc_df is not None:  # rdfs9: schema delta over E's type rows
-        etypes = (edata.where(F.col("predicate") == RDF_TYPE)
-                  .select("subject", "object"))
-        type_rows.append(
-            etypes.join(F.broadcast(dsc_df),
-                        etypes["object"] == dsc_df["sub_c"])
-            .select("subject", F.col("super_c").alias("object"),
-                    F.lit("uri").alias("objtype")))
-
-    cand = rest_parts[0]
-    for p in rest_parts[1:]:
-        cand = cand.union(p)
-    typ = type_rows[0]
-    for p in type_rows[1:]:
-        typ = typ.union(p)
-    cand = cand.union(typ.select("subject",
+    rest_parts += e_rest + [ddata.where(F.col("predicate") != RDF_TYPE)]
+    type_rows += e_types + [ddata.where(F.col("predicate") == RDF_TYPE)
+                            .select("subject", "object", "objtype")]
+    cand = _union(rest_parts).union(
+        _union(type_rows).select("subject",
                                  F.lit(RDF_TYPE).alias("predicate"),
                                  "object", "objtype")).distinct()
 
@@ -515,9 +466,10 @@ def owl_materialize(triples: DataFrame,
     post-closure inverse/symmetric re-application is exact because
     closure and inversion commute — inv(closure(E)) = closure(inv(E))
     — so nothing new can feed back. Schema is ontology-sized: the
-    rule tables broadcast; the per-predicate closure runs as ONE
-    shared (predicate, node)-keyed iteration
-    (graph/closure.transitive_closure keyed on the predicate), not one
+    rule tables broadcast. The per-predicate closure is
+    graph/closure.transitive_closure keyed on the predicate: on the
+    driver at or below ``driver_threshold`` transitive edges (the one
+    gate), else ONE shared (predicate, node)-keyed iteration, not one
     job per predicate.
     """
     from ..graph.closure import transitive_closure
@@ -563,58 +515,18 @@ def owl_materialize(triples: DataFrame,
         for part in e1[1:]:
             edges = edges.union(part.where(F.col("predicate")
                                            .isin(*trans)))
-        edges = edges.select("predicate", "subject", "object")                      .distinct()
         # hybrid like the graph analytics: transitive-predicate edge
-        # sets are a tiny slice of the corpus, so below the cutoff
-        # the per-predicate closure runs in plain Python (same
-        # fixpoint, tested branch-for-branch); above it, the shared
-        # (predicate, node)-keyed distributed iteration
-        head = driver_edges(edges, driver_threshold)
-        if head is not None:
-            by_p: dict = {}
-            for p, s, o in head.itertuples(index=False, name=None):
-                by_p.setdefault(p, {}).setdefault(s, set()).add(o)
-            rows = []
-            for p, adj in by_p.items():
-                # per-source BFS: cost = closure size (NOT the
-                # quadratic schema _closure — data edge sets are
-                # thousands of times larger than an ontology)
-                for s0 in adj:
-                    seen, stack = set(), list(adj[s0])
-                    while stack:
-                        v = stack.pop()
-                        if v in seen:
-                            continue
-                        seen.add(v)
-                        stack.extend(adj.get(v, ()))
-                    rows.extend((s0, p, o_, "uri")
-                                for o_ in seen if o_ != s0)
-            import pandas as _pd
-            tc = spark.createDataFrame(
-                _pd.DataFrame(sorted(rows),
-                              columns=["subject", "predicate",
-                                       "object", "objtype"])
-                if rows else _pd.DataFrame(
-                    {"subject": _pd.Series(dtype="object"),
-                     "predicate": _pd.Series(dtype="object"),
-                     "object": _pd.Series(dtype="object"),
-                     "objtype": _pd.Series(dtype="object")}),
-                schema="subject string, predicate string, "
-                       "object string, objtype string") \
-                .localCheckpoint(eager=True)
-        else:
-            closed = transitive_closure(
-                edges, src="subject", dst="object", keys=["predicate"])
-            tc = closed.select(F.col("a").alias("subject"),
-                               "predicate",
-                               F.col("b").alias("object"),
-                               F.lit("uri").alias("objtype"))
+        # sets are a tiny slice of the corpus, so the per-predicate
+        # closure solves on the driver below the gate's cutoff
+        tc = (transitive_closure(edges, src="subject", dst="object",
+                                 keys=["predicate"],
+                                 driver_threshold=driver_threshold)
+              .select(F.col("a").alias("subject"), "predicate",
+                      F.col("b").alias("object"),
+                      F.lit("uri").alias("objtype")))
         e1.append(tc)
         e1.extend(invsym(tc))
-    out = e1[0]
-    for part in e1[1:]:
-        out = out.union(part)
-    return out.distinct()
+    return _union(e1).distinct()
 
 
 def sql_owl_entailed(table_sql: str,

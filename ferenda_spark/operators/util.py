@@ -6,6 +6,7 @@ import os
 import tempfile
 
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StructType
 
 
 _ITER_CKPT_SEQ = [0]
@@ -63,6 +64,21 @@ def driver_edges(E: DataFrame, threshold: int):
     cutoff at most ``threshold + 1`` rows reach the driver."""
     head = E.limit(threshold + 1).toPandas()
     return head if len(head) <= threshold else None
+
+
+def local_frame(spark, rows: list[tuple], schema: StructType) -> DataFrame:
+    """``rows`` as a Spark frame through Arrow: a LocalRelation, which
+    no job reads and no Python worker serves. ``createDataFrame`` of a
+    list (or of an empty pandas frame) builds a Python RDD instead, and
+    every job over it starts Python workers."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow)
+    return spark.createDataFrame(
+        pa.Table.from_arrays([pa.array(c, f.type)
+                              for c, f in zip(cols, arrow)], schema=arrow),
+        schema)
 
 
 def salted_agg(df: DataFrame, key_cols: list[str], aggs: dict,

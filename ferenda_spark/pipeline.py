@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from . import pages as P
+from .lake import get_table_format
 from .operators import extract, lineage, relate
 
 CFG = P.CFG
@@ -80,7 +81,7 @@ def run(spark: SparkSession, pages: DataFrame, out: str,
         extract.resources_table(extracted).write.mode("overwrite") \
             .parquet(path("resources"))
 
-        all_triples = spark.read.parquet(path("triples"))
+        all_triples = get_table_format().read(spark, path("triples"))
         # the entities table IS the checkpointed sameAs mapping: built
         # once here, it is also canonicalize's mapping
         entities = relate.entities_table(all_triples)

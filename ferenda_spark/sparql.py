@@ -189,11 +189,6 @@ XSD_STRING = "http://www.w3.org/2001/XMLSchema#string"
 XSD_DATETIME = "http://www.w3.org/2001/XMLSchema#dateTime"
 XSD_DATE = "http://www.w3.org/2001/XMLSchema#date"
 
-# constant-endpoint property paths switch from the shared all-pairs
-# closure to a seeded frontier BFS above this edge count (the same
-# hybrid-branch pattern as operators/graphops.py)
-PATH_DRIVER_THRESHOLD = 2_000_000
-
 # ------------------------------------------------------------ tokenizer
 
 _TOKEN = re.compile(r"""
@@ -2830,21 +2825,18 @@ def compile_spark(triples: DataFrame, query: Query | str) -> DataFrame:
 
     def seeded_path(uri: str, mod: str, const: str,
                     forward: bool, graph=None) -> DataFrame:
-        """(a, b) path pairs when one endpoint is a constant. Hybrid
-        like graphops: below ``PATH_DRIVER_THRESHOLD`` edges the
-        all-pairs closure wins (computed once, shared by every branch,
-        ≤8 bulk rounds — per-hop frontier jobs would pay fixed
-        scheduling cost × chain depth); above it, a bounded frontier
-        BFS seeded at the constant (broadcast semi-joins — cost tracks
-        the visited neighborhood, never the whole graph's closure).
-        Same pair set as path_relation filtered to the constant,
-        including the graph-term-gated reflexive row for "*"."""
+        """(a, b) path pairs when one endpoint is a constant: the nodes
+        graph/closure.reachable_nodes finds from (or to) the constant.
+        That is a hybrid behind the one driver gate: at or below its
+        cutoff it fetches the path's edges in one Arrow job and runs a
+        single-source BFS on the driver; above it, a frontier BFS of
+        broadcast semi-joins. Either way the cost tracks the visited
+        neighborhood, and the all-pairs closure is never built. Same
+        pair set as path_relation filtered to the constant, including
+        the graph-term-gated reflexive row for "*". Cached per compile,
+        so the same path in two UNION branches (the annotations.rq
+        shape) fetches its edges once."""
         from .graph.closure import reachable_nodes
-        if (uri, "#edges", graph) not in path_cache:
-            path_cache[(uri, "#edges", graph)] = (
-                in_graph(graph).filter(pred_cond(uri)).count())
-        if path_cache[(uri, "#edges", graph)] <= PATH_DRIVER_THRESHOLD:
-            return path_relation(uri, mod, graph)
         key = (uri, mod, const, forward, graph)
         if key not in path_cache:
             edges = (in_graph(graph)

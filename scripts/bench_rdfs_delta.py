@@ -5,21 +5,25 @@ maintenance): at two corpus sizes, compare
              no-incremental pipeline re-runs per ingest batch), timed
              to action (count of the entailed output);
   delta_s  — rdfs_materialize_delta over a FIXED 30k-triple batch
-             against the MATERIALIZED entailed table (written untimed,
-             partitioned by predicate like the production layout),
-             timed to action (count of the new rows).
+             against the MATERIALIZED entailed table (written untimed
+             by the lake writer, ParquetBucketFormat, and read back
+             through it: the production layout), timed to action
+             (count of the new rows).
 
 The claim under test: delta cost is bounded by a predicate-pruned
 shuffle-free scan of E plus Δ-sized broadcast joins — so it grows far
 slower than corpus size, while full rematerialization grows linearly.
-Output: one JSON line {"metric": "rdfs_delta_cost", ...} consumed by
-BENCH.md's incremental-maintenance paragraph.
+Output: one JSON line {"metric": "rdfs_delta_cost", ...}, with the
+host's core count (``nproc``, the session's local[nproc]) and the git
+commit; BENCH_RDFS_DELTA.json keeps the last one.
 
 Usage: python scripts/bench_rdfs_delta.py [N_DOCS_LOW] [N_DOCS_HIGH]
 (defaults 1_000_000 / 4_000_000 docs; 3 triples per doc).
 """
 import json
+import os
 import shutil
+import subprocess
 import sys
 import tempfile
 import time
@@ -29,6 +33,7 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, ".")
 
+from ferenda_spark.lake import ParquetBucketFormat  # noqa: E402
 from ferenda_spark.namespaces import NS, RDF_TYPE  # noqa: E402
 from ferenda_spark.operators.inference import (  # noqa: E402
     CORPUS_ONTOLOGY, rdfs_materialize, rdfs_materialize_delta)
@@ -71,15 +76,18 @@ def main():
     n_low = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
     n_high = int(sys.argv[2]) if len(sys.argv) > 2 else 4_000_000
     delta_docs = 10_000
-    spark = (SparkSession.builder.master("local[8]")
-             .config("spark.sql.shuffle.partitions", "32")
-             .config("spark.driver.memory", "24g")
+    nproc = os.cpu_count()
+    spark = (SparkSession.builder.master("local[%d]" % nproc)
+             .config("spark.sql.shuffle.partitions", str(4 * nproc))
+             .config("spark.driver.memory", "6g")
              .config("spark.sql.adaptive.enabled", "true")
              .appName("bench_rdfs_delta").getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
     tmp = tempfile.mkdtemp(prefix="rdfs_delta_bench_")
-    result = {"metric": "rdfs_delta_cost", "unit": "sec",
-              "delta_docs": delta_docs, "levels": []}
+    commit = subprocess.run(["git", "rev-parse", "--short", "HEAD"],
+                            capture_output=True, text=True).stdout.strip()
+    result = {"metric": "rdfs_delta_cost", "unit": "sec", "nproc": nproc,
+              "commit": commit, "delta_docs": delta_docs, "levels": []}
     try:
         # untimed warmup: JIT + codegen + shuffle machinery, so the
         # first timed leg isn't JVM-cold (the 30k/120k smoke run read
@@ -104,14 +112,15 @@ def main():
                                              CORPUS_ONTOLOGY).count()
                 full_s = min(full_s or 9e9, time.monotonic() - t0)
 
-            # materialize E as a predicate-partitioned parquet table
-            # (untimed — in production E already sits in the lake; the
-            # delta job starts from a table scan whose predicate
-            # filters prune)
-            (rdfs_materialize(triples, CORPUS_ONTOLOGY)
-             .write.mode("overwrite").partitionBy("predicate")
-             .parquet(edir))
-            e_read = spark.read.parquet(edir)
+            # materialize E through the lake writer (untimed — in
+            # production E already sits in the lake: bucket=N/ files
+            # sorted by (predicate, subject), whose row-group statistics
+            # let the delta's predicate filters skip rows). E has no
+            # page url, so its subject is the bucket key.
+            lake = ParquetBucketFormat()
+            lake.write(rdfs_materialize(triples, CORPUS_ONTOLOGY)
+                       .withColumn("source_url", F.col("subject")), edir)
+            e_read = lake.read(spark, edir)
             delta = synth_triples(spark, delta_docs, offset=n + 1)
 
             delta_s, new_rows = None, 0

@@ -182,9 +182,6 @@ def test_every_module_is_reachable():
 
 
 GATE_MODULE = "ferenda_spark.operators.util"
-# shares the gate's value but picks between two distributed closure
-# plans (all-pairs vs seeded BFS); nothing is collected to the driver
-OTHER_CUTOFFS = {"ferenda_spark.sparql.PATH_DRIVER_THRESHOLD"}
 
 
 def test_one_driver_gate():
@@ -215,8 +212,7 @@ def test_one_driver_gate():
                            else [node.target])
                 for t in targets:
                     if isinstance(t, ast.Name) and "DRIVER" in t.id and \
-                            "THRESHOLD" in t.id and \
-                            name + "." + t.id not in OTHER_CUTOFFS:
+                            "THRESHOLD" in t.id:
                         bad.append((where, t.id))
             elif isinstance(node, (ast.FunctionDef, ast.Lambda)):
                 a = node.args

@@ -3,8 +3,9 @@ driver_edges): each operator solves on the driver at exactly |E| ≤
 driver_threshold, and both sides of that boundary give equal rows."""
 
 import pytest
+from pyspark.sql import functions as F
 
-from ferenda_spark.graph import components
+from ferenda_spark.graph import closure, components
 from ferenda_spark.namespaces import RDF_TYPE
 from ferenda_spark.operators import graphops, inference, util
 
@@ -48,6 +49,14 @@ HYBRIDS = {
     "connected_components": lambda s, e, t:
         components.connected_components(e, driver_threshold=t),
     "owl_materialize": _owl,
+    # two keys, so one path could cross from one key to the other
+    "transitive_closure": lambda s, e, t: closure.transitive_closure(
+        e.withColumn("k", (F.col("w") > 5).cast("string")), keys=["k"],
+        driver_threshold=t),
+    "reachable_nodes": lambda s, e, t: closure.reachable_nodes(
+        e, "a", driver_threshold=t),
+    "reachable_nodes_reverse": lambda s, e, t: closure.reachable_nodes(
+        e, "e", reverse=True, driver_threshold=t),
 }
 
 
@@ -60,7 +69,7 @@ def test_driver_gate_boundary(spark, monkeypatch, name):
         branches.append("driver" if head is not None else "distributed")
         return head
 
-    for mod in (graphops, components, inference):
+    for mod in (graphops, components, closure):
         monkeypatch.setattr(mod, "driver_edges", recording_gate)
     edges = spark.createDataFrame(
         [(s, d, float(i + 1), float(i + 1))

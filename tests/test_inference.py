@@ -304,3 +304,38 @@ def test_owl_both_closure_branches_agree(spark):
                       owl_materialize(df, onto,
                                       driver_threshold=0).collect()))
     assert drv == dist
+
+
+def test_rule_plans_read_no_python_rdd(spark):
+    """The schema and closure tables the rules build are Arrow-built
+    LocalRelations: a plan leaf over a Python RDD (``Scan
+    ExistingRDD``) starts Python workers in every job that reads it.
+    The inputs are pandas-built, so such a leaf could only come from
+    the operators."""
+    import pandas as pd
+    from ferenda_spark.namespaces import RDF_TYPE
+    from ferenda_spark.operators.inference import (owl_materialize,
+                                                   rdfs_materialize_delta)
+
+    def frame(rows):
+        return spark.createDataFrame(
+            pd.DataFrame(rows, columns=["subject", "predicate", "object",
+                                        "objtype"]), TRIPLE_SCHEMA)
+    entailed = rdfs_materialize(frame(DATA), ONTO)
+    owl_onto = [(EX + "anc", RDF_TYPE, OWL + "TransitiveProperty"),
+                (EX + "anc", OWL + "inverseOf", EX + "desc")]
+    plans = {
+        "rdfs_materialize": entailed,
+        "rdfs_materialize_delta": rdfs_materialize_delta(
+            entailed, frame(DELTA_PLAIN), ONTO),
+        "rdfs_materialize_delta/schema": rdfs_materialize_delta(
+            entailed, frame(DELTA_SCHEMA), ONTO),
+        "owl_materialize": owl_materialize(
+            frame([("a", EX + "anc", "b", "uri"),
+                   ("b", EX + "anc", "c", "uri"),
+                   ("z", EX + "desc", "b", "uri")]), owl_onto),
+    }
+    for name, df in plans.items():
+        assert df.collect(), name
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" not in plan, (name, plan)

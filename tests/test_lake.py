@@ -211,3 +211,41 @@ def test_old_layout_rejected_by_merge_until_compacted(spark, tmp_path):
     fmt.merge(spark, batch, path)
     assert _content(spark, path) == sorted(_rows(0, 5, "n")
                                            + _rows(5, 40))
+
+
+def test_read_runs_no_job(spark, tmp_path):
+    """``read`` takes the schema from ``_lake.json``: no job infers it
+    from the file footers, and the schema is the inferred one."""
+    fmt, path = lake.ParquetBucketFormat(), str(tmp_path / "t")
+    fmt.write(spark.createDataFrame(_rows(0, 40), COLS), path)
+    sc = spark.sparkContext
+    sc.setJobGroup("lake-read", "ParquetBucketFormat.read")
+    try:
+        df = fmt.read(spark, path)
+        read_jobs = list(sc.statusTracker().getJobIdsForGroup("lake-read"))
+        df.count()      # the tracker sees the group's jobs
+        assert sc.statusTracker().getJobIdsForGroup("lake-read")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert read_jobs == []
+    assert df.schema == spark.read.parquet(path).schema
+    assert sorted(map(tuple, df.select(*DATA).collect())) == \
+        _content(spark, path)
+
+
+def test_read_without_recorded_schema_needs_compact(spark, tmp_path):
+    fmt, path = lake.ParquetBucketFormat(), str(tmp_path / "t")
+    fmt.write(spark.createDataFrame(_rows(0, 40), COLS), path)
+    before = _content(spark, path)
+    meta = os.path.join(path, lake.META)
+    with open(meta) as f:
+        info = json.load(f)
+    del info["schema"]
+    with open(meta, "w") as f:
+        json.dump(info, f)
+    with pytest.raises(ValueError, match="compact"):
+        fmt.read(spark, path)
+    fmt.compact(spark, path)
+    assert sorted(map(tuple, fmt.read(spark, path).select(*DATA)
+                      .collect())) == before

@@ -8,6 +8,7 @@ import pandas as pd
 import pytest
 
 from ferenda_spark import sparql
+from ferenda_spark.graph import closure
 
 DCT = "http://purl.org/dc/terms/"
 FOAF = "http://xmlns.com/foaf/0.1/"
@@ -435,11 +436,12 @@ def test_graph_clause(rfc_graph):
 
 
 def test_seeded_path_equals_closure(graph, monkeypatch):
-    """Constant-endpoint property paths switch to a seeded frontier
-    BFS above the edge threshold; forcing the switch must not change
-    any result (including the zero-length "*" row and cycle
-    exclusion — `self references self` must NOT yield (self,self)
-    for references+)."""
+    """Constant-endpoint property paths solve on the driver below the
+    one gate's cutoff and run a distributed frontier BFS above it;
+    forcing the distributed branch must not change any result
+    (including the zero-length "*" row and cycle exclusion —
+    `self references self` must NOT yield (self,self) for
+    references+)."""
     queries = [
         "SELECT ?p WHERE { ?p dct:isPartOf* <d1> } ORDER BY ?p",
         "SELECT ?p WHERE { ?p dct:isPartOf+ <d1> } ORDER BY ?p",
@@ -450,7 +452,7 @@ def test_seeded_path_equals_closure(graph, monkeypatch):
         "SELECT ?p WHERE { ?p dct:isPartOf* <nope> }",
     ]
     base = [run_both(graph, PREFIXES + q) for q in queries]
-    monkeypatch.setattr(sparql, "PATH_DRIVER_THRESHOLD", -1)
+    monkeypatch.setattr(closure, "driver_edges", lambda E, t: None)
     for q, expect in zip(queries, base):
         got = run_both(graph, PREFIXES + q)
         pd.testing.assert_frame_equal(got, expect)

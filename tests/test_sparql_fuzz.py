@@ -18,6 +18,8 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from ferenda_spark import sparql
+from ferenda_spark.graph import closure
+from ferenda_spark.operators import util
 
 SUBJECTS = ["d1", "d2", "d3", "d4"]
 PREDS = {"t": "http://p/t", "r": "http://p/r", "k": "http://p/k"}
@@ -452,7 +454,7 @@ pathq_st = st.fixed_dictionaries({
     "mod": st.sampled_from(["*", "+", "{,1}", "{1,2}", "{0,2}", "{2,3}"]),
     "endpoint": st.sampled_from(SUBJECTS),
     "direction": st.booleans(),      # True: const is subject
-    "force_bfs": st.booleans(),      # exercise the seeded-BFS branch
+    "force_distributed": st.booleans(),  # both sides of the closure gate
     "inverse": st.booleans(),        # ^p:r — inverse path
     "alt": st.booleans(),            # (p:r|p:k) — union edge set
     "neg": st.booleans(),            # !(…) — complement edge set
@@ -499,8 +501,12 @@ def render_path_query(q):
                                  HealthCheck.too_slow])
 @given(graph=graph_st, q=pathq_st)
 def test_fuzz_paths(spark, duck_dir, graph, q, monkeypatch):
-    monkeypatch.setattr(sparql, "PATH_DRIVER_THRESHOLD",
-                        -1 if q["force_bfs"] else 2_000_000)
+    # set for every example (the fixture outlives one draw): a declining
+    # gate sends seeded paths to the frontier BFS and all-pairs paths
+    # to the closure loop
+    monkeypatch.setattr(closure, "driver_edges",
+                        (lambda E, t: None) if q["force_distributed"]
+                        else util.driver_edges)
     _run_fuzz(spark, duck_dir, graph, render_path_query(q))
 
 
