@@ -18,7 +18,8 @@ extraction kernel (``ferenda_spark.extract.extract_document``), then:
 
 The cache directory is keyed by (n, fingerprint of the extraction
 source modules), so editing the extraction code invalidates it
-automatically; installing a fingerprint removes that n's older ones. Everything here is pure pandas/pyarrow — no Spark — so
+automatically; installing a fingerprint removes that n's older ones.
+Everything here is pure pandas/pyarrow — no Spark — so
 ``oracle_sql()`` can trigger materialization regardless of whether the
 driver runs queries or oracles first.
 """

@@ -83,7 +83,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
 ROWS_PER_FILE = 8_000   # target rows per bucket file; sets the bucket count
-META = "_lake.json"     # the table's bucket count and schema, beside the data
+META = "_lake.json"     # the table's bucket count and schema, by the data
 
 
 def bucket_of(col, n_buckets: int):
@@ -116,13 +116,6 @@ def _read_meta(target: str, key: str):
 def read_buckets(target: str) -> int:
     """The bucket count recorded in ``target``'s ``_lake.json``."""
     return int(_read_meta(target, "buckets"))
-
-
-def read_schema(target: str) -> StructType:
-    """The table's schema recorded in ``target``'s ``_lake.json``, with
-    the ``bucket`` partition column last, as schema inference gives."""
-    schema = StructType.fromJson(_read_meta(target, "schema"))
-    return schema.add("bucket", IntegerType())
 
 
 class TableFormat(ABC):
@@ -251,8 +244,11 @@ class ParquetBucketFormat(TableFormat):
 
     def read(self, spark: SparkSession, target: str) -> DataFrame:
         # the recorded schema spares the footer-reading job schema
-        # inference runs on every read (measured 90 → 16 ms a read)
-        return spark.read.schema(read_schema(target)).parquet(target)
+        # inference runs on every read (measured 90 → 16 ms a read);
+        # the bucket partition column comes last, as inference puts it
+        schema = StructType.fromJson(_read_meta(target, "schema")) \
+            .add("bucket", IntegerType())
+        return spark.read.schema(schema).parquet(target)
 
 
 class IcebergFormat(TableFormat):

@@ -75,7 +75,8 @@ def _closure(pairs: set[tuple[str, str]]) -> set[tuple[str, str]]:
 def schema_closure(ontology: list[tuple[str, str, str]],
                    data_schema: list[tuple[str, str, str]] = ()):
     """→ (subclass_pairs, subprop_pairs, domain_pairs, range_pairs),
-    with both subsumption relations transitively closed. ``ontology``
+    with both subsumption relations transitively closed and the
+    domain/range pairs folded through them (see below). ``ontology``
     is the supplied schema; ``data_schema`` any schema triples found in
     the data (same shape)."""
     sc, sp, dom, rng = set(), set(), set(), set()
